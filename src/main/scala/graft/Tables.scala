@@ -34,45 +34,17 @@ object Tables {
     * static testdata. The cached value is a logical plan (immutable);
     * data files under testdata never change within a JVM.
     */
-  // weak-keyed on the sharedState OBJECT (identityHashCode is not
-  // unique: a collected session's hash can collide with a new one and
-  // serve a plan bound to a dead SparkContext). NOTE the cached
-  // DataFrames strongly reference their session and thus the key, so
-  // entries persist for the JVM lifetime — the weak key only guarantees
-  // a dead session's plans are never SERVED to a new session; use
-  // [[clearPlanCache]] to reclaim, or when testdata is regenerated
-  // inside one JVM.
-  private val planCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]())
+  private val planCache = new SessionScoped(() =>
+    scala.collection.concurrent.TrieMap[(String, String), DataFrame]())
 
+  /** Drop every session's cached plans (testdata regenerated in one JVM). */
   def clearPlanCache(): Unit = planCache.clear()
 
   /** Entries currently held (test/monitoring hook). */
-  private[graft] def planCacheSize: Int = planCache.size()
+  private[graft] def planCacheSize: Int = planCache.size
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val per = planCache.synchronized {
-      var m = planCache.get(spark.sharedState)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-        planCache.put(spark.sharedState, m)
-        // the cached DataFrames strongly reference their session (and so
-        // the weak key): free the entry eagerly when the context stops,
-        // or a long-lived multi-session service leaks every dead
-        // session's plans until clearPlanCache
-        val key = spark.sharedState
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              planCache.remove(key)
-          })
-      }
-      m
-    }
-    per.getOrElseUpdate((dir, name), loadUncached(spark, dir, name))
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    planCache(spark).getOrElseUpdate((dir, name), loadUncached(spark, dir, name))
 
   private def loadUncached(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {

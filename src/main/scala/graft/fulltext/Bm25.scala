@@ -1,9 +1,10 @@
 package graft.fulltext
 
 import graft.functions.TextFunctions.tokens
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Fulltext search: `MATCH(cols) AGAINST(query [IN NATURAL LANGUAGE MODE |
   * IN BOOLEAN MODE])` re-expressed as an inverted-index DataFrame plus a
@@ -16,10 +17,27 @@ import org.apache.spark.sql.functions._
   * canonical shuffle-by-term inverted index, built ONCE per corpus and
   * persisted ([[FulltextIndex.forCorpus]]) — the reference's model too,
   * where the fulltext index is a materialized table
-  * (`pkg/sql/plan/apply_indices_fulltext.go`). A query is a broadcast
-  * join of a handful of query leaves against the postings — the corpus
-  * is never re-tokenized per query. At 100 TB the postings would be
-  * written bucketed by term so matches prune at file level.
+  * (`pkg/sql/plan/apply_indices_fulltext.go`) — written partitioned by a
+  * term-hash bucket, so an exact-term probe reads only its terms' files.
+  * The corpus is never re-tokenized per query. A query has two
+  * evaluators, sharing the parse, the leaves (tokenizers, weights,
+  * phrase offsets) and the [[score]] formulas:
+  *   - the driver evaluator, the reference's own shape (read the query
+  *     terms' postings, score them in process — `fulltext_index_scan`,
+  *     `pkg/fulltext/fulltext.go` — and join the scores back by key):
+  *     ONE Spark job collects the probed postings, plain Scala scores
+  *     them, and the result is a (doc_id, score) LocalRelation;
+  *   - the DataFrame evaluators ([[searchBooleanNodes]],
+  *     [[searchNaturalMo]]): a broadcast join of the query leaves
+  *     against the postings, then shuffles and joins per node — several
+  *     jobs per query, but no single process ever holds the postings.
+  * [[matchAgainstMulti]], the SQL MATCH entry, picks the driver
+  * evaluator when the probed buckets' written bytes (the exact terms'
+  * buckets, or all of them once a STAR prefix is present) fit under
+  * `spark.sql.autoBroadcastJoinThreshold` — the bound Spark itself uses
+  * to collect a join side to the driver — and the DataFrame one
+  * otherwise: at 100 TB a common term's postings do not fit one driver,
+  * so the distributed plan stays (threshold -1 forces it).
   */
 object Bm25 {
 
@@ -363,11 +381,6 @@ object Bm25 {
     case _ => 1.0
   }
 
-  /** Per-(leaf, doc) scores in ONE pass over the postings: broadcast
-    * the tiny leaf table, probe exact terms and prefixes together, then
-    * window-count df per leaf. STAR aggregates every matching term
-    * (tf summed, df = docs matching any term with the prefix).
-    */
   /** Driver-side replica of `pmod(hash(term), TermBuckets)` — the same
     * Murmur3(seed 42) Catalyst uses — so an exact-term probe can carry a
     * LITERAL partition filter and prune the bucketed postings at file
@@ -381,6 +394,64 @@ object Bm25 {
     if (m < 0) m + FulltextIndex.TermBuckets else m
   }
 
+  /** The arithmetic of the score formulas, over Catalyst columns (the
+    * DataFrame evaluators) or plain doubles (the driver evaluator). Each
+    * formula is written once against it, so both evaluators build the
+    * same operation tree in the same order. The Double side runs what
+    * Catalyst's generated code runs — `Logarithm` is
+    * `StrictMath.log(x) / StrictMath.log(base)`, `Pow` is `StrictMath.pow`
+    * — so a score taken from one leaf is bit-identical on either path.
+    */
+  private[fulltext] trait Arith[T] {
+    def num(d: Double): T
+    def plus(a: T, b: T): T
+    def times(a: T, b: T): T
+    def div(a: T, b: T): T
+    def log10Sq(x: T): T
+  }
+
+  private[fulltext] implicit object ColumnArith extends Arith[Column] {
+    def num(d: Double): Column = lit(d)
+    def plus(a: Column, b: Column): Column = a + b
+    def times(a: Column, b: Column): Column = a * b
+    def div(a: Column, b: Column): Column = a / b
+    def log10Sq(x: Column): Column = pow(log(10.0, x), 2)
+  }
+
+  private[fulltext] implicit object DoubleArith extends Arith[Double] {
+    def num(d: Double): Double = d
+    def plus(a: Double, b: Double): Double = a + b
+    def times(a: Double, b: Double): Double = a * b
+    def div(a: Double, b: Double): Double = a / b
+    def log10Sq(x: Double): Double =
+      StrictMath.pow(StrictMath.log(x) / StrictMath.log(10.0), 2)
+  }
+
+  /** One leaf's score from its weight, tf, df and the doc's length:
+    *   tfidf (reference ALGO_TFIDF, `fulltext.go:208-213`):
+    *     w · tf · log10(N/df)²
+    *   bm25 (ALGO_BM25 keeps the log10² idf in boolean mode too,
+    *   `fulltext.go:217-222`; fulltext_bm25.result scores boolean `+red`
+    *   identically to natural-mode BM25):
+    *     w · log10(N/df)² · tf(K1+1) / (tf + K1(1−B+B·dl/avgdl))
+    */
+  private[fulltext] def score[T](algo: String, w: T, tf: T, df: T, dl: T,
+      nDocs: Long, avgdl: Double)(implicit a: Arith[T]): T = {
+    import a._
+    val idfSq = log10Sq(div(num(nDocs.toDouble), df))
+    algo match {
+      case "tfidf" => times(times(w, tf), idfSq)
+      case _ =>
+        div(times(times(w, idfSq), times(tf, num(K1 + 1))),
+          plus(tf, times(num(K1), plus(num(1 - B), div(times(num(B), dl), num(avgdl))))))
+    }
+  }
+
+  /** Per-(leaf, doc) scores in ONE pass over the postings: broadcast
+    * the tiny leaf table, probe exact terms and prefixes together, then
+    * window-count df per leaf. STAR aggregates every matching term
+    * (tf summed, df = docs matching any term with the prefix).
+    */
   private def leafScores(index: FulltextIndex, leaves: Seq[Leaf], algo: String): DataFrame = {
     val spark = index.postings.sparkSession
     import spark.implicits._
@@ -413,20 +484,8 @@ object Bm25 {
         max(col("weight")).as("weight"), max(col("phrase_pos")).as("phrase_pos"),
         posAgg)
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("leaf_id"))))
-    val n = lit(index.nDocs.toDouble)
-    val score = algo match {
-      case "tfidf" =>
-        // reference ALGO_TFIDF (`fulltext.go:208-213`): w · tf · log10(N/df)²
-        col("weight") * col("tf") * pow(log(10.0, n / col("df")), 2)
-      case _ =>
-        // reference ALGO_BM25 keeps the log10² idf in boolean mode too
-        // (`fulltext.go:217-222`; fulltext_bm25.result scores boolean
-        // `+red` identically to natural-mode BM25)
-        col("weight") * pow(log(10.0, n / col("df")), 2) *
-          (col("tf") * (K1 + 1)) /
-          (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / lit(index.avgdl)))
-    }
-    perDoc.withColumn("score", score)
+    perDoc.withColumn("score", score[Column](algo, col("weight"), col("tf"), col("df"),
+      col("dl"), index.nDocs, index.avgdl))
   }
 
   /** Phrase-occurrence count via built-in expressions (guide §4 — no
@@ -457,8 +516,18 @@ object Bm25 {
       tokenizer: String = "simple"): DataFrame =
     searchBooleanNodes(index, parseBoolean(query), algo, tokenizer)
 
-  def searchBooleanNodes(index: FulltextIndex, nodes: Seq[FtNode],
-      algo: String = "bm25", tokenizer: String = "simple"): DataFrame = {
+  /** A top-level boolean node flattened to scoring leaves: its leaf ids,
+    * the phrases among them as (leaf ids, word count), and its role —
+    * '+' must, '-' must-not, 's' should.
+    */
+  private[fulltext] final case class BoolNode(leafIds: Seq[Int], phrases: Seq[(Seq[Int], Int)],
+      role: Char)
+
+  /** Flatten parsed boolean nodes into scoring leaves — the one leaf and
+    * node construction both evaluators share.
+    */
+  private[fulltext] def booleanLeaves(nodes: Seq[FtNode],
+      tokenizer: String): (Seq[Leaf], Seq[BoolNode]) = {
     var nextId = 0
     val leafBuf = Seq.newBuilder[Leaf]
 
@@ -533,23 +602,27 @@ object Bm25 {
       case FtMod(_, child) => collect(child, weight)
     }
 
-    final case class Evaled(leafIds: Seq[Int], phrases: Seq[(Seq[Int], Int)], role: Char)
     val evaled = nodes.map {
       case FtMod('+', child) =>
-        val (ids, ph) = collect(child, 1.0); Evaled(ids, ph, '+')
+        val (ids, ph) = collect(child, 1.0); BoolNode(ids, ph, '+')
       case FtMod('-', child) =>
-        val (ids, ph) = collect(child, 1.0); Evaled(ids, ph, '-')
+        val (ids, ph) = collect(child, 1.0); BoolNode(ids, ph, '-')
       case other =>
-        val (ids, ph) = collect(other, 1.0); Evaled(ids, ph, 's')
+        val (ids, ph) = collect(other, 1.0); BoolNode(ids, ph, 's')
     }
+    (leafBuf.result(), evaled)
+  }
 
-    val ls = leafScores(index, leafBuf.result(), algo)
+  def searchBooleanNodes(index: FulltextIndex, nodes: Seq[FtNode],
+      algo: String = "bm25", tokenizer: String = "simple"): DataFrame = {
+    val (leaves, evaled) = booleanLeaves(nodes, tokenizer)
+    val ls = leafScores(index, leaves, algo)
 
     /** Per-node doc scores: sum of its leaf scores, with each phrase's
       * positional adjacency enforced (EvalPhrase semantics — all words
       * present at consistent offsets).
       */
-    def nodeScores(e: Evaled): DataFrame = {
+    def nodeScores(e: BoolNode): DataFrame = {
       val base = ls.filter(col("leaf_id").isin(e.leafIds: _*))
       if (e.phrases.isEmpty)
         base.groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
@@ -604,10 +677,6 @@ object Bm25 {
     result
   }
 
-  /** Natural-language mode: every distinct query token is a should-term.
-    * With `tokenizer = "chinese"` the query is segmented with the same
-    * dictionary DP as the index.
-    */
   /** The reference's natural-language mode, exactly: the WHOLE query is
     * one positional phrase over its NL-parsed patterns (`patternToSql`
     * routes NL mode through `SqlPhrase`, `pkg/fulltext/sql.go:575-580`;
@@ -624,23 +693,11 @@ object Bm25 {
     */
   def searchNaturalMo(index: FulltextIndex, query: String, algo: String = "bm25",
       tokenizer: String = "simple"): DataFrame = {
-    val spark = index.postings.sparkSession
-    // gojieba indexes store dictionary words at sequential ordinals —
-    // the query must segment the same way (ParsePattern with the jieba
-    // tokenizer, fulltext.go:919-923); every other parser shares the
-    // byte-positioned NL parse
-    val pats =
-      if (tokenizer == "chinese")
-        CjkSegmenter.tokenizeWithPos(query).map { case (w, i) => (w, false, i) }
-      else nlParse(query)
-    if (pats.isEmpty)
-      return spark.range(0).select(col("id").as("doc_id"),
+    val leaves = naturalLeaves(query, tokenizer)
+    if (leaves.isEmpty)
+      return index.postings.sparkSession.range(0).select(col("id").as("doc_id"),
         lit(0.0).as("score"))
-    val base = pats.head._3
-    val leaves = pats.zipWithIndex.map { case ((pat, star, tokPos), i) =>
-      Leaf(i, if (star) "star" else "text", pat, 1.0, tokPos - base)
-    }
-    val n = pats.length
+    val n = leaves.length
     val ls = leafScores(index, leaves, algo)
     val perDoc = ls.groupBy(col("doc_id"))
       .agg(
@@ -650,19 +707,36 @@ object Bm25 {
     val withOcc =
       if (n == 1) perDoc.withColumn("occ", col("tfsum").cast("int"))
       else perDoc.withColumn("occ", phraseOccCount(col("offs"), col("plists"), n))
+    // df = docs with an occurrence: a one-row aggregate broadcast back
+    // to every matched doc, not a window over one partition
     val matched = withOcc.filter(col("occ") > 0)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(lit(1))))
-    val nDocs = lit(index.nDocs.toDouble)
-    val idfSq = pow(log(10.0, nDocs / col("df")), 2)
-    val score = algo match {
-      case "tfidf" => lit(n) * col("occ") * idfSq
-      case _ =>
-        lit(n) * idfSq * (col("occ") * (K1 + 1)) /
-          (col("occ") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / lit(index.avgdl)))
-    }
-    matched.select(col("doc_id"), score.cast("double").as("score"))
+    val withDf = matched.crossJoin(broadcast(matched.agg(count(lit(1)).as("df"))))
+    withDf.select(col("doc_id"),
+      score[Column](algo, lit(n.toDouble), col("occ"), col("df"), col("dl"),
+        index.nDocs, index.avgdl).as("score"))
   }
 
+  /** NL-mode leaves, one per parsed pattern, at its offset from the
+    * first: gojieba indexes store dictionary words at sequential
+    * ordinals, so the query segments the same way (ParsePattern with the
+    * jieba tokenizer, fulltext.go:919-923); every other parser shares
+    * the byte-positioned NL parse.
+    */
+  private[fulltext] def naturalLeaves(query: String, tokenizer: String): Seq[Leaf] = {
+    val pats =
+      if (tokenizer == "chinese")
+        CjkSegmenter.tokenizeWithPos(query).map { case (w, i) => (w, false, i) }
+      else nlParse(query)
+    val base = pats.headOption.map(_._3).getOrElse(0)
+    pats.zipWithIndex.map { case ((pat, star, tokPos), i) =>
+      Leaf(i, if (star) "star" else "text", pat, 1.0, tokPos - base)
+    }
+  }
+
+  /** Natural-language mode: every distinct query token is a should-term.
+    * With `tokenizer = "chinese"` the query is segmented with the same
+    * dictionary DP as the index.
+    */
   def searchNatural(index: FulltextIndex, query: String, algo: String = "bm25",
       tokenizer: String = "simple"): DataFrame = {
     val parsed: Seq[(String, Boolean)] = (tokenizer match {
@@ -698,14 +772,140 @@ object Bm25 {
     searchBooleanNodes(index, nodes).select(col("doc_id"))
   }
 
+  // ------------------------------------------------ driver evaluator
+  /** One leaf's entry for one document, as [[leafScores]] aggregates it:
+    * tf summed over the leaf's matching terms, the doc length, the
+    * positions and the leaf score.
+    */
+  private final case class LeafDoc(tf: Long, dl: Long, positions: Array[Int], score: Double)
+
+  /** Each leaf's entries by document, keyed by leaf id. */
+  private type Probed = Map[Int, collection.Map[Any, LeafDoc]]
+
+  /** Read the postings of the leaves' terms — their exact terms'
+    * buckets, or every bucket once a STAR prefix is present — in ONE
+    * Spark job, then aggregate each leaf's per-document entries on the
+    * driver, exactly as [[leafScores]] does: df = the leaf's document
+    * count, and the score from the shared [[score]] formula.
+    */
+  private def probeLeaves(index: FulltextIndex, leaves: Seq[Leaf],
+      algo: String): Probed = {
+    val terms = leaves.filter(_.kind == "text").map(_.pat).distinct
+    val stars = leaves.filter(_.kind == "star").map(_.pat).distinct
+    val exact =
+      if (terms.isEmpty) lit(false)
+      else col("_tb").isin(terms.map(termBucket).distinct: _*) && col("term").isin(terms: _*)
+    val needPos = leaves.exists(_.phrasePos >= 0)
+    val rows =
+      if (leaves.isEmpty) Array.empty[Row]
+      else index.postings
+        .filter(stars.foldLeft(exact)((c, p) => c || col("term").startsWith(p)))
+        .select(col("term"), col("doc_id"), col("tf"), col("dl"),
+          if (needPos) col("positions") else lit(null).cast("array<int>").as("positions"))
+        .collect()
+    leaves.map { l =>
+      val acc = collection.mutable.LinkedHashMap.empty[Any, (Long, Long, Array[Int])]
+      rows.foreach { r =>
+        val t = r.getString(0)
+        if (if (l.kind == "star") t.startsWith(l.pat) else t == l.pat) {
+          val ps = if (r.isNullAt(4)) Array.empty[Int] else r.getSeq[Int](4).toArray
+          val (tf, dl, pos) = acc.getOrElse(r.get(1), (0L, Long.MinValue, Array.empty[Int]))
+          acc(r.get(1)) = (tf + r.getLong(2), math.max(dl, r.getLong(3)), pos ++ ps)
+        }
+      }
+      val df = acc.size.toDouble
+      l.leafId -> acc.map { case (doc, (tf, dl, pos)) =>
+        doc -> LeafDoc(tf, dl, pos,
+          score[Double](algo, l.weight, tf.toDouble, df, dl.toDouble, index.nDocs, index.avgdl))
+      }
+    }.toMap
+  }
+
+  /** [[phraseOccCount]] on the driver: the entries are (offset,
+    * positions) of the phrase's leaves that hold the document. The first
+    * shifted list seeds the intersection as is; each further list keeps
+    * the distinct survivors (`array_intersect`).
+    */
+  private def phraseOcc(entries: Seq[(Int, Array[Int])], nWords: Int): Int =
+    if (entries.isEmpty || entries.length != nWords) 0
+    else {
+      val shifted = entries.map { case (off, ps) => ps.map(_ - off) }
+      shifted.tail.foldLeft(shifted.head)((acc, x) => acc.distinct.intersect(x)).length
+    }
+
+  /** [[searchBooleanNodes]] on the driver over probed leaves. Scores sum
+    * from 0.0 in leaf order, then node order, as Spark's `sum` does for
+    * one value; only the order of multi-leaf sums can differ.
+    */
+  private def booleanLocal(leaves: Seq[Leaf], nodes: Seq[BoolNode],
+      ls: Probed): Seq[(Any, Double)] = {
+    val offset = leaves.map(l => l.leafId -> l.phrasePos).toMap
+    def nodeScores(e: BoolNode): collection.Map[Any, Double] = {
+      val sums = collection.mutable.LinkedHashMap.empty[Any, Double]
+      e.leafIds.foreach(id => ls(id).foreach { case (d, ld) =>
+        sums(d) = sums.getOrElse(d, 0.0) + ld.score
+      })
+      sums.filter { case (d, _) =>
+        e.phrases.forall { case (ids, nWords) =>
+          phraseOcc(ids.flatMap(id => ls(id).get(d).map(ld => (offset(id), ld.positions))),
+            nWords) > 0
+        }
+      }
+    }
+    def total(maps: Seq[collection.Map[Any, Double]], d: Any): Double =
+      maps.foldLeft(0.0)((s, m) => m.get(d).fold(s)(s + _))
+    val musts = nodes.filter(_.role == '+').map(nodeScores)
+    val shoulds = nodes.filter(_.role == 's').map(nodeScores)
+    val excluded = nodes.filter(_.role == '-').flatMap(_.leafIds).flatMap(ls(_).keys).toSet
+    val docs =
+      if (musts.nonEmpty) musts.head.keys.filter(d => musts.forall(_.contains(d))).toSeq
+      else shoulds.flatMap(_.keys).distinct
+    // a sum from 0.0 is never -0.0, so adding an empty side's 0.0 is exact
+    docs.filterNot(excluded).map(d => d -> (total(musts, d) + total(shoulds, d)))
+  }
+
+  /** [[searchNaturalMo]] on the driver over probed leaves. */
+  private def naturalLocal(index: FulltextIndex, leaves: Seq[Leaf], algo: String,
+      ls: Probed): Seq[(Any, Double)] = {
+    val n = leaves.length
+    val entries = leaves.flatMap(l => ls(l.leafId).map { case (d, ld) => (d, l.phrasePos, ld) })
+    val occ = entries.groupBy(_._1).toSeq.flatMap { case (d, es) =>
+      val o =
+        if (n == 1) es.map(_._3.tf).sum.toInt
+        else phraseOcc(es.map { case (_, off, ld) => (off, ld.positions) }, n)
+      if (o > 0) Some((d, o, es.map(_._3.dl).max)) else None
+    }
+    val df = occ.length.toDouble
+    occ.map { case (d, o, dl) =>
+      d -> score[Double](algo, n.toDouble, o.toDouble, df, dl.toDouble, index.nDocs, index.avgdl)
+    }
+  }
+
   // ----------------------------------------------------- prebuilt index
   /** A persisted inverted index + driver-side corpus stats: the unit the
     * reference materializes at `CREATE FULLTEXT INDEX` time.
+    * `bucketBytes` holds the written size of each term bucket of a
+    * materialized index ([[FulltextIndex.forCorpusMulti]]), empty for an
+    * in-session one.
     */
-  final case class FulltextIndex(postings: DataFrame, nDocs: Long, avgdl: Double)
+  final case class FulltextIndex(postings: DataFrame, nDocs: Long, avgdl: Double,
+      bucketBytes: IndexedSeq[Long] = IndexedSeq.empty) {
+
+    /** Bytes of postings a probe of these leaves reads: the buckets of
+      * its exact terms, or every bucket once a STAR prefix is present.
+      * None when the sizes are unknown.
+      */
+    private[fulltext] def probeBytes(leaves: Seq[Leaf]): Option[Long] =
+      if (bucketBytes.isEmpty) None
+      else if (leaves.exists(_.kind == "star")) Some(bucketBytes.sum)
+      else Some(leaves.map(l => termBucket(l.pat)).distinct.map(bucketBytes).sum)
+  }
 
   object FulltextIndex {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, FulltextIndex]()
+    // per session: a cached index holds DataFrames of the session that
+    // built it, which a later session must never probe
+    private val cache = new graft.SessionScoped(() =>
+      new java.util.concurrent.ConcurrentHashMap[String, FulltextIndex]())
 
     /** Ephemeral in-session index: cached postings DataFrame. Prefer
       * [[forCorpus]] for anything probed more than once.
@@ -751,7 +951,8 @@ object Bm25 {
       // "bp" = byte-position postings format; versioning the store path
       // keeps a pre-upgrade persisted index from being probed with the
       // new position semantics
-      cache.computeIfAbsent(s"$key#${textCols.mkString(",")}#$ngram#$n#$tokenizer#bp", _ => {
+      cache(docs.sparkSession).computeIfAbsent(
+          s"$key#${textCols.mkString(",")}#$ngram#$n#$tokenizer#bp", _ => {
         val spark = docs.sparkSession
         val dir = graft.plans.IndexStore.path(spark, "fulltext",
           s"$key-${textCols.mkString("-")}-$ngram-$n-$tokenizer-bp")
@@ -766,16 +967,26 @@ object Bm25 {
         val row = postings.select(col("doc_id"), col("dl")).distinct()
           .agg(count(lit(1)), avg(col("dl"))).head()
         FulltextIndex(postings, row.getLong(0),
-          if (row.isNullAt(1)) 0.0 else row.getDouble(1))
+          if (row.isNullAt(1)) 0.0 else row.getDouble(1), writtenBucketBytes(spark, dir))
       })
 
-    def invalidate(key: String): Unit = {
-      val it = cache.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.startsWith(key + "#")) it.remove()
+    /** Size of each `_tb=k` bucket's data files in a written postings dir. */
+    private def writtenBucketBytes(spark: SparkSession, dir: String): IndexedSeq[Long] = {
+      val sizes = Array.fill(TermBuckets)(0L)
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val files = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+      while (files.hasNext) {
+        val f = files.next()
+        val bucket = f.getPath.getParent.getName
+        val name = f.getPath.getName
+        if (bucket.startsWith("_tb=") && !name.startsWith(".") && !name.startsWith("_"))
+          sizes(bucket.stripPrefix("_tb=").toInt) += f.getLen
       }
+      sizes.toIndexedSeq
     }
+
+    def invalidate(key: String): Unit =
+      cache.values.foreach(_.keySet().removeIf(k => k.startsWith(key + "#")))
   }
 
   // --------------------------------------------------- one-call helpers
@@ -810,6 +1021,8 @@ object Bm25 {
 
   /** Multi-column `MATCH(col1, col2, ...) AGAINST(q)`: one combined
     * index over the concatenated columns (see [[buildIndexMulti]]).
+    * Scored on the driver when the probe fits the broadcast threshold,
+    * else by the DataFrame evaluators (see the object doc).
     */
   def matchAgainstMulti(docs: DataFrame, idCol: String, textCols: Seq[String],
       query: String, booleanMode: Boolean = false, cacheKey: String = null,
@@ -821,7 +1034,20 @@ object Bm25 {
       else FulltextIndex.buildMulti(docs, idCol, textCols, tokenizer = tokenizer)
     // the SQL MATCH surface follows the reference exactly: NL mode is a
     // positional phrase with the log10²-idf scoring (searchNaturalMo)
-    if (booleanMode) searchBoolean(index, query, algo, tokenizer)
+    val bool = if (booleanMode) Some(booleanLeaves(parseBoolean(query), tokenizer)) else None
+    val leaves = bool.fold(naturalLeaves(query, tokenizer))(_._1)
+    val spark = index.postings.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (index.probeBytes(leaves).exists(_ <= threshold)) {
+      val ls = probeLeaves(index, leaves, algo)
+      val scores = bool.fold(naturalLocal(index, leaves, algo, ls)) {
+        case (_, nodes) => booleanLocal(leaves, nodes, ls)
+      }
+      spark.createDataFrame(
+        java.util.Arrays.asList(scores.map { case (d, s) => Row(d, s) }: _*),
+        StructType(Seq(StructField("doc_id", index.postings.schema("doc_id").dataType),
+          StructField("score", DoubleType))))
+    } else if (booleanMode) searchBoolean(index, query, algo, tokenizer)
     else searchNaturalMo(index, query, algo, tokenizer)
   }
 }

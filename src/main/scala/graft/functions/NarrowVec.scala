@@ -200,12 +200,12 @@ object NarrowVec {
     case _ => -1
   }
 
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
+  /** Register the UDFs on this session (idempotent: the session's own
+    * function registry is the flag).
+    */
   def registerAll(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(
-      String.valueOf(System.identityHashCode(spark)), true) != null) return
+    if (spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("mo_vec_text_d"))) return
     // float-returning variants for every kind but f64: downstream
     // arithmetic then runs at FLOAT32 precision, which is what the
     // reference's vecf32 kernels do (vector_ivf_quant_boundary.result

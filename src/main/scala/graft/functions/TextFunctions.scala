@@ -79,17 +79,20 @@ object TextFunctions {
         h => pmod(h * (i * 2 + 1) + i * lit(2654435761L), p))))
   }
 
-  /** LSH band keys: signature split into `bands` bands of `rows` hashes;
-    * each band rendered as a join key string.
-    */
-  /** LSH bucket key per band: a 64-bit hash of the band's signature
-    * slice, not the joined string — the key flows through an exchange,
-    * a self-join and a distinct, and a long is both narrower and
-    * cheaper to compare than the ~80-char `h1_h2_…` concat (guide
-    * §2.3). A hash collision can only ADD a candidate pair (equal
-    * slices always collide), and candidates are verified by exact
-    * Jaccard/Hamming downstream, so recall and declared outputs are
-    * unchanged.
+  /** LSH bucket keys: the signature split into `bands` bands of `rows`
+    * hashes, each band keyed by a 64-bit hash of its slice rather than
+    * the joined `h1_h2_…` string — the key flows through an exchange, a
+    * self-join and a distinct, and a long is narrower and cheaper to
+    * compare than the ~80-char concat (guide §2.3).
+    *
+    * Equal slices always get equal keys, so a collision never splits a
+    * true bucket; it can only merge two buckets into one. Candidates
+    * are verified by exact Jaccard/Hamming downstream, so a merged
+    * bucket adds no false output. It can lose true pairs, though: the
+    * `Dedup` guard `_bucket_n <= maxBucket` drops a merged bucket whose
+    * combined size passes the cap even when each true bucket is under
+    * it. With 64-bit keys that needs a collision among one band's keys,
+    * which is negligible below billions of distinct slices per band.
     */
   def bandKeys(sig: Column, bands: Int, rows: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),

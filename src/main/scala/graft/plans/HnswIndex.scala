@@ -1,9 +1,10 @@
 package graft.plans
 
 import graft.operators.Hnsw
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
+import scala.collection.concurrent.TrieMap
 
 /** HNSW ANN index registry — the analog of the reference's HNSW index
   * tables (`pkg/vectorindex/hnsw/`, planner rewrite
@@ -21,17 +22,28 @@ object HnswIndex {
       graphs: DataFrame,
       dir: String)
 
-  private val registry = scala.collection.concurrent.TrieMap.empty[String, Index]
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Index]
+  private final class State {
+    // name → index armed for the planner rule
+    val registry = TrieMap.empty[String, Index]
+    // build-once cache of `forCorpus`, keyed by every build parameter
+    val built = TrieMap.empty[String, Index]
+    // (index, query vector, k) → lazy candidate plan: the analyzer may
+    // apply the rule on every analysis of a matching plan
+    val probeCache = TrieMap.empty[(String, Seq[Double], Int), DataFrame]
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
-  def indexes: Seq[Index] = registry.values.toSeq
-  def drop(name: String): Unit =
-    registry.remove(name).foreach { idx =>
-      built.filterInPlace((_, v) => v.name != name)
-      probeCache.filterInPlace((k, _) => k._1 != name)
-      IndexStore.delete(idx.graphs.sparkSession, idx.dir)
+  def indexes(spark: SparkSession): Seq[Index] = state(spark).registry.values.toSeq
+  def drop(spark: SparkSession, name: String): Unit = {
+    val st = state(spark)
+    st.registry.remove(name).foreach { idx =>
+      st.built.filterInPlace((_, v) => v.name != name)
+      st.probeCache.filterInPlace((k, _) => k._1 != name)
+      IndexStore.delete(spark, idx.dir)
     }
-  def clear(): Unit = registry.keys.toSeq.foreach(drop)
+  }
+  def clear(spark: SparkSession): Unit =
+    state(spark).registry.keys.toSeq.foreach(drop(spark, _))
 
   /** Build the sharded graphs ONCE per corpus, materialized to parquet
     * in [[IndexStore]] (≙ the reference writing usearch model parts into
@@ -41,8 +53,9 @@ object HnswIndex {
     */
   def forCorpus(key: String, df: DataFrame, idCol: String, vecCol: String,
       m: Int = 16, efConstruction: Int = 100, efSearch: Int = 64): Index = {
-    val idx = built.getOrElseUpdate(s"$key#$m#$efConstruction#$efSearch", {
-      val spark = df.sparkSession
+    val spark = df.sparkSession
+    val st = state(spark)
+    val idx = st.built.getOrElseUpdate(s"$key#$m#$efConstruction#$efSearch", {
       val dir = IndexStore.path(spark, "hnsw", s"$key-$m-$efConstruction")
       // NULL vectors are absent from the index; match plan stays unfiltered
       Hnsw.buildShardedGraphs(df.filter(col(vecCol).isNotNull),
@@ -52,18 +65,13 @@ object HnswIndex {
       Index(key, df.queryExecution.analyzed.canonicalized,
         idCol, vecCol, efSearch, graphs, dir)
     })
-    registry.put(key, idx)
+    st.registry.put(key, idx)
     idx
   }
 
-  /** Per-(index, query, k) cached lazy candidate plan — the analyzer may
-    * apply [[HnswAnnRule]] on every analysis of a matching plan.
-    */
-  private val probeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[Double], Int), DataFrame]
-
-  def probe(idx: Index, q: Array[Double], k: Int): DataFrame =
-    probeCache.getOrElseUpdate((idx.name, q.toSeq, k),
+  /** Lazy candidate plan of one (index, query, k), cached per session. */
+  def probe(spark: SparkSession, idx: Index, q: Array[Double], k: Int): DataFrame =
+    state(spark).probeCache.getOrElseUpdate((idx.name, q.toSeq, k),
       Hnsw.searchShards(idx.graphs, q.map(_.toFloat), k, idx.efSearch)
         .select(col("neighbor_id")))
 }

@@ -77,12 +77,12 @@ private[plans] object AnnSortPattern {
 class IvfAnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (IvfIndex.indexes.isEmpty) return plan
+    if (IvfIndex.indexes(spark).isEmpty) return plan
     plan.transformDown {
       case limit @ GlobalLimit(IntegerLiteral(k),
           LocalLimit(_, sort @ Sort(Seq(AnnSortPattern(attr, q, metric)), true, child, _))) =>
         val rewritten = for {
-          idx <- IvfIndex.indexes.find(ix =>
+          idx <- IvfIndex.indexes(spark).find(ix =>
             ix.vecCol == attr.name && child.canonicalized == ix.corpusPlan)
           probePlan = {
             val cellIds = IvfIndex.nearestCells(idx, q, metric)
@@ -108,17 +108,17 @@ class IvfAnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 class IvfPqAnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (IvfPqIndex.indexes.isEmpty) return plan
+    if (IvfPqIndex.indexes(spark).isEmpty) return plan
     plan.transformDown {
       case limit @ GlobalLimit(IntegerLiteral(k),
           LocalLimit(_, sort @ Sort(Seq(AnnSortPattern(attr, q, "l2")), true, child, _))) =>
         val rewritten = for {
-          idx <- IvfPqIndex.indexes.find(ix =>
+          idx <- IvfPqIndex.indexes(spark).find(ix =>
             ix.vecCol == attr.name && child.canonicalized == ix.corpusPlan)
           idAttr <- child.output.find(_.name == idx.idCol)
           // over-fetch ADC candidates so the exact re-rank recovers
           // quantization error (the reference's refine factor)
-          candPlan = IvfPqIndex.probe(idx, q, math.max(idx.refineFactor * k, 100))
+          candPlan = IvfPqIndex.probe(spark, idx, q, math.max(idx.refineFactor * k, 100))
             .queryExecution.analyzed
           nAttr <- candPlan.output.headOption
         } yield {
@@ -143,15 +143,15 @@ class IvfPqAnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 class HnswAnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (HnswIndex.indexes.isEmpty) return plan
+    if (HnswIndex.indexes(spark).isEmpty) return plan
     plan.transformDown {
       case limit @ GlobalLimit(IntegerLiteral(k),
           LocalLimit(_, sort @ Sort(Seq(AnnSortPattern(attr, q, "l2")), true, child, _))) =>
         val rewritten = for {
-          idx <- HnswIndex.indexes.find(ix =>
+          idx <- HnswIndex.indexes(spark).find(ix =>
             ix.vecCol == attr.name && child.canonicalized == ix.corpusPlan)
           idAttr <- child.output.find(_.name == idx.idCol)
-          candPlan = HnswIndex.probe(idx, q, k).queryExecution.analyzed
+          candPlan = HnswIndex.probe(spark, idx, q, k).queryExecution.analyzed
           nAttr <- candPlan.output.headOption
         } yield {
           val cond =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import scala.collection.concurrent.TrieMap
 
 /** IVF-FLAT ANN index registry — the reference's vector-index build path
   * (`pkg/vectorindex/ivfflat/`, SQL `ivf_create`): k-means centroids +
@@ -29,15 +30,24 @@ object IvfIndex {
       cells: DataFrame,              // corpus columns + __ivf_cell
       dir: String = "")              // materialized location ("" = in-memory)
 
-  private val registry = scala.collection.concurrent.TrieMap.empty[String, Index]
+  private final class State {
+    // name → index armed for the planner rule
+    val registry = TrieMap.empty[String, Index]
+    // build-once cache of `forCorpus`, keyed by every build parameter
+    val built = TrieMap.empty[String, Index]
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
-  def indexes: Seq[Index] = registry.values.toSeq
-  def drop(name: String): Unit =
-    registry.remove(name).foreach { idx =>
-      built.filterInPlace((_, v) => v.name != name)
-      if (idx.dir.nonEmpty) IndexStore.delete(idx.cells.sparkSession, idx.dir)
+  def indexes(spark: SparkSession): Seq[Index] = state(spark).registry.values.toSeq
+  def drop(spark: SparkSession, name: String): Unit = {
+    val st = state(spark)
+    st.registry.remove(name).foreach { idx =>
+      st.built.filterInPlace((_, v) => v.name != name)
+      if (idx.dir.nonEmpty) IndexStore.delete(spark, idx.dir)
     }
-  def clear(): Unit = registry.keys.toSeq.foreach(drop)
+  }
+  def clear(spark: SparkSession): Unit =
+    state(spark).registry.keys.toSeq.foreach(drop(spark, _))
 
   /** Element-wise mean of `__ivf_features` — the single centroid of a
     * lists=1 index (one distributed aggregate, no kmeans).
@@ -71,7 +81,7 @@ object IvfIndex {
     cells.count() // materialize the index now (build-time, not query-time)
     val idx = Index(name, df.queryExecution.analyzed.canonicalized, vecCol,
       nlist, nprobe, centers, cells)
-    registry.put(name, idx)
+    state(df.sparkSession).registry.put(name, idx)
     idx
   }
 
@@ -84,8 +94,9 @@ object IvfIndex {
   def forCorpus(key: String, df: DataFrame, vecCol: String,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
       maxIter: Int = 20): Index = {
-    val idx = built.getOrElseUpdate(s"$key#$nlist#$nprobe#$seed#$maxIter", {
-      val spark = df.sparkSession
+    val spark = df.sparkSession
+    val st = state(spark)
+    val idx = st.built.getOrElseUpdate(s"$key#$nlist#$nprobe#$seed#$maxIter", {
       val featurized = df.filter(col(vecCol).isNotNull)
         .withColumn("__ivf_features", array_to_vector(col(vecCol)))
       val (centers, clustered) =
@@ -115,11 +126,9 @@ object IvfIndex {
       Index(key, df.queryExecution.analyzed.canonicalized, vecCol,
         nlist, nprobe, centers, cells, dir)
     })
-    registry.put(key, idx)
+    st.registry.put(key, idx)
     idx
   }
-
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Index]
 
   /** Driver-side nearest cells for a literal query vector, ranked by
     * the query's metric (cosine probes rank by angular distance to the

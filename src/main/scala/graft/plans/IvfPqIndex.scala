@@ -1,10 +1,11 @@
 package graft.plans
 
 import graft.operators.IvfPq
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.concurrent.TrieMap
 
 /** IVF-PQ ANN index registry — analog of the reference's IVF-PQ index
   * tables (`pkg/vectorindex/ivfpq/`, planner rewrite
@@ -28,17 +29,28 @@ object IvfPqIndex {
       codes: DataFrame,              // (_id, _cell, _codes) partitioned by _cell
       dir: String)
 
-  private val registry = scala.collection.concurrent.TrieMap.empty[String, Index]
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Index]
+  private final class State {
+    // name → index armed for the planner rule
+    val registry = TrieMap.empty[String, Index]
+    // build-once cache of `forCorpus`, keyed by every build parameter
+    val built = TrieMap.empty[String, Index]
+    // (index, query vector, k) → lazy candidate plan: the analyzer may
+    // apply the rule on every analysis of a matching plan
+    val probeCache = TrieMap.empty[(String, Seq[Double], Int), DataFrame]
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
-  def indexes: Seq[Index] = registry.values.toSeq
-  def drop(name: String): Unit =
-    registry.remove(name).foreach { idx =>
-      built.filterInPlace((_, v) => v.name != name)
-      probeCache.filterInPlace((k, _) => k._1 != name)
-      IndexStore.delete(idx.codes.sparkSession, idx.dir)
+  def indexes(spark: SparkSession): Seq[Index] = state(spark).registry.values.toSeq
+  def drop(spark: SparkSession, name: String): Unit = {
+    val st = state(spark)
+    st.registry.remove(name).foreach { idx =>
+      st.built.filterInPlace((_, v) => v.name != name)
+      st.probeCache.filterInPlace((k, _) => k._1 != name)
+      IndexStore.delete(spark, idx.dir)
     }
-  def clear(): Unit = registry.keys.toSeq.foreach(drop)
+  }
+  def clear(spark: SparkSession): Unit =
+    state(spark).registry.keys.toSeq.foreach(drop(spark, _))
 
   /** Build ONCE per corpus (≙ `ivfpq_create`): KMeans coarse quantizer +
     * subspace codebooks fit distributed, codes written to parquet
@@ -51,9 +63,10 @@ object IvfPqIndex {
   def forCorpus(key: String, df: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, mSub: Int = 8, codebookSize: Int = 16,
       nprobe: Int = 4, refineFactor: Int = 10, seed: Long = 42L): Index = {
-    val idx = built.getOrElseUpdate(
+    val spark = df.sparkSession
+    val st = state(spark)
+    val idx = st.built.getOrElseUpdate(
       s"$key#$nlist#$mSub#$codebookSize#$nprobe#$refineFactor#$seed", {
-        val spark = df.sparkSession
         // NULL vectors are absent from the index; match plan stays unfiltered
         val (codesMem, model) = IvfPq.build(df.filter(col(vecCol).isNotNull),
           idCol, vecCol, nlist, mSub, codebookSize, seed)
@@ -68,7 +81,7 @@ object IvfPqIndex {
         Index(key, df.queryExecution.analyzed.canonicalized,
           idCol, vecCol, nprobe, refineFactor, model, codes, dir)
       })
-    registry.put(key, idx)
+    st.registry.put(key, idx)
     idx
   }
 
@@ -84,14 +97,12 @@ object IvfPqIndex {
     * (explain, re-resolution), and without the cache each pass would
     * plan a fresh probe lineage.
     */
-  private val probeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[Double], Int), DataFrame]
+  def probe(spark: SparkSession, idx: Index, q: Array[Double], fetch: Int): DataFrame =
+    state(spark).probeCache.getOrElseUpdate((idx.name, q.toSeq, fetch),
+      doProbe(spark, idx, q, fetch))
 
-  def probe(idx: Index, q: Array[Double], fetch: Int): DataFrame =
-    probeCache.getOrElseUpdate((idx.name, q.toSeq, fetch), doProbe(idx, q, fetch))
-
-  private def doProbe(idx: Index, q: Array[Double], fetch: Int): DataFrame = {
-    val spark = idx.codes.sparkSession
+  private def doProbe(spark: SparkSession, idx: Index, q: Array[Double],
+      fetch: Int): DataFrame = {
     val m = idx.model
     val kk = m.codebooks(0).length
     val mSub = m.mSub

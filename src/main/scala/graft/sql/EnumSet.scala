@@ -25,22 +25,14 @@ object EnumSet {
 
   final case class Col(name: String, labels: Vector[String], isSet: Boolean)
 
-  private def sk(spark: SparkSession): Int =
-    System.identityHashCode(spark.sharedState)
-
-  // (session, physicalTableLower) → enum/set columns
-  private val cols = TrieMap[(Int, String), Vector[Col]]()
+  // physicalTableLower → enum/set columns
+  private val cols = new graft.SessionScoped(() => TrieMap[String, Vector[Col]]())
 
   def colsOf(spark: SparkSession, table: String): Vector[Col] =
-    cols.getOrElse((sk(spark), table.toLowerCase), Vector.empty)
+    cols(spark).getOrElse(table.toLowerCase, Vector.empty)
 
   def forget(spark: SparkSession, table: String): Unit =
-    cols.remove((sk(spark), table.toLowerCase))
-
-  def clear(spark: SparkSession): Unit = {
-    val k = sk(spark)
-    cols.keys.filter(_._1 == k).foreach(cols.remove)
-  }
+    cols(spark).remove(table.toLowerCase)
 
   private val TypeRe =
     """(?i)\b(enum|set)\s*\(([^)]*)\)""".r
@@ -94,7 +86,7 @@ object EnumSet {
     }
     if (registered.isEmpty) q
     else {
-      cols.put((sk(spark), tm.group(1).toLowerCase), registered)
+      cols(spark).put(tm.group(1).toLowerCase, registered)
       q.substring(0, open + 1) + items2.mkString(", ") +
         q.substring(closeEnd - 1)
     }
@@ -151,8 +143,7 @@ object EnumSet {
 
   /** INSERT/REPLACE VALUES + UPDATE SET literal mapping/validation. */
   def dmlRewrite(spark: SparkSession, q0: String): String = {
-    val k = sk(spark)
-    if (!cols.keys.exists(_._1 == k)) return q0
+    if (cols(spark).isEmpty) return q0
     val im = """(?is)^((?:insert|replace)\s+(?:ignore\s+)?into\s+)`?([\w$]+)`?\s*(\([^)]*\))?\s*(values\s*)(.+)$""".r
       .findFirstMatchIn(q0)
     im.foreach { m =>
@@ -298,8 +289,7 @@ object EnumSet {
     * → ordinal→label mapping.
     */
   def exprRewrite(spark: SparkSession, q0: String): String = {
-    val k = sk(spark)
-    if (!cols.keys.exists(_._1 == k)) return q0
+    if (cols(spark).isEmpty) return q0
     val low = q0.toLowerCase
     val tableRe =
       if (low.startsWith("select") || low.startsWith("with"))

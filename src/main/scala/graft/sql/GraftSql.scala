@@ -35,41 +35,96 @@ import scala.collection.concurrent.TrieMap
   */
 object GraftSql {
 
-  /** table name → unique-id column used to join fulltext scores back.
-    * The reference requires a PK for a fulltext index
-    * (`pkg/sql/plan/build_constraint_util.go` fulltext checks); here the
-    * registry defaults to the table's first column when unregistered.
+  /** GraftSql's per-session state (the scope and its release are
+    * [[graft.SessionScoped]]'s). Table-keyed maps use the lowercase
+    * physical table name.
     */
-  private val primaryKeys = TrieMap[String, String]("documents" -> "doc_id")
-  def registerPrimaryKey(table: String, pk: String): Unit =
-    primaryKeys.put(table, pk)
-  def clearPrimaryKey(table: String): Unit =
-    primaryKeys.remove(table.toLowerCase)
+  private final class State {
+    /** table → unique-id column used to join fulltext scores back.
+      * The reference requires a PK for a fulltext index
+      * (`pkg/sql/plan/build_constraint_util.go` fulltext checks); here
+      * the registry defaults to the table's first column when
+      * unregistered.
+      */
+    val primaryKeys = TrieMap[String, String]("documents" -> "doc_id")
+    /** table → (index name, covered columns) for UNIQUE secondary keys —
+      * REPLACE INTO / INSERT ... ON DUPLICATE KEY dedup against these as
+      * well as the pk (the reference's dedup join keys on every unique
+      * index, `pkg/sql/colexec/dedupjoin/`).
+      */
+    val uniqueKeys = TrieMap[String, Vector[(String, Seq[String])]]()
+    /** child table → FOREIGN KEY constraints, composite keys included;
+      * deleting/replacing a referenced parent row cascades, nulls, or
+      * rejects per the action (MySQL semantics, replace.result fk
+      * blocks).
+      */
+    val foreignKeys = TrieMap[String, Vector[FkRef]]()
+    @volatile var lastRowCount = 0L
+    // affected-rows records so far: a statement that made none gets the
+    // ROW_COUNT() default (see `sql`)
+    @volatile var rowCountWrites = 0L
+    /** "scope#name" → SQL literal of SET system variables. */
+    val sysVars = TrieMap[String, String]()
+    /** MO cluster tables (see [[clusterDdl]]). */
+    val clusterTables = TrieMap[String, Unit]()
+    /** (table, column) → declared datetime/timestamp fractional-second
+      * precision, recorded by the harness from the MySQL DDL.
+      */
+    val tsFsp = TrieMap[(String, String), Int]()
+    /** table → last LOAD source path, backing the reference's
+      * `__mo_filepath` load-metadata column (`pkg/sql/colexec/external/`).
+      * Substituted as a literal per referencing table — exact while a
+      * table is fed from one file (the external-table shape); a
+      * multi-file union would need a real per-row metadata column
+      * (Spark's `_metadata.file_path`) on a direct file-source scan.
+      */
+    val loadPaths = TrieMap[String, String]()
+    /** table → registered fulltext indexes (name, columns, parser). */
+    val ftIndexCols = TrieMap[String, Vector[(String, Set[String], String)]]()
+    /** lowercase name → body of PREPARE'd statements. */
+    val preparedStmts = TrieMap[String, String]()
+    /** lowercase name → SQL literal of `@name` user variables. */
+    val userVars = TrieMap[String, String]()
+    /** Relevancy algorithm for MATCH scoring — the reference's
+      * `SET ft_relevancy_algorithm = "TF-IDF"|"BM25"`
+      * (`test/distributed/cases/fulltext/fulltext.sql:7`).
+      */
+    @volatile var ftAlgo = "bm25"
+    /** table → (colName, kind, dim) for declared narrow vector columns. */
+    val vecCols = TrieMap[String, Vector[(String, String, Int)]]()
+    /** table → (auto-increment column, next value) — the reference's
+      * implicit id allocation (`pkg/incrservice/`), needed at LOAD time
+      * when the file carries NULL for the id column.
+      */
+    val autoIncCols = TrieMap[String, Vector[(String, Long)]]()
+    /** table → accumulated stat patches — successive `table_stats`
+      * 'patch' calls merge (associative.sql patches table_cnt first,
+      * then ndv_map, and the later SELECT sees both).
+      */
+    val statPatches = TrieMap[String, scala.collection.mutable.LinkedHashMap[String,
+      com.fasterxml.jackson.databind.JsonNode]]()
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
-  /** table → (index name, covered columns) for UNIQUE secondary keys —
-    * REPLACE INTO / INSERT ... ON DUPLICATE KEY dedup against these as
-    * well as the pk (the reference's dedup join keys on every unique
-    * index, `pkg/sql/colexec/dedupjoin/`).
-    */
-  private val uniqueKeys = TrieMap[String, Vector[(String, Seq[String])]]()
-  def registerUniqueKey(table: String, name: String, cols: Seq[String]): Unit =
-    uniqueKeys.updateWith(table.toLowerCase) {
+  def registerPrimaryKey(spark: SparkSession, table: String, pk: String): Unit =
+    state(spark).primaryKeys.put(table, pk)
+  def clearPrimaryKey(spark: SparkSession, table: String): Unit =
+    state(spark).primaryKeys.remove(table.toLowerCase)
+
+  def registerUniqueKey(spark: SparkSession, table: String, name: String,
+      cols: Seq[String]): Unit =
+    state(spark).uniqueKeys.updateWith(table.toLowerCase) {
       case Some(v) => Some(v.filterNot(_._1.equalsIgnoreCase(name)) :+ (name, cols))
       case None => Some(Vector((name, cols)))
     }
-  def dropUniqueKey(table: String, name: String): Unit =
-    uniqueKeys.updateWith(table.toLowerCase)(
+  def dropUniqueKey(spark: SparkSession, table: String, name: String): Unit =
+    state(spark).uniqueKeys.updateWith(table.toLowerCase)(
       _.map(_.filterNot(_._1.equalsIgnoreCase(name))))
-  def clearUniqueKeys(table: String): Unit =
-    uniqueKeys.remove(table.toLowerCase)
-  def uniqueKeysOf(table: String): Vector[(String, Seq[String])] =
-    uniqueKeys.getOrElse(table.toLowerCase, Vector.empty)
+  def clearUniqueKeys(spark: SparkSession, table: String): Unit =
+    state(spark).uniqueKeys.remove(table.toLowerCase)
+  def uniqueKeysOf(spark: SparkSession, table: String): Vector[(String, Seq[String])] =
+    state(spark).uniqueKeys.getOrElse(table.toLowerCase, Vector.empty)
 
-  /** child table → (child cols, parent table, parent cols, ON DELETE
-    * action) — FOREIGN KEY constraints, composite keys included;
-    * deleting/replacing a referenced parent row cascades, nulls, or
-    * rejects per the action (MySQL semantics, replace.result fk blocks).
-    */
   /** One FOREIGN KEY constraint on a child table. `onDelete`/`onUpdate`
     * hold the normalized action ("no action" when unspecified);
     * `delExplicit`/`updExplicit` remember whether the DDL spelled the
@@ -80,13 +135,7 @@ object GraftSql {
     onDelete: String, onUpdate: String,
     delExplicit: Boolean, updExplicit: Boolean, db: String)
 
-  private val foreignKeys = TrieMap[String, Vector[FkRef]]()
   private val fkNameSeq = new AtomicLong(0L)
-
-  def registerForeignKey(child: String, childCols: Seq[String],
-      parent: String, parentCols: Seq[String], action: String): Unit =
-    registerForeignKeyFull(null, child, null, childCols, parent, parentCols,
-      action, "no action", updExplicit = false)
 
   def registerForeignKeyFull(spark: SparkSession, child: String,
       name0: String, childCols: Seq[String], parent: String,
@@ -98,13 +147,12 @@ object GraftSql {
       .filter(_.nonEmpty)
     val name = Option(name0).filter(_.nonEmpty)
       .getOrElse(s"__fk_${child.toLowerCase}_${fkNameSeq.incrementAndGet()}")
-    val db = Option(spark)
-      .flatMap(s => MoCatalog.currentDb(s)).getOrElse("default")
+    val db = MoCatalog.currentDb(spark).getOrElse("default")
     val ref = FkRef(name, childCols, parent.toLowerCase, parentCols,
       onDelete.getOrElse("no action"), onUpdate.getOrElse("no action"),
       delExplicit = onDelete.isDefined, updExplicit = onUpdate.isDefined,
       db = db.toLowerCase)
-    foreignKeys.updateWith(child.toLowerCase) {
+    state(spark).foreignKeys.updateWith(child.toLowerCase) {
       case Some(v) => Some(v.filterNot(_.name.equalsIgnoreCase(name)) :+ ref)
       case None => Some(Vector(ref))
     }
@@ -116,13 +164,15 @@ object GraftSql {
     * case-only CHANGE is a real rename for the catalog even though
     * identifiers compare equal under lower_case_table_names).
     */
-  def renameFkColumn(table: String, old: String, nw: String): Unit = {
-    foreignKeys.updateWith(table.toLowerCase)(_.map(_.map(r =>
+  def renameFkColumn(spark: SparkSession, table: String, old: String,
+      nw: String): Unit = {
+    val fks = state(spark).foreignKeys
+    fks.updateWith(table.toLowerCase)(_.map(_.map(r =>
       r.copy(childCols = r.childCols.map(c =>
         if (c.equalsIgnoreCase(old)) nw else c)))))
-    foreignKeys.toSeq.foreach { case (child, refs) =>
+    fks.toSeq.foreach { case (child, refs) =>
       if (refs.exists(_.parent == table.toLowerCase))
-        foreignKeys.put(child, refs.map(r =>
+        fks.put(child, refs.map(r =>
           if (r.parent == table.toLowerCase)
             r.copy(parentCols = r.parentCols.map(c =>
               if (c.equalsIgnoreCase(old)) nw else c))
@@ -130,21 +180,23 @@ object GraftSql {
     }
   }
 
-  def dropForeignKey(child: String, name: String): Unit =
-    foreignKeys.updateWith(child.toLowerCase)(
+  def dropForeignKey(spark: SparkSession, child: String, name: String): Unit =
+    state(spark).foreignKeys.updateWith(child.toLowerCase)(
       _.map(_.filterNot(_.name.equalsIgnoreCase(name))))
-  def clearForeignKeys(child: String): Unit =
-    foreignKeys.remove(child.toLowerCase)
-  def foreignKeyRefs: Seq[(String, FkRef)] =
-    foreignKeys.toSeq.flatMap { case (child, refs) => refs.map(child -> _) }
-  private def childRefsOf(parent: String): Seq[(String, Seq[String], Seq[String], String)] =
-    foreignKeys.toSeq.flatMap { case (child, refs) =>
+  def clearForeignKeys(spark: SparkSession, child: String): Unit =
+    state(spark).foreignKeys.remove(child.toLowerCase)
+  def foreignKeyRefs(spark: SparkSession): Seq[(String, FkRef)] =
+    state(spark).foreignKeys.toSeq.flatMap { case (child, refs) => refs.map(child -> _) }
+  private def childRefsOf(spark: SparkSession,
+      parent: String): Seq[(String, Seq[String], Seq[String], String)] =
+    state(spark).foreignKeys.toSeq.flatMap { case (child, refs) =>
       refs.filter(_.parent == parent.toLowerCase)
         .map(r => (child, r.childCols, r.parentCols, r.onDelete))
     }
   /** Child references on `parent` carrying the ON UPDATE action. */
-  private def childUpdateRefsOf(parent: String): Seq[(String, Seq[String], Seq[String], String)] =
-    foreignKeys.toSeq.flatMap { case (child, refs) =>
+  private def childUpdateRefsOf(spark: SparkSession,
+      parent: String): Seq[(String, Seq[String], Seq[String], String)] =
+    state(spark).foreignKeys.toSeq.flatMap { case (child, refs) =>
       refs.filter(_.parent == parent.toLowerCase)
         .map(r => (child, r.childCols, r.parentCols, r.onUpdate))
     }
@@ -157,17 +209,10 @@ object GraftSql {
     * (constraintName, db, child, childCol, ordinal, parent, parentCol,
     * deleteRule, updateRule, referencedIndexName, delOrigin, updOrigin).
     */
-  def fkIntrospection: Seq[(String, String, String, String, Int, String,
-      String, String, String, String, String, String)] =
-    foreignKeyRefs.flatMap { case (child, r) =>
-      val want = r.parentCols.map(_.toLowerCase)
-      val refIdx =
-        if (primaryKeys.get(r.parent)
-            .map(_.split(",").map(_.trim.toLowerCase).toSeq).contains(want))
-          "PRIMARY"
-        else uniqueKeysOf(r.parent)
-          .find(_._2.map(_.toLowerCase) == want).map(_._1)
-          .getOrElse("PRIMARY")
+  def fkIntrospection(spark: SparkSession): Seq[(String, String, String,
+      String, Int, String, String, String, String, String, String, String)] =
+    foreignKeyRefs(spark).flatMap { case (child, r) =>
+      val refIdx = referencedIndex(spark, r)
       def rule(a: String, exp: Boolean) =
         if (!exp) "NO ACTION" else a.toUpperCase
       def origin(exp: Boolean) =
@@ -182,15 +227,21 @@ object GraftSql {
   /** Parent-side index names every FK depends on — dropping one is
     * rejected ("needed in a foreign key constraint").
     */
-  def fkNeededIndexNames(parent: String): Set[String] =
-    foreignKeyRefs.filter(_._2.parent == parent.toLowerCase).map { case (_, r) =>
-      val want = r.parentCols.map(_.toLowerCase)
-      if (primaryKeys.get(r.parent)
-          .map(_.split(",").map(_.trim.toLowerCase).toSeq).contains(want))
-        "PRIMARY"
-      else uniqueKeysOf(r.parent)
-        .find(_._2.map(_.toLowerCase) == want).map(_._1).getOrElse("PRIMARY")
-    }.toSet
+  def fkNeededIndexNames(spark: SparkSession, parent: String): Set[String] =
+    foreignKeyRefs(spark).filter(_._2.parent == parent.toLowerCase)
+      .map { case (_, r) => referencedIndex(spark, r) }.toSet
+
+  /** The parent index an FK references: PRIMARY when its columns are the
+    * pk, else the matching unique key (PRIMARY when none matches).
+    */
+  private def referencedIndex(spark: SparkSession, r: FkRef): String = {
+    val want = r.parentCols.map(_.toLowerCase)
+    if (state(spark).primaryKeys.get(r.parent)
+        .map(_.split(",").map(_.trim.toLowerCase).toSeq).contains(want))
+      "PRIMARY"
+    else uniqueKeysOf(spark, r.parent)
+      .find(_._2.map(_.toLowerCase) == want).map(_._1).getOrElse("PRIMARY")
+  }
 
   /** Apply FK ON UPDATE actions after `table`'s key columns changed.
     * `oldNewAll` carries one row per updated row with `old_<c>` /
@@ -205,7 +256,7 @@ object GraftSql {
       oldNewAll: DataFrame, visited: Set[String],
       restrictOnly: Boolean = false): Unit = {
     if (!fkChecksOn(spark)) return
-    foreignKeyRefs.filter(_._2.parent == table.toLowerCase).foreach {
+    foreignKeyRefs(spark).filter(_._2.parent == table.toLowerCase).foreach {
       case (child, ref) =>
         val selfRef = child.equalsIgnoreCase(table)
         // SELF-referencing RESTRICT/NO ACTION: check the POST-update
@@ -301,7 +352,7 @@ object GraftSql {
                   // when the cascaded value is absent from the other
                   // parent (update_modern_fk's dual-FK block)
                   val vetoed = ref.onUpdate == "cascade" &&
-                    foreignKeys.getOrElse(child.toLowerCase, Vector.empty)
+                    state(spark).foreignKeys.getOrElse(child.toLowerCase, Vector.empty)
                       .exists { other =>
                         !other.name.equalsIgnoreCase(ref.name) &&
                         other.childCols.map(_.toLowerCase) ==
@@ -378,11 +429,11 @@ object GraftSql {
         throw new IllegalStateException(
           s"internal error: column '$p' no exists in table '$parent'")
     }
-    val pkCols = primaryKeys.get(parent.toLowerCase)
+    val pkCols = state(spark).primaryKeys.get(parent.toLowerCase)
       .map(_.split(",").map(_.trim.toLowerCase).toSeq).getOrElse(Seq.empty)
     val want = parentCols.map(_.toLowerCase)
     val covered = pkCols == want ||
-      uniqueKeysOf(parent).exists(_._2.map(_.toLowerCase) == want)
+      uniqueKeysOf(spark, parent).exists(_._2.map(_.toLowerCase) == want)
     if (!covered)
       throw new IllegalStateException(
         "internal error: failed to add the foreign key constraint")
@@ -428,7 +479,7 @@ object GraftSql {
     */
   private def alterFkRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
     matchMasked(AlterDropFkRe, q).foreach { g =>
-      dropForeignKey(g(0), g(1))
+      dropForeignKey(spark, g(0), g(1))
       return Some(spark.emptyDataFrame)
     }
     val g = matchMasked(AlterAddFkRe, q).getOrElse(return None)
@@ -539,7 +590,7 @@ object GraftSql {
     if (!fkChecksOn(spark)) return
     val g = matchMasked(PlainInsertHeadRe, q).getOrElse(return)
     val table = g(0)
-    if (!foreignKeys.contains(table.toLowerCase)) return
+    if (!state(spark).foreignKeys.contains(table.toLowerCase)) return
     if (!(try spark.catalog.tableExists(table)
     catch { case _: Exception => false })) return
     try {
@@ -574,7 +625,7 @@ object GraftSql {
   private def fkCheckIncomingRows(spark: SparkSession, table: String,
       tcols: Seq[String], named: DataFrame): Unit = {
     if (!fkChecksOn(spark)) return
-    foreignKeys.getOrElse(table.toLowerCase, Vector.empty).foreach {
+    state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty).foreach {
       case FkRef(_, childCols, parent, parentCols, _, _, _, _, _) =>
         fkCheckIncomingRowsFor(spark, table, tcols, named,
           childCols, parent, parentCols)
@@ -615,7 +666,7 @@ object GraftSql {
   private def fkOnDelete(spark: SparkSession, parent: String,
       doomed: DataFrame): Unit = {
     if (!fkChecksOn(spark)) return
-    val refs = childRefsOf(parent)
+    val refs = childRefsOf(spark, parent)
     if (refs.isEmpty) return
     refs.foreach { case (child, childCols, parentCols, action) =>
       if (!child.equalsIgnoreCase(parent) && spark.catalog.tableExists(child)) {
@@ -655,7 +706,7 @@ object GraftSql {
     * (INSERT IGNORE silently drops them). */
   private def fkFilterOrphans(spark: SparkSession, table: String,
       named: DataFrame): DataFrame =
-    foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
+    state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
       .foldLeft(named) { case (df, FkRef(_, childCols, parent, parentCols, _, _, _, _, _)) =>
         if (!spark.catalog.tableExists(parent) ||
           parent.equalsIgnoreCase(table)) df
@@ -692,7 +743,7 @@ object GraftSql {
     val doSave = SaveHintRe.findFirstIn(qTrim).isDefined
     val q0 = SaveHintRe.replaceFirstIn(qTrim, "")
       .replaceAll("(?i)\\blast_query_id\\s*\\(\\s*\\)", "last_query_id(-1)")
-    val tokBefore = rowCountToken.get()
+    val writesBefore = state(spark).rowCountWrites
     sqlDepth.set(sqlDepth.get() + 1)
     val res =
       try sqlInner(spark, q0)
@@ -702,7 +753,7 @@ object GraftSql {
     // statements (DDL, SET, USE, no-op CALL bodies) leave 0. Applies at
     // the OUTERMOST statement only — rewrite-internal probe queries and
     // procedure control-flow evaluation are not statements
-    if (sqlDepth.get() == 0 && rowCountToken.get() == tokBefore) {
+    if (sqlDepth.get() == 0 && state(spark).rowCountWrites == writesBefore) {
       val low = q0.toLowerCase
       if (low.startsWith("select") || low.startsWith("with") ||
         low.startsWith("(") || low.startsWith("values") ||
@@ -874,7 +925,7 @@ object GraftSql {
           !qRc.toLowerCase.contains("database()")) qRc
         else {
           if (qRc.toLowerCase.contains("mo_catalog"))
-            MoCatalog.ensureViews(spark, t => primaryKeys.contains(t.toLowerCase))
+            MoCatalog.ensureViews(spark, t => state(spark).primaryKeys.contains(t.toLowerCase))
           val dbLit = MoCatalog.currentDb(spark)
             .map(d => s"'$d'").getOrElse("CAST(NULL AS STRING)")
           replaceOutsideQuotes(
@@ -947,7 +998,7 @@ object GraftSql {
       // reference: the bulk delete can't fire referential actions)
       """(?is)^truncate\s+(?:table\s+)?`?(\w+)`?\s*$""".r
         .findFirstMatchIn(qDb).foreach { m =>
-          if (fkChecksOn(spark) && childRefsOf(m.group(1))
+          if (fkChecksOn(spark) && childRefsOf(spark, m.group(1))
               .exists(r => !r._1.equalsIgnoreCase(m.group(1)) &&
                 (try spark.catalog.tableExists(r._1)
                 catch { case _: Exception => false })))
@@ -963,7 +1014,7 @@ object GraftSql {
         .foreach { m =>
           // a parent still referenced by ANOTHER table's FK cannot drop
           // (the child's own self-reference never blocks)
-          if (fkChecksOn(spark) && childRefsOf(m.group(1))
+          if (fkChecksOn(spark) && childRefsOf(spark, m.group(1))
               .exists(r => !r._1.equalsIgnoreCase(m.group(1)) &&
                 (try spark.catalog.tableExists(r._1)
                 catch { case _: Exception => false })))
@@ -999,7 +1050,7 @@ object GraftSql {
           names.foreach { n =>
             val k = kind(n)
             if (k != "MISSING" && k != "VIEW" && k != "TEMPORARY") {
-              if (fkChecksOn(spark) && childRefsOf(n)
+              if (fkChecksOn(spark) && childRefsOf(spark, n)
                   .exists(r => !r._1.equalsIgnoreCase(n) &&
                     (try spark.catalog.tableExists(r._1)
                     catch { case _: Exception => false })))
@@ -1036,7 +1087,7 @@ object GraftSql {
           if (m.group(2).equalsIgnoreCase(m.group(3)) &&
             (try spark.catalog.tableExists(m.group(1))
             catch { case _: Exception => false })) {
-            renameFkColumn(m.group(1), m.group(2), m.group(3))
+            renameFkColumn(spark, m.group(1), m.group(2), m.group(3))
             MoCatalog.renameDeclaredColumn(spark, m.group(1), m.group(2),
               m.group(3), Some(m.group(4)))
             return spark.emptyDataFrame
@@ -1058,9 +1109,10 @@ object GraftSql {
         return spark.emptyDataFrame
       }
       val q2 = partSubtables(spark, parseJsonlRewrite(spark, subqueryIntervalViews(spark,
-        tableStatsRewrite(spark, ftTokenizeApply(vecLitFns(narrowVecFns(narrowVecInsert(spark, normalizeSetval(
+        tableStatsRewrite(spark, ftTokenizeApply(vecLitFns(narrowVecFns(spark,
+          narrowVecInsert(spark, normalizeSetval(
           MySqlCompat.projectionIn(quantifiedRewrite(MySqlCompat.pre(
-            ifToIff(fnArity(geoArity(narrowVecDdl(autoIncDdl(moFilepathRewrite(spark,
+            ifToIff(fnArity(geoArity(narrowVecDdl(spark, autoIncDdl(spark, moFilepathRewrite(spark,
               EnumSet.exprRewrite(spark, EnumSet.dmlRewrite(spark,
                 EnumSet.ddlRewrite(spark, qAi)))))))))))))))))))))
       sequenceRewrite(spark, q2)
@@ -1122,22 +1174,20 @@ object GraftSql {
 
   private val PlainInsertValsRe =
     """(?is)^insert\s+into\s+(?:`?\w+`?\.)?`?\w+`?\s*(?:\([^)]*\)\s*)?values\s*(.+)$""".r
-  private val lastRowCount = TrieMap[Int, Long]()
-  private val rowCountToken = new java.util.concurrent.atomic.AtomicLong(0L)
   private val sqlDepth = new ThreadLocal[Integer] {
     override def initialValue(): Integer = 0
   }
   private def setRowCount(spark: SparkSession, n: Long): Unit = {
-    rowCountToken.incrementAndGet()
-    lastRowCount.put(System.identityHashCode(spark.sharedState), n)
+    val st = state(spark)
+    st.rowCountWrites += 1
+    st.lastRowCount = n
   }
   /** Harness hook: record an affected-rows value for the LAST statement
     * (drop-database table counting lives with the harness's ownership
     * tracking).
     */
   def recordRowCount(spark: SparkSession, n: Long): Unit = setRowCount(spark, n)
-  def currentRowCount(spark: SparkSession): Long =
-    lastRowCount.getOrElse(System.identityHashCode(spark.sharedState), 0L)
+  def currentRowCount(spark: SparkSession): Long = state(spark).lastRowCount
 
   // ------------------------------------------------------------------
   // System variables — the reference's variable registry
@@ -1201,14 +1251,13 @@ object GraftSql {
   def knownSysVar(name: String): Boolean =
     sysVarDefaults.contains(name.toLowerCase)
 
-  private val sysVars = TrieMap[String, String]()
 
   private def sysVarValue(spark: SparkSession, scope: String, name: String): String =
-    sysVars.get(s"${sessKey(spark, scope)}#${name.toLowerCase}")
+    state(spark).sysVars.get(s"$scope#${name.toLowerCase}")
       // a session read of a var only set globally sees the global value
       // (global-scoped vars like lower_case_table_names read through)
       .orElse(if (scope == "session")
-        sysVars.get(s"${sessKey(spark, "global")}#${name.toLowerCase}")
+        state(spark).sysVars.get(s"global#${name.toLowerCase}")
       else None)
       .getOrElse(sysVarDefaults.get(name.toLowerCase).map(d =>
         if (scope == "global") d._1 else d._2).getOrElse("NULL"))
@@ -1287,7 +1336,7 @@ object GraftSql {
             "internal error: the system variable is session")
         Remap.parse(spark, unquoteLit(lit))
       }
-      sysVars.put(s"${sessKey(spark, scope)}#$name", lit)
+      state(spark).sysVars.put(s"$scope#$name", lit)
       // time_zone drives Spark's session timeZone: timestamp columns are
       // stored as UTC instants and RENDERED in the session zone — the
       // same store/display split the reference implements
@@ -1320,6 +1369,8 @@ object GraftSql {
     else s
   }
 
+  // rules text → parsed rules: a pure function of its key, so one
+  // process-wide cache serves every session
   private val remapRulesCache = TrieMap[String, Remap.Rules]()
 
   /** Replace known `@@[scope.]name` references (outside literals) with
@@ -1334,7 +1385,7 @@ object GraftSql {
       val name = m.group(2).toLowerCase
       val scope = Option(m.group(1)).map(_.toLowerCase).getOrElse("session")
       if (knownSysVar(name) ||
-        sysVars.contains(s"${sessKey(spark, scope)}#$name")) {
+        state(spark).sysVars.contains(s"$scope#$name")) {
         sb.append(q.substring(last, m.start))
           .append(sysVarValue(spark, scope, name))
         last = m.end
@@ -1440,9 +1491,6 @@ object GraftSql {
       case _ => None
     }
   }
-
-  /** Test-harness hook: forget every sequence this session created. */
-  def clearSequences(spark: SparkSession): Unit = Sequences.clear(spark)
 
   // ------------------------------------------------------------------
   // save_query_result: SET flags, result_scan / meta_scan sources
@@ -1898,23 +1946,9 @@ object GraftSql {
     case _ => None
   }
 
-  /** Test-harness hook: forget this session's mo_catalog state. */
-  def clearMoCatalog(spark: SparkSession): Unit = {
-    MoCatalog.clear(spark)
-    Namespaces.clear(spark)
-    EnumSet.clear(spark)
-    MoTypeInfer.clear(spark)
-  }
-
   /** Test-harness hook: mark a database as existing. */
   def registerDb(spark: SparkSession, db: String): Unit =
     MoCatalog.createDb(spark, db)
-
-  /** Test-harness hook: forget this session's stages. */
-  def clearStages(spark: SparkSession): Unit = Stages.clear(spark)
-
-  /** Test-harness hook: forget this session's saved query results. */
-  def clearQueryResults(spark: SparkSession): Unit = QueryResults.clear(spark)
 
   // ------------------------------------------------------------------
   // Partitioned tables: CREATE ... PARTITION BY, ALTER ... ADD PARTITION
@@ -2082,9 +2116,9 @@ object GraftSql {
     // pkg/sql/colexec/dedupjoin/) — one anti-join per key set;
     // NULL key values never match, like MySQL's unique-null rule
     val keySets: Seq[Seq[String]] =
-      primaryKeys.get(table.toLowerCase)
+      state(spark).primaryKeys.get(table.toLowerCase)
         .map(_.split(",").map(_.trim).toSeq).toSeq ++
-        uniqueKeysOf(table).map(_._2)
+        uniqueKeysOf(spark, table).map(_._2)
     // a batch row can also replace a row the SAME statement inserted
     // (`values (1,u,10),(2,u,20)` keeps only the second) — MySQL applies
     // sequentially. VALUES batches are driver-sized; resolve them
@@ -2126,11 +2160,11 @@ object GraftSql {
     // any column exempts the row — MATCH SIMPLE). A self-referencing FK
     // checks against the post-statement state (existing ∪ incoming).
     fkCheckIncomingRows(spark, table, tcols, named)
-    val selfRefs = foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
+    val selfRefs = state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
       .filter(_.parent == table.toLowerCase)
       .map(r => (r.childCols, r.parent, r.parentCols, r.onDelete))
     val doomedOpt =
-      if ((childRefsOf(table).nonEmpty || selfRefs.nonEmpty) && keySets.nonEmpty) {
+      if ((childRefsOf(spark, table).nonEmpty || selfRefs.nonEmpty) && keySets.nonEmpty) {
         Some(keySets.map { keys =>
           target.join(broadcast(
             named0.select(keys.map(c => col(s"`$c`")): _*).distinct),
@@ -2233,10 +2267,10 @@ object GraftSql {
     ("""(?is)^insert\s+ignore\s+into\s+(?:`?\w+`?\.)?`?(\w+)`?\s*""" +
       """(\([^)]*\))?\s*((?:values|select)\b.*)$""").r
 
-  private def tableKeySets(table: String): Seq[Seq[String]] =
-    primaryKeys.get(table.toLowerCase)
+  private def tableKeySets(spark: SparkSession, table: String): Seq[Seq[String]] =
+    state(spark).primaryKeys.get(table.toLowerCase)
       .map(_.split(",").map(_.trim).toSeq).toSeq ++
-      uniqueKeysOf(table).map(_._2)
+      uniqueKeysOf(spark, table).map(_._2)
 
   private def insertOnDupRewrite(spark: SparkSession, q: String): Option[DataFrame] =
     matchMasked(InsertDupRe, q) match {
@@ -2245,7 +2279,7 @@ object GraftSql {
         val target = spark.table(table)
         val tcols = target.columns.toSeq
         val fields = target.schema.fields.map(f => f.name.toLowerCase -> f).toMap
-        val keySets = tableKeySets(table)
+        val keySets = tableKeySets(spark, table)
         val named0 = alignedRows(spark, table, colsOrNull, srcTxt)
         if (keySets.isEmpty) {
           commitTable(spark, table, target.unionByName(named0))
@@ -2259,7 +2293,7 @@ object GraftSql {
         if (assigns.exists(a => !fields.contains(a._1.toLowerCase))) return None
         // the reference rejects an update that rewrites a UNIQUE key
         // column (on_duplicate_key.result "unsupported DML")
-        if (assigns.exists(a => uniqueKeysOf(table)
+        if (assigns.exists(a => uniqueKeysOf(spark, table)
           .exists(_._2.exists(_.equalsIgnoreCase(a._1)))))
           throw new UnsupportedOperationException(
             "unsupported DML: update unique key on duplicate")
@@ -2368,7 +2402,7 @@ object GraftSql {
         if (!spark.catalog.tableExists(table)) return None
         val target = spark.table(table)
         val tcols = target.columns.toSeq
-        val keySets = tableKeySets(table)
+        val keySets = tableKeySets(spark, table)
         val named0 = alignedRows(spark, table, colsOrNull, srcTxt)
         if (keySets.isEmpty) {
           commitTable(spark, table, target.unionByName(named0))
@@ -2479,7 +2513,7 @@ object GraftSql {
           val table = aliases(al)
           val target = spark.table(table)
           val tcols = target.columns.toSeq
-          if (childRefsOf(table).nonEmpty) fkOnDelete(spark, table, doomed)
+          if (childRefsOf(spark, table).nonEmpty) fkOnDelete(spark, table, doomed)
           val marked = doomed.toDF(tcols.map(_ + "__m"): _*)
             .withColumn("__hit", lit(true))
           val cond = tcols.map(c => col(s"`$c`") <=> col(s"`${c}__m`"))
@@ -2636,16 +2670,13 @@ object GraftSql {
   // MO cluster tables (`create cluster table`, reference pkg/catalog):
   // sys-owned tables inside mo_catalog carrying a hidden account_id
   // column; unlike ordinary system-db targets, sys may write them
-  private val clusterTables = TrieMap[(Int, String), Unit]()
   private def isClusterTable(spark: SparkSession, t: String): Boolean =
-    clusterTables.contains(
-      (System.identityHashCode(spark.sharedState), t.toLowerCase))
+    state(spark).clusterTables.contains(t.toLowerCase)
   private def clusterDdl(spark: SparkSession, q: String): String = {
     if (!q.toLowerCase.contains("cluster")) return q
     val m = """(?is)^create\s+cluster\s+table\s+`?(\w+)`?\s*\((.*)\)\s*;?\s*$""".r
       .findFirstMatchIn(q).getOrElse(return q)
-    clusterTables.put(
-      (System.identityHashCode(spark.sharedState), m.group(1).toLowerCase), ())
+    state(spark).clusterTables.put(m.group(1).toLowerCase, ())
     s"CREATE TABLE `${m.group(1)}` (${m.group(2)}, account_id INT)"
   }
 
@@ -2844,14 +2875,10 @@ object GraftSql {
     */
   private def forgetTable(spark: SparkSession, phys: String): Unit = {
     val t = phys.toLowerCase
-    ftIndexCols.remove(ftKey(spark, phys))
-    vecCols.remove(t)
-    autoIncCols.remove(t)
-    primaryKeys.remove(t)
-    uniqueKeys.remove(t)
-    foreignKeys.remove(t)
-    loadPaths.remove(t)
-    tsFsp.keys.filter(_._1 == t).foreach(tsFsp.remove)
+    val st = state(spark)
+    Seq(st.ftIndexCols, st.vecCols, st.autoIncCols, st.primaryKeys,
+      st.uniqueKeys, st.foreignKeys, st.loadPaths).foreach(_.remove(t))
+    st.tsFsp.keys.filter(_._1 == t).foreach(st.tsFsp.remove)
     MoCatalog.dropTable(spark, phys)
     Namespaces.forget(spark, phys)
     EnumSet.forget(spark, phys)
@@ -2860,14 +2887,20 @@ object GraftSql {
     // vector indexes die with their table too (registry keys are
     // "$name-$table-$vecCol")
     val mid = s"-$phys-"
-    (graft.plans.IvfIndex.indexes.map(_.name) ++
-      graft.plans.HnswIndex.indexes.map(_.name) ++
-      graft.plans.IvfPqIndex.indexes.map(_.name))
-      .filter(_.contains(mid)).distinct.foreach { n =>
-        graft.plans.IvfIndex.drop(n)
-        graft.plans.HnswIndex.drop(n)
-        graft.plans.IvfPqIndex.drop(n)
-      }
+    annIndexNames(spark).filter(_.contains(mid)).distinct
+      .foreach(dropAnnIndex(spark, _))
+  }
+
+  /** Names of this session's vector indexes, every kind. */
+  private def annIndexNames(spark: SparkSession): Seq[String] =
+    graft.plans.IvfIndex.indexes(spark).map(_.name) ++
+      graft.plans.HnswIndex.indexes(spark).map(_.name) ++
+      graft.plans.IvfPqIndex.indexes(spark).map(_.name)
+
+  private def dropAnnIndex(spark: SparkSession, name: String): Unit = {
+    graft.plans.IvfIndex.drop(spark, name)
+    graft.plans.HnswIndex.drop(spark, name)
+    graft.plans.IvfPqIndex.drop(spark, name)
   }
 
   /** Resolution pass — replaces the flat-storage qualifier strip.
@@ -2889,7 +2922,7 @@ object GraftSql {
             """(?is)^\s+like\s+`?([\w$]+)`?\s*;?\s*$""".r
               .findFirstMatchIn(rest2).foreach { lm =>
                 MoCatalog.copyDeclaredLike(spark, lm.group(1), phys,
-                  primaryKeys.contains(lm.group(1).toLowerCase))
+                  state(spark).primaryKeys.contains(lm.group(1).toLowerCase))
               }
             // CLONE (reference `pkg/frontend` clone DDL): schema+data
             // copy resolved at EXECUTE time — a CTAS over the live
@@ -3110,7 +3143,7 @@ object GraftSql {
             // rows stay when the predicate is FALSE or UNKNOWN
             spark.sql(s"SELECT * FROM `$table` WHERE NOT coalesce(($c), false)")
           case (condOpt, Some(n)) =>
-            primaryKeys.get(table) match {
+            state(spark).primaryKeys.get(table) match {
               case Some(pkTxt) =>
                 // LIMIT picks n matching rows; identity via the primary key
                 val pk = pkTxt.split(",").map(_.trim).toSeq
@@ -3146,7 +3179,7 @@ object GraftSql {
         // SELF-referencing ON DELETE SET NULL: surviving rows that
         // referenced a deleted key lose the reference (fk_issue_22736:
         // deleting the middle of a chain nulls the tail's pointer)
-        val selfSetNull = foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
+        val selfSetNull = state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
           .filter(r => r.parent == table.toLowerCase && r.onDelete == "set null")
         var remainingFinal = remaining
         if (fkChecksOn(spark) && selfSetNull.nonEmpty) {
@@ -3166,7 +3199,7 @@ object GraftSql {
               }.select(cols.map(c => col(s"`$c`")).toIndexedSeq: _*)
           }
         }
-        if (childRefsOf(table).nonEmpty)
+        if (childRefsOf(spark, table).nonEmpty)
           fkOnDelete(spark, table,
             target.exceptAll(remaining).localCheckpoint(true))
         setRowCount(spark, targetN - commitTable(spark, table, remainingFinal))
@@ -3174,12 +3207,8 @@ object GraftSql {
       case _ => None
     }
 
-  /** (table, column) → declared datetime/timestamp fractional-second
-    * precision, recorded by the harness from the MySQL DDL.
-    */
-  private val tsFsp = TrieMap[(String, String), Int]()
-  def registerTsFsp(table: String, col: String, p: Int): Unit =
-    tsFsp.put((table.toLowerCase, col.toLowerCase), p)
+  def registerTsFsp(spark: SparkSession, table: String, col: String, p: Int): Unit =
+    state(spark).tsFsp.put((table.toLowerCase, col.toLowerCase), p)
 
   /** MySQL store cast for an UPDATE value: numbers/strings landing in a
     * datetime column go through the strict MySQL parse (compact
@@ -3212,7 +3241,7 @@ object GraftSql {
         round(src, 0).cast(it)
       case _ => src.cast(f.dataType)
     }
-    (f.dataType, tsFsp.get((table.toLowerCase, f.name.toLowerCase))) match {
+    (f.dataType, state(spark).tsFsp.get((table.toLowerCase, f.name.toLowerCase))) match {
       case (TimestampType, Some(p)) if p < 6 =>
         val unit = math.pow(10, 6 - p).toLong
         timestamp_micros(
@@ -3281,7 +3310,7 @@ object GraftSql {
         if (isIgnore) {
           val setIdx = assigns.zipWithIndex
             .map { case ((c, _), i) => c.toLowerCase -> i }.toMap
-          tableKeySets(table).foreach { keys =>
+          tableKeySets(spark, table).foreach { keys =>
             if (keys.exists(k => setIdx.contains(k.toLowerCase))) {
               def newK(k: String) = setIdx.get(k.toLowerCase)
                 .map(i => col(s"__set_$i").cast(fields(k.toLowerCase).dataType))
@@ -3320,7 +3349,7 @@ object GraftSql {
           def newC(c: String): Column = setIdx.get(c.toLowerCase)
             .map(i => col(s"__set_$i").cast(fields(c.toLowerCase).dataType))
             .getOrElse(col(s"`$c`"))
-          foreignKeys.getOrElse(table.toLowerCase, Vector.empty).foreach { ref =>
+          state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty).foreach { ref =>
             if (ref.childCols.exists(c => setIdx.contains(c.toLowerCase)) &&
               (try spark.catalog.tableExists(ref.parent)
               catch { case _: Exception => false })) {
@@ -3349,7 +3378,7 @@ object GraftSql {
                     "a foreign key constraint fails")
             }
           }
-          val parentRefs = foreignKeyRefs
+          val parentRefs = foreignKeyRefs(spark)
             .filter(_._2.parent == table.toLowerCase)
             .filter(_._2.parentCols.exists(p => setIdx.contains(p.toLowerCase)))
           if (parentRefs.nonEmpty) {
@@ -3380,7 +3409,7 @@ object GraftSql {
         // an UPDATE landing two rows on the same pk is a duplicate-key
         // error (auto_increment_columns.result:95 `set a='200'`); checked
         // only when the SET touches a pk column (IGNORE pre-filters)
-        (if (isIgnore) None else primaryKeys.get(table.toLowerCase))
+        (if (isIgnore) None else state(spark).primaryKeys.get(table.toLowerCase))
           .map(_.split(",").map(_.trim).toSeq)
           .filter(pks => assigns.exists(a => pks.exists(_.equalsIgnoreCase(a._1))))
           .foreach { pks =>
@@ -3566,8 +3595,8 @@ object GraftSql {
           Partitions.rename(spark, from, to)
           // the allocator travels with the table (auto_increment BVT:
           // a renamed table keeps counting where it left off)
-          autoIncCols.remove(from.toLowerCase)
-            .foreach(autoIncCols.put(to.toLowerCase, _))
+          val ai = state(spark).autoIncCols
+          ai.remove(from.toLowerCase).foreach(ai.put(to.toLowerCase, _))
         }
         Some(spark.emptyDataFrame)
       case _ => None
@@ -3623,9 +3652,6 @@ object GraftSql {
     }
     None
   }
-
-  /** Test-harness hook: forget this session's partitioned tables. */
-  def clearPartitions(spark: SparkSession): Unit = Partitions.clear(spark)
 
   // ------------------------------------------------------------------
   // CREATE EXTERNAL TABLE ... INFILE{...}
@@ -3731,7 +3757,7 @@ object GraftSql {
         // declared-kind lookup for a vector target column (strict narrow
         // parse; f32/f64 otherwise)
         def vecKindDim(f: org.apache.spark.sql.types.StructField): (String, Int) =
-          vecCols.get(table.toLowerCase)
+          state(spark).vecCols.get(table.toLowerCase)
             .flatMap(_.find(_._1.equalsIgnoreCase(f.name)))
             .map(c => (c._2, c._3))
             .getOrElse((f.dataType match {
@@ -3833,7 +3859,7 @@ object GraftSql {
                   // vector columns arrive as "[1.5, 2.5, 3.5]" text —
                   // the reference's string→vector cast applies, STRICT
                   // for declared narrow kinds (load_data_narrow_vec)
-                  val kindDim = vecCols.get(table.toLowerCase)
+                  val kindDim = state(spark).vecCols.get(table.toLowerCase)
                     .flatMap(_.find(_._1.equalsIgnoreCase(f.name)))
                     .map(c => (c._2, c._3))
                     .getOrElse((if (et == org.apache.spark.sql.types.DoubleType)
@@ -3866,7 +3892,7 @@ object GraftSql {
         // nulls after it) — so a cheap summary pass plus a driver fold
         // over #partitions hands every partition its incoming counter
         // and the fill itself stays fully parallel (no coalesce(1)).
-        val aligned = autoIncCols.get(table.toLowerCase) match {
+        val aligned = state(spark).autoIncCols.get(table.toLowerCase) match {
           case Some(acs0) =>
             val cn = aligned0.columns
             val acs = acs0.zipWithIndex.flatMap { case ((c, base), ri) =>
@@ -3956,7 +3982,7 @@ object GraftSql {
               val maxes = filled.agg(
                 acs.head._1 -> "max",
                 acs.tail.map(a => a._1 -> "max"): _*).head
-              autoIncCols.put(table.toLowerCase,
+              state(spark).autoIncCols.put(table.toLowerCase,
                 acs0.zipWithIndex.map { case ((c, base), ri) =>
                   acs.indexWhere(_._4 == ri) match {
                     case -1 => (c, base)
@@ -3979,7 +4005,7 @@ object GraftSql {
         setRowCount(spark, alignedSnap.count())
         // record the source for the __mo_filepath metadata column
         // (issue_25908: external scans expose the originating file)
-        loadPaths.put(table.toLowerCase, path)
+        state(spark).loadPaths.put(table.toLowerCase, path)
         Some(Seq((table, path, "loaded")).toDF("table_name", "file", "status"))
       case _ => None
     }
@@ -4044,14 +4070,6 @@ object GraftSql {
     Some(spark.emptyDataFrame)
   }
 
-  /** table → last LOAD source path, backing the reference's
-    * `__mo_filepath` load-metadata column (`pkg/sql/colexec/external/`).
-    * Substituted as a literal per referencing table — exact while a
-    * table is fed from one file (the external-table shape); a
-    * multi-file union would need a real per-row metadata column
-    * (Spark's `_metadata.file_path`) on a direct file-source scan.
-    */
-  private val loadPaths = TrieMap[String, String]()
 
   private def moFilepathRewrite(spark: SparkSession, q: String): String = {
     if (!q.contains("__mo_filepath")) return q
@@ -4059,13 +4077,13 @@ object GraftSql {
     // column names are ordinary columns (issue_25908's decoys)
     val masked = MySqlCompat.maskLiterals(q)
     val tbl = """(?is)\bfrom\s+`?(\w+)`?""".r.findAllMatchIn(masked)
-      .map(_.group(1).toLowerCase).find(loadPaths.contains)
+      .map(_.group(1).toLowerCase).find(state(spark).loadPaths.contains)
       .getOrElse(return q)
     // a glob load path (`mix/*/*/*/x.csv`) names no concrete file — when
     // it resolves to exactly one, substitute the real path (the
     // reference's column is the per-row source file; mo_log_date reads
     // date segments out of it, func_mo_log_date.sql:17)
-    val rawPath = loadPaths(tbl)
+    val rawPath = state(spark).loadPaths(tbl)
     val resolved =
       if (!rawPath.contains("*")) rawPath
       else try {
@@ -4361,9 +4379,6 @@ object GraftSql {
     * Tables with NO registered index build postings on demand — the
     * programmatic convenience surface.
     */
-  private val ftIndexCols = TrieMap[String, Vector[(String, Set[String], String)]]()
-  private def ftKey(spark: SparkSession, table: String) =
-    s"${System.identityHashCode(spark.sharedState)}#${table.toLowerCase}"
 
   private val CreateFtRe =
     ("""(?is)^create\s+fulltext\s+index\s+`?(\w+)`?\s+on\s+(?:`?\w+`?\.)?`?(\w+)`?""" +
@@ -4380,12 +4395,13 @@ object GraftSql {
     import spark.implicits._
     def register(table: String, name: String, cols: Set[String],
         parser: String): DataFrame = {
-      val key = ftKey(spark, table)
-      val existing = ftIndexCols.getOrElse(key, Vector.empty)
+      val key = table.toLowerCase
+      val existing = state(spark).ftIndexCols.getOrElse(key, Vector.empty)
       if (existing.exists(_._2 == cols))
         throw new IllegalArgumentException(
           "not supported: Fulltext index are not allowed to use the same column")
-      ftIndexCols.put(key, existing :+ ((name, cols, Option(parser).getOrElse("").toLowerCase)))
+      state(spark).ftIndexCols.put(key,
+        existing :+ ((name, cols, Option(parser).getOrElse("").toLowerCase)))
       Seq((name, table, cols.mkString(","), "created"))
         .toDF("index_name", "table_name", "columns", "status")
     }
@@ -4403,43 +4419,24 @@ object GraftSql {
   // DEALLOCATE PREPARE name / SET @var = expr
   // ------------------------------------------------------------------
 
-  private val preparedStmts = TrieMap[String, String]()
-  private val userVars = TrieMap[String, String]()
-  private def sessKey(spark: SparkSession, name: String): String =
-    s"${System.identityHashCode(spark.sharedState)}#${name.toLowerCase}"
-
-  /** Test-harness hook: forget this session's SET system variables
-    * (the reference's BVT gets a fresh session per file). */
-  def clearSysVars(spark: SparkSession): Unit = {
-    val p1 = sessKey(spark, "global") + "#"
-    val p2 = sessKey(spark, "session") + "#"
-    sysVars.keys.filter(k => k.startsWith(p1) || k.startsWith(p2))
-      .foreach(sysVars.remove)
-  }
   private[sql] def sqlLiteral(v: Any): String = sqlLit(v)
   private[sql] def userVarLiteral(spark: SparkSession, name: String): String =
     userVarLit(spark, name)
   private[sql] def setUserVar(spark: SparkSession, name: String, lit: String): Unit =
-    userVars.put(sessKey(spark, name), lit)
+    state(spark).userVars.put(name.toLowerCase, lit)
 
   private def userVarLit(spark: SparkSession, name: String): String =
-    userVars.getOrElse(sessKey(spark, name), "NULL")
+    state(spark).userVars.getOrElse(name.toLowerCase, "NULL")
 
   /** Body of a prepared statement, if registered (e.g. for a conformance
     * harness that needs to know which table an EXECUTE touches).
     */
   def preparedBody(spark: SparkSession, name: String): Option[String] =
-    preparedStmts.get(sessKey(spark, name))
+    state(spark).preparedStmts.get(name.toLowerCase)
 
-  /** Per-session relevancy algorithm for MATCH scoring — the
-    * reference's `SET ft_relevancy_algorithm = "TF-IDF"|"BM25"`
-    * (`test/distributed/cases/fulltext/fulltext.sql:7`).
-    */
-  private val ftAlgo = TrieMap[Int, String]()
   private val FtAlgoRe =
     """(?is)^set\s+ft_relevancy_algorithm\s*=\s*["']?([\w-]+)["']?$""".r
-  private def sessionAlgo(spark: SparkSession): String =
-    ftAlgo.getOrElse(System.identityHashCode(spark.sharedState), "bm25")
+  private def sessionAlgo(spark: SparkSession): String = state(spark).ftAlgo
 
   private val PrepareRe = """(?is)^prepare\s+(\w+)\s+from\s+(.+)$""".r
   private val ExecuteRe = """(?is)^execute\s+(\w+)(?:\s+using\s+(.+))?$""".r
@@ -4527,8 +4524,8 @@ object GraftSql {
     // see the variable NAME (it writes OUT/INOUT params back into it)
     procedureRewrite(spark, q).orElse(q match {
       case FtAlgoRe(algo) =>
-        ftAlgo.put(System.identityHashCode(spark.sharedState),
-          algo.toLowerCase.replace("-", "")) // "TF-IDF" → "tfidf"
+        // "TF-IDF" → "tfidf"
+        state(spark).ftAlgo = algo.toLowerCase.replace("-", "")
         Some(spark.emptyDataFrame)
       case PrepareRe(name, bodyRaw) =>
         var b = bodyRaw.trim
@@ -4547,10 +4544,10 @@ object GraftSql {
         if ("""(?i)result_scan\s*\(\s*\?\s*\)""".r.findFirstIn(body).isDefined)
           throw new IllegalArgumentException(
             "invalid input: invalid argument of result_scan")
-        preparedStmts.put(sessKey(spark, name), body)
+        state(spark).preparedStmts.put(name.toLowerCase, body)
         Some(spark.emptyDataFrame)
       case ExecuteRe(name, usingOrNull) =>
-        val body = preparedStmts.getOrElse(sessKey(spark, name),
+        val body = state(spark).preparedStmts.getOrElse(name.toLowerCase,
           throw new IllegalStateException(
             s"prepared statement '$name' does not exist"))
         val params = Option(usingOrNull).toSeq
@@ -4573,7 +4570,7 @@ object GraftSql {
             "not supported: prepared multi-assignment SET supports user variables only")
         Some(sql(spark, bound))
       case DeallocRe(name) =>
-        preparedStmts.remove(sessKey(spark, name))
+        state(spark).preparedStmts.remove(name.toLowerCase)
         Some(spark.emptyDataFrame)
       case SetVarRe(assigns) =>
         // MySQL multi-assignment SET is ATOMIC: every RHS evaluates (a
@@ -4612,7 +4609,7 @@ object GraftSql {
             overlay.put(m.group(1).toLowerCase, v)
           }
         }
-        overlay.foreach { case (n, v) => userVars.put(sessKey(spark, n), v) }
+        overlay.foreach { case (n, v) => state(spark).userVars.put(n.toLowerCase, v) }
         Some(spark.emptyDataFrame)
       case _ => None
     })
@@ -4625,16 +4622,6 @@ object GraftSql {
   // semantics and index DDL can enforce the quantization width rule.
   // ------------------------------------------------------------------
 
-  /** lowercase table → (colName, kind, dim) for declared narrow columns. */
-  private val vecCols = TrieMap[String, Vector[(String, String, Int)]]()
-  /** lowercase table → (auto-increment column, next value) — the
-    * reference's implicit id allocation (`pkg/incrservice/`), needed at
-    * LOAD time when the file carries NULL for the id column.
-    */
-  private val autoIncCols = TrieMap[String, Vector[(String, Long)]]()
-  def clearVecCols(): Unit = {
-    vecCols.clear(); autoIncCols.clear(); statPatches.clear()
-  }
 
   // column name, a type token with optional (args), then no comma or
   // paren before AUTO_INCREMENT — the paren guard keeps `PRIMARY KEY
@@ -4647,7 +4634,7 @@ object GraftSql {
     * engine counter; INSERT/LOAD fill NULL ids from the recorded one).
     * A `) AUTO_INCREMENT = N` table option moves the allocator start.
     */
-  private def autoIncDdl(q: String): String = {
+  private def autoIncDdl(spark: SparkSession, q: String): String = {
     if (!q.toLowerCase.contains("auto_increment")) return q
     q match {
       case CreateTableNameRe(table) =>
@@ -4656,7 +4643,7 @@ object GraftSql {
         if (acs.nonEmpty) {
           val start = """(?i)\bauto_increment\s*=\s*(\d+)""".r
             .findFirstMatchIn(q).map(_.group(1).toLong - 1).getOrElse(0L)
-          autoIncCols.put(table.toLowerCase,
+          state(spark).autoIncCols.put(table.toLowerCase,
             acs.map { case (c, _) => (c, start) })
         }
         q.replaceAll("(?i)\\s+AUTO_INCREMENT\\s*=\\s*\\d+", "")
@@ -4687,17 +4674,16 @@ object GraftSql {
   private val AiTruncRe =
     """(?is)^truncate\s+(?:table\s+)?`?(\w+)`?\s*$""".r
 
-  private def aiCommitCtrs(key: String, ctrs: Vector[Long]): Unit =
-    autoIncCols.get(key).foreach { v =>
-      autoIncCols.put(key, v.zip(ctrs).map { case ((c, _), n) => (c, n) })
-    }
+  private def aiCommitCtrs(spark: SparkSession, key: String, ctrs: Vector[Long]): Unit =
+    state(spark).autoIncCols.updateWith(key)(
+      _.map(_.zip(ctrs).map { case ((c, _), n) => (c, n) }))
 
   /** Splice allocated ids into a VALUES row list. `posIdx` maps the row
     * item position to the auto-column index in the registry entry.
     */
-  private def aiXformRows(key: String, posIdx: Seq[(Int, Int)],
+  private def aiXformRows(spark: SparkSession, key: String, posIdx: Seq[(Int, Int)],
       rows: Seq[String]): (Seq[String], Vector[Long]) = {
-    val ctrs = autoIncCols(key).map(_._2).toArray
+    val ctrs = state(spark).autoIncCols(key).map(_._2).toArray
     val out = rows.map { r =>
       val inner = r.trim.stripPrefix("(").stripSuffix(")")
       var items = splitTop(inner).map(_.trim)
@@ -4734,6 +4720,7 @@ object GraftSql {
 
   private def autoIncInsertFill0(spark: SparkSession,
       sql0: String): (String, () => Unit) = {
+    val aiCols = state(spark).autoIncCols
     // an ON DUPLICATE KEY tail is not VALUES text — split it off so the
     // row transform never sees it, reattach verbatim
     val dupAt = """(?i)\son\s+duplicate\s+key\s+update\s""".r
@@ -4743,9 +4730,9 @@ object GraftSql {
       .getOrElse((sql0, ""))
     head match {
       case AiInsertColsRe(pre, t, cols, valuesTxt)
-          if autoIncCols.contains(t.toLowerCase) =>
+          if aiCols.contains(t.toLowerCase) =>
         val key = t.toLowerCase
-        val acols = autoIncCols(key)
+        val acols = aiCols(key)
         val listed = cols.split(",")
           .map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq
         val present = acols.zipWithIndex.flatMap { case ((c, _), ai) =>
@@ -4755,7 +4742,7 @@ object GraftSql {
         val missing = acols.zipWithIndex
           .filter { case ((c, _), _) => !listed.exists(_.equalsIgnoreCase(c)) }
         val rows0 = splitTop(valuesTxt)
-        val (rows1, ctrs1) = aiXformRows(key, present, rows0)
+        val (rows1, ctrs1) = aiXformRows(spark, key, present, rows0)
         val ctrs = ctrs1.toArray
         // MISSING auto columns prepend, each running its own counter
         val rows2 = rows1.zipWithIndex.map { case (r, k) =>
@@ -4766,10 +4753,10 @@ object GraftSql {
         missing.foreach { case (_, ai) => ctrs(ai) += rows0.length }
         val missNames = missing.map(_._1._1)
         (s"$pre $t (${(missNames ++ listed).mkString(", ")}) VALUES ${rows2.mkString(", ")}$dupTail",
-          () => aiCommitCtrs(key, ctrs.toVector))
+          () => aiCommitCtrs(spark, key, ctrs.toVector))
       case AiInsertSelRe(pre, t, cols, selTxt)
-          if autoIncCols.contains(t.toLowerCase) &&
-            autoIncCols(t.toLowerCase).exists { case (c, _) =>
+          if aiCols.contains(t.toLowerCase) &&
+            aiCols(t.toLowerCase).exists { case (c, _) =>
               !cols.split(",").exists(_.trim.stripPrefix("`").stripSuffix("`")
                 .equalsIgnoreCase(c)) } =>
         // SELECT-sourced insert omitting auto column(s): allocate with a
@@ -4779,7 +4766,7 @@ object GraftSql {
         val key = t.toLowerCase
         val listed = cols.split(",")
           .map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq
-        val missing = autoIncCols(key).filter { case (c, _) =>
+        val missing = aiCols(key).filter { case (c, _) =>
           !listed.exists(_.equalsIgnoreCase(c)) }
         val ids = missing.map { case (_, base) => s"$base + __rn" }
         val missNames = missing.map(_._1)
@@ -4791,7 +4778,7 @@ object GraftSql {
           s"(SELECT __sq.*, monotonically_increasing_id() AS __mono FROM " +
           s"($selTxt) AS __sq(${listed.mkString(", ")})) __s0) __src$dupTail",
           () => {
-            val ctrs = autoIncCols(key).map { case (c, base) =>
+            val ctrs = aiCols(key).map { case (c, base) =>
               if (!missing.exists(_._1 == c)) base
               else {
                 val mx = spark.sql(s"SELECT max(`$c`) FROM `$t`").head.get(0)
@@ -4801,22 +4788,22 @@ object GraftSql {
                 }
               }
             }
-            aiCommitCtrs(key, ctrs)
+            aiCommitCtrs(spark, key, ctrs)
           })
       case AiInsertValsRe(pre, t, valuesTxt)
-          if autoIncCols.contains(t.toLowerCase) =>
+          if aiCols.contains(t.toLowerCase) =>
         val key = t.toLowerCase
         val tblCols = try spark.table(t).columns.toSeq
           catch { case _: Exception => Seq.empty[String] }
-        val posIdx = autoIncCols(key).zipWithIndex.flatMap { case ((c, _), ai) =>
+        val posIdx = aiCols(key).zipWithIndex.flatMap { case ((c, _), ai) =>
           val p = tblCols.indexWhere(_.equalsIgnoreCase(c))
           if (p >= 0) Some((p, ai)) else None
         }
         if (posIdx.isEmpty) (sql0, () => ())
         else {
-          val (rows, ctrs) = aiXformRows(key, posIdx, splitTop(valuesTxt))
+          val (rows, ctrs) = aiXformRows(spark, key, posIdx, splitTop(valuesTxt))
           (s"$pre $t VALUES ${rows.mkString(", ")}$dupTail",
-            () => aiCommitCtrs(key, ctrs))
+            () => aiCommitCtrs(spark, key, ctrs))
         }
       case _ => (sql0, () => ())
     }
@@ -4833,6 +4820,7 @@ object GraftSql {
     */
   private def autoIncStmtRewrite(spark: SparkSession,
       sql0: String): (String, Option[Throwable] => Unit) = {
+    val aiCols = state(spark).autoIncCols
     // a FAILED re-CREATE must not clobber the live table's allocator
     // (autoIncDdl registers from text before execution) — snapshot the
     // entry here and restore it if the statement errors
@@ -4840,7 +4828,7 @@ object GraftSql {
       if (!sql0.toLowerCase.contains("auto_increment")) None
       else sql0 match {
         case CreateTableNameRe(t) =>
-          Some((t.toLowerCase, autoIncCols.get(t.toLowerCase)))
+          Some((t.toLowerCase, aiCols.get(t.toLowerCase)))
         case _ => None
       }
     if (createSnap.nonEmpty)
@@ -4848,25 +4836,25 @@ object GraftSql {
         case None => ()
         case Some(_) => createSnap.foreach { case (k, old) =>
           old match {
-            case Some(v) => autoIncCols.put(k, v)
-            case None => autoIncCols.remove(k)
+            case Some(v) => aiCols.put(k, v)
+            case None => aiCols.remove(k)
           }
         }
       })
-    if (autoIncCols.isEmpty) return (sql0, _ => ())
+    if (aiCols.isEmpty) return (sql0, _ => ())
     AiAlterRe.findFirstMatchIn(sql0).foreach { m =>
       val k = m.group(1).toLowerCase
-      autoIncCols.get(k).foreach { v =>
-        autoIncCols.put(k, v.map { case (c, cur) =>
+      aiCols.get(k).foreach { v =>
+        aiCols.put(k, v.map { case (c, cur) =>
           (c, math.max(cur, m.group(2).toLong - 1)) })
       }
     }
     val updAdvance: Option[() => Unit] =
       AiUpdateRe.findFirstMatchIn(sql0).flatMap { um =>
         val k = um.group(1).toLowerCase
-        if (!autoIncCols.contains(k)) None
-        else Some(() => autoIncCols.get(k).foreach { v =>
-          autoIncCols.put(k, v.map { case (c, cur) =>
+        if (!aiCols.contains(k)) None
+        else Some(() => aiCols.get(k).foreach { v =>
+          aiCols.put(k, v.map { case (c, cur) =>
             val nv = ("(?i)\\b" + java.util.regex.Pattern.quote(c) +
               "\\s*=\\s*'?(-?\\d+)'?").r
               .findFirstMatchIn(um.group(2)).map(_.group(1).toLong)
@@ -4881,8 +4869,8 @@ object GraftSql {
         updAdvance.foreach(_())
         AiTruncRe.findFirstMatchIn(sql0).foreach { m =>
           val k = m.group(1).toLowerCase
-          autoIncCols.get(k).foreach { v =>
-            autoIncCols.put(k, v.map { case (c, _) => (c, 0L) })
+          aiCols.get(k).foreach { v =>
+            aiCols.put(k, v.map { case (c, _) => (c, 0L) })
           }
         }
       case Some(e) =>
@@ -4908,7 +4896,7 @@ object GraftSql {
     * byte in Spark — f16/bf16 → ARRAY<FLOAT> carrying precision-rounded
     * values) and record the declared kinds.
     */
-  private def narrowVecDdl(q: String): String = {
+  private def narrowVecDdl(spark: SparkSession, q: String): String = {
     val low = q.toLowerCase
     if (!low.contains("vecint8") && !low.contains("vecuint8") &&
       !low.contains("vecf16") && !low.contains("vecbf16")) return q
@@ -4916,7 +4904,7 @@ object GraftSql {
       case CreateTableNameRe(table) =>
         val cols = NarrowColDefRe.findAllMatchIn(q).map(m =>
           (m.group(1), m.group(2).toLowerCase, m.group(3).toInt)).toVector
-        if (cols.nonEmpty) vecCols.put(table.toLowerCase, cols)
+        if (cols.nonEmpty) state(spark).vecCols.put(table.toLowerCase, cols)
         NarrowVecTypeRe.replaceAllIn(q, m => m.group(1).toLowerCase match {
           case "int8" => "ARRAY<TINYINT>"
           case "uint8" => "ARRAY<SMALLINT>"
@@ -4963,7 +4951,8 @@ object GraftSql {
         m.group(3).stripPrefix("[").stripSuffix("]") + ") AS ARRAY<FLOAT>))"))
   }
 
-  private def narrowVecFns(q: String): String = {
+  private def narrowVecFns(spark: SparkSession, q: String): String = {
+    val vecCols = state(spark).vecCols
     if (vecCols.isEmpty || !q.toLowerCase.contains("normalize_l2")) return q
     var s = q
     vecCols.foreach { case (t, cols) =>
@@ -4986,13 +4975,6 @@ object GraftSql {
     * (numbers as DOUBLE, nested maps as their JSON text).
     */
   private lazy val statsJson = new com.fasterxml.jackson.databind.ObjectMapper()
-  /** per-table accumulated stat patches — successive `table_stats`
-    * 'patch' calls merge (associative.sql patches table_cnt first, then
-    * ndv_map, and the later SELECT sees both).
-    */
-  private val statPatches =
-    TrieMap[String, scala.collection.mutable.LinkedHashMap[String,
-      com.fasterxml.jackson.databind.JsonNode]]()
   private def tableStatsRewrite(spark: SparkSession, q: String): String = {
     if (!q.toLowerCase.contains("table_stats")) return q
     var s = q
@@ -5030,7 +5012,7 @@ object GraftSql {
             if (node == null || !node.isObject)
               throw new IllegalStateException(
                 s"internal error: invalid patch args: $json")
-            val acc = statPatches.getOrElseUpdate(tbl,
+            val acc = state(spark).statPatches.getOrElseUpdate(tbl,
               scala.collection.mutable.LinkedHashMap.empty)
             node.fields().forEachRemaining(e => acc.put(e.getKey, e.getValue))
           }
@@ -5068,7 +5050,7 @@ object GraftSql {
       throw new IllegalStateException(
         s"internal error: table $fullName not found: no such table $fullName")
     if (isMoCatalog)
-      MoCatalog.ensureViews(spark, t => primaryKeys.contains(t.toLowerCase))
+      MoCatalog.ensureViews(spark, t => state(spark).primaryKeys.contains(t.toLowerCase))
     val df =
       if (isMoCatalog) spark.table("_graft_" + fullName.split("\\.").last.toLowerCase)
       else spark.table(tbl)
@@ -5099,7 +5081,7 @@ object GraftSql {
         "null_cnt_map" -> s"'$nullMap'",
         "size_map" -> s"'$nullMap'",
         "shuffle_range_map" -> "'{}'")
-    statPatches.get(tbl).foreach(_.foreach { case (k, v) =>
+    state(spark).statPatches.get(tbl).foreach(_.foreach { case (k, v) =>
       row.put(k,
         if (v.isNumber) s"CAST(${v.asText} AS DOUBLE)"
         else s"'${v.toString.replace("'", "''")}'")
@@ -5204,7 +5186,7 @@ object GraftSql {
     */
   private def narrowVecInsert(spark: SparkSession, q: String): String = q match {
     case NarrowInsertRe(table, colsOrNull, valuesTxt) =>
-      vecCols.get(table.toLowerCase) match {
+      state(spark).vecCols.get(table.toLowerCase) match {
         case Some(narrow) =>
           val byName = narrow.map(c => c._1.toLowerCase -> c).toMap
           val order: Seq[Option[(String, String, Int)]] =
@@ -5312,10 +5294,10 @@ object GraftSql {
     // SPATIAL defaults to the rtree algo (pkg/sql/compile/util.go)
     val algo = Option(usingOrNull).map(_.toLowerCase)
       .getOrElse(if (kind == "spatial") "rtree" else "")
-    val pkCols = primaryKeys.get(table.toLowerCase)
+    val pkCols = state(spark).primaryKeys.get(table.toLowerCase)
       .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
     MoCatalog.registerPlainIndex(spark, name, table, idxType, algo, cols, pkCols)
-    if (idxType == "UNIQUE") registerUniqueKey(table, name, cols)
+    if (idxType == "UNIQUE") registerUniqueKey(spark, table, name, cols)
     // nullable flag from the live schema (information_schema.statistics)
     val nullability = try {
       val sch = spark.table(table).schema
@@ -5364,7 +5346,7 @@ object GraftSql {
           .map(m => Option(m.group(1)).getOrElse(m.group(2))).getOrElse("")
         val vecNums = splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
         if (vecNums.isEmpty) return None
-        val idxOpt = graft.plans.IvfIndex.indexes.find(
+        val idxOpt = graft.plans.IvfIndex.indexes(spark).find(
           _.name.toLowerCase.endsWith(s"-${table.toLowerCase}-${vcol.toLowerCase}"))
         if (idxOpt.isEmpty && modeOpt.isEmpty) return None // no index, no hint
         val mode = modeOpt.getOrElse(
@@ -5385,7 +5367,7 @@ object GraftSql {
         // deterministic tie-break on the primary key — ties are common
         // in the goldens ([1,0,0] vs [0,1,0] to origin) and the
         // reference resolves them in insertion (= pk) order
-        val pkOrd = primaryKeys.getOrElse(table, spark.table(table).columns.head)
+        val pkOrd = state(spark).primaryKeys.getOrElse(table, spark.table(table).columns.head)
           .split(",").map(c => col(s"`${c.trim}`").asc).toIndexedSeq
         val w = org.apache.spark.sql.expressions.Window.orderBy(ord0 +: pkOrd: _*)
         val off = Option(offTxt).map(_.toInt).getOrElse(0)
@@ -5495,7 +5477,7 @@ object GraftSql {
         require(df0.columns.contains(vecCol), s"no column $vecCol on $table")
         // quantization: value whitelist + the no-upcast width rule against
         // the column's DECLARED kind (narrow kinds from the DDL registry)
-        val baseKind = vecCols.get(table.toLowerCase)
+        val baseKind = state(spark).vecCols.get(table.toLowerCase)
           .flatMap(_.find(_._1.equalsIgnoreCase(vecCol)).map(_._2))
           .getOrElse(df0.schema(vecCol).dataType match {
             case org.apache.spark.sql.types.ArrayType(
@@ -5536,7 +5518,7 @@ object GraftSql {
             .flatMap(mm => splitTop(mm.group(1)).map(
               _.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty))
           MoCatalog.registerVectorIndex(spark, name, table, method.toLowerCase,
-            vecCol, primaryKeys.getOrElse(table, df.columns.head)
+            vecCol, state(spark).primaryKeys.getOrElse(table, df.columns.head)
               .split(",").map(_.trim).toSeq,
             includeCols, centroids)
         }
@@ -5551,15 +5533,13 @@ object GraftSql {
             .toDF("index_name", "table_name", "column_name", "method", "status"))
         }
         def clamp(v: Int): Int = math.max(1, math.min(v, nRows).toInt)
-        val pk = primaryKeys.getOrElse(table, df.columns.head)
+        val pk = state(spark).primaryKeys.getOrElse(table, df.columns.head)
         def iOpt(k: String, dflt: Int) = opts.get(k).map(_.toInt).getOrElse(dflt)
         val key = s"$name-$table-$vecCol"
         // one name per table (the reference errors on re-use,
         // vector_index.result: "duplicate key name 'idx01'")
         val prefix = s"$name-$table-"
-        if ((graft.plans.IvfIndex.indexes.map(_.name) ++
-          graft.plans.HnswIndex.indexes.map(_.name) ++
-          graft.plans.IvfPqIndex.indexes.map(_.name)).exists(_.startsWith(prefix)))
+        if (annIndexNames(spark).exists(_.startsWith(prefix)))
           throw new IllegalArgumentException(s"duplicate key name '$name'")
         val builtCentroids = method.toLowerCase match {
           case "ivfflat" =>
@@ -5604,14 +5584,12 @@ object GraftSql {
         }
         val prefix = s"$name-$table-"
         val existing =
-          (graft.plans.IvfIndex.indexes.map(_.name) ++
-            graft.plans.HnswIndex.indexes.map(_.name) ++
-            graft.plans.IvfPqIndex.indexes.map(_.name))
+          annIndexNames(spark)
             .find(_.startsWith(prefix)).getOrElse(throw new IllegalArgumentException(
               s"invalid input: index $name does not exist on $table"))
         val vecCol = existing.stripPrefix(prefix)
         val df = spark.table(table)
-        val baseKind = vecCols.get(table.toLowerCase)
+        val baseKind = state(spark).vecCols.get(table.toLowerCase)
           .flatMap(_.find(_._1.equalsIgnoreCase(vecCol)).map(_._2))
           .getOrElse(df.schema(vecCol).dataType match {
             case org.apache.spark.sql.types.ArrayType(
@@ -5627,10 +5605,8 @@ object GraftSql {
         // rebuild in place: drop, then re-register under the same key —
         // the reference's ALTER REINDEX is exactly a rebuild with the
         // merged option set (`alter_table.go` reindex path)
-        graft.plans.IvfIndex.drop(existing)
-        graft.plans.HnswIndex.drop(existing)
-        graft.plans.IvfPqIndex.drop(existing)
-        val pk = primaryKeys.getOrElse(table, df.columns.head)
+        dropAnnIndex(spark, existing)
+        val pk = state(spark).primaryKeys.getOrElse(table, df.columns.head)
         if (nRows > 0) method match {
           case "ivfflat" =>
             graft.plans.IvfIndex.forCorpus(existing, df, vecCol,
@@ -5658,29 +5634,25 @@ object GraftSql {
           else Option(constrOrNull).getOrElse("")
         Some(registerPlain(spark, nm, table, kindOrNull, usingOrNull, colsTxt))
       case AlterDropIndexRe(table, name) =>
-        if (fkNeededIndexNames(table).exists(_.equalsIgnoreCase(name)))
+        if (fkNeededIndexNames(spark, table).exists(_.equalsIgnoreCase(name)))
           throw new IllegalStateException(
             s"Cannot drop index '$name': needed in a foreign key constraint")
         MoCatalog.dropIndex(spark, name, table)
-        dropUniqueKey(table, name)
+        dropUniqueKey(spark, table, name)
         Some(Seq((name, "dropped")).toDF("index_name", "status"))
       case DropIndexRe(name, tableOrNull) =>
         Option(tableOrNull).foreach { t =>
-          if (fkNeededIndexNames(t).exists(_.equalsIgnoreCase(name)))
+          if (fkNeededIndexNames(spark, t).exists(_.equalsIgnoreCase(name)))
             throw new IllegalStateException(
               s"Cannot drop index '$name': needed in a foreign key constraint")
         }
         val table = Option(tableOrNull)
         val prefix = table.map(t => s"$name-$t-").getOrElse(s"$name-")
         val dropped =
-          (graft.plans.IvfIndex.indexes.map(_.name) ++
-            graft.plans.HnswIndex.indexes.map(_.name) ++
-            graft.plans.IvfPqIndex.indexes.map(_.name))
+          annIndexNames(spark)
             .filter(n => n == name || n.startsWith(prefix)).distinct
         dropped.foreach { n =>
-          graft.plans.IvfIndex.drop(n)
-          graft.plans.HnswIndex.drop(n)
-          graft.plans.IvfPqIndex.drop(n)
+          dropAnnIndex(spark, n)
           n.split("-") match {
             case Array(i, t, _*) => MoCatalog.dropIndex(spark, i, t)
             case _ =>
@@ -5691,17 +5663,18 @@ object GraftSql {
         Option(tableOrNull) match {
           case Some(t) =>
             MoCatalog.dropIndex(spark, name, t)
-            dropUniqueKey(t, name)
+            dropUniqueKey(spark, t, name)
           case None => MoCatalog.dropIndexByName(spark, name)
         }
         // fulltext indexes drop by the same statement (fulltext1.sql:11
         // `drop index fdx_01 on articles` then recreates the same columns)
         var ftDropped = false
+        val ftIdx = state(spark).ftIndexCols
         table.foreach { t =>
-          val key = ftKey(spark, t)
-          ftIndexCols.get(key).foreach { idxs =>
+          val key = t.toLowerCase
+          ftIdx.get(key).foreach { idxs =>
             val kept = idxs.filterNot(_._1.equalsIgnoreCase(name))
-            if (kept.size != idxs.size) { ftDropped = true; ftIndexCols.put(key, kept) }
+            if (kept.size != idxs.size) { ftDropped = true; ftIdx.put(key, kept) }
           }
         }
         Some(Seq((name, if (dropped.nonEmpty || ftDropped) "dropped" else "not found"))
@@ -6222,7 +6195,7 @@ object GraftSql {
     // composite PK: doc identity is the serialized key tuple (the
     // reference packs composite PKs into one __mo_cpkey column,
     // `pkg/sql/util/index_util.go`) — here a char(1)-joined string
-    val pkCols = primaryKeys.getOrElse(table, spark.table(table).columns.head)
+    val pkCols = state(spark).primaryKeys.getOrElse(table, spark.table(table).columns.head)
       .split(",").map(_.trim).filter(_.nonEmpty)
     val pk = if (pkCols.length == 1) pkCols.head else "__ft_cpk"
     def withDocId(df: DataFrame): DataFrame =
@@ -6248,7 +6221,7 @@ object GraftSql {
       // index's column set; the index's parser picks the tokenizer
       // (query-side parsing is parser-independent except gojieba —
       // `ParsePatternInNLMode`, fulltext.go:919-923)
-      val tokenizer = ftIndexCols.get(ftKey(spark, table)).map { idxs =>
+      val tokenizer = state(spark).ftIndexCols.get(table.toLowerCase).map { idxs =>
         val want = textCols.map(_.toLowerCase).toSet
         val hit = idxs.find(_._2 == want).getOrElse(
           throw new IllegalStateException(

@@ -24,12 +24,33 @@ object MoCatalog {
       tableType: String, indexTableName: String, algoParams: String = "",
       idxType: String = "MULTIPLE", columns: Seq[String] = Seq.empty)
 
+  // rel_ids never repeat within the JVM, across sessions too
   private val nextId = new java.util.concurrent.atomic.AtomicLong(100000L)
-  private def sk(spark: SparkSession) = System.identityHashCode(spark.sharedState)
-  private val tableIds = TrieMap[(Int, String), Long]()
-  private val indexRows = TrieMap[(Int, String), Vector[IndexRow]]() // key (sess, idxName-table)
-  private val entriesViews = TrieMap[(Int, String), String]() // view → owning db
-  private val sessionDb = TrieMap[Int, String]()
+  private final class State {
+    val tableIds = TrieMap[String, Long]()
+    val tableDb = TrieMap[String, String]()
+    val indexRows = TrieMap[String, Vector[IndexRow]]() // "idxName-table"
+    val entriesViews = TrieMap[String, String]() // view → owning db
+    @volatile var sessionDb: Option[String] = None
+    val allDbs = TrieMap[String, Unit]()
+    // once a session has selected ANY db, dropping the current one
+    // leaves it in MySQL's "No database selected" error state
+    @volatile var everUsed = false
+    @volatile var account = "sys"
+    val createdDbs = TrieMap[String, Unit]() // account-scoped db key
+    val pubs = TrieMap[(String, String), Pub]() // (owner account, name)
+    // (subscriber account, subDb) → (owner account, pub name)
+    val subscriptions = TrieMap[(String, String), (String, String)]()
+    @volatile var users = Vector("root", "dump")
+    // name, admin, status, comments
+    @volatile var accounts = Vector(("sys", "root", "open", "system account"))
+    @volatile var roles = Vector("moadmin", "public")
+    val statRows = TrieMap[(String, String), Vector[StatIndex]]() // (db, table)
+    // (db, table) → declared (column, MySQL type text, notNull) in DDL order
+    val declaredCols = TrieMap[(String, String), Vector[(String, String, Boolean)]]()
+    val viewNames = TrieMap[(String, String), Unit]() // (db, view)
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
   /** Databases the reference pre-creates (`pkg/frontend/predefined.go`):
     * always valid `use` targets, never really created here.
@@ -38,39 +59,32 @@ object MoCatalog {
     Set("mo_catalog", "system", "system_metrics", "information_schema",
       "mysql", "mo_task", "mo_debug")
 
-  private val allDbs = TrieMap[(Int, String), Unit]()
-  // once a session has selected ANY db, dropping the current one leaves
-  // it in MySQL's "No database selected" error state
-  private val everUsed = TrieMap[Int, Boolean]()
-  def dbEverSelected(spark: SparkSession): Boolean =
-    everUsed.getOrElse(sk(spark), false)
+  def dbEverSelected(spark: SparkSession): Boolean = state(spark).everUsed
   def useDb(spark: SparkSession, db: String): Unit = {
-    sessionDb.put(sk(spark), db)
-    everUsed.put(sk(spark), true)
-    allDbs.put((sk(spark), db), ())
+    val cs = state(spark)
+    cs.sessionDb = Some(db)
+    cs.everUsed = true
+    cs.allDbs.put(db, ())
   }
-  def seenDbs(spark: SparkSession): Seq[String] =
-    allDbs.keys.filter(_._1 == sk(spark)).map(_._2).toSeq
+  def seenDbs(spark: SparkSession): Seq[String] = state(spark).allDbs.keys.toSeq
   /** Every db name this session could legally qualify a table with:
     * `use`d names plus created-but-never-used ones (bare, account
     * prefix stripped) — the flat-storage qualifier strip needs both
     * (`create table db.t (...)` right after `create database db`).
     */
   def knownDbs(spark: SparkSession): Seq[String] = {
-    val k = sk(spark)
+    val cs = state(spark)
     // ANY account's created dbs count: the strip is flat-storage text
     // normalization, not an existence check (account-scoped existence
     // stays with dbExists) — a subscriber's qualified read must resolve
     // regardless of which account bound the name
-    val created = createdDbs.keys.filter(_._1 == k).map(_._2)
+    val created = cs.createdDbs.keys
       .map { n => val i = n.indexOf(' '); if (i >= 0) n.substring(i + 1) else n }
-    (allDbs.keys.filter(_._1 == k).map(_._2) ++ created).toSeq.distinct
+    (cs.allDbs.keys ++ created).toSeq.distinct
   }
-  def currentDb(spark: SparkSession): Option[String] =
-    sessionDb.get(sk(spark))
+  def currentDb(spark: SparkSession): Option[String] = state(spark).sessionDb
   /** Harness hook: leave the session db-less (a fresh tenant session). */
-  def clearSessionDb(spark: SparkSession): Unit =
-    sessionDb.remove(sk(spark))
+  def clearSessionDb(spark: SparkSession): Unit = state(spark).sessionDb = None
   // ------------------------------------------------------------------
   // Multi-account sessions (reference tenants, `pkg/frontend/
   // authenticate.go`): the conformance harness switches the CURRENT
@@ -78,27 +92,22 @@ object MoCatalog {
   // account so two tenants can both own a `sub_db1`. The default (and
   // only account most callers ever see) is `sys`.
   // ------------------------------------------------------------------
-  private val sessionAccount = TrieMap[Int, String]()
-  def currentAccount(spark: SparkSession): String =
-    sessionAccount.getOrElse(sk(spark), "sys")
+  def currentAccount(spark: SparkSession): String = state(spark).account
   def setAccount(spark: SparkSession, acct: String): Unit =
-    sessionAccount.put(sk(spark), acct.toLowerCase)
+    state(spark).account = acct.toLowerCase
   def accountExists(spark: SparkSession, name: String): Boolean =
-    accountList(sk(spark)).exists(_._1 == name.toLowerCase)
+    state(spark).accounts.exists(_._1 == name.toLowerCase)
   def accountSuspended(spark: SparkSession, name: String): Boolean =
-    accountList(sk(spark)).exists(a =>
+    state(spark).accounts.exists(a =>
       a._1 == name.toLowerCase && a._3 == "suspend")
-  private def dbKey(spark: SparkSession, db: String): (Int, String) = {
-    val a = currentAccount(spark)
-    (sk(spark),
-      if (a == "sys") db.toLowerCase else a + " " + db.toLowerCase)
-  }
 
   /** The account-scoped db identity string (`db` for sys, `acct db`
     * otherwise) — the key [[Namespaces]] scopes table names by.
     */
-  def scopedDbKey(spark: SparkSession, db: String): String =
-    dbKey(spark, db)._2
+  def scopedDbKey(spark: SparkSession, db: String): String = {
+    val a = currentAccount(spark)
+    if (a == "sys") db.toLowerCase else a + " " + db.toLowerCase
+  }
 
   /** Like [[scopedDbKey]] but a subscription database resolves to its
     * PUBLISHER's key — the published tables are the publisher's.
@@ -106,29 +115,24 @@ object MoCatalog {
   def resolvedDbKey(spark: SparkSession, db: String): String =
     subOf(spark, db) match {
       case Some((owner, pubName)) =>
-        val pubDb = pubs.get((sk(spark), owner, pubName)).map(_.db)
+        val pubDb = state(spark).pubs.get((owner, pubName)).map(_.db)
           .getOrElse(db.toLowerCase)
         if (owner == "sys") pubDb else owner + " " + pubDb
       case None => scopedDbKey(spark, db)
     }
 
-  private val createdDbs = TrieMap[(Int, String), Unit]()
   def createDb(spark: SparkSession, db: String): Unit =
-    createdDbs.put(dbKey(spark, db), ())
+    state(spark).createdDbs.put(scopedDbKey(spark, db), ())
   def dbExists(spark: SparkSession, db: String): Boolean =
-    createdDbs.contains(dbKey(spark, db))
+    state(spark).createdDbs.contains(scopedDbKey(spark, db))
   def dropDb(spark: SparkSession, db: String): Unit = {
-    val k = sk(spark)
-    createdDbs.remove(dbKey(spark, db))
-    subscriptions.remove((k, currentAccount(spark), db.toLowerCase))
-    if (sessionDb.get(k).exists(_.equalsIgnoreCase(db)))
-      sessionDb.remove(k)
-    statRows.keys.filter(key => key._1 == k && key._2 == db.toLowerCase)
-      .foreach(statRows.remove)
-    declaredCols.keys.filter(key => key._1 == k && key._2 == db.toLowerCase)
-      .foreach(declaredCols.remove)
-    viewNames.keys.filter(key => key._1 == k && key._2 == db.toLowerCase)
-      .foreach(viewNames.remove)
+    val cs = state(spark)
+    cs.createdDbs.remove(scopedDbKey(spark, db))
+    cs.subscriptions.remove((currentAccount(spark), db.toLowerCase))
+    if (cs.sessionDb.exists(_.equalsIgnoreCase(db))) cs.sessionDb = None
+    cs.statRows.keys.filter(_._1 == db.toLowerCase).foreach(cs.statRows.remove)
+    cs.declaredCols.keys.filter(_._1 == db.toLowerCase).foreach(cs.declaredCols.remove)
+    cs.viewNames.keys.filter(_._1 == db.toLowerCase).foreach(cs.viewNames.remove)
   }
 
   // ------------------------------------------------------------------
@@ -141,15 +145,11 @@ object MoCatalog {
 
   final case class Pub(db: String, tables: Option[Seq[String]],
       accounts: Option[Set[String]], comment: String)
-  // (session, ownerAccount, pubName) → Pub
-  private val pubs = TrieMap[(Int, String, String), Pub]()
-  // (session, subscriberAccount, subDb) → (ownerAccount, pubName)
-  private val subscriptions = TrieMap[(Int, String, String), (String, String)]()
 
   def createPublication(spark: SparkSession, name0: String, db: String,
       tables: Option[Seq[String]], accounts: Option[Seq[String]],
       comment: String): Unit = {
-    val k = sk(spark); val owner = currentAccount(spark)
+    val cs = state(spark); val owner = currentAccount(spark)
     val name = name0.toLowerCase
     if (SystemDbs.contains(db.toLowerCase))
       throw new IllegalStateException("internal error: Unknown database " +
@@ -159,7 +159,7 @@ object MoCatalog {
         s"internal error: database '$db' is not a user database")
     if (!dbExists(spark, db))
       throw new IllegalArgumentException(s"Unknown database $db")
-    if (pubs.contains((k, owner, name)))
+    if (cs.pubs.contains((owner, name)))
       throw new IllegalStateException(
         s"internal error: the publication $name exists")
     accounts.toSeq.flatten.foreach { a =>
@@ -169,7 +169,7 @@ object MoCatalog {
         throw new IllegalStateException(
           s"internal error: not existed account name '${a.toLowerCase}'")
     }
-    pubs.put((k, owner, name),
+    cs.pubs.put((owner, name),
       Pub(db.toLowerCase, tables.map(_.map(_.toLowerCase)),
         accounts.map(_.map(_.toLowerCase).toSet), comment))
   }
@@ -180,9 +180,9 @@ object MoCatalog {
   def alterPublication(spark: SparkSession, name0: String,
       db: Option[String], tables: Option[Seq[String]],
       accounts: Option[Seq[String]]): Unit = {
-    val k = sk(spark); val owner = currentAccount(spark)
+    val cs = state(spark); val owner = currentAccount(spark)
     val name = name0.toLowerCase
-    val p = pubs.getOrElse((k, owner, name),
+    val p = cs.pubs.getOrElse((owner, name),
       throw new IllegalStateException(
         s"internal error: there is no publication $name"))
     accounts.toSeq.flatten.foreach { a =>
@@ -201,7 +201,7 @@ object MoCatalog {
       case Some(l) if l.exists(_.equalsIgnoreCase("all")) => None
       case Some(l) => Some(l.map(_.toLowerCase).toSet)
     }
-    pubs.put((k, owner, name), Pub(
+    cs.pubs.put((owner, name), Pub(
       db.map(_.toLowerCase).getOrElse(p.db),
       tables.map(_.map(_.toLowerCase)).orElse(p.tables),
       newAccounts, p.comment))
@@ -209,37 +209,36 @@ object MoCatalog {
 
   def dropPublication(spark: SparkSession, name0: String,
       ifExists: Boolean): Unit = {
-    val k = sk(spark); val owner = currentAccount(spark)
+    val cs = state(spark); val owner = currentAccount(spark)
     val name = name0.toLowerCase
-    if (!pubs.contains((k, owner, name)) && !ifExists)
+    if (!cs.pubs.contains((owner, name)) && !ifExists)
       throw new IllegalStateException(
         s"internal error: there is no publication $name")
-    pubs.remove((k, owner, name))
+    cs.pubs.remove((owner, name))
   }
 
   /** The publication a given (bare) db name of the CURRENT account is
     * subscribed to, if any.
     */
   def subOf(spark: SparkSession, db: String): Option[(String, String)] =
-    subscriptions.get((sk(spark), currentAccount(spark), db.toLowerCase))
+    state(spark).subscriptions.get((currentAccount(spark), db.toLowerCase))
 
   /** Resolve a live subscription to its publication (use-time check:
     * a dropped publication makes the subscription db unusable).
     */
   def subPublication(spark: SparkSession, db: String): Option[Pub] =
     subOf(spark, db).flatMap { case (owner, pub) =>
-      pubs.get((sk(spark), owner, pub))
+      state(spark).pubs.get((owner, pub))
     }
 
   def isPublishing(spark: SparkSession, db: String): Boolean = {
-    val k = sk(spark); val owner = currentAccount(spark)
-    pubs.exists { case ((s, o, _), p) =>
-      s == k && o == owner && p.db == db.toLowerCase }
+    val cs = state(spark); val owner = currentAccount(spark)
+    cs.pubs.exists { case ((o, _), p) => o == owner && p.db == db.toLowerCase }
   }
 
   def createSubscription(spark: SparkSession, subDb: String,
       fromAcct0: String, pubName0: String): Unit = {
-    val k = sk(spark); val me = currentAccount(spark)
+    val cs = state(spark); val me = currentAccount(spark)
     val fromAcct = fromAcct0.toLowerCase; val pubName = pubName0.toLowerCase
     if (fromAcct == me)
       throw new IllegalStateException(
@@ -250,38 +249,21 @@ object MoCatalog {
     if (accountSuspended(spark, fromAcct))
       throw new IllegalStateException(
         s"internal error: the account $fromAcct is suspended")
-    val p = pubs.getOrElse((k, fromAcct, pubName),
+    val p = cs.pubs.getOrElse((fromAcct, pubName),
       throw new IllegalStateException(
         s"internal error: there is no publication $pubName"))
     if (p.accounts.exists(as => !as.contains(me)))
       throw new IllegalStateException(s"internal error: the account $me " +
         s"is not allowed to subscribe the publication $pubName")
-    if (subscriptions.exists { case ((s, a, _), (o, pn)) =>
-        s == k && a == me && o == fromAcct && pn == pubName })
+    if (cs.subscriptions.exists { case ((a, _), (o, pn)) =>
+        a == me && o == fromAcct && pn == pubName })
       throw new IllegalStateException(
         s"internal error: publication $pubName can only be subscribed once")
     if (dbExists(spark, subDb))
       throw new IllegalStateException(s"database $subDb already exists")
     createDb(spark, subDb)
-    subscriptions.put((k, me, subDb.toLowerCase), (fromAcct, pubName))
+    cs.subscriptions.put((me, subDb.toLowerCase), (fromAcct, pubName))
   }
-  /** Test-harness hook: forget this session's catalog state. */
-  def clear(spark: SparkSession): Unit = {
-    val k = sk(spark)
-    Seq(tableIds, tableDb, indexRows, entriesViews, createdDbs)
-      .foreach(m => m.keys.filter(_._1 == k).foreach(m.remove))
-    statRows.keys.filter(_._1 == k).foreach(statRows.remove)
-    declaredCols.keys.filter(_._1 == k).foreach(declaredCols.remove)
-    viewNames.keys.filter(_._1 == k).foreach(viewNames.remove)
-    sessionDb.remove(k)
-    everUsed.remove(k)
-    users.remove(k); accounts.remove(k); roles.remove(k)
-    sessionAccount.remove(k)
-    pubs.keys.filter(_._1 == k).foreach(pubs.remove)
-    subscriptions.keys.filter(_._1 == k).foreach(subscriptions.remove)
-    allDbs.keys.filter(_._1 == k).foreach(allDbs.remove)
-  }
-
   // ------------------------------------------------------------------
   // RBAC registry — mo_user / mo_account / mo_role introspection rows
   // (`pkg/frontend/predefined.go` table defs + authenticate.go built-ins:
@@ -290,98 +272,82 @@ object MoCatalog {
   // "internal error: the {user|tenant|role} X exists" text.
   // ------------------------------------------------------------------
 
-  private val users = TrieMap[Int, Vector[String]]()
-  private val accounts = TrieMap[Int, Vector[(String, String, String, String)]]() // name, admin, status, comments
-  private val roles = TrieMap[Int, Vector[String]]()
-  private def userList(k: Int) = users.getOrElseUpdate(k, Vector("root", "dump"))
-  private def accountList(k: Int) =
-    accounts.getOrElseUpdate(k, Vector(("sys", "root", "open", "system account")))
-  private def roleList(k: Int) = roles.getOrElseUpdate(k, Vector("moadmin", "public"))
-
   def createUser(spark: SparkSession, name0: String): Unit = {
-    val k = sk(spark); val name = name0.toLowerCase
-    if (userList(k).contains(name))
+    val cs = state(spark); val name = name0.toLowerCase
+    if (cs.users.contains(name))
       throw new IllegalStateException(s"internal error: the user $name exists")
-    users.put(k, userList(k) :+ name)
+    cs.users :+= name
   }
   def dropUser(spark: SparkSession, name0: String): Unit = {
-    val k = sk(spark)
-    users.put(k, userList(k).filterNot(_ == name0.toLowerCase))
+    val cs = state(spark)
+    cs.users = cs.users.filterNot(_ == name0.toLowerCase)
   }
   def createAccount(spark: SparkSession, name0: String, admin: String,
       status: String, comments: String): Unit = {
-    val k = sk(spark); val name = name0.toLowerCase
-    if (accountList(k).exists(_._1 == name))
+    val cs = state(spark); val name = name0.toLowerCase
+    if (cs.accounts.exists(_._1 == name))
       throw new IllegalStateException(s"internal error: the tenant $name exists")
-    accounts.put(k, accountList(k) :+ ((name, admin, status, comments)))
+    cs.accounts :+= ((name, admin, status, comments))
   }
   def alterAccount(spark: SparkSession, name0: String,
       status: Option[String], comments: Option[String]): Unit = {
-    val k = sk(spark); val name = name0.toLowerCase
-    accounts.put(k, accountList(k).map {
+    val cs = state(spark); val name = name0.toLowerCase
+    cs.accounts = cs.accounts.map {
       case (n, a, st, cm) if n == name =>
         (n, a, status.getOrElse(st), comments.getOrElse(cm))
       case r => r
-    })
+    }
   }
   def dropAccount(spark: SparkSession, name0: String): Unit = {
-    val k = sk(spark); val name = name0.toLowerCase
-    accounts.put(k, accountList(k).filterNot(_._1 == name))
+    val cs = state(spark); val name = name0.toLowerCase
+    cs.accounts = cs.accounts.filterNot(_._1 == name)
     // the tenant's databases, publications and subscriptions die with it
-    subscriptions.keys.filter(key => key._1 == k && key._2 == name)
-      .foreach(subscriptions.remove)
-    pubs.keys.filter(key => key._1 == k && key._2 == name)
-      .foreach(pubs.remove)
-    createdDbs.keys.filter(key =>
-      key._1 == k && key._2.startsWith(name + " "))
-      .foreach(createdDbs.remove)
+    cs.subscriptions.keys.filter(_._1 == name).foreach(cs.subscriptions.remove)
+    cs.pubs.keys.filter(_._1 == name).foreach(cs.pubs.remove)
+    cs.createdDbs.keys.filter(_.startsWith(name + " ")).foreach(cs.createdDbs.remove)
   }
   def createRole(spark: SparkSession, name0: String): Unit = {
-    val k = sk(spark); val name = name0.toLowerCase
-    if (roleList(k).contains(name))
+    val cs = state(spark); val name = name0.toLowerCase
+    if (cs.roles.contains(name))
       throw new IllegalStateException(s"internal error: the role $name exists")
-    roles.put(k, roleList(k) :+ name)
+    cs.roles :+= name
   }
   def dropRole(spark: SparkSession, name0: String): Unit = {
-    val k = sk(spark)
-    roles.put(k, roleList(k).filterNot(_ == name0.toLowerCase))
+    val cs = state(spark)
+    cs.roles = cs.roles.filterNot(_ == name0.toLowerCase)
   }
 
-  private val tableDb = TrieMap[(Int, String), String]()
   def tableId(spark: SparkSession, table: String): Long = {
-    tableDb.putIfAbsent((sk(spark), table.toLowerCase),
-      currentDb(spark).getOrElse("default"))
-    tableIds.getOrElseUpdate((sk(spark), table.toLowerCase),
-      nextId.incrementAndGet())
+    val cs = state(spark)
+    cs.tableDb.putIfAbsent(table.toLowerCase, currentDb(spark).getOrElse("default"))
+    cs.tableIds.getOrElseUpdate(table.toLowerCase, nextId.incrementAndGet())
   }
 
   def isEntriesView(spark: SparkSession, name: String): Boolean =
-    entriesViews.contains((sk(spark), name.toLowerCase))
+    state(spark).entriesViews.contains(name.toLowerCase)
 
   def dropTable(spark: SparkSession, table: String): Unit = {
-    val k = sk(spark)
-    tableIds.remove((k, table.toLowerCase))
-    tableDb.remove((k, table.toLowerCase))
+    val cs = state(spark)
+    cs.tableIds.remove(table.toLowerCase)
+    cs.tableDb.remove(table.toLowerCase)
     dropViewMeta(spark, table)
-    indexRows.keys.filter(key => key._1 == k &&
-      key._2.endsWith(s"-${table.toLowerCase}")).foreach(indexRows.remove)
+    cs.indexRows.keys.filter(_.endsWith(s"-${table.toLowerCase}")).foreach(cs.indexRows.remove)
     clearStatIndexes(spark, table)
     dropDeclaredColumns(spark, table)
   }
 
   def dropIndex(spark: SparkSession, idxName: String, table: String): Unit = {
-    indexRows.remove((sk(spark), s"${idxName.toLowerCase}-${table.toLowerCase}"))
+    state(spark).indexRows.remove(s"${idxName.toLowerCase}-${table.toLowerCase}")
     dropStatIndex(spark, table, idxName)
   }
   /** Drop an index by name alone (DROP INDEX without ON table). */
   def dropIndexByName(spark: SparkSession, idxName: String): Unit = {
-    val k = sk(spark)
-    indexRows.keys.filter(key => key._1 == k &&
-      key._2.startsWith(s"${idxName.toLowerCase}-")).foreach(indexRows.remove)
-    statRows.keys.filter(_._1 == k).foreach { key =>
-      statRows.get(key).foreach { v =>
+    val cs = state(spark)
+    cs.indexRows.keys.filter(_.startsWith(s"${idxName.toLowerCase}-")).foreach(cs.indexRows.remove)
+    cs.statRows.keys.foreach { key =>
+      cs.statRows.get(key).foreach { v =>
         if (v.exists(_.index.equalsIgnoreCase(idxName)))
-          statRows.put(key, v.filterNot(_.index.equalsIgnoreCase(idxName)))
+          cs.statRows.put(key, v.filterNot(_.index.equalsIgnoreCase(idxName)))
       }
     }
   }
@@ -437,7 +403,7 @@ object MoCatalog {
           includeCols.map(c => s"`$c` AS __mo_index_include_$c")
         spark.sql(s"CREATE OR REPLACE TEMP VIEW $entries AS " +
           s"SELECT ${selCols.mkString(", ")} FROM `$table`")
-        entriesViews.put((sk(spark), entries.toLowerCase), db)
+        state(spark).entriesViews.put(entries.toLowerCase, db)
         Vector(
           IndexRow(idxName, tid, "ivfflat", "metadata", s"${base}_meta", params),
           IndexRow(idxName, tid, "ivfflat", "centroids", s"${base}_centroids", params),
@@ -451,7 +417,7 @@ object MoCatalog {
         Vector(IndexRow(idxName, tid, other, "metadata",
           s"__mo_index_secondary_${tid}_${idxName.toLowerCase}_meta"))
     }
-    indexRows.put((sk(spark), s"${idxName.toLowerCase}-${table.toLowerCase}"),
+    state(spark).indexRows.put(s"${idxName.toLowerCase}-${table.toLowerCase}",
       rows.map(_.copy(columns = Seq(vecCol))))
   }
 
@@ -473,7 +439,7 @@ object MoCatalog {
     val prefix =
       if (idxType == "UNIQUE") "__mo_index_unique_" else "__mo_index_secondary_"
     val base = s"$prefix${tid}_${idxName.toLowerCase}"
-    indexRows.put((sk(spark), s"${idxName.toLowerCase}-${table.toLowerCase}"),
+    state(spark).indexRows.put(s"${idxName.toLowerCase}-${table.toLowerCase}",
       Vector(IndexRow(idxName, tid, algo, "", base, "", idxType, columns)))
   }
 
@@ -489,7 +455,6 @@ object MoCatalog {
   final case class StatIndex(index: String, nonUnique: Int,
     cols: Seq[(String, Boolean)])
 
-  private val statRows = TrieMap[(Int, String, String), Vector[StatIndex]]()
 
   /** Replaces any previous registration of the same index name on the
     * (db, table).
@@ -504,33 +469,30 @@ object MoCatalog {
 
   def registerStatIndex(spark: SparkSession, table: String,
       index: String, nonUnique: Int, cols: Seq[(String, Boolean)]): Unit = {
-    val db = displayDbOf(spark, table)
-    val key = (sk(spark), db, table.toLowerCase)
-    val prev = statRows.getOrElse(key, Vector.empty)
-    statRows.put(key,
-      prev.filterNot(_.index.equalsIgnoreCase(index)) :+
-        StatIndex(index, nonUnique, cols))
+    val key = (displayDbOf(spark, table), table.toLowerCase)
+    state(spark).statRows.updateWith(key)(prev =>
+      Some(prev.getOrElse(Vector.empty).filterNot(_.index.equalsIgnoreCase(index)) :+
+        StatIndex(index, nonUnique, cols)))
   }
 
   def clearStatIndexes(spark: SparkSession, table: String): Unit = {
     val db = displayDbOf(spark, table)
-    statRows.remove((sk(spark), db, table.toLowerCase))
+    state(spark).statRows.remove((db, table.toLowerCase))
   }
 
   def dropStatIndex(spark: SparkSession, table: String, index: String): Unit = {
-    val db = displayDbOf(spark, table)
-    val key = (sk(spark), db, table.toLowerCase)
-    statRows.get(key).foreach(v =>
-      statRows.put(key, v.filterNot(_.index.equalsIgnoreCase(index))))
+    val key = (displayDbOf(spark, table), table.toLowerCase)
+    state(spark).statRows.updateWith(key)(
+      _.map(_.filterNot(_.index.equalsIgnoreCase(index))))
   }
 
   /** (Re)materialize `_graft_is_statistics` — the rewrite target for
     * `information_schema.statistics`. Driver-side metadata only.
     */
   def ensureStatisticsView(spark: SparkSession): Unit = {
-    val k = sk(spark)
-    val rows = statRows.toSeq.filter(_._1._1 == k).flatMap {
-      case ((_, db, table), idxs) =>
+    val cs = state(spark)
+    val rows = cs.statRows.toSeq.flatMap {
+      case ((db, table), idxs) =>
         // a mangled physical name displays as its logical (db, name)
         val t = Namespaces.logicalOf(spark, table).map(_._2).getOrElse(table)
         idxs.flatMap { ix =>
@@ -559,11 +521,11 @@ object MoCatalog {
     */
   def showIndexRows(spark: SparkSession, table: String)
       : org.apache.spark.sql.DataFrame = {
-    val k = sk(spark)
+    val cs = state(spark)
     // SHOW INDEX names the LOGICAL table; the registry keys physical
     val phys = GraftSql.resolveTableName(spark, None, table)
     val db = displayDbOf(spark, phys)
-    val rows = statRows.getOrElse((k, db, phys.toLowerCase), Vector.empty)
+    val rows = cs.statRows.getOrElse((db, phys.toLowerCase), Vector.empty)
       .flatMap { ix =>
         ix.cols.zipWithIndex.map { case ((c, nullable), i) =>
           org.apache.spark.sql.Row(table, ix.nonUnique, ix.index, i + 1, c,
@@ -608,40 +570,33 @@ object MoCatalog {
     "mo_upgrade", "mo_upgrade_tenant", "mo_user",
     "mo_user_defined_function", "mo_user_grant", "mo_version")
 
-  /** (db, table) → declared (column, MySQL type text, notNull) in DDL
-    * order.
-    */
-  private val declaredCols =
-    TrieMap[(Int, String, String), Vector[(String, String, Boolean)]]()
 
   def registerDeclaredColumns(spark: SparkSession, db: Option[String],
       table: String, cols: Seq[(String, String, Boolean)]): Unit = {
     val d = Namespaces.logicalOf(spark, table)
       .map(l => Namespaces.displayDb(l._1))
       .orElse(db).orElse(currentDb(spark)).getOrElse("default").toLowerCase
-    declaredCols.put((sk(spark), d, table.toLowerCase), cols.toVector)
+    state(spark).declaredCols.put((d, table.toLowerCase), cols.toVector)
   }
 
   /** Declared (name, declType, notNull) triples of a table, any db
     * (MoTypeInfer resolves view-body column types through it).
     */
   def declaredColumnsOf(spark: SparkSession,
-      table: String): Vector[(String, String, Boolean)] = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == table.toLowerCase)
-      .map(_._2).getOrElse(Vector.empty)
-  }
+      table: String): Vector[(String, String, Boolean)] =
+    declaredEntry(state(spark), table).map(_._2).getOrElse(Vector.empty)
+
+  /** ((db, table), columns) of a table's declared layout, any db. */
+  private def declaredEntry(cs: State, table: String) =
+    cs.declaredCols.find(_._1._2 == table.toLowerCase)
 
   // views surface in information_schema.tables with table_type=VIEW
   // (hint/remap_db_objects obj probes; ddl/drop_table_multiple)
-  private val viewNames = TrieMap[(Int, String, String), Unit]()
   def registerView(spark: SparkSession, phys: String): Unit =
-    viewNames.put((sk(spark), displayDbOf(spark, phys), phys.toLowerCase), ())
+    state(spark).viewNames.put((displayDbOf(spark, phys), phys.toLowerCase), ())
   def dropViewMeta(spark: SparkSession, phys: String): Unit = {
-    val k = sk(spark)
-    viewNames.keys.filter(key => key._1 == k && key._3 == phys.toLowerCase)
-      .foreach(viewNames.remove)
+    val cs = state(spark)
+    cs.viewNames.keys.filter(_._2 == phys.toLowerCase).foreach(cs.viewNames.remove)
   }
 
   /** ALTER TABLE ADD [COLUMN]: keep the declared layout in sync for a
@@ -649,20 +604,18 @@ object MoCatalog {
     */
   def appendDeclaredColumn(spark: SparkSession, table: String,
       col: String, ty: String): Unit = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == table.toLowerCase).foreach { case (key, cols) =>
+    val cs = state(spark)
+    declaredEntry(cs, table).foreach { case (key, cols) =>
       if (!cols.exists(_._1.equalsIgnoreCase(col)))
-        declaredCols.put(key, cols :+ ((col, ty, false)))
+        cs.declaredCols.put(key, cols :+ ((col, ty, false)))
     }
   }
 
   def renameDeclaredColumn(spark: SparkSession, table: String,
       old: String, nw: String, newType: Option[String]): Unit = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == table.toLowerCase).foreach { case (key, cols) =>
-      declaredCols.put(key, cols.map { case (n, ty, nn) =>
+    val cs = state(spark)
+    declaredEntry(cs, table).foreach { case (key, cols) =>
+      cs.declaredCols.put(key, cols.map { case (n, ty, nn) =>
         if (n.equalsIgnoreCase(old)) (nw, newType.getOrElse(ty), nn)
         else (n, ty, nn)
       })
@@ -674,18 +627,15 @@ object MoCatalog {
     */
   def declaredNotNull(spark: SparkSession, table: String,
       col: String): Boolean = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == table.toLowerCase)
+    declaredEntry(state(spark), table)
       .exists(_._2.exists(c => c._1.equalsIgnoreCase(col) && c._3))
   }
 
   def removeDeclaredColumn(spark: SparkSession, table: String,
       col: String): Unit = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == table.toLowerCase).foreach { case (key, cols) =>
-      declaredCols.put(key, cols.filterNot(_._1.equalsIgnoreCase(col)))
+    val cs = state(spark)
+    declaredEntry(cs, table).foreach { case (key, cols) =>
+      cs.declaredCols.put(key, cols.filterNot(_._1.equalsIgnoreCase(col)))
     }
   }
 
@@ -693,22 +643,20 @@ object MoCatalog {
     * follow the new physical name.
     */
   def renameTableMeta(spark: SparkSession, from: String, to: String): Unit = {
-    val k = sk(spark)
+    val cs = state(spark)
     val toDb = displayDbOf(spark, to)
-    declaredCols.toSeq.filter(e => e._1._1 == k &&
-        e._1._3 == from.toLowerCase).foreach { case (key, cols) =>
-      declaredCols.remove(key)
-      declaredCols.put((k, toDb, to.toLowerCase), cols)
+    cs.declaredCols.toSeq.filter(e => e._1._2 == from.toLowerCase).foreach { case (key, cols) =>
+      cs.declaredCols.remove(key)
+      cs.declaredCols.put((toDb, to.toLowerCase), cols)
     }
-    statRows.toSeq.filter(e => e._1._1 == k &&
-        e._1._3 == from.toLowerCase).foreach { case (key, v) =>
-      statRows.remove(key)
-      statRows.put((k, toDb, to.toLowerCase), v)
+    cs.statRows.toSeq.filter(e => e._1._2 == from.toLowerCase).foreach { case (key, v) =>
+      cs.statRows.remove(key)
+      cs.statRows.put((toDb, to.toLowerCase), v)
     }
-    viewNames.keys.filter(key => key._1 == k && key._3 == from.toLowerCase)
+    cs.viewNames.keys.filter(key => key._2 == from.toLowerCase)
       .foreach { key =>
-        viewNames.remove(key)
-        viewNames.put((k, toDb, to.toLowerCase), ())
+        cs.viewNames.remove(key)
+        cs.viewNames.put((toDb, to.toLowerCase), ())
       }
   }
 
@@ -719,9 +667,7 @@ object MoCatalog {
     */
   def copyDeclaredLike(spark: SparkSession, fromPhys: String,
       toPhys: String, srcHasPk: Boolean): Unit = {
-    val k = sk(spark)
-    declaredCols.toSeq.find(e => e._1._1 == k &&
-        e._1._3 == fromPhys.toLowerCase).foreach { case (_, cols) =>
+    declaredEntry(state(spark), fromPhys).foreach { case (_, cols) =>
       val withFake =
         if (srcHasPk) cols
         else cols :+ (("__mo_fake_pk_col", "BIGINT", false))
@@ -730,9 +676,8 @@ object MoCatalog {
   }
 
   def dropDeclaredColumns(spark: SparkSession, table: String): Unit = {
-    val k = sk(spark)
-    declaredCols.keys.filter(key => key._1 == k && key._3 == table.toLowerCase)
-      .foreach(declaredCols.remove)
+    val cs = state(spark)
+    cs.declaredCols.keys.filter(_._2 == table.toLowerCase).foreach(cs.declaredCols.remove)
   }
 
   /** MySQL's DATA_TYPE (bare family name) for a declared type text. */
@@ -783,16 +728,16 @@ object MoCatalog {
 
   def ensureInfoSchemaViews(spark: SparkSession): Unit = {
     import spark.implicits._
-    val k = sk(spark)
+    val cs = state(spark)
     val moRows = MoCatalogTables
       .map(t => ("def", "mo_catalog", t, "BASE TABLE", "Tae"))
     def logicalName(t: String): String =
       Namespaces.logicalOf(spark, t).map(_._2).getOrElse(t)
-    val userRows = declaredCols.toSeq.filter(_._1._1 == k).map {
-      case ((_, db, t), _) => ("def", db, logicalName(t), "BASE TABLE", "Tae")
+    val userRows = cs.declaredCols.toSeq.map {
+      case ((db, t), _) => ("def", db, logicalName(t), "BASE TABLE", "Tae")
     }
-    val viewRows = viewNames.keys.toSeq.filter(_._1 == k).map {
-      case (_, db, v) => ("def", db, logicalName(v), "VIEW", "Tae")
+    val viewRows = cs.viewNames.keys.toSeq.map {
+      case (db, v) => ("def", db, logicalName(v), "VIEW", "Tae")
     }
     (moRows ++ userRows ++ viewRows)
       .toDF("table_catalog", "table_schema", "table_name", "table_type",
@@ -827,8 +772,8 @@ object MoCatalog {
         case "double" => (Some(22L), None)
         case _ => (None, None)
       }
-    val colRows = declaredCols.toSeq.filter(_._1._1 == k).flatMap {
-      case ((_, db, t), cols) =>
+    val colRows = cs.declaredCols.toSeq.flatMap {
+      case ((db, t), cols) =>
         cols.zipWithIndex.map { case ((c, ty, notNull), i) =>
           val (cs, cml, col) = charMeta(ty)
           val (np, ns) = numMeta(ty)
@@ -858,7 +803,7 @@ object MoCatalog {
         "character_octet_length", "numeric_precision", "numeric_scale")
       .createOrReplaceTempView("_graft_is_columns")
     // FK introspection from the live registry (MySQL column contract)
-    val fkRows = graft.sql.GraftSql.fkIntrospection
+    val fkRows = graft.sql.GraftSql.fkIntrospection(spark)
     fkRows.map { case (name, fdb, child, _, _, parent, _, delRule,
         updRule, refIdx, _, _) =>
       ("def", fdb, name, "def", fdb, refIdx, "NONE", updRule, delRule,
@@ -888,8 +833,8 @@ object MoCatalog {
     // information_schema.table_constraints: PRIMARY/UNIQUE rows from the
     // index-stats registry + FK constraints (temporary_table_basic's
     // leak checks and visibility probes)
-    val tcRows = statRows.toSeq.filter(_._1._1 == k).flatMap {
-      case ((_, db, table), idxs) =>
+    val tcRows = cs.statRows.toSeq.flatMap {
+      case ((db, table), idxs) =>
         val t = Namespaces.logicalOf(spark, table).map(_._2).getOrElse(table)
         idxs.filter(_.nonUnique == 0).map { ix =>
           ("def", db, ix.index, db, t,
@@ -908,8 +853,8 @@ object MoCatalog {
     // information_schema.partitions: one row per declared partition of
     // a registered partitioned table (ddl/alter_table_add_partition)
     val partRows = Partitions.all(spark).flatMap { spec =>
-      val db = declaredCols.keys.collectFirst {
-        case (kk, d, t) if kk == k && t == spec.table.toLowerCase => d
+      val db = cs.declaredCols.keys.collectFirst {
+        case (d, t) if t == spec.table.toLowerCase => d
       }.orElse(currentDb(spark)).getOrElse("default")
       val method =
         if (spec.methodSql.nonEmpty) spec.methodSql else spec.method.toUpperCase
@@ -926,7 +871,7 @@ object MoCatalog {
     // information_schema.schemata: predefined system dbs + this
     // session's created ones (tenant-scoped names excluded)
     val schemaRows = (SystemDbs.toSeq ++
-      createdDbs.keys.filter(_._1 == k).map(_._2).filterNot(_.contains(" ")))
+      cs.createdDbs.keys.filterNot(_.contains(" ")))
       .distinct.sorted.map(d => ("def", d))
     schemaRows.toDF("catalog_name", "schema_name")
       .createOrReplaceTempView("_graft_is_schemata")
@@ -964,22 +909,22 @@ object MoCatalog {
     */
   def ensureViews(spark: SparkSession, primaryKeyed: String => Boolean): Unit = {
     import spark.implicits._
-    val k = sk(spark)
+    val cs = state(spark)
     val db = currentDb(spark).getOrElse("default")
-    val tids = tableIds.toSeq.filter(_._1._1 == k)
-      .map { case ((_, t), id) =>
+    val tids = cs.tableIds.toSeq
+      .map { case (t, id) =>
         Namespaces.logicalOf(spark, t) match {
           case Some((dbKey, l)) => (id, l, Namespaces.displayDb(dbKey))
-          case None => (id, t, tableDb.getOrElse((k, t), db))
+          case None => (id, t, cs.tableDb.getOrElse(t, db))
         }
       }
     // the reference's catalog also lists each index's INTERNAL tables
     // (array_index.result counts base + metadata/centroids/entries)
-    val internal = indexRows.toSeq.filter(_._1._1 == k).flatMap(_._2)
+    val internal = cs.indexRows.toSeq.flatMap(_._2)
       .map { r =>
-        val baseDb = tableIds.toSeq.filter(_._1._1 == k)
+        val baseDb = cs.tableIds.toSeq
           .find(_._2 == r.tableId)
-          .map { case ((_, t), _) => tableDb.getOrElse((k, t), db) }
+          .map { case (t, _) => cs.tableDb.getOrElse(t, db) }
           .getOrElse(db)
         (r.tableId * 1000 + r.indexTableName.hashCode.abs % 997,
           r.indexTableName, baseDb)
@@ -992,8 +937,8 @@ object MoCatalog {
       internal.map(r => (r._2.toLowerCase, r._3.toLowerCase))).toSet
     def logicalN(t: String): String =
       Namespaces.logicalOf(spark, t).map(_._2).getOrElse(t)
-    val declared = declaredCols.toSeq.filter(_._1._1 == k)
-      .map { case ((_, d, t), _) => (2000000L + t.hashCode.abs % 999983,
+    val declared = cs.declaredCols.toSeq
+      .map { case ((d, t), _) => (2000000L + t.hashCode.abs % 999983,
         logicalN(t), d) }
       .filterNot(r => have.contains((r._2.toLowerCase, r._3.toLowerCase)))
     (tids ++ internal ++ declared).map { case (id, n, d) => (id, n, d, "r") }
@@ -1003,10 +948,10 @@ object MoCatalog {
     // subscriber's binding when one exists (pub_sub3.result:71 —
     // ids/timestamps are run-specific and @ignore-masked by the goldens)
     locally {
-      val subsByPub = subscriptions.toSeq.filter(_._1._1 == k)
-        .map { case ((_, a, subDb), (o, pn)) => ((o, pn, a), subDb) }.toMap
-      val rows = pubs.toSeq.filter(_._1._1 == k)
-        .flatMap { case ((_, owner, pn), p) =>
+      val subsByPub = cs.subscriptions.toSeq
+        .map { case ((a, subDb), (o, pn)) => ((o, pn, a), subDb) }.toMap
+      val rows = cs.pubs.toSeq
+        .flatMap { case ((owner, pn), p) =>
           val allowed = p.accounts.map(_.toSeq.sorted).getOrElse(
             subsByPub.keys.filter(x => x._1 == owner && x._2 == pn)
               .map(_._3).toSeq.distinct.sorted)
@@ -1029,7 +974,7 @@ object MoCatalog {
     // mo_indexes row per covered column, like the reference
     val pkRows = tids.filter(t => primaryKeyed(t._2))
       .map(t => ("", t._1, "", "", "", "", "", "", 1))
-    val idxRows = indexRows.toSeq.filter(_._1._1 == k).flatMap(_._2)
+    val idxRows = cs.indexRows.toSeq.flatMap(_._2)
       .flatMap { r =>
         val cols = if (r.columns.isEmpty) Seq("") else r.columns
         cols.zipWithIndex.map { case (c, i) =>
@@ -1053,8 +998,8 @@ object MoCatalog {
       .toDF("stage_id", "stage_name", "url", "stage_credentials",
         "stage_status", "comment")
       .createOrReplaceTempView("_graft_mo_stages")
-    val colRows = entriesViews.toSeq.filter(_._1._1 == k).flatMap {
-      case ((_, v), vdb) =>
+    val colRows = cs.entriesViews.toSeq.flatMap {
+      case (v, vdb) =>
         try {
           val visible = spark.table(v).schema.fields.zipWithIndex.map {
             case (f, i) => (f.name, i + 1, 0, v, vdb)
@@ -1070,23 +1015,23 @@ object MoCatalog {
       .createOrReplaceTempView("_graft_mo_columns")
     // RBAC slices — ids are insertion order; timestamps are run-specific
     // in the reference too, so the deterministic columns carry the tests
-    userList(k).zipWithIndex
+    cs.users.zipWithIndex
       .map { case (u, i) => (i + 1, "localhost", u, "unlock", "password", 0, 0, 1) }
       .toDF("user_id", "user_host", "user_name", "status", "login_type",
         "creator", "owner", "default_role")
       .createOrReplaceTempView("_graft_mo_user")
-    accountList(k).zipWithIndex
+    cs.accounts.zipWithIndex
       .map { case ((n, a, st, cm), i) => (i + 1, n, a, st, cm, "1.2.0") }
       .toDF("account_id", "account_name", "admin_name", "status",
         "comments", "create_version")
       .createOrReplaceTempView("_graft_mo_account")
-    roleList(k).zipWithIndex
+    cs.roles.zipWithIndex
       .map { case (r, i) => (i + 1, r, 0, 0, "") }
       .toDF("role_id", "role_name", "creator", "owner", "comments")
       .createOrReplaceTempView("_graft_mo_role")
     // FK metadata (fk_information_schema_metadata reads
     // mo_catalog.mo_foreign_keys)
-    graft.sql.GraftSql.fkIntrospection.map {
+    graft.sql.GraftSql.fkIntrospection(spark).map {
       case (name, fdb, child, cc, i, parent, pc, delRule, updRule,
           refIdx, delOrigin, updOrigin) =>
         (name, i, fdb, child, cc, fdb, parent, pc,

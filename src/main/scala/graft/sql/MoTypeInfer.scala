@@ -32,33 +32,20 @@ object MoTypeInfer {
   final case class MoT(kind: String, a: Int = 0, b: Int = 0,
       nullable: Boolean = true)
 
-  // (session, physViewLower) → (db, columns with inferred types)
-  private val viewCols =
-    TrieMap[(Int, String), (String, Vector[(String, MoT)])]()
-
-  private def sk(spark: SparkSession): Int =
-    System.identityHashCode(spark.sharedState)
+  // physViewLower → (db, columns with inferred types)
+  private val viewCols = new graft.SessionScoped(() =>
+    TrieMap[String, (String, Vector[(String, MoT)])]())
 
   def colsOf(spark: SparkSession, view: String): Vector[(String, MoT)] =
-    viewCols.get((sk(spark), view.toLowerCase)).map(_._2)
-      .getOrElse(Vector.empty)
+    viewCols(spark).get(view.toLowerCase).map(_._2).getOrElse(Vector.empty)
 
   /** Every registered view of this session: (db, view, columns). */
   def allViews(spark: SparkSession)
-      : Seq[(String, String, Vector[(String, MoT)])] = {
-    val k = sk(spark)
-    viewCols.toSeq.collect { case ((kk, v), (db, cols)) if kk == k =>
-      (db, v, cols)
-    }
-  }
+      : Seq[(String, String, Vector[(String, MoT)])] =
+    viewCols(spark).toSeq.map { case (v, (db, cols)) => (db, v, cols) }
 
   def forget(spark: SparkSession, view: String): Unit =
-    viewCols.remove((sk(spark), view.toLowerCase))
-
-  def clear(spark: SparkSession): Unit = {
-    val k = sk(spark)
-    viewCols.keys.filter(_._1 == k).foreach(viewCols.remove)
-  }
+    viewCols(spark).remove(view.toLowerCase)
 
   // ------------------------------------------------------------------
   // rendering
@@ -540,7 +527,7 @@ object MoTypeInfer {
         }
       }
       val db = MoCatalog.currentDb(spark).getOrElse("default")
-      viewCols.put((sk(spark), phys.toLowerCase), (db, cols.toVector))
+      viewCols(spark).put(phys.toLowerCase, (db, cols.toVector))
     } catch {
       case scala.util.control.NonFatal(_) => // best-effort only
     }

@@ -23,13 +23,13 @@ import scala.collection.concurrent.TrieMap
   */
 object Namespaces {
 
-  private def sk(spark: SparkSession): Int =
-    System.identityHashCode(spark.sharedState)
-
-  // (session, dbKey, logicalLower) → physical name
-  private val logToPhys = TrieMap[(Int, String, String), String]()
-  // (session, physicalLower) → (dbKey, logicalLower)
-  private val physToLog = TrieMap[(Int, String), (String, String)]()
+  private final class State {
+    // (dbKey, logicalLower) → physical name
+    val logToPhys = TrieMap[(String, String), String]()
+    // physicalLower → (dbKey, logicalLower)
+    val physToLog = TrieMap[String, (String, String)]()
+  }
+  private val state = new graft.SessionScoped(() => new State)
 
   def displayDb(dbKey: String): String = {
     val i = dbKey.indexOf(' ')
@@ -43,77 +43,60 @@ object Namespaces {
     * mapping, else the bare name (untracked tables stay flat).
     */
   def resolve(spark: SparkSession, dbKey: String, t: String): String =
-    logToPhys.getOrElse((sk(spark), dbKey, t.toLowerCase), t)
+    state(spark).logToPhys.getOrElse((dbKey, t.toLowerCase), t)
 
   /** Physical-name decision at CREATE: reuse the recorded mapping, else
     * claim the bare name if no OTHER database owns it, else mangle.
     */
   def createName(spark: SparkSession, dbKey: String, t: String): String = {
-    val k = sk(spark)
+    val st = state(spark)
     val tl = t.toLowerCase
-    logToPhys.get((k, dbKey, tl)) match {
+    st.logToPhys.get((dbKey, tl)) match {
       case Some(p) => p
       case None =>
         val phys =
-          if (physToLog.get((k, tl)).forall(_._1 == dbKey)) t
+          if (st.physToLog.get(tl).forall(_._1 == dbKey)) t
           else mangle(dbKey, t)
-        logToPhys.put((k, dbKey, tl), phys)
-        physToLog.put((k, phys.toLowerCase), (dbKey, tl))
+        st.logToPhys.put((dbKey, tl), phys)
+        st.physToLog.put(phys.toLowerCase, (dbKey, tl))
         phys
     }
   }
 
   /** Forget a table by its PHYSICAL name (drop/rename bookkeeping). */
   def forget(spark: SparkSession, physical: String): Unit = {
-    val k = sk(spark)
-    physToLog.remove((k, physical.toLowerCase)).foreach { case (dbKey, tl) =>
-      logToPhys.remove((k, dbKey, tl))
-    }
+    val st = state(spark)
+    st.physToLog.remove(physical.toLowerCase).foreach(st.logToPhys.remove)
   }
 
   /** (dbKey, logical) of a tracked physical name, for display demangle. */
   def logicalOf(spark: SparkSession, physical: String): Option[(String, String)] =
-    physToLog.get((sk(spark), physical.toLowerCase))
+    state(spark).physToLog.get(physical.toLowerCase)
 
   /** All tracked (logical, physical) pairs of one database. */
-  def tablesOf(spark: SparkSession, dbKey: String): Seq[(String, String)] = {
-    val k = sk(spark)
-    logToPhys.toSeq.collect {
-      case ((s, d, l), p) if s == k && d == dbKey => (l, p)
-    }
-  }
+  def tablesOf(spark: SparkSession, dbKey: String): Seq[(String, String)] =
+    state(spark).logToPhys.toSeq.collect { case ((d, l), p) if d == dbKey => (l, p) }
 
   /** Logical names of the effective current db whose physical name
     * differs (the set the bare-name rewrite must touch — usually empty).
     */
-  def mangledOf(spark: SparkSession, dbKey: String): Seq[(String, String)] = {
-    val k = sk(spark)
-    logToPhys.toSeq.collect {
-      case ((s, d, l), p) if s == k && d == dbKey && p.toLowerCase != l =>
-        (l, p)
+  def mangledOf(spark: SparkSession, dbKey: String): Seq[(String, String)] =
+    state(spark).logToPhys.toSeq.collect {
+      case ((d, l), p) if d == dbKey && p.toLowerCase != l => (l, p)
     }
-  }
 
   /** Db keys owned by an account (drop-account cleanup). */
   def accountDbKeys(spark: SparkSession, acct: String): Seq[String] = {
-    val k = sk(spark)
     val prefix = acct.toLowerCase + " "
-    logToPhys.keys.collect {
-      case (s, d, _) if s == k && d.startsWith(prefix) => d
+    state(spark).logToPhys.keys.collect {
+      case (d, _) if d.startsWith(prefix) => d
     }.toSeq.distinct
   }
 
   def dropDbEntries(spark: SparkSession, dbKey: String): Unit = {
-    val k = sk(spark)
-    logToPhys.keys.filter(key => key._1 == k && key._2 == dbKey)
-      .foreach { key =>
-        logToPhys.remove(key).foreach(p => physToLog.remove((k, p.toLowerCase)))
-      }
-  }
-
-  def clear(spark: SparkSession): Unit = {
-    val k = sk(spark)
-    logToPhys.keys.filter(_._1 == k).foreach(logToPhys.remove)
-    physToLog.keys.filter(_._1 == k).foreach(physToLog.remove)
+    val st = state(spark)
+    st.logToPhys.keys.filter(_._1 == dbKey).foreach { key =>
+      st.logToPhys.remove(key).foreach(p => st.physToLog.remove(p.toLowerCase))
+    }
   }
 }

@@ -50,32 +50,18 @@ object Partitions {
       rangeNum: Vector[Option[Double]], listNum: Vector[Option[Seq[Double]]],
       methodSql: String = "")
 
-  private val registry = TrieMap[String, PartSpec]()
-
-  private def skey(spark: SparkSession) =
-    System.identityHashCode(spark.sharedState).toString
-  private def key(spark: SparkSession, table: String) =
-    s"${skey(spark)}#${table.toLowerCase}"
+  // lowercase table → spec
+  private val registry = new graft.SessionScoped(() => TrieMap[String, PartSpec]())
 
   def get(spark: SparkSession, table: String): Option[PartSpec] =
-    registry.get(key(spark, table))
+    registry(spark).get(table.toLowerCase)
   /** Every partitioned table of this session (information_schema
     * `partitions` view).
     */
-  def all(spark: SparkSession): Seq[PartSpec] = {
-    val p = skey(spark) + "#"
-    registry.toSeq.collect { case (k, v) if k.startsWith(p) => v }
-  }
-  def byPhys(spark: SparkSession, phys: String): Option[PartSpec] = {
-    val p = skey(spark)
-    registry.collectFirst {
-      case (k, s) if k.startsWith(p + "#") && s.phys.equalsIgnoreCase(phys) => s
-    }
-  }
-  def any(spark: SparkSession): Boolean = {
-    val p = skey(spark)
-    registry.keysIterator.exists(_.startsWith(p + "#"))
-  }
+  def all(spark: SparkSession): Seq[PartSpec] = registry(spark).values.toSeq
+  def byPhys(spark: SparkSession, phys: String): Option[PartSpec] =
+    registry(spark).values.find(_.phys.equalsIgnoreCase(phys))
+  def any(spark: SparkSession): Boolean = registry(spark).nonEmpty
 
   // ----------------------------------------------------------- parsing
 
@@ -230,7 +216,7 @@ object Partitions {
         .getOrElse(method.toUpperCase)
     val spec = PartSpec(table.toLowerCase, phys, method, exprSql2, cols,
       n, defs, Vector.empty, Vector.empty, methodSql)
-    registry.put(key(spark, table), withNumerics(spark, spec))
+    registry(spark).put(table.toLowerCase, withNumerics(spark, spec))
   }
 
   /** `ALTER TABLE t ADD PARTITION (defs)` with the reference's
@@ -279,11 +265,11 @@ object Partitions {
       defs.foreach(d => s = s.copy(parts = s.parts :+ d))
       s = withNumerics(spark, s.copy(listNum = Vector.empty))
     }
-    registry.put(key(spark, table), s)
+    registry(spark).put(table.toLowerCase, s)
   }
 
   def drop(spark: SparkSession, table: String): Boolean =
-    registry.remove(key(spark, table)).exists { spec =>
+    registry(spark).remove(table.toLowerCase).exists { spec =>
       spark.sql(s"DROP VIEW IF EXISTS `$table`")
       spark.sql(s"DROP TABLE IF EXISTS `${spec.phys}`")
       true
@@ -293,19 +279,16 @@ object Partitions {
     * (unpartitioned) table, so stale routing never intercepts it.
     */
   def forget(spark: SparkSession, table: String): Unit =
-    registry.remove(key(spark, table))
+    registry(spark).remove(table.toLowerCase)
 
   /** Keep routing in step with `RENAME TABLE from TO to` (the view was
     * already renamed by the caller; the physical table keeps its name).
     */
-  def rename(spark: SparkSession, from: String, to: String): Unit =
-    registry.remove(key(spark, from)).foreach { spec =>
-      registry.put(key(spark, to), spec.copy(table = to.toLowerCase))
+  def rename(spark: SparkSession, from: String, to: String): Unit = {
+    val reg = registry(spark)
+    reg.remove(from.toLowerCase).foreach { spec =>
+      reg.put(to.toLowerCase, spec.copy(table = to.toLowerCase))
     }
-
-  def clear(spark: SparkSession): Unit = {
-    val p = skey(spark)
-    registry.keysIterator.filter(_.startsWith(p + "#")).foreach(registry.remove)
   }
 
   // ----------------------------------------------------------- routing

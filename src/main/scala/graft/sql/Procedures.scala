@@ -27,17 +27,11 @@ object Procedures {
   private final case class Param(mode: String, name: String, tpe: String)
   private final case class Proc(params: Seq[Param], body: String)
 
-  private val registry = TrieMap[String, Proc]()
-  private def key(spark: SparkSession, name: String) =
-    s"${System.identityHashCode(spark.sharedState)}#${name.toLowerCase}"
+  // lowercase procedure name → procedure
+  private val registry = new graft.SessionScoped(() => TrieMap[String, Proc]())
 
   def exists(spark: SparkSession, name: String): Boolean =
-    registry.contains(key(spark, name))
-
-  def clear(spark: SparkSession): Unit = {
-    val p = s"${System.identityHashCode(spark.sharedState)}#"
-    registry.keys.filter(_.startsWith(p)).foreach(registry.remove)
-  }
+    registry(spark).contains(name.toLowerCase)
 
   def create(spark: SparkSession, name: String, paramsTxt: String,
       body: String): Unit = {
@@ -51,11 +45,11 @@ object Procedures {
         Param(Option(m.group(1)).map(_.toLowerCase).getOrElse("in"),
           m.group(2), m.group(3).trim)
       }
-    registry.put(key(spark, name), Proc(params, body))
+    registry(spark).put(name.toLowerCase, Proc(params, body))
   }
 
   def drop(spark: SparkSession, name: String, ifExists: Boolean): Unit =
-    if (registry.remove(key(spark, name)).isEmpty && !ifExists)
+    if (registry(spark).remove(name.toLowerCase).isEmpty && !ifExists)
       throw new IllegalArgumentException(s"procedure $name does not exist")
 
   // ----------------------------------------------------------- runtime
@@ -387,7 +381,7 @@ object Procedures {
             .findFirstMatchIn(sqlTxt).foreach { tm =>
               """(?is)[(,]\s*`?(\w+)`?\s+\w+(?:\([^)]*\))?[^,]*?\bPRIMARY\s+KEY""".r
                 .findFirstMatchIn(sqlTxt).foreach(pm =>
-                  GraftSql.registerPrimaryKey(
+                  GraftSql.registerPrimaryKey(ctx.spark,
                     tm.group(1).toLowerCase, pm.group(1).toLowerCase))
             }
           sqlTxt = sqlTxt.replaceAll("(?i)\\s+PRIMARY\\s+KEY\\b", "")
@@ -434,7 +428,7 @@ object Procedures {
 
   private def callInto(ctx: Ctx, name: String, argsTxt: String): Unit = {
     val spark = ctx.spark
-    val proc = registry(key(spark, name))
+    val proc = registry(spark)(name.toLowerCase)
     val args = GraftSql.splitTop(argsTxt).map(_.trim).filter(_.nonEmpty)
     if (args.length != proc.params.length)
       throw new IllegalArgumentException(

@@ -3,7 +3,6 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.util.concurrent.atomic.AtomicLong
-import scala.collection.concurrent.TrieMap
 
 /** The reference's `save_query_result` subsystem: queries tagged with
   * the save_result block-comment hint persist their result set under a
@@ -30,39 +29,30 @@ object QueryResults {
   final case class Saved(
       id: String, df: DataFrame, tables: String, path: String, size: Long)
 
-  private val enabledFlags = TrieMap[Int, Boolean]()
-  private val maxSizes = TrieMap[Int, Long]()
-  private val saved = TrieMap[Int, Vector[Saved]]()
-  private val registered = TrieMap[Int, Boolean]()
+  private final class State {
+    @volatile var enabled = false
+    @volatile var everOn = false
+    @volatile var maxSize = 100L
+    @volatile var saved = Vector.empty[Saved]
+  }
+  private val state = new graft.SessionScoped(() => new State)
+  // ids stay unique across sessions: they name result files
   private val seq = new AtomicLong(0L)
 
-  private def key(spark: SparkSession): Int =
-    System.identityHashCode(spark.sharedState)
-
-  def clear(spark: SparkSession): Unit = {
-    enabledFlags.remove(key(spark))
-    everOn.remove(key(spark))
-    maxSizes.remove(key(spark))
-    saved.remove(key(spark))
-  }
-
-  private val everOn = TrieMap[Int, Boolean]()
-
   def setEnabled(spark: SparkSession, on: Boolean): Unit = {
-    enabledFlags.put(key(spark), on)
-    if (on) everOn.put(key(spark), true)
+    val st = state(spark)
+    st.enabled = on
+    if (on) st.everOn = true
   }
-  def enabled(spark: SparkSession): Boolean =
-    enabledFlags.getOrElse(key(spark), false)
+  def enabled(spark: SparkSession): Boolean = state(spark).enabled
   /** Scans stay readable after `set save_query_result = off` — turning
     * the flag off only stops SAVING; "no configure" is raised only when
     * the feature was never switched ON in this session
     * (query_result.result:44-48 reads a prior result with the flag off).
     */
-  def everConfigured(spark: SparkSession): Boolean =
-    everOn.getOrElse(key(spark), false)
+  def everConfigured(spark: SparkSession): Boolean = state(spark).everOn
   def setMaxSize(spark: SparkSession, n: Long): Unit =
-    maxSizes.put(key(spark), n)
+    state(spark).maxSize = n
 
   /** Source catalog tables of a query, in plan order ("tt, t2"). */
   private def sourceTables(df: DataFrame): String = {
@@ -77,7 +67,8 @@ object QueryResults {
   def save(spark: SparkSession, df: DataFrame): String = {
     val id = f"graft-qr-${seq.incrementAndGet()}%08d"
     val frozen = df.localCheckpoint()
-    val max = maxSizes.getOrElse(key(spark), 100L)
+    val st = state(spark)
+    val max = st.maxSize
     val (path, size) =
       if (max <= 0) ("", 0L)
       else {
@@ -91,26 +82,23 @@ object QueryResults {
         (p, sz)
       }
     val entry = Saved(id, frozen, sourceTables(df), path, size)
-    saved.updateWith(key(spark)) {
-      case Some(v) => Some(v :+ entry)
-      case None => Some(Vector(entry))
-    }
+    st.synchronized(st.saved :+= entry)
     id
   }
 
   /** `last_query_id(-n)`: n back from the latest save (-1 = latest). */
-  private[sql] def idAt(k: Int, offset: Int): String = {
-    val v = saved.getOrElse(k, Vector.empty)
+  def idAt(spark: SparkSession, offset: Int): String = idAt(state(spark), offset)
+
+  private def idAt(st: State, offset: Int): String = {
+    val v = st.saved
     val i = v.length + offset
     if (i < 0 || i >= v.length)
       throw new IllegalArgumentException(s"query id at offset $offset not found")
     v(i).id
   }
 
-  def idAt(spark: SparkSession, offset: Int): String = idAt(key(spark), offset)
-
   def byId(spark: SparkSession, id: String): Saved =
-    saved.getOrElse(key(spark), Vector.empty).find(_.id == id).getOrElse(
+    state(spark).saved.find(_.id == id).getOrElse(
       throw new IllegalArgumentException(s"query id $id not found"))
 
   /** One-row metadata relation for `meta_scan(id)`. */
@@ -123,13 +111,16 @@ object QueryResults {
 
   /** Register `last_query_id(n)` (idempotent per session). The SQL
     * surface's zero-arg form is textually normalized to `(-1)` before
-    * parse ([[GraftSql.sql]]).
+    * parse ([[GraftSql.sql]]). The closure captures a session handle,
+    * not the state: UDF bodies run on task threads from a serialized
+    * copy of the closure.
     */
   def registerUdfs(spark: SparkSession): Unit = {
-    val k = key(spark)
-    if (registered.putIfAbsent(k, true).isDefined) return
+    if (spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("last_query_id"))) return
+    val h = graft.SessionScoped.handle(spark)
     import org.apache.spark.sql.functions.udf
     spark.udf.register("last_query_id",
-      udf((n: Int) => idAt(k, n)).asNondeterministic())
+      udf((n: Int) => idAt(state(h), n)).asNondeterministic())
   }
 }

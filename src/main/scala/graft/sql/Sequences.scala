@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.SessionScoped
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.concurrent.TrieMap
@@ -89,32 +90,22 @@ object Sequences {
     var isCalled: Boolean = false
   }
 
-  /** session key → (name → state), insertion-ordered for SHOW SEQUENCES. */
-  private val registries =
-    TrieMap[Int, mutable.LinkedHashMap[String, SeqState]]()
-  /** session key → (sequence name → currval). */
-  private val currvals = TrieMap[Int, TrieMap[String, BigInt]]()
-  /** session key → lastval. */
-  private val lastvals = TrieMap[Int, BigInt]()
-  private val registered = TrieMap[Int, Boolean]()
+  private final class State {
+    /** name → state, insertion-ordered for SHOW SEQUENCES. */
+    val seqs = mutable.LinkedHashMap[String, SeqState]()
+    /** sequence name → currval. */
+    val currvals = TrieMap[String, BigInt]()
+    @volatile var lastval: Option[BigInt] = None
+  }
+  private val state = new SessionScoped(() => new State)
 
-  private def key(spark: SparkSession): Int =
-    System.identityHashCode(spark.sharedState)
-  private def registry(spark: SparkSession): mutable.LinkedHashMap[String, SeqState] =
-    registries.getOrElseUpdate(key(spark), mutable.LinkedHashMap())
+  private def registry(spark: SparkSession) = state(spark).seqs
 
   private def norm(name: String): String =
     name.trim.stripPrefix("`").stripSuffix("`").toLowerCase
 
   def exists(spark: SparkSession, name: String): Boolean =
     registry(spark).synchronized(registry(spark).contains(norm(name)))
-
-  /** Drop all sequences + session counters (test-harness cleanup). */
-  def clear(spark: SparkSession): Unit = {
-    registries.remove(key(spark))
-    currvals.remove(key(spark))
-    lastvals.remove(key(spark))
-  }
 
   // ---------------------------------------------------------------- DDL
 
@@ -230,7 +221,7 @@ object Sequences {
         val db = spark.catalog.currentDatabase
         throw new IllegalArgumentException(s"no such sequence $db.$name")
       }
-      currvals.get(key(spark)).foreach(_.remove(name))
+      state(spark).currvals.remove(name)
     }
   }
 
@@ -278,17 +269,18 @@ object Sequences {
       s"sequence $name value $v exceeds BIGINT signed range; " +
         "declare a MAXVALUE within [-2^63, 2^63-1]")
 
-  private def stateByKey(k: Int, name: String): SeqState = {
-    val reg = registries.getOrElseUpdate(k, mutable.LinkedHashMap())
+  private def seqOf(st: State, name: String): SeqState = {
+    val reg = st.seqs
     reg.synchronized {
       reg.getOrElse(name,
         throw new IllegalArgumentException(s"no such sequence $name"))
     }
   }
 
-  private[sql] def nextval(k: Int, name0: String): Long = {
+  private[sql] def nextval(h: SessionScoped.Handle, name0: String): Long = {
     val name = norm(name0)
-    val st = stateByKey(k, name)
+    val ss = state(h)
+    val st = seqOf(ss, name)
     val v = st.synchronized {
       if (!st.isCalled) { st.isCalled = true; st.last }
       else {
@@ -309,36 +301,38 @@ object Sequences {
         nv
       }
     }
-    currvals.getOrElseUpdate(k, TrieMap()).put(name, v)
-    lastvals.put(k, v)
+    ss.currvals.put(name, v)
+    ss.lastval = Some(v)
     toLongExact(v, name)
   }
 
-  private[sql] def currval(k: Int, name0: String): Long = {
+  private[sql] def currval(h: SessionScoped.Handle, name0: String): Long = {
     val name = norm(name0)
-    stateByKey(k, name) // existence check
-    toLongExact(currvals.get(k).flatMap(_.get(name)).getOrElse(
+    val ss = state(h)
+    seqOf(ss, name) // existence check
+    toLongExact(ss.currvals.getOrElse(name,
       throw new IllegalArgumentException(
         s"internal error: currval of $name before nextval in this session")),
       name)
   }
 
-  private[sql] def lastval(k: Int): Long =
-    toLongExact(lastvals.getOrElse(k,
+  private[sql] def lastval(h: SessionScoped.Handle): Long =
+    toLongExact(state(h).lastval.getOrElse(
       throw new IllegalArgumentException(
         "internal error: lastval before nextval in this session")), "lastval")
 
-  private[sql] def setval(k: Int, name0: String, v: Long,
+  private[sql] def setval(h: SessionScoped.Handle, name0: String, v: Long,
       updateSession: Boolean): Long = {
     val name = norm(name0)
-    val st = stateByKey(k, name)
+    val ss = state(h)
+    val st = seqOf(ss, name)
     st.synchronized {
       st.last = BigInt(v)
       st.isCalled = true
     }
     if (updateSession) {
-      currvals.getOrElseUpdate(k, TrieMap()).put(name, BigInt(v))
-      lastvals.put(k, BigInt(v))
+      ss.currvals.put(name, BigInt(v))
+      ss.lastval = Some(BigInt(v))
     }
     v
   }
@@ -347,21 +341,23 @@ object Sequences {
     * Marked nondeterministic so Catalyst neither CSEs duplicate calls
     * nor reorders them — `SELECT currval(s), nextval(s), currval(s)`
     * must evaluate left-to-right (seq_func.result:33). The closures
-    * capture the session KEY, not the session: UDF bodies run on task
-    * threads where touching the driver SparkSession NPEs.
+    * capture a session HANDLE, not the state: UDF bodies run on task
+    * threads from a serialized copy of the closure, and touching the
+    * driver SparkSession there NPEs.
     */
   def registerUdfs(spark: SparkSession): Unit = {
-    val k = key(spark)
-    if (registered.putIfAbsent(k, true).isDefined) return
+    if (spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("setval"))) return
+    val h = SessionScoped.handle(spark)
     import org.apache.spark.sql.functions.udf
     spark.udf.register("nextval",
-      udf((n: String) => nextval(k, n)).asNondeterministic())
+      udf((n: String) => nextval(h, n)).asNondeterministic())
     spark.udf.register("currval",
-      udf((n: String) => currval(k, n)).asNondeterministic())
+      udf((n: String) => currval(h, n)).asNondeterministic())
     spark.udf.register("lastval",
-      udf(() => lastval(k)).asNondeterministic())
+      udf(() => lastval(h)).asNondeterministic())
     spark.udf.register("setval",
-      udf((n: String, v: Long, b: Boolean) => setval(k, n, v, b))
+      udf((n: String, v: Long, b: Boolean) => setval(h, n, v, b))
         .asNondeterministic())
   }
 }

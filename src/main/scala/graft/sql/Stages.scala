@@ -21,12 +21,8 @@ object Stages {
   final case class Stage(name: String, url: String,
       credentials: Map[String, String], comment: String)
 
-  private val registry = TrieMap[String, Stage]()
-
-  private def skey(spark: SparkSession) =
-    System.identityHashCode(spark.sharedState).toString
-  private def key(spark: SparkSession, name: String) =
-    s"${skey(spark)}#${name.toLowerCase}"
+  // lowercase stage name → stage
+  private val registry = new graft.SessionScoped(() => TrieMap[String, Stage]())
 
   private val Protocols = Seq("stage://", "s3://", "file:///")
 
@@ -38,12 +34,12 @@ object Stages {
   def create(spark: SparkSession, name: String, url: String,
       creds: Map[String, String], comment: String, ifNotExists: Boolean): Unit = {
     checkUrl(url)
-    val k = key(spark, name)
-    if (registry.contains(k)) {
+    val reg = registry(spark)
+    if (reg.contains(name.toLowerCase)) {
       if (ifNotExists) return
       throw new IllegalStateException(s"internal error: the stage $name exists")
     }
-    registry.put(k, Stage(name, url, creds, comment))
+    reg.put(name.toLowerCase, Stage(name, url, creds, comment))
   }
 
   /** Exactly one of url/creds/comment may change per ALTER
@@ -52,8 +48,8 @@ object Stages {
   def alter(spark: SparkSession, name: String, url: Option[String],
       creds: Option[Map[String, String]], comment: Option[String],
       ifExists: Boolean): Unit = {
-    val k = key(spark, name)
-    val st = registry.get(k) match {
+    val reg = registry(spark)
+    val st = reg.get(name.toLowerCase) match {
       case Some(s) => s
       case None =>
         if (ifExists) return
@@ -62,26 +58,18 @@ object Stages {
     if (Seq(url, creds, comment).count(_.isDefined) > 1)
       throw new IllegalArgumentException("internal error: at most one option at a time")
     url.foreach(checkUrl)
-    registry.put(k, st.copy(
+    reg.put(name.toLowerCase, st.copy(
       url = url.getOrElse(st.url),
       credentials = creds.getOrElse(st.credentials),
       comment = comment.getOrElse(st.comment)))
   }
 
   def drop(spark: SparkSession, name: String, ifExists: Boolean): Unit =
-    if (registry.remove(key(spark, name)).isEmpty && !ifExists)
+    if (registry(spark).remove(name.toLowerCase).isEmpty && !ifExists)
       throw new IllegalStateException(s"internal error: the stage $name not exists")
 
-  def list(spark: SparkSession): Seq[Stage] = {
-    val p = skey(spark)
-    registry.toSeq.collect { case (k, s) if k.startsWith(p + "#") => s }
-      .sortBy(_.name)
-  }
-
-  def clear(spark: SparkSession): Unit = {
-    val p = skey(spark)
-    registry.keysIterator.filter(_.startsWith(p + "#")).foreach(registry.remove)
-  }
+  def list(spark: SparkSession): Seq[Stage] =
+    registry(spark).values.toSeq.sortBy(_.name)
 
   /** Resolve a possibly `stage://`-prefixed path to a concrete location
     * (stage chains like `stage://sub/x` → `stage://base/a/x` →
@@ -97,7 +85,7 @@ object Stages {
       val slash = rest.indexOf('/')
       val (name, rel) =
         if (slash < 0) (rest, "") else (rest.substring(0, slash), rest.substring(slash + 1))
-      val st = registry.getOrElse(key(spark, name),
+      val st = registry(spark).getOrElse(name.toLowerCase,
         throw new IllegalArgumentException(s"internal error: the stage $name not exists"))
       val base = st.url.stripSuffix("/")
       path = if (rel.isEmpty) base else s"$base/$rel"

@@ -1009,7 +1009,7 @@ class BvtSpec extends AnyFunSuite {
       cm <- """(?i)[(,]\s*`?(\w+)`?\s+(?:datetime|timestamp)\((\d)\)""".r
         .findAllMatchIn(s.substring(tm.end - 1)))
       graft.sql.GraftSql.registerTsFsp(
-        tm.group(1).toLowerCase, cm.group(1), cm.group(2).toInt)
+        spark, tm.group(1).toLowerCase, cm.group(1), cm.group(2).toInt)
     s = s.replaceAll("(?i)\\btimestamp\\(\\d+\\)", "TIMESTAMP")
     s = s.replaceAll("(?i)\\bdatetime\\(\\d+\\)", "TIMESTAMP")
     // sized binary columns: BINARY storage; binary(n) additionally
@@ -1159,7 +1159,7 @@ class BvtSpec extends AnyFunSuite {
     // mangled it) so engine-side DML lookups hit these registries
     val tbl = graft.sql.GraftSql.resolveTableName(spark, dbQual,
       tm.group(3)).toLowerCase
-    graft.sql.GraftSql.clearUniqueKeys(tbl)
+    graft.sql.GraftSql.clearUniqueKeys(spark, tbl)
     graft.sql.MoCatalog.clearStatIndexes(spark, tbl)
     // declared column types -> information_schema.columns (metadata BVT)
     def declaredColumnDefs(): Seq[(String, String, Boolean)] = {
@@ -1184,7 +1184,7 @@ class BvtSpec extends AnyFunSuite {
     }
     // (re)derive the pk from THIS table's DDL — a recreated table with
     // no pk must not inherit a previous namesake's key
-    graft.sql.GraftSql.clearPrimaryKey(tbl)
+    graft.sql.GraftSql.clearPrimaryKey(spark, tbl)
     // NOT NULL declarations feed information_schema.statistics' nullable
     val body = stmt.substring(tm.end - 1)
     val notNullCols =
@@ -1195,7 +1195,7 @@ class BvtSpec extends AnyFunSuite {
       .orElse("""(?is)[(,]\s*`?(\w+)`?\s+\w+(?:\([^)]*\))?[^,]*?\bPRIMARY\s+KEY""".r
         .findFirstMatchIn(stmt.substring(tm.end - 1)).map(_.group(1)))
       .map(_.toLowerCase)
-    pkOpt.foreach(pk => graft.sql.GraftSql.registerPrimaryKey(tbl, pk))
+    pkOpt.foreach(pk => graft.sql.GraftSql.registerPrimaryKey(spark, tbl, pk))
     val pkCols = pkOpt.toSeq.flatMap(_.split(",")).map(_.trim).toSet
     def nullab(c: String): Boolean =
       !notNullCols.contains(c.toLowerCase) && !pkCols.contains(c.toLowerCase)
@@ -1221,7 +1221,7 @@ class BvtSpec extends AnyFunSuite {
           .getOrElse { uqN += 1; s"${tbl}_uq$uqN" }
         val cols = colsOf(m.group(3))
         if (cols.nonEmpty) {
-          graft.sql.GraftSql.registerUniqueKey(tbl, nm, cols)
+          graft.sql.GraftSql.registerUniqueKey(spark, tbl, nm, cols)
           if (!isTemp) {
             graft.sql.MoCatalog.registerPlainIndex(
               spark, nm, tbl, "UNIQUE", "", cols, Seq.empty)
@@ -1246,7 +1246,7 @@ class BvtSpec extends AnyFunSuite {
     """(?is)[(,]\s*`?(\w+)`?\s+\w+(?:\([^)]*\))?[^,()]*?\bunique\b(?!\s*\()""".r
       .findAllMatchIn(stmt.substring(tm.end - 1)).foreach { m =>
         graft.sql.GraftSql.registerUniqueKey(
-          tbl, m.group(1).toLowerCase, Seq(m.group(1).toLowerCase))
+          spark, tbl, m.group(1).toLowerCase, Seq(m.group(1).toLowerCase))
         if (!isTemp) {
           graft.sql.MoCatalog.registerPlainIndex(spark, m.group(1), tbl,
             "UNIQUE", "", Seq(m.group(1).toLowerCase), Seq.empty)
@@ -1255,7 +1255,7 @@ class BvtSpec extends AnyFunSuite {
             Seq((m.group(1).toLowerCase, nullab(m.group(1)))))
         }
       }
-    graft.sql.GraftSql.clearForeignKeys(tbl)
+    graft.sql.GraftSql.clearForeignKeys(spark, tbl)
     """(?is)(?:constraint\s+`?(\w+)`?\s+)?foreign\s+key\s*(?:`?(\w*)`?\s*)?\(([^)]*)\)\s*references\s+(?:`?\w+`?\.)?`?(\w+)`?\s*\(([^)]*)\)((?:\s+on\s+(?:delete|update)\s+(?:restrict|cascade|set\s+null|set\s+default|no\s+action))*)""".r
       .findAllMatchIn(stmt).foreach { m =>
         val (del, upd) = graft.sql.GraftSql.parseFkActions(m.group(6))
@@ -1273,7 +1273,7 @@ class BvtSpec extends AnyFunSuite {
             case e: Exception =>
               try spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
               catch { case _: Exception => () }
-              graft.sql.GraftSql.clearForeignKeys(tbl)
+              graft.sql.GraftSql.clearForeignKeys(spark, tbl)
               throw e
           }
           val name = Option(m.group(1)).filter(_.nonEmpty)
@@ -2690,18 +2690,16 @@ class BvtSpec extends AnyFunSuite {
     binPadCols.clear()
     bitNumCols.clear()
     graft.functions.MoFunctions.releaseAllUserLocks()
-    // vector-index registries are process-global; a leftover name from a
-    // prior file's un-dropped table would hit the duplicate-name check
-    graft.plans.IvfIndex.clear()
-    graft.plans.HnswIndex.clear()
-    graft.plans.IvfPqIndex.clear()
-    graft.sql.GraftSql.clearSequences(spark)
-    graft.sql.GraftSql.clearVecCols()
-    graft.sql.GraftSql.clearPartitions(spark)
-    graft.sql.GraftSql.clearStages(spark)
-    graft.sql.GraftSql.clearMoCatalog(spark)
-    graft.sql.GraftSql.clearQueryResults(spark)
-    graft.sql.GraftSql.clearSysVars(spark)
+    // vector indexes are materialized on disk: drop them (a leftover name
+    // from a prior file's un-dropped table would also hit the
+    // duplicate-name check)
+    graft.plans.IvfIndex.clear(spark)
+    graft.plans.HnswIndex.clear(spark)
+    graft.plans.IvfPqIndex.clear(spark)
+    // the reference's BVT gets a fresh session per file: forget every
+    // registry this session holds (catalog, keys, variables, sequences,
+    // stages, partitions, caches)
+    graft.SessionScoped.reset(spark)
     spark.catalog.listTables().collect()
       .filter(t => !t.isTemporary)
       .foreach { t =>

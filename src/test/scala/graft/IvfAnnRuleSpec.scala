@@ -20,7 +20,7 @@ class IvfAnnRuleSpec extends AnyFunSuite {
   }
 
   test("ORDER BY l2_distance LIMIT k is rewritten to an IVF cell probe") {
-    IvfIndex.clear()
+    IvfIndex.clear(spark)
     val before = knnQuery.queryExecution.optimizedPlan.toString
     assert(!before.contains("__ivf_cell"), "rewrite fired without an index")
 
@@ -33,15 +33,15 @@ class IvfAnnRuleSpec extends AnyFunSuite {
 
       // rewritten result is a valid approximate top-k: high recall vs brute
       val approx = after.select("vec_id").collect().map(_.getLong(0)).toSet
-      IvfIndex.clear()
+      IvfIndex.clear(spark)
       val exact = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSet
       val recall = (approx intersect exact).size.toDouble / exact.size
       assert(recall >= 0.7, s"recall $recall")
-    } finally IvfIndex.clear()
+    } finally IvfIndex.clear(spark)
   }
 
   test("ORDER BY cosine_distance LIMIT k also takes the IVF probe") {
-    IvfIndex.clear()
+    IvfIndex.clear(spark)
     val q = typedlit(queryVec)
     def cosQuery = corpus
       .orderBy(VectorFunctions.cosineDistance(col("embedding"), q).asc).limit(10)
@@ -53,11 +53,11 @@ class IvfAnnRuleSpec extends AnyFunSuite {
       assert(after.queryExecution.optimizedPlan.toString.contains("__ivf_cell"),
         "cosine ANN rewrite did not fire")
       val approx = after.select("vec_id").collect().map(_.getLong(0)).toSet
-      IvfIndex.clear()
+      IvfIndex.clear(spark)
       val exact = cosQuery.select("vec_id").collect().map(_.getLong(0)).toSet
       val recall = (approx intersect exact).size.toDouble / exact.size
       assert(recall >= 0.6, s"cosine recall $recall")
-    } finally IvfIndex.clear()
+    } finally IvfIndex.clear(spark)
   }
 
   test("ORDER BY cosine_similarity DESC LIMIT k matches the same pattern") {
@@ -68,12 +68,12 @@ class IvfAnnRuleSpec extends AnyFunSuite {
         .orderBy(VectorFunctions.cosineSimilarity(col("embedding"), q).desc).limit(10)
         .queryExecution.optimizedPlan.toString
       assert(plan.contains("__ivf_cell"), s"similarity-DESC rewrite did not fire:\n$plan")
-    } finally IvfIndex.clear()
+    } finally IvfIndex.clear(spark)
   }
 
   test("HNSW rule: l2 top-k over an hnsw-indexed corpus becomes a graph probe") {
-    IvfIndex.clear()
-    graft.plans.HnswIndex.clear()
+    IvfIndex.clear(spark)
+    graft.plans.HnswIndex.clear(spark)
     graft.plans.HnswIndex.forCorpus("emb_hnsw", corpus, "vec_id", "embedding",
       m = 16, efConstruction = 100, efSearch = 80)
     try {
@@ -81,17 +81,17 @@ class IvfAnnRuleSpec extends AnyFunSuite {
       assert(planStr.toLowerCase.contains("join"),
         s"HNSW rewrite did not fire (no candidate semi-join):\n$planStr")
       val approx = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSet
-      graft.plans.HnswIndex.clear()
+      graft.plans.HnswIndex.clear(spark)
       val exact = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSet
       val recall = (approx intersect exact).size.toDouble / exact.size
       assert(recall >= 0.8, s"HNSW rewrite recall $recall")
-    } finally graft.plans.HnswIndex.clear()
+    } finally graft.plans.HnswIndex.clear(spark)
   }
 
   test("IVF-PQ rule: l2 top-k over a pq-indexed corpus becomes an ADC probe semi-join") {
-    IvfIndex.clear()
-    graft.plans.HnswIndex.clear()
-    graft.plans.IvfPqIndex.clear()
+    IvfIndex.clear(spark)
+    graft.plans.HnswIndex.clear(spark)
+    graft.plans.IvfPqIndex.clear(spark)
     val before = knnQuery.queryExecution.optimizedPlan.toString
     assert(!before.toLowerCase.contains("join"), "rewrite fired without an index")
 
@@ -102,11 +102,11 @@ class IvfAnnRuleSpec extends AnyFunSuite {
       assert(planStr.toLowerCase.contains("join"),
         s"IVF-PQ rewrite did not fire (no candidate semi-join):\n$planStr")
       val approx = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSet
-      graft.plans.IvfPqIndex.clear()
+      graft.plans.IvfPqIndex.clear(spark)
       val exact = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSet
       val recall = (approx intersect exact).size.toDouble / exact.size
       assert(recall >= 0.7, s"IVF-PQ rewrite recall $recall")
-    } finally graft.plans.IvfPqIndex.clear()
+    } finally graft.plans.IvfPqIndex.clear(spark)
   }
 
   test("queries over other tables are untouched when an index exists") {
@@ -116,11 +116,11 @@ class IvfAnnRuleSpec extends AnyFunSuite {
         .queryExecution.optimizedPlan.toString
       assert(!p.contains("__ivf_cell"))
       assert(SparkEntry.queries("q1_pricing_summary")(spark, sf).count() == 6)
-    } finally IvfIndex.clear()
+    } finally IvfIndex.clear(spark)
   }
 
   test("CREATE INDEX DDL via GraftSql arms the rewrite for plain SQL; DROP disarms") {
-    IvfIndex.clear()
+    IvfIndex.clear(spark)
     corpus.createOrReplaceTempView("emb_ddl")
     val arr = queryVec.map(x => s"CAST($x AS FLOAT)").mkString("array(", ",", ")")
     def sqlKnn = spark.sql(
@@ -140,6 +140,6 @@ class IvfAnnRuleSpec extends AnyFunSuite {
       val drop = graft.sql.GraftSql.sql(spark, "DROP INDEX spec_ivf ON emb_ddl")
       assert(drop.head.getAs[String]("status") == "dropped")
       assert(!sqlKnn.queryExecution.optimizedPlan.toString.contains("__ivf_cell"))
-    } finally IvfIndex.clear()
+    } finally IvfIndex.clear(spark)
   }
 }

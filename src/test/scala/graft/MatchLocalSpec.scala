@@ -157,7 +157,7 @@ class MatchLocalSpec extends AnyFunSuite {
     }
   }
 
-  test("the same MATCH in two sequential sessions of one JVM returns the same rows") {
+  test("a session sees none of the state of an earlier session of the same JVM") {
     // the suite's shared session cannot be stopped, so the two sessions
     // run in a child JVM with this JVM's classpath and module flags
     import scala.jdk.CollectionConverters._
@@ -166,35 +166,74 @@ class MatchLocalSpec extends AnyFunSuite {
       .asScala.filterNot(_.startsWith("-Xmx")).toSeq
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ flags ++
       Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.MatchTwoSessions", wh.toString)
+        "graft.TwoSessions", wh.toString)
     val out = new StringBuilder
     val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
       l => out.append(l).append('\n'), l => out.append(l).append('\n')))
     val lines = out.toString.split('\n').filter(_.startsWith("session"))
     assert(rc == 0, out.toString.takeRight(4000))
     val Array(a, b) = lines.map(_.dropWhile(_ != ' '))
-    assert(a.trim.nonEmpty && a == b, lines.mkString("\n"))
+    // each session runs the same script, so every result must repeat
+    assert(a == b, lines.mkString("\n"))
+    val got = b.trim.split(" \\| ").map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
+    assert(got("knn").nonEmpty && !got("knn").startsWith("error"), b)
+    assert(got("fks") == "" && got("v") == "[null]", b)
+    assert(got("nextval").contains("no such sequence"), b)
+    assert(got("fk_without_key").contains("failed to add the foreign key"), b)
+    assert(got("ivf").startsWith("[ts_ivf,") && got("match").nonEmpty, b)
+    assert(got("live") == "0", b)
     new scala.reflect.io.Directory(wh.toFile).deleteRecursively()
   }
 }
 
-/** One MATCH in two sequential sessions of one JVM: prints each session's
-  * rows (`session1 …`, `session2 …`). Usage: `MatchTwoSessions <warehouse dir>`.
+/** The same script in two sequential sessions of one JVM. Session 1
+  * leaves behind an IVF index over a parquet corpus, a unique key and a
+  * foreign key, a user variable and a sequence; session 2 must see none
+  * of it. Prints `sessionN label=value | …` per session, where each value
+  * is read BEFORE the script creates it; `live` counts the
+  * [[SessionScoped]] values left after `stop()`.
+  * Usage: `TwoSessions <warehouse dir>`.
   */
-object MatchTwoSessions {
+object TwoSessions {
   def main(args: Array[String]): Unit = {
+    val corpus = s"${args(0)}/corpus.parquet"
     def once(): String = {
       val spark = GraftSession.builder("local[1]")
         .config("spark.sql.warehouse.dir", args(0)).getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       GraftSession.init(spark)
+      val res = Seq.newBuilder[String]
+      def sql(q: String): String = GraftSql.sql(spark, q).collect().mkString(";")
+      def read(label: String, q: String): Unit = res += s"$label=" +
+        (try sql(q) catch { case e: Exception => s"error ${e.getMessage}".linesIterator.next() })
       try {
         import spark.implicits._
+        if (!new java.io.File(corpus).exists)
+          (0 until 40).map(i => (i.toLong, Seq(i % 4, i / 4, 1).map(_.toFloat)))
+            .toDF("vec_id", "embedding").write.parquet(corpus)
+        spark.read.parquet(corpus).createOrReplaceTempView("ts_emb")
+        read("knn", "SELECT vec_id FROM (SELECT * FROM ts_emb " +
+          "ORDER BY l2_distance(embedding, '[1,2,1]') LIMIT 3) t ORDER BY vec_id")
+        read("ivf", "CREATE INDEX ts_ivf USING IVFFLAT ON ts_emb(embedding) " +
+          "lists=2 nprobe=2 op_type \"vector_l2_ops\"")
+        read("v", "SELECT @v")
+        sql("SET @v = 7")
+        read("nextval", "SELECT nextval('ts_seq')")
+        sql("CREATE SEQUENCE ts_seq")
+        Seq(1, 2).toDF("a").createOrReplaceTempView("ts_parent")
+        Seq(1).toDF("p").createOrReplaceTempView("ts_child")
+        read("fks", "SELECT constraint_name FROM information_schema.referential_constraints")
+        read("fk_without_key", "ALTER TABLE ts_child ADD CONSTRAINT ts_fk " +
+          "FOREIGN KEY (p) REFERENCES ts_parent(a)")
+        sql("CREATE UNIQUE INDEX ts_uk ON ts_parent (a)")
+        sql("ALTER TABLE ts_child ADD CONSTRAINT ts_fk FOREIGN KEY (p) REFERENCES ts_parent(a)")
         Seq((1L, "spark joins fast"), (2L, "flink streams"), (3L, "spark spark streams"))
           .toDF("doc_id", "text").createOrReplaceTempView("two_t")
-        GraftSql.sql(spark, "SELECT doc_id, MATCH(text) AGAINST('spark') AS s FROM two_t " +
-          "ORDER BY doc_id").collect().mkString(";")
+        read("match", "SELECT doc_id, MATCH(text) AGAINST('spark') AS s FROM two_t " +
+          "ORDER BY doc_id")
       } finally spark.stop()
+      res += s"live=${SessionScoped.liveValues}"
+      res.result().mkString(" | ")
     }
     val first = once()
     println(s"session1 $first")

@@ -69,7 +69,7 @@ class SqlDialectSpec extends AnyFunSuite {
   test("ON DUPLICATE KEY batch deeper than 16 rounds applies every row") {
     GraftSql.sql(spark, "drop table if exists updeep_t")
     GraftSql.sql(spark, "create table updeep_t (k int, v int)")
-    GraftSql.registerPrimaryKey("updeep_t", "k")
+    GraftSql.registerPrimaryKey(spark, "updeep_t", "k")
     // 20 occurrences of the same key: row 1 inserts, 19 sequential
     // updates chain (+1 each) — a silent round cap would lose rows
     val vals = Seq.fill(20)("(1, 0)").mkString(", ")
@@ -194,7 +194,7 @@ class SqlDialectSpec extends AnyFunSuite {
 
   test("scored MATCH in projection, predicate MATCH in WHERE") {
     docTable()
-    GraftSql.registerPrimaryKey("ft_t", "doc_id")
+    GraftSql.registerPrimaryKey(spark, "ft_t", "doc_id")
     val rows = GraftSql.sql(spark,
       """SELECT doc_id, MATCH(text) AGAINST('spark' IN NATURAL LANGUAGE MODE) AS score
         |FROM ft_t

@@ -47,6 +47,17 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.planCacheSize == 1)
   }
 
+  test("re-creating session state adds no ApplicationEnd listener") {
+    val sc = spark.sparkContext
+    Tables.load(spark, sfDirs.head, "region")
+    val before = org.apache.spark.GraftTestBus.listenerCount(sc)
+    (1 to 50).foreach { _ =>
+      Tables.clearPlanCache()
+      Tables.load(spark, sfDirs.head, "region")
+    }
+    assert(org.apache.spark.GraftTestBus.listenerCount(sc) == before)
+  }
+
   test("events.ts is a usable session-zone timestamp") {
     for (dir <- sfDirs) {
       val df = Tables.events(spark, dir)

@@ -30,7 +30,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
-    GraftSession.init(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     def exec(name: String): Either[String, Double] =

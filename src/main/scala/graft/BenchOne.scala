@@ -12,7 +12,6 @@ object BenchOne {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
-    GraftSession.init(spark)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_JOBLOG=1: print per-job wall time + description so a
     // query's cost splits into its constituent Spark jobs (guide §1.5)

@@ -85,46 +85,16 @@ object GraftSession {
     icebergCatalogConfs(name, warehouse, catalogType)
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  // sessions already initialized — registerAll is harmless to repeat but
-  // floods warmup logs with "replaced a previously registered function"
-  private val initialized =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register the UDF-surface function names on an existing session
-    * (idempotent per session).
+  /** Register graft's function table ([[GraftExtensions.functions]]) into
+    * an existing session — one built without the extension. Sessions
+    * from [[builder]] or `spark.sql.extensions=graft.GraftExtensions`
+    * already hold it, and registering the same entries again is a no-op.
     */
-  def init(s: SparkSession): SparkSession = synchronized {
-    if (!initialized.add(s)) return s
-    // bitmap_construct_agg/bitmap_or_agg/bitmap_count/st_srid DELIBERATELY
-    // shadow Spark 4 built-ins of the same name with the reference's
-    // semantics (its bitmap wire format, its WKT-string geo surface) —
-    // mute the registry's "replaced" warning for this block only, so an
-    // accidental replacement elsewhere still warns
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.config.Configurator
-    val regLogger = "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
-    val prior = LogManager.getLogger(regLogger).getLevel
-    Configurator.setLevel(regLogger, Level.ERROR)
-    try initAll(s) finally Configurator.setLevel(regLogger, prior)
+  def init(s: SparkSession): SparkSession = {
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      registry.registerFunction(id, info, build)
+    }
     s
-  }
-
-  private def initAll(s: SparkSession): Unit = {
-    graft.functions.MoFunctions.registerAll(s)
-    graft.functions.MoAliases.registerAll(s)
-    graft.functions.DecimalGuard.registerAll(s)
-    graft.functions.Sketches.registerAll(s)
-    graft.functions.JsonMutation.registerAll(s)
-    graft.functions.JsonExtras.registerAll(s)
-    graft.functions.GeoFunctions.registerAll(s)
-    graft.functions.Collations.registerAll(s)
-    graft.functions.Jq.registerAll(s)
-    graft.functions.JsonTail.registerAll(s)
-    graft.operators.JsonUnnest.registerAll(s)
-    graft.functions.DocText.registerAll(s)
-    graft.operators.Llm.registerAll(s)
-    graft.operators.Onnx.registerAll(s)
-    graft.functions.Starlark.registerAll(s)
   }
 }

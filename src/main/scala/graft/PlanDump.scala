@@ -15,7 +15,6 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
-    GraftSession.init(spark)
     spark.sparkContext.setLogLevel("WARN")
     val names =
       if (args.length > 1) args.drop(1).toSeq

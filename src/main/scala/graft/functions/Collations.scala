@@ -3,7 +3,7 @@ package graft.functions
 import java.text.Collator
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Collation-aware comparison (reference collation support in
@@ -74,10 +74,10 @@ object Collations {
   def collated_strcmp(a: Column, b: Column, collation: Column): Column = cmpU(a, b, collation)
   def collated_eq(a: Column, b: Column, collation: Column): Column = eqU(a, b, collation)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("collation_key", keyBytes _)
-    spark.udf.register("collated_strcmp", strcmp _)
-    spark.udf.register("collated_eq",
-      (a: String, b: String, c: String) => strcmp(a, b, c).map(_ == 0))
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("collation_key", udf(keyBytes _))
+    ft.udf("collated_strcmp", udf(strcmp _))
+    ft.udf("collated_eq",
+      udf((a: String, b: String, c: String) => strcmp(a, b, c).map(_ == 0)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -66,19 +66,18 @@ object DecimalGuard {
     asCol(CheckedDecimalExpr(asExpr(e), precision, scale))
   }
 
-  def registerAll(spark: SparkSession): Unit =
-    JsonRegistry.native(spark, "checked_decimal",
-      "checked_decimal(e, p, s) - DECIMAL(p, s) cast that throws on overflow",
-      args => {
-        def lit(e: Expression, what: String): Int = e match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"checked_decimal: $what must be an integer literal, got $other")
-        }
-        val p = lit(args(1), "precision")
-        require(p <= MaxPrecision,
-          s"DECIMAL($p): precision beyond $MaxPrecision is internal-only " +
-            "in the reference; user decimals cap at 38 in both engines")
-        CheckedDecimalExpr(args(0), p, lit(args(2), "scale"))
-      })
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit =
+    ft.native("checked_decimal",
+      "checked_decimal(e, p, s) - DECIMAL(p, s) cast that throws on overflow") { args =>
+      def lit(e: Expression, what: String): Int = e match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"checked_decimal: $what must be an integer literal, got $other")
+      }
+      val p = lit(args(1), "precision")
+      require(p <= MaxPrecision,
+        s"DECIMAL($p): precision beyond $MaxPrecision is internal-only " +
+          "in the reference; user decimals cap at 38 in both engines")
+      CheckedDecimalExpr(args(0), p, lit(args(2), "scale"))
+    }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import java.io.ByteArrayInputStream
 import java.util.zip.{Inflater, ZipInputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable.ListBuffer
@@ -242,6 +242,6 @@ object DocText {
   private val extractU = udf(extractText _)
   def parse_document_text(payload: Column, mime: Column): Column = extractU(payload, mime)
 
-  def registerAll(spark: SparkSession): Unit =
-    spark.udf.register("parse_document_text", extractText _)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit =
+    ft.udf("parse_document_text", udf(extractText _))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Geospatial function family (reference `pkg/geo/` + registrations
@@ -762,32 +762,25 @@ object GeoFunctions {
   def st_geohash(lon: Column, lat: Column, len: Column): Column = geohashU(lon, lat, len)
   def st_pointfromgeohash(h: Column): Column = fromGeohashU(h)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("st_geomfromtext", (w: String) => parseWkt(w).map(toWkt).orNull)
-    spark.udf.register("st_astext", (w: String) => parseWkt(w).map(toWkt).orNull)
-    spark.udf.register("st_x", (w: String) =>
-      parseWkt(w).collect { case GPoint(x, _) => x })
-    spark.udf.register("st_y", (w: String) =>
-      parseWkt(w).collect { case GPoint(_, y) => y })
-    spark.udf.register("st_distance", (a: String, b: String) =>
-      for { x <- parseWkt(a); y <- parseWkt(b) } yield distance(x, y))
-    spark.udf.register("st_distance_sphere", (a: String, b: String) =>
-      for { x <- parseWkt(a); y <- parseWkt(b); d <- distanceSphere(x, y) } yield d)
-    spark.udf.register("st_length", (w: String) => parseWkt(w).flatMap(length))
-    spark.udf.register("st_area", (w: String) => parseWkt(w).flatMap(area))
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("st_geomfromtext", udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_astext", udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_x", udf((w: String) =>
+      parseWkt(w).collect { case GPoint(x, _) => x }))
+    ft.udf("st_y", udf((w: String) =>
+      parseWkt(w).collect { case GPoint(_, y) => y }))
+    ft.udf("st_distance_sphere", udf((a: String, b: String) =>
+      for { x <- parseWkt(a); y <- parseWkt(b); d <- distanceSphere(x, y) } yield d))
     // st_contains/st_within/st_intersects/st_disjoint and the mbr* family
-    // are NOT udf-registered: GraftExtensions injects them as native
-    // expressions (GeoPredicateExpr) and a udf.register here would shadow
+    // are not Scala UDFs: GraftExtensions injects them as native
+    // expressions (GeoPredicateExpr) and a UDF entry here would shadow
     // them back to the slow path
-    spark.udf.register("st_envelope", (w: String) => parseWkt(w).map(g => toWkt(envelope(g))).orNull)
-    spark.udf.register("st_centroid", (w: String) => parseWkt(w).map(g => toWkt(centroid(g))).orNull)
-    spark.udf.register("st_geohash", (lon: Double, lat: Double, len: Int) =>
-      geohashEncode(lon, lat, len).orNull)
-    spark.udf.register("st_pointfromgeohash", (h: String) =>
-      geohashDecode(h).map(toWkt).orNull)
-    spark.udf.register("st_geometrytype", g1(g => Some(geometryType(g))))
-    spark.udf.register("st_srid", g1(_ => Some(0)))
-    spark.udf.register("st_isempty", g1 {
+    ft.udf("st_geohash", udf((lon: Double, lat: Double, len: Int) =>
+      geohashEncode(lon, lat, len).orNull))
+    ft.udf("st_pointfromgeohash", udf((h: String) =>
+      geohashDecode(h).map(toWkt).orNull))
+    ft.udf("st_geometrytype", udf(g1(g => Some(geometryType(g)))))
+    ft.udf("st_isempty", udf(g1 {
       case GPoint(x, y) if x.isNaN && y.isNaN => Some(true)
       case GLine(p) => Some(p.isEmpty)
       case GPolygon(r) => Some(r.isEmpty)
@@ -795,42 +788,38 @@ object GeoFunctions {
       case GMultiLine(l) => Some(l.isEmpty)
       case GMultiPolygon(ps) => Some(ps.isEmpty)
       case GCollection(gs) => Some(gs.isEmpty); case _ => Some(false)
-    })
-    spark.udf.register("st_dimension", g1(g => Some(
+    }))
+    ft.udf("st_dimension", udf(g1(g => Some(
       if (vertices(g).isEmpty &&
-        !(g.isInstanceOf[GPoint])) -1 else dimension(g))))
-    spark.udf.register("st_numpoints",
-      g1 { case GLine(p) => Some(p.size); case _ => None })
-    spark.udf.register("st_startpoint",
-      g1 { case GLine(p) => Some(toWkt(GPoint(p.head._1, p.head._2))); case _ => None })
-    spark.udf.register("st_endpoint",
-      g1 { case GLine(p) => Some(toWkt(GPoint(p.last._1, p.last._2))); case _ => None })
-    spark.udf.register("st_pointn", (w: String, n: Int) => parseWkt(w).flatMap {
+        !(g.isInstanceOf[GPoint])) -1 else dimension(g)))))
+    ft.udf("st_numpoints",
+      udf(g1 { case GLine(p) => Some(p.size); case _ => None }))
+    ft.udf("st_pointn", udf((w: String, n: Int) => parseWkt(w).flatMap {
       case GLine(p) if n >= 1 && n <= p.size =>
         Some(withSridOf(w, toWkt(GPoint(p(n - 1)._1, p(n - 1)._2))))
       case _ => None
-    })
-    spark.udf.register("st_isclosed",
-      g1 { case GLine(p) => Some(p.head == p.last); case _ => None })
+    }))
+    ft.udf("st_isclosed",
+      udf(g1 { case GLine(p) => Some(p.head == p.last); case _ => None }))
     // ------------------------------------------- overlay / constructive
     Seq("union", "intersection", "difference", "symdifference").foreach { op =>
-      spark.udf.register(s"st_$op",
-        g2((a, b) => GeoOverlay.setOp(op, a, b).map(toWkt)))
+      ft.udf(s"st_$op",
+        udf(g2((a, b) => GeoOverlay.setOp(op, a, b).map(toWkt))))
     }
-    spark.udf.register("st_convexhull",
-      g1(g => Some(toWkt(GeoOverlay.convexHull(g)))))
-    spark.udf.register("st_simplify", (w: String, tol: Double) =>
-      parseWkt(w).map(g => toWkt(GeoOverlay.simplify(g, tol))).orNull)
-    spark.udf.register("st_buffer", (w: String, d: Double) =>
-      parseWkt(w).flatMap(g => GeoOverlay.buffer(g, d)).map(toWkt).orNull)
+    ft.udf("st_convexhull",
+      udf(g1(g => Some(toWkt(GeoOverlay.convexHull(g))))))
+    ft.udf("st_simplify", udf((w: String, tol: Double) =>
+      parseWkt(w).map(g => toWkt(GeoOverlay.simplify(g, tol))).orNull))
+    ft.udf("st_buffer", udf((w: String, d: Double) =>
+      parseWkt(w).flatMap(g => GeoOverlay.buffer(g, d)).map(toWkt).orNull))
 
     // --------------------------------------------------------- binary io
-    spark.udf.register("st_aswkb",
-      (w: String) => parseWkt(w).map(GeoOverlay.toWkb).orNull)
-    spark.udf.register("st_asbinary",
-      (w: String) => parseWkt(w).map(GeoOverlay.toWkb).orNull)
-    spark.udf.register("st_geomfromwkb",
-      (b: Array[Byte]) => GeoOverlay.fromWkb(b).map(toWkt).orNull)
+    ft.udf("st_aswkb",
+      udf((w: String) => parseWkt(w).map(GeoOverlay.toWkb).orNull))
+    ft.udf("st_asbinary",
+      udf((w: String) => parseWkt(w).map(GeoOverlay.toWkb).orNull))
+    ft.udf("st_geomfromwkb",
+      udf((b: Array[Byte]) => GeoOverlay.fromWkb(b).map(toWkt).orNull))
     Seq[(String, Geom => Boolean)](
       ("st_pointfromwkb", _.isInstanceOf[GPoint]),
       ("st_linefromwkb", _.isInstanceOf[GLine]),
@@ -840,15 +829,13 @@ object GeoFunctions {
       ("st_mpolyfromwkb", _.isInstanceOf[GMultiPolygon]),
       ("st_geomcollfromwkb", _.isInstanceOf[GCollection])
     ).foreach { case (name, accept) =>
-      spark.udf.register(name,
-        (b: Array[Byte]) => GeoOverlay.fromWkb(b).filter(accept).map(toWkt).orNull)
+      ft.udf(name,
+        udf((b: Array[Byte]) => GeoOverlay.fromWkb(b).filter(accept).map(toWkt).orNull))
     }
 
     // ------------------------------------------------------- geojson io
-    spark.udf.register("st_asgeojson",
-      (w: String) => parseWkt(w).map(GeoOverlay.toGeoJson).orNull)
-    spark.udf.register("st_geomfromgeojson",
-      (j: String) => GeoOverlay.fromGeoJson(j).map(toWkt).orNull)
+    ft.udf("st_asgeojson",
+      udf((w: String) => parseWkt(w).map(GeoOverlay.toGeoJson).orNull))
 
     // ------------------------------------------- typed text constructors
     Seq[(String, Geom => Boolean)](
@@ -860,24 +847,24 @@ object GeoFunctions {
       ("st_mpolyfromtext", _.isInstanceOf[GMultiPolygon]),
       ("st_geomcollfromtext", _.isInstanceOf[GCollection])
     ).foreach { case (name, accept) =>
-      spark.udf.register(name,
-        (w: String) => parseWkt(w).filter(accept).map(toWkt).orNull)
+      ft.udf(name,
+        udf((w: String) => parseWkt(w).filter(accept).map(toWkt).orNull))
     }
 
     // ----------------------------------------- rings / parts / validity
-    spark.udf.register("st_exteriorring", (w: String) => parseWkt(w).flatMap {
+    ft.udf("st_exteriorring", udf((w: String) => parseWkt(w).flatMap {
       case GPolygon(r) => Some(withSridOf(w, toWkt(GLine(r.head))))
       case _ => None
-    }.orNull)
-    spark.udf.register("st_numinteriorrings",
-      g1 { case GPolygon(r) => Some(r.size - 1); case _ => None })
-    spark.udf.register("st_interiorringn", (w: String, n: Int) => parseWkt(w).flatMap {
+    }.orNull))
+    ft.udf("st_numinteriorrings",
+      udf(g1 { case GPolygon(r) => Some(r.size - 1); case _ => None }))
+    ft.udf("st_interiorringn", udf((w: String, n: Int) => parseWkt(w).flatMap {
       case GPolygon(r) if n >= 1 && n < r.size =>
         Some(withSridOf(w, toWkt(GLine(r(n)))))
       case _ => None
-    })
-    spark.udf.register("st_numgeometries",
-      g1 {
+    }))
+    ft.udf("st_numgeometries",
+      udf(g1 {
         // MO returns NULL for any EMPTY geometry (func_geometry.result)
         case GCollection(gs) if gs.isEmpty => None
         case GMultiPoint(ps) if ps.isEmpty => None
@@ -890,62 +877,39 @@ object GeoFunctions {
           case _ if isMulti(g) => parts(g).size
           case _ => 1
         })
-      })
-    spark.udf.register("st_geometryn", (w: String, n: Int) => parseWkt(w).flatMap { g =>
-      val ps = g match { case GCollection(gs) => gs; case _ if isMulti(g) => parts(g); case _ => Vector(g) }
-      if (n >= 1 && n <= ps.size) Some(toWkt(ps(n - 1))) else None
-    })
-    spark.udf.register("st_iscollection", g1(g => Some(isMulti(g))))
-    spark.udf.register("st_isvalid", g1 {
+      }))
+    ft.udf("st_iscollection", udf(g1(g => Some(isMulti(g)))))
+    ft.udf("st_isvalid", udf(g1 {
       case GPolygon(rings) =>
         // simple validity: >=4 points, closed, nonzero area per ring
         Some(rings.forall(r => r.size >= 4 && r.head == r.last) &&
           area(GPolygon(rings)).exists(_ > 0))
       case _ => Some(true)
-    })
-    spark.udf.register("st_issimple", g1 {
-      case GLine(p) =>
-        // no self-intersection between non-adjacent segments
-        val segs = p.sliding(2).map(s => (s(0), s(1))).toVector
-        Some(!segs.indices.exists(i => (i + 2 until segs.size).exists { j =>
-          !(i == 0 && j == segs.size - 1 && p.head == p.last) &&
-            segIntersect(segs(i)._1, segs(i)._2, segs(j)._1, segs(j)._2)
-        }))
-      case _ => Some(true)
-    })
-    spark.udf.register("st_isring", g1 {
+    }))
+    ft.udf("st_isring", udf(g1 {
       case GLine(p) => Some(p.head == p.last && p.size >= 4)
       case _ => Some(false)
-    })
-    spark.udf.register("st_boundary", g1 {
-      case GLine(p) =>
-        Some(toWkt(if (p.head == p.last) GMultiPoint(Vector())
-          else GMultiPoint(Vector(p.head, p.last))))
-      case GPolygon(r) =>
-        Some(toWkt(if (r.size == 1) GLine(r.head) else GMultiLine(r.map(GLine))))
-      case _: GPoint => Some("GEOMETRYCOLLECTION EMPTY")
-      case _ => None
-    })
+    }))
 
     // --------------------------------------------------- point helpers
-    spark.udf.register("st_longitude",
-      g1 { case GPoint(x, _) => Some(x); case _ => None })
-    spark.udf.register("st_latitude",
-      g1 { case GPoint(_, y) => Some(y); case _ => None })
-    spark.udf.register("st_swapxy", g1(g => Some(toWkt(swapXY(g)))))
-    spark.udf.register("st_makeenvelope",
-      (x0: Double, y0: Double, x1: Double, y1: Double) => {
+    ft.udf("st_longitude",
+      udf(g1 { case GPoint(x, _) => Some(x); case _ => None }))
+    ft.udf("st_latitude",
+      udf(g1 { case GPoint(_, y) => Some(y); case _ => None }))
+    ft.udf("st_swapxy", udf(g1(g => Some(toWkt(swapXY(g))))))
+    ft.udf("st_makeenvelope",
+      udf((x0: Double, y0: Double, x1: Double, y1: Double) => {
         val (a, b) = (math.min(x0, x1), math.max(x0, x1))
         val (c, d) = (math.min(y0, y1), math.max(y0, y1))
         toWkt(GPolygon(Vector(Vector((a, c), (b, c), (b, d), (a, d), (a, c)))))
-      })
-    spark.udf.register("st_latfromgeohash",
-      (h: String) => geohashDecode(h).map(_.y))
-    spark.udf.register("st_longfromgeohash",
-      (h: String) => geohashDecode(h).map(_.x))
-    spark.udf.register("st_validate",
-      (w: String) => parseWkt(w).map(toWkt).orNull)
-    spark.udf.register("st_pointonsurface", (w: String) => parseWkt(w).flatMap {
+      }))
+    ft.udf("st_latfromgeohash",
+      udf((h: String) => geohashDecode(h).map(_.y)))
+    ft.udf("st_longfromgeohash",
+      udf((h: String) => geohashDecode(h).map(_.x)))
+    ft.udf("st_validate",
+      udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_pointonsurface", udf((w: String) => parseWkt(w).flatMap {
       case p: GPoint => Some(withSridOf(w, toWkt(p)))
       case l: GLine =>
         // the reference returns the ARC-LENGTH midpoint (line_surface
@@ -982,53 +946,53 @@ object GeoFunctions {
           .orElse(Some(withSridOf(w,
             toWkt(GPoint(poly.rings.head.head._1, poly.rings.head.head._2)))))
       case _ => None
-    }.orNull)
+    }.orNull))
 
     // --------------------------------------------------- more predicates
-    spark.udf.register("st_equals", g2((a, b) => Some(geomEquals(a, b))))
-    spark.udf.register("st_touches", g2((a, b) => Some(touches(a, b))))
-    spark.udf.register("st_crosses", g2(crosses))
-    spark.udf.register("st_overlaps", g2(overlaps))
-    spark.udf.register("st_covers", g2((a, b) => covers(a, b)))
-    spark.udf.register("st_coveredby", g2((a, b) => covers(b, a)))
+    ft.udf("st_equals", udf(g2((a, b) => Some(geomEquals(a, b)))))
+    ft.udf("st_touches", udf(g2((a, b) => Some(touches(a, b)))))
+    ft.udf("st_crosses", udf(g2(crosses)))
+    ft.udf("st_overlaps", udf(g2(overlaps)))
+    ft.udf("st_covers", udf(g2((a, b) => covers(a, b))))
+    ft.udf("st_coveredby", udf(g2((a, b) => covers(b, a))))
 
     // ----------------------------------- linear referencing + distances
-    spark.udf.register("st_lineinterpolatepoint", (w: String, f: Double) =>
-      parseWkt(w).flatMap(GeoOverlay.lineInterpolatePoint(_, f)).map(toWkt).orNull)
-    spark.udf.register("st_pointatdistance", (w: String, d: Double) =>
-      parseWkt(w).flatMap(GeoOverlay.pointAtDistance(_, d)).map(toWkt).orNull)
-    spark.udf.register("st_frechetdistance", g2(GeoOverlay.frechet))
-    spark.udf.register("st_hausdorffdistance", g2(GeoOverlay.hausdorff))
+    ft.udf("st_lineinterpolatepoint", udf((w: String, f: Double) =>
+      parseWkt(w).flatMap(GeoOverlay.lineInterpolatePoint(_, f)).map(toWkt).orNull))
+    ft.udf("st_pointatdistance", udf((w: String, d: Double) =>
+      parseWkt(w).flatMap(GeoOverlay.pointAtDistance(_, d)).map(toWkt).orNull))
+    ft.udf("st_frechetdistance", udf(g2(GeoOverlay.frechet)))
+    ft.udf("st_hausdorffdistance", udf(g2(GeoOverlay.hausdorff)))
 
     // ------------------------- point constructors + 2-arg collect + aliases
     // (geo BVT surface: geo_stpoint.result, geo_construct.result —
     // st_point32 stores float32 coordinates, so text round-trips show
     // the float32 value like the reference)
-    spark.udf.register("st_point", (x: java.lang.Double, y: java.lang.Double) =>
-      if (x == null || y == null) null else toWkt(GPoint(x, y)))
-    spark.udf.register("st_point32", (x: java.lang.Double, y: java.lang.Double) =>
+    ft.udf("st_point", udf((x: java.lang.Double, y: java.lang.Double) =>
+      if (x == null || y == null) null else toWkt(GPoint(x, y))))
+    ft.udf("st_point32", udf((x: java.lang.Double, y: java.lang.Double) =>
       if (x == null || y == null) null
-      else toWkt(GPoint(x.floatValue.toDouble, y.floatValue.toDouble)))
-    spark.udf.register("st_collect", g2((a, b) => Some(toWkt((a, b) match {
+      else toWkt(GPoint(x.floatValue.toDouble, y.floatValue.toDouble))))
+    ft.udf("st_collect", udf(g2((a, b) => Some(toWkt((a, b) match {
       case (p1: GPoint, p2: GPoint) =>
         GMultiPoint(Vector((p1.x, p1.y), (p2.x, p2.y)))
       case (l1: GLine, l2: GLine) => GMultiLine(Vector(l1, l2))
       case (p1: GPolygon, p2: GPolygon) => GMultiPolygon(Vector(p1, p2))
       case _ => GCollection(Vector(a, b))
-    }))))
-    spark.udf.register("st_lineinterpolatepoints", (w: String, f: Double) =>
-      parseWkt(w).flatMap(GeoOverlay.lineInterpolatePoints(_, f)).map(toWkt).orNull)
-    spark.udf.register("st_aswkt", (w: String) => parseWkt(w).map(toWkt).orNull)
-    spark.udf.register("st_geomfrombinary",
-      (b: Array[Byte]) => GeoOverlay.fromWkb(b).map(toWkt).orNull)
-    spark.udf.register("st_geometryfromtext",
-      (w: String) => parseWkt(w).map(toWkt).orNull)
-    spark.udf.register("st_polygonfromtext",
-      (w: String) => parseWkt(w).filter(_.isInstanceOf[GPolygon]).map(toWkt).orNull)
-    spark.udf.register("st_linestringfromtext",
-      (w: String) => parseWkt(w).filter(_.isInstanceOf[GLine]).map(toWkt).orNull)
-    spark.udf.register("st_numinteriorring",
-      g1 { case GPolygon(r) => Some(r.size - 1); case _ => None })
+    })))))
+    ft.udf("st_lineinterpolatepoints", udf((w: String, f: Double) =>
+      parseWkt(w).flatMap(GeoOverlay.lineInterpolatePoints(_, f)).map(toWkt).orNull))
+    ft.udf("st_aswkt", udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_geomfrombinary",
+      udf((b: Array[Byte]) => GeoOverlay.fromWkb(b).map(toWkt).orNull))
+    ft.udf("st_geometryfromtext",
+      udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_polygonfromtext",
+      udf((w: String) => parseWkt(w).filter(_.isInstanceOf[GPolygon]).map(toWkt).orNull))
+    ft.udf("st_linestringfromtext",
+      udf((w: String) => parseWkt(w).filter(_.isInstanceOf[GLine]).map(toWkt).orNull))
+    ft.udf("st_numinteriorring",
+      udf(g1 { case GPolygon(r) => Some(r.size - 1); case _ => None }))
 
     // ---------------- SRID-aware measures + explicit-SRID constructors
     // (the reference selects geodesic math for SRID 4326 —
@@ -1036,55 +1000,55 @@ object GeoFunctions {
     // NB the lambdas must reference ONLY object members (static module
     // access) — a local helper def would capture the method frame and
     // make the UDF non-serializable.
-    spark.udf.register("st_area", (w: String) =>
-      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticArea(g) else area(g)))
-    spark.udf.register("st_length", (w: String) =>
-      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticLength(g) else length(g)))
-    spark.udf.register("st_distance", (a: String, b: String) =>
+    ft.udf("st_area", udf((w: String) =>
+      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticArea(g) else area(g))))
+    ft.udf("st_length", udf((w: String) =>
+      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticLength(g) else length(g))))
+    ft.udf("st_distance", udf((a: String, b: String) =>
       for {
         x <- parseWkt(a); y <- parseWkt(b)
         d <- if (sridOf(a) == 4326 || sridOf(b) == 4326) geodeticDistance(x, y)
           else Some(distance(x, y))
-      } yield d)
-    spark.udf.register("st_srid", (w: String) => parseWkt(w).map(_ => sridOf(w)))
-    spark.udf.register("st_geomfromtext_srid", (w: String, srid: Int) =>
+      } yield d))
+    ft.udf("st_srid", udf((w: String) => parseWkt(w).map(_ => sridOf(w))))
+    ft.udf("st_geomfromtext_srid", udf((w: String, srid: Int) =>
       parseWkt(w).map(g =>
-        if (srid != 0) s"SRID=$srid;${toWkt(g)}" else toWkt(g)).orNull)
-    spark.udf.register("st_area_srid", (w: String, srid: Int) =>
-      parseWkt(w).flatMap(g => if (srid == 4326) geodeticArea(g) else area(g)))
-    spark.udf.register("st_length_srid", (w: String, srid: Int) =>
-      parseWkt(w).flatMap(g => if (srid == 4326) geodeticLength(g) else length(g)))
-    spark.udf.register("st_distance_srid", (a: String, b: String, srid: Int) =>
+        if (srid != 0) s"SRID=$srid;${toWkt(g)}" else toWkt(g)).orNull))
+    ft.udf("st_area_srid", udf((w: String, srid: Int) =>
+      parseWkt(w).flatMap(g => if (srid == 4326) geodeticArea(g) else area(g))))
+    ft.udf("st_length_srid", udf((w: String, srid: Int) =>
+      parseWkt(w).flatMap(g => if (srid == 4326) geodeticLength(g) else length(g))))
+    ft.udf("st_distance_srid", udf((a: String, b: String, srid: Int) =>
       for {
         x <- parseWkt(a); y <- parseWkt(b)
         d <- if (srid == 4326) geodeticDistance(x, y) else Some(distance(x, y))
-      } yield d)
-    spark.udf.register("st_buffer_segs", (w: String, d: Double, quadSegs: Int) =>
+      } yield d))
+    ft.udf("st_buffer_segs", udf((w: String, d: Double, quadSegs: Int) =>
       parseWkt(w).flatMap(g =>
-        GeoOverlay.bufferN(g, d, math.max(4, quadSegs * 4))).map(toWkt).orNull)
-    spark.udf.register("st_geohash_pt", (w: String, len: Int) =>
+        GeoOverlay.bufferN(g, d, math.max(4, quadSegs * 4))).map(toWkt).orNull))
+    ft.udf("st_geohash_pt", udf((w: String, len: Int) =>
       parseWkt(w).flatMap {
         case GPoint(x, y) => geohashEncode(x, y, len)
         case _ => None
-      }.orNull)
-    spark.udf.register("st_pointfromgeohash_srid", (h: String, srid: Int) =>
+      }.orNull))
+    ft.udf("st_pointfromgeohash_srid", udf((h: String, srid: Int) =>
       geohashDecode(h).map(p =>
-        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(p)).orNull)
-    spark.udf.register("st_asgeojson_digits", (w: String, nd: Int) =>
+        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(p)).orNull))
+    ft.udf("st_asgeojson_digits", udf((w: String, nd: Int) =>
       parseWkt(w).map(g => GeoOverlay.toGeoJson(mapPts(g) {
         case (x, y) if x.isNaN || y.isNaN => (x, y)
         case (x, y) =>
           (BigDecimal(x).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
             BigDecimal(y).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      })).orNull)
+      })).orNull))
     // GeoJSON is WGS 84 by definition: parse defaults to SRID 4326; the
     // explicit form can force another id (geo_geojson.result:default_srid)
-    spark.udf.register("st_geomfromgeojson",
-      (j: String) => GeoOverlay.fromGeoJson(j).map(g => s"SRID=4326;${toWkt(g)}").orNull)
-    spark.udf.register("st_geomfromgeojson_srid", (j: String, srid: Int) =>
+    ft.udf("st_geomfromgeojson",
+      udf((j: String) => GeoOverlay.fromGeoJson(j).map(g => s"SRID=4326;${toWkt(g)}").orNull))
+    ft.udf("st_geomfromgeojson_srid", udf((j: String, srid: Int) =>
       GeoOverlay.fromGeoJson(j).map(g =>
-        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(g)).orNull)
-    spark.udf.register("st_makeenvelope_pts", (a: String, b: String) =>
+        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(g)).orNull))
+    ft.udf("st_makeenvelope_pts", udf((a: String, b: String) =>
       (parseWkt(a), parseWkt(b)) match {
         case (Some(GPoint(x0, y0)), Some(GPoint(x1, y1)))
             if !x0.isNaN && !x1.isNaN =>
@@ -1093,23 +1057,23 @@ object GeoFunctions {
           toWkt(GPolygon(Vector(Vector(
             (lo, lo2), (hi, lo2), (hi, hi2), (lo, hi2), (lo, lo2)))))
         case _ => null
-      })
+      }))
     // SRID propagates through derived geometries (geo_srid.result)
-    spark.udf.register("st_centroid", (w: String) =>
-      parseWkt(w).map(g => withSridOf(w, toWkt(centroid(g)))).orNull)
-    spark.udf.register("st_envelope", (w: String) =>
-      parseWkt(w).map(g => withSridOf(w, toWkt(envelope(g)))).orNull)
-    spark.udf.register("st_startpoint", (w: String) =>
+    ft.udf("st_centroid", udf((w: String) =>
+      parseWkt(w).map(g => withSridOf(w, toWkt(centroid(g)))).orNull))
+    ft.udf("st_envelope", udf((w: String) =>
+      parseWkt(w).map(g => withSridOf(w, toWkt(envelope(g)))).orNull))
+    ft.udf("st_startpoint", udf((w: String) =>
       parseWkt(w).flatMap {
         case GLine(p) => Some(withSridOf(w, toWkt(GPoint(p.head._1, p.head._2))))
         case _ => None
-      }.orNull)
-    spark.udf.register("st_endpoint", (w: String) =>
+      }.orNull))
+    ft.udf("st_endpoint", udf((w: String) =>
       parseWkt(w).flatMap {
         case GLine(p) => Some(withSridOf(w, toWkt(GPoint(p.last._1, p.last._2))))
         case _ => None
-      }.orNull)
-    spark.udf.register("st_geometryn", (w: String, n: Int) =>
+      }.orNull))
+    ft.udf("st_geometryn", udf((w: String, n: Int) =>
       parseWkt(w).flatMap { g =>
         val ps = g match {
           case GCollection(gs) => gs
@@ -1117,10 +1081,10 @@ object GeoFunctions {
           case _ => Vector(g)
         }
         if (n >= 1 && n <= ps.size) Some(withSridOf(w, toWkt(ps(n - 1)))) else None
-      }.orNull)
+      }.orNull))
     // polygon boundaries are MULTILINESTRING even for a single ring
     // (geo_functions_unary.result)
-    spark.udf.register("st_boundary", (w: String) =>
+    ft.udf("st_boundary", udf((w: String) =>
       parseWkt(w).flatMap {
         case GLine(p) =>
           Some(toWkt(if (p.head == p.last) GMultiPoint(Vector())
@@ -1128,10 +1092,10 @@ object GeoFunctions {
         case GPolygon(r) => Some(withSridOf(w, toWkt(GMultiLine(r.map(GLine)))))
         case _: GPoint => Some("GEOMETRYCOLLECTION EMPTY")
         case _ => None
-      }.orNull)
+      }.orNull))
     // backtracking lines are not simple: a vertex where the direction
     // exactly reverses retraces the previous segment (geo_validity)
-    spark.udf.register("st_issimple", g1 {
+    ft.udf("st_issimple", udf(g1 {
       case GLine(p) =>
         val backtrack = p.sliding(3).exists { w =>
           w.size == 3 && {
@@ -1146,7 +1110,7 @@ object GeoFunctions {
             segIntersect(segs(i)._1, segs(i)._2, segs(j)._1, segs(j)._2)
         }))
       case _ => Some(true)
-    })
+    }))
   }
 
   /** Apply `f` to every coordinate pair of `g`. */

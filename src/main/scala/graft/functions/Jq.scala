@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable.ListBuffer
@@ -842,8 +841,8 @@ object Jq {
   def jq(doc: Column, program: Column): Column = jqU(doc, program)
   def try_jq(doc: Column, program: Column): Column = tryJqU(doc, program)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("jq", jqEval _)
-    spark.udf.register("try_jq", tryJqEval _)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("jq", udf(jqEval _))
+    ft.udf("try_jq", udf(tryJqEval _))
   }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** MySQL JSON inspection/containment functions beyond Spark's built-ins
   * (reference registry `list_builtIn.go` JSON family: `json_type
@@ -184,16 +184,14 @@ object JsonExtras {
   def json_contains_path(doc: Column, mode: Column, paths: Column): Column =
     ex("json_contains_path", doc, mode, paths)
 
-  def registerAll(spark: SparkSession): Unit = {
-    JsonRegistry.native(spark, "json_type", "json_type(doc)")
-    JsonRegistry.native(spark, "json_valid", "json_valid(doc)")
-    JsonRegistry.native(spark, "json_quote", "json_quote(s)")
-    JsonRegistry.native(spark, "json_unquote", "json_unquote(doc)")
-    JsonRegistry.native(spark, "json_contains", "json_contains(target, cand)")
-    JsonRegistry.native(spark, "json_depth", "json_depth(doc)")
-    JsonRegistry.native(spark, "json_merge_preserve", "json_merge_preserve(a, b)")
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    Seq("json_type" -> "json_type(doc)", "json_valid" -> "json_valid(doc)",
+      "json_quote" -> "json_quote(s)", "json_unquote" -> "json_unquote(doc)",
+      "json_contains" -> "json_contains(target, cand)", "json_depth" -> "json_depth(doc)",
+      "json_merge_preserve" -> "json_merge_preserve(a, b)"
+    ).foreach { case (name, usage) => ft.native(name, usage)(JsonScalarExpr(name, _)) }
     // MySQL's variadic form: json_contains_path(doc, 'one'|'all', p, ...)
-    JsonRegistry.native(spark, "json_contains_path",
-      "json_contains_path(doc, one_or_all, path, ...)", JsonScalarExpr.containsPath)
+    ft.native("json_contains_path",
+      "json_contains_path(doc, one_or_all, path, ...)")(JsonScalarExpr.containsPath)
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** MySQL JSON mutation functions the reference supports but Spark lacks
@@ -233,9 +233,4 @@ object JsonMutation {
     asCol(JsonMutateExpr.remove(asExpr(doc), asExpr(path)))
   def json_merge_patch(a: Column, b: Column): Column =
     asCol(JsonMutateExpr.mergePatch(asExpr(a), asExpr(b)))
-
-  /** SQL names are injected as native expression builders in
-    * [[graft.GraftExtensions]] — nothing to register here anymore.
-    */
-  def registerAll(spark: SparkSession): Unit = ()
 }

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[JsonMutateExpr]].
   *
   * `fn` selects the function; arity is validated at construction. SQL
-  * names registered by `JsonTail.registerAll`/`JsonExtras.registerAll`
+  * names from `JsonTail.functions`/`JsonExtras.functions`
   * accept MySQL's optional-path forms (`json_length(doc[, path])`,
   * `json_keys(doc[, path])`) and the variadic
   * `json_contains_path(doc, one_or_all, path, ...)`.

@@ -3,7 +3,7 @@ package graft.functions
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 import scala.collection.mutable.ListBuffer
 
@@ -540,22 +540,18 @@ object JsonTail {
   def json_schema_validation_report(schema: Column, doc: Column): Column =
     ex("json_schema_validation_report", schema, doc)
 
-  def registerAll(spark: SparkSession): Unit = {
-    JsonRegistry.native(spark, "json_extract", "json_extract(doc, path)")
-    JsonRegistry.native(spark, "json_extract_string", "json_extract_string(doc, path)")
-    JsonRegistry.native(spark, "json_extract_float64", "json_extract_float64(doc, path)")
-    JsonRegistry.native(spark, "json_value", "json_value(doc, path)")
-    JsonRegistry.native(spark, "json_length", "json_length(doc[, path])")
-    JsonRegistry.native(spark, "json_keys", "json_keys(doc[, path])")
-    JsonRegistry.native(spark, "json_pretty", "json_pretty(doc)")
-    JsonRegistry.native(spark, "json_overlaps", "json_overlaps(a, b)")
-    JsonRegistry.native(spark, "json_schema_valid", "json_schema_valid(schema, doc)")
-    JsonRegistry.native(spark, "json_schema_validation_report",
-      "json_schema_validation_report(schema, doc)")
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    Seq("json_extract" -> "json_extract(doc, path)",
+      "json_extract_string" -> "json_extract_string(doc, path)",
+      "json_extract_float64" -> "json_extract_float64(doc, path)",
+      "json_value" -> "json_value(doc, path)", "json_length" -> "json_length(doc[, path])",
+      "json_keys" -> "json_keys(doc[, path])", "json_pretty" -> "json_pretty(doc)",
+      "json_overlaps" -> "json_overlaps(a, b)",
+      "json_schema_valid" -> "json_schema_valid(schema, doc)",
+      "json_schema_validation_report" -> "json_schema_validation_report(schema, doc)"
+    ).foreach { case (name, usage) => ft.native(name, usage)(JsonScalarExpr(name, _)) }
     // legacy 2-arg aliases kept for SQL callers of the round-2 names
-    JsonRegistry.native(spark, "json_length_path", "json_length_path(doc, path)",
-      args => JsonScalarExpr("json_length", args))
-    JsonRegistry.native(spark, "json_keys_path", "json_keys_path(doc, path)",
-      args => JsonScalarExpr("json_keys", args))
+    ft.native("json_length_path", "json_length_path(doc, path)")(JsonScalarExpr("json_length", _))
+    ft.native("json_keys_path", "json_keys_path(doc, path)")(JsonScalarExpr("json_keys", _))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** SQL-name aliases for reference builtins whose semantics graft (or
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * `pkg/sql/plan/function/function_id.go` against the session registry
   * surfaced these as "missing" only at the name level. Each resolves to
   * a codegen'd combinator tree (eager ColumnNode conversion, same
-  * pattern as [[MoFunctions.registerAll]]); none are UDFs.
+  * pattern as [[MoFunctions.functions]]); none are UDFs.
   *
   * Out of scope and NOT aliased here: mo_* admin/introspection, fault
   * injection, locks, sequences (currval/nextval), prefix_* index
@@ -18,17 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object MoAliases {
 
-  def registerAll(spark: SparkSession): Unit = {
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     import org.apache.spark.sql.GraftColumnBridge.{column => asCol, eagerExpression}
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
     import org.apache.spark.unsafe.types.UTF8String
 
-    def nat(name: String, usage: String)(build: Seq[Column] => Column): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "built-in"),
-        (args: Seq[Expression]) => eagerExpression(build(args.map(asCol))))
     def strLit(e: Column): String = eagerExpression(e) match {
       case Literal(s: UTF8String, _) => s.toString
       case other => throw new IllegalArgumentException(
@@ -47,19 +41,19 @@ object MoAliases {
     }
 
     // ---------------------------------------------------------- strings
-    nat("to_lower", "to_lower(s)")(a => lower(a(0)))
+    ft.column("to_lower", "to_lower(s)")(a => lower(a(0)))
     // MySQL UPPER maps characters 1:1 (ß stays ß — Java's String
     // .toUpperCase would expand it to SS, charset_collation_errors
     // UPPER('straße') = 'STRAßE')
     val moUpper = udf((s: String) =>
       if (s == null) null
       else s.map(c => if (c == 'ß') c else Character.toUpperCase(c)))
-    nat("upper", "upper(s) - 1:1 character mapping (MySQL)")(a =>
+    ft.column("upper", "upper(s) - 1:1 character mapping (MySQL)")(a =>
       moUpper(a(0).cast("string")))
-    nat("ucase", "ucase(s) - 1:1 character mapping (MySQL)")(a =>
+    ft.column("ucase", "ucase(s) - 1:1 character mapping (MySQL)")(a =>
       moUpper(a(0).cast("string")))
-    nat("to_upper", "to_upper(s)")(a => upper(a(0)))
-    nat("lengthutf8", "lengthutf8(s) - length in characters")(a => char_length(a(0)))
+    ft.column("to_upper", "to_upper(s)")(a => upper(a(0)))
+    ft.column("lengthutf8", "lengthutf8(s) - length in characters")(a => char_length(a(0)))
     // MySQL SUBSTRING/MID: position 0 yields '' (Spark treats 0 as 1).
     // Catalyst Substring directly — functions.substring resolves by NAME
     // through this registry and would recurse into this same override.
@@ -74,15 +68,15 @@ object MoAliases {
             eagerExpression(a(0).cast("string")), eagerExpression(pos),
             eagerExpression(len))))
     }
-    nat("mid", "mid(s, pos[, len]) - MySQL alias of substring")(moSubstr)
-    nat("substring", "substring(s, pos[, len]) - pos 0 yields '' (MySQL)")(moSubstr)
-    nat("substr", "substr(s, pos[, len]) - pos 0 yields '' (MySQL)")(moSubstr)
-    nat("oct", "oct(n) - octal rendering")(a => conv(a(0).cast("string"), 10, 8))
+    ft.column("mid", "mid(s, pos[, len]) - MySQL alias of substring")(moSubstr)
+    ft.column("substring", "substring(s, pos[, len]) - pos 0 yields '' (MySQL)")(moSubstr)
+    ft.column("substr", "substr(s, pos[, len]) - pos 0 yields '' (MySQL)")(moSubstr)
+    ft.column("oct", "oct(n) - octal rendering")(a => conv(a(0).cast("string"), 10, 8))
     // ORD: the leading CHARACTER's UTF-8 bytes combined LITTLE-endian —
     // the reference's byte order (charset_collation_errors.result:
     // ORD('中') = 0xadb8e4, the reverse of UTF-8 e4 b8 ad; MySQL proper
     // is big-endian). Single-byte input degenerates to ASCII().
-    nat("ord", "ord(s) - leading character's bytes as a little-endian int")(a =>
+    ft.column("ord", "ord(s) - leading character's bytes as a little-endian int")(a =>
       udf((s: String) =>
         if (s == null) null
         else if (s.isEmpty) java.lang.Long.valueOf(0L)
@@ -92,43 +86,43 @@ object MoAliases {
           java.lang.Long.valueOf(
             b.reverse.foldLeft(0L)((acc, x) => acc * 256 + (x & 0xff)))
         }).apply(a(0).cast("string")))
-    nat("strcmp", "strcmp(a, b) - -1/0/1")(a =>
+    ft.column("strcmp", "strcmp(a, b) - -1/0/1")(a =>
       when(a(0).isNull || a(1).isNull, lit(null))
         .when(a(0) < a(1), -1).when(a(0) === a(1), 0).otherwise(1))
     // strict decode: invalid base64 is NULL in MySQL (Spark's unbase64
     // errors under ANSI); bytes return so LENGTH/HEX see octets
-    nat("from_base64", "from_base64(s) - NULL on invalid input")(a =>
+    ft.column("from_base64", "from_base64(s) - NULL on invalid input")(a =>
       MoFunctions.fromBase64(a(0)))
-    nat("to_base64", "to_base64(s)")(a => base64(a(0).cast("binary")))
-    nat("findinset", "findinset(s, set)")(a => find_in_set(a(0), a(1)))
-    nat("format", "format(x, d[, locale]) - grouped rendering")(a =>
+    ft.column("to_base64", "to_base64(s)")(a => base64(a(0).cast("binary")))
+    ft.column("findinset", "findinset(s, set)")(a => find_in_set(a(0), a(1)))
+    ft.column("format", "format(x, d[, locale]) - grouped rendering")(a =>
       MoFunctions.moFormat(a(0), if (a.length > 1) a(1) else lit(0),
         if (a.length > 2) a(2) else lit(null)))
-    nat("empty", "empty(s) - 1 when zero-length")(a => (char_length(a(0)) === 0).cast("int"))
-    nat("field", "field(e, v1, v2, ...) - 1-based index of e")(a =>
+    ft.column("empty", "empty(s) - 1 when zero-length")(a => (char_length(a(0)) === 0).cast("int"))
+    ft.column("field", "field(e, v1, v2, ...) - 1-based index of e")(a =>
       MoFunctions.field(a.head, a.tail))
-    nat("make_set", "make_set(bits, s1, s2, ...)")(a =>
+    ft.column("make_set", "make_set(bits, s1, s2, ...)")(a =>
       MoFunctions.makeSet(a.head, a.tail))
     // a NULL sep/count falls back to the default (func_string_export_
     // set.result), unlike NULL on/off which null out
-    nat("export_set", "export_set(bits, on, off[, sep[, n]])")(a =>
+    ft.column("export_set", "export_set(bits, on, off[, sep[, n]])")(a =>
       MoFunctions.exportSet(a(0), a(1), a(2),
         if (a.length > 3) coalesce(a(3).cast("string"), lit(",")) else lit(","),
         if (a.length > 4) coalesce(a(4).cast("int"), lit(64)) else lit(64)))
-    nat("reg_match", "reg_match(s, pattern)")(a => regexp_like(a(0), a(1)))
-    nat("regexp_instr", "regexp_instr(s, p[, pos[, occurrence[, return_opt]]])")(a =>
+    ft.column("reg_match", "reg_match(s, pattern)")(a => regexp_like(a(0), a(1)))
+    ft.column("regexp_instr", "regexp_instr(s, p[, pos[, occurrence[, return_opt]]])")(a =>
       MoFunctions.regexpInstr(a(0), a(1),
         if (a.length > 2) a(2) else lit(1),
         if (a.length > 3) a(3) else lit(1),
         if (a.length > 4) a(4) else lit(0)))
     // MO NULLs an empty pattern (func_regular_substr.result) where
     // Spark's kernel matches everywhere
-    nat("regexp_substr", "regexp_substr(s, p[, pos[, occurrence]])")(a =>
+    ft.column("regexp_substr", "regexp_substr(s, p[, pos[, occurrence]])")(a =>
       when(length(a(1)) === 0, lit(null).cast("string"))
         .otherwise(MoFunctions.regexpSubstr(a(0), a(1),
           if (a.length > 2) a(2) else lit(1),
           if (a.length > 3) a(3) else lit(1))))
-    nat("not_reg_match", "not_reg_match(s, pattern)")(a => !regexp_like(a(0), a(1)))
+    ft.column("not_reg_match", "not_reg_match(s, pattern)")(a => !regexp_like(a(0), a(1)))
 
     // capped string builders: the reference bounds results at
     // MaxVarcharLen = 65535 bytes — repeat/lpad/rpad go NULL past it and
@@ -141,7 +135,7 @@ object MoAliases {
     // MySQL converts a fractional count/length by ROUNDING (1.8 → 2);
     // Spark's implicit cast truncates
     def roundedLong(c: Column): Column = round(c.cast("double")).cast("long")
-    nat("repeat", "repeat(s, n) - NULL when the result exceeds 65535 bytes") { a =>
+    ft.column("repeat", "repeat(s, n) - NULL when the result exceeds 65535 bytes") { a =>
       val n = roundedLong(a(1))
       when(a(0).isNull || n.isNull, nullStr)
         .when(n <= 0L, lit(""))
@@ -149,7 +143,7 @@ object MoAliases {
         .otherwise(asCol(StringRepeat(eagerExpression(a(0)),
           eagerExpression(n.cast("int")))))
     }
-    nat("space", "space(n) - errors above 8000, '' below 0") { a =>
+    ft.column("space", "space(n) - errors above 8000, '' below 0") { a =>
       val v = a(0).cast("double")
       when(a(0).isNull, nullStr)
         .when(v < 0d, lit(""))
@@ -172,28 +166,28 @@ object MoAliases {
         .otherwise(asCol(build(eagerExpression(a(0)),
           eagerExpression(t.cast("int")), eagerExpression(pad))))
     }
-    nat("lpad", "lpad(s, len, pad) - NULL when len is out of [0, 65535]")(
+    ft.column("lpad", "lpad(s, len, pad) - NULL when len is out of [0, 65535]")(
       cappedPad(StringLPad(_, _, _)))
-    nat("rpad", "rpad(s, len, pad) - NULL when len is out of [0, 65535]")(
+    ft.column("rpad", "rpad(s, len, pad) - NULL when len is out of [0, 65535]")(
       cappedPad(StringRPad(_, _, _)))
     // MySQL byte/rounding semantics Spark's builtins differ on
     // (`func_string_char_length.result`, `func_ascii.result`,
     // `func_string_left.result` goldens)
-    nat("ascii", "ascii(s) - value of the leading BYTE (MySQL)") { a =>
+    ft.column("ascii", "ascii(s) - value of the leading BYTE (MySQL)") { a =>
       val s = a(0).cast("string")
       when(a(0).isNull, lit(null).cast("int"))
         .when(char_length(s) === 0, lit(0))
         .otherwise(conv(substring(hex(s.cast("binary")), 1, 2), 16, 10).cast("int"))
     }
-    nat("length", "length(s) - length in BYTES (MySQL); char_length counts chars")(
+    ft.column("length", "length(s) - length in BYTES (MySQL); char_length counts chars")(
       a => octet_length(a(0)))
-    nat("left", "left(s, n) - first round(n) chars") { a =>
+    ft.column("left", "left(s, n) - first round(n) chars") { a =>
       when(a(0).isNull || a(1).isNull, nullStr)
         .otherwise(asCol(Substring(eagerExpression(a(0).cast("string")),
           eagerExpression(lit(1)),
           eagerExpression(greatest(roundedLong(a(1)).cast("int"), lit(0))))))
     }
-    nat("right", "right(s, n) - last round(n) chars") { a =>
+    ft.column("right", "right(s, n) - last round(n) chars") { a =>
       val n = roundedLong(a(1)).cast("int")
       when(a(0).isNull || a(1).isNull, nullStr)
         .when(n <= 0, lit(""))
@@ -203,7 +197,7 @@ object MoAliases {
     def locate_fixed(sub: Column, s: Column): Column =
       asCol(org.apache.spark.sql.catalyst.expressions.StringLocate(
         eagerExpression(sub), eagerExpression(s), eagerExpression(lit(1))))
-    nat("elt", "elt(n, s1, s2, ...) - NULL out of range (MySQL; n rounds)") { a =>
+    ft.column("elt", "elt(n, s1, s2, ...) - NULL out of range (MySQL; n rounds)") { a =>
       val n = roundedLong(a(0)).cast("int")
       val items = a.tail.map(_.cast("string"))
       items.zipWithIndex.foldLeft(when(lit(false), nullStr)) {
@@ -213,7 +207,7 @@ object MoAliases {
     // MySQL LOCATE/INSTR/POSITION are case-INSENSITIVE on non-binary
     // strings (reference goldens `func_locate.result`); lower() is
     // length-preserving for the cased scripts so positions carry over
-    nat("locate", "locate(sub, s[, pos]) - case-insensitive (MySQL)") { a =>
+    ft.column("locate", "locate(sub, s[, pos]) - case-insensitive (MySQL)") { a =>
       val sub = lower(a(0).cast("string"))
       val s = lower(a(1).cast("string"))
       if (a.length > 2) {
@@ -228,9 +222,9 @@ object MoAliases {
             eagerExpression(pos))))
       } else locate_fixed(sub, s)
     }
-    nat("instr", "instr(s, sub) - case-insensitive (MySQL)")(a =>
+    ft.column("instr", "instr(s, sub) - case-insensitive (MySQL)")(a =>
       locate_fixed(lower(a(1).cast("string")), lower(a(0).cast("string"))))
-    nat("split_part", "split_part(s, sep, n) - NULL past the part count") { a =>
+    ft.column("split_part", "split_part(s, sep, n) - NULL past the part count") { a =>
       val parts = asCol(StringSplitSQL(eagerExpression(a(0).cast("string")),
         eagerExpression(a(1).cast("string"))))
       val n = a(2).cast("int")
@@ -252,10 +246,10 @@ object MoAliases {
       val r = asCol(build(eagerExpression(a(0).cast("double"))))
       nanvl(r, nullDbl)
     }
-    nat("sqrt", "sqrt(x) - NULL for x < 0")(domainNull(Sqrt(_)))
-    nat("asin", "asin(x) - NULL for |x| > 1")(domainNull(Asin(_)))
-    nat("acos", "acos(x) - NULL for |x| > 1")(domainNull(Acos(_)))
-    nat("atan", "atan(x) / atan(y, x) - the 2-arg form is atan2 (MySQL)") { a =>
+    ft.column("sqrt", "sqrt(x) - NULL for x < 0")(domainNull(Sqrt(_)))
+    ft.column("asin", "asin(x) - NULL for |x| > 1")(domainNull(Asin(_)))
+    ft.column("acos", "acos(x) - NULL for |x| > 1")(domainNull(Acos(_)))
+    ft.column("atan", "atan(x) / atan(y, x) - the 2-arg form is atan2 (MySQL)") { a =>
       import org.apache.spark.sql.catalyst.expressions.{Atan, Atan2}
       if (a.length == 2)
         asCol(Atan2(eagerExpression(a(0).cast("double")),
@@ -266,7 +260,7 @@ object MoAliases {
     // argument reduction for |x| ~ 1e16 (cot(cot(pi)) nests there —
     // builtin.result's t1_cot_nested_safe), fdlibm reduces exactly
     val strictTan = udf((d: Double) => StrictMath.tan(d))
-    nat("cot", "cot(x) = tan(pi/2 - x); cot(0) errors (reference momath.Cot)") { a =>
+    ft.column("cot", "cot(x) = tan(pi/2 - x); cot(0) errors (reference momath.Cot)") { a =>
       val v = a(0).cast("double")
       when(v === 0d, raise_error(lit(
         "invalid argument cot, bad value 0")).cast("double"))
@@ -275,7 +269,7 @@ object MoAliases {
     // MySQL ROUND on DOUBLE is half-even (Go math.RoundToEven via the
     // reference's float path); on exact types it stays half-away. The
     // scale argument itself rounds to an int (ROUND(x, cos(0.8)) ≡ 1).
-    nat("round", "round(x[, d]) - half-even on doubles (MySQL)") { a =>
+    ft.column("round", "round(x[, d]) - half-even on doubles (MySQL)") { a =>
       import org.apache.spark.sql.catalyst.expressions.{BRound, Round}
       import org.apache.spark.sql.types.{DoubleType, FloatType}
       val x = eagerExpression(a(0))
@@ -295,7 +289,7 @@ object MoAliases {
         catch { case _: Exception => false } // unresolved child: exact-type path
       asCol(if (isFloating) BRound(x, scale) else Round(x, scale))
     }
-    nat("log", "log([base,] x) - NULL outside the domain (incl. base 1)") { a =>
+    ft.column("log", "log([base,] x) - NULL outside the domain (incl. base 1)") { a =>
       if (a.length == 1)
         asCol(org.apache.spark.sql.catalyst.expressions.Log(
           eagerExpression(a(0).cast("double"))))
@@ -308,11 +302,11 @@ object MoAliases {
     }
 
     // --------------------------------------------------------- datetime
-    nat("curtime", "curtime()")(_ => date_format(current_timestamp(), "HH:mm:ss"))
+    ft.column("curtime", "curtime()")(_ => date_format(current_timestamp(), "HH:mm:ss"))
     // same rendering as curtime so CURTIME() = CURRENT_TIME() holds
-    nat("current_time", "current_time()")(_ =>
+    ft.column("current_time", "current_time()")(_ =>
       date_format(current_timestamp(), "HH:mm:ss"))
-    nat("utc_time", "utc_time()")(_ => date_format(current_timestamp(), "HH:mm:ss"))
+    ft.column("utc_time", "utc_time()")(_ => date_format(current_timestamp(), "HH:mm:ss"))
     // uuid codecs: kernel UDFs in MoFunctions; the optional swap flag
     // arrives as text so MO's numeric-text boolean coercion can error on
     // non-numeric spellings (func_string_uuid2)
@@ -324,33 +318,33 @@ object MoAliases {
           .isin("TRUE", "FALSE"),
         c.cast("boolean").cast("int").cast("string"))
         .otherwise(c.cast("string"))
-    nat("uuid_to_bin", "uuid_to_bin(s[, swap])")(a =>
+    ft.column("uuid_to_bin", "uuid_to_bin(s[, swap])")(a =>
       call_udf("mo_uuid_to_bin", a(0),
         if (a.length > 1) swapFlag(a(1)) else lit("0")))
-    nat("bin_to_uuid", "bin_to_uuid(b[, swap])")(a =>
+    ft.column("bin_to_uuid", "bin_to_uuid(b[, swap])")(a =>
       call_udf("mo_bin_to_uuid", a(0),
         if (a.length > 1) swapFlag(a(1)) else lit("0")))
     // MySQL SYSDATE() reads the clock PER CALL (now() is statement-
     // constant): two sysdate() around a sleep(2) must differ by 2s
     // (func_datetime_now.result) — a nondeterministic UDF keeps the
     // calls from collapsing into one common subexpression
-    nat("sysdate", "sysdate()")(_ => call_udf("mo_sysdate"))
-    nat("localtime", "localtime()")(_ => current_timestamp())
+    ft.column("sysdate", "sysdate()")(_ => call_udf("mo_sysdate"))
+    ft.column("localtime", "localtime()")(_ => current_timestamp())
     // session timezone is UTC (GraftSession) so now() IS the UTC reading
-    nat("utc_timestamp", "utc_timestamp()")(_ => current_timestamp())
-    nat("utc_date", "utc_date()")(_ => current_date())
-    nat("week", "week(d[, mode]) - MySQL calc_week, default mode 0")(a =>
+    ft.column("utc_timestamp", "utc_timestamp()")(_ => current_timestamp())
+    ft.column("utc_date", "utc_date()")(_ => current_date())
+    ft.column("week", "week(d[, mode]) - MySQL calc_week, default mode 0")(a =>
       MoFunctions.mysqlWeek(a(0), if (a.length > 1) a(1) else lit(0)))
-    nat("microsecond", "microsecond(ts)")(a =>
+    ft.column("microsecond", "microsecond(ts)")(a =>
       (unix_micros(a(0).cast("timestamp")) % 1000000L).cast("int"))
     // MySQL TO_SECONDS: seconds since year 0 (TO_SECONDS('1970-01-01') =
     // 62167219200 = 719528 days * 86400)
-    nat("to_seconds", "to_seconds(ts)")(a =>
+    ft.column("to_seconds", "to_seconds(ts)")(a =>
       to_unix_timestamp(a(0).cast("timestamp")) + 62167219200L)
     // MySQL 2-digit year expansion (0-69 → 2000s, 70-99 → 1900s); a
     // result past year 9999 (date_add wraps) or year > 9999 is NULL
     // (func_make_date.result)
-    nat("makedate", "makedate(year, dayofyear)") { a =>
+    ft.column("makedate", "makedate(year, dayofyear)") { a =>
       val y0 = a(0).cast("long")
       val y = when(y0 < 70, y0 + 2000).when(y0 < 100, y0 + 1900).otherwise(y0)
       val start = make_date(y.cast("int"), lit(1), lit(1))
@@ -358,25 +352,25 @@ object MoAliases {
       when(a(1) <= 0 || y0 < 0 || y0 > 9999 || d < start ||
         d > lit("9999-12-31").cast("date"), lit(null)).otherwise(d)
     }
-    nat("from_days", "from_days(n)")(a => MoFunctions.fromDays(a(0)))
+    ft.column("from_days", "from_days(n)")(a => MoFunctions.fromDays(a(0)))
     // odd modes are Monday-first ISO weeks (yearweek('1987-01-01',1) =
     // 198701, func_datetime_yearweek.result); even modes Sunday-first
-    nat("yearweek", "yearweek(d[, mode])")(a =>
+    ft.column("yearweek", "yearweek(d[, mode])")(a =>
       if (a.length > 1)
         when(pmod(a(1).cast("int"), lit(2)) === 1, MoFunctions.yearweekIso(a(0)))
           .otherwise(MoFunctions.yearweek(a(0)))
       else MoFunctions.yearweek(a(0)))
     // MySQL full day/month names (Spark's builtins abbreviate); strict
     // on datetime text like the other date-part functions
-    nat("dayname", "dayname(d) - full weekday name")(a =>
+    ft.column("dayname", "dayname(d) - full weekday name")(a =>
       date_format(strictTemporal(a(0)), "EEEE"))
-    nat("monthname", "monthname(d) - full month name")(a =>
+    ft.column("monthname", "monthname(d) - full month name")(a =>
       date_format(strictTemporal(a(0)), "MMMM"))
     // strict datetime validation: '…24:01:01' / '…23:01:61' / partial
     // dates are NULL in MySQL (func_last_day.result); computed inside
     // the UDF — a `last_day(...)` Column here would resolve back to
     // THIS registration and loop the analyzer
-    nat("last_day", "last_day(d) - NULL on invalid datetime text")(a =>
+    ft.column("last_day", "last_day(d) - NULL on invalid datetime text")(a =>
       MoFunctions.lastDayStrict(a(0)))
     // the date-part builtins are lenient on text in Spark ('2015-09',
     // '10000-12-21' parse); MySQL NULLs them — route STRING operands
@@ -392,24 +386,24 @@ object MoAliases {
         case _ => c
       }
     }
-    nat("month", "month(d) - strict on datetime text")(a =>
+    ft.column("month", "month(d) - strict on datetime text")(a =>
       date_format(strictTemporal(a(0)), "M").cast("int"))
-    nat("dayofyear", "dayofyear(d) - strict on datetime text")(a =>
+    ft.column("dayofyear", "dayofyear(d) - strict on datetime text")(a =>
       date_format(strictTemporal(a(0)), "D").cast("int"))
-    nat("weekday", "weekday(d) - Monday=0, strict on datetime text")(a =>
+    ft.column("weekday", "weekday(d) - Monday=0, strict on datetime text")(a =>
       ((dayofweek(strictTemporal(a(0))) + lit(5)) % 7).cast("int"))
-    nat("dayofmonth", "dayofmonth(d) - strict on datetime text")(a =>
+    ft.column("dayofmonth", "dayofmonth(d) - strict on datetime text")(a =>
       date_format(strictTemporal(a(0)), "d").cast("int"))
-    nat("day", "day(d) - strict on datetime text")(a =>
+    ft.column("day", "day(d) - strict on datetime text")(a =>
       date_format(strictTemporal(a(0)), "d").cast("int"))
-    nat("quarter", "quarter(d) - strict on datetime text")(a =>
+    ft.column("quarter", "quarter(d) - strict on datetime text")(a =>
       (floor((date_format(strictTemporal(a(0)), "M").cast("int") - 1) / 3) + 1)
         .cast("int"))
-    nat("weekofyear", "weekofyear(d) - ISO week, strict on datetime text")(a =>
+    ft.column("weekofyear", "weekofyear(d) - ISO week, strict on datetime text")(a =>
       extract(lit("week"), strictTemporal(a(0))).cast("int"))
     // MO's SOUNDEX maps '' to '0000' (func_string_soundex.result);
     // built through the Catalyst expression, never the overridden name
-    nat("soundex", "soundex(s) - '' maps to 0000") { a =>
+    ft.column("soundex", "soundex(s) - '' maps to 0000") { a =>
       val s = a(0).cast("string")
       when(length(s) === 0, lit("0000")).otherwise(asCol(
         org.apache.spark.sql.catalyst.expressions.SoundEx(eagerExpression(s))))
@@ -417,7 +411,7 @@ object MoAliases {
     // MySQL regexp_like match_type argument ('i','c','m','n' flags; the
     // last i/c wins) — a sibling UDF the 3-arg calls rename to
     // (GraftSql arity dispatch), so Spark's 2-arg builtin stays native
-    spark.udf.register("mo_regexp_like3", (s: String, p: String, f: String) => {
+    ft.udf("mo_regexp_like3", udf((s: String, p: String, f: String) => {
       if (s == null || p == null || f == null) null
       else {
         var ci = false; var dotall = false; var multi = false
@@ -434,10 +428,10 @@ object MoAliases {
         java.lang.Boolean.valueOf(
           java.util.regex.Pattern.compile(pat).matcher(s).find())
       }: java.lang.Boolean
-    })
+    }))
     // MySQL QUOTE: single-quoted literal, ' doubled, \ doubled, NULL in
     // NULL out (func_string_quote.result)
-    nat("quote", "quote(s) - SQL-quoted string literal")(a =>
+    ft.column("quote", "quote(s) - SQL-quoted string literal")(a =>
       concat(lit("'"),
         regexp_replace(regexp_replace(a(0).cast("string"),
           lit("\\\\"), lit("\\\\\\\\")), lit("'"), lit("''")), lit("'")))
@@ -445,7 +439,7 @@ object MoAliases {
     // FF FF FF FF), fractions ROUND, minimal big-endian bytes, NULL
     // args skipped (func_string_char.result; BINARY so HEX() sees raw
     // bytes)
-    spark.udf.register("mo_char_bytes", (xs: Seq[java.math.BigDecimal]) => {
+    ft.udf("mo_char_bytes", udf((xs: Seq[java.math.BigDecimal]) => {
       val out = new java.io.ByteArrayOutputStream()
       xs.foreach { v =>
         if (v != null) {
@@ -456,8 +450,8 @@ object MoAliases {
         }
       }
       out.toByteArray
-    })
-    nat("char", "char(n, ...) - bytes of each code value, NULLs skipped")(a =>
+    }))
+    ft.column("char", "char(n, ...) - bytes of each code value, NULLs skipped")(a =>
       call_udf("mo_char_bytes", array(a.map(_.cast("decimal(30,6)")): _*)))
     // MySQL ENCODE/DECODE as the reference computes them: AES-256-CTR
     // with key = SHA256(password) and IV = SHA256(password ++
@@ -474,74 +468,74 @@ object MoAliases {
         new javax.crypto.spec.IvParameterSpec(iv))
       c.doFinal(data) // CTR: encrypt == decrypt
     }
-    spark.udf.register("mo_encode", (s: String, k: String) =>
+    ft.udf("mo_encode", udf((s: String, k: String) =>
       if (s == null || k == null) null
-      else cryptAesCtr(s.getBytes("UTF-8"), k))
-    spark.udf.register("mo_decode", (b: Array[Byte], k: String) =>
+      else cryptAesCtr(s.getBytes("UTF-8"), k)))
+    ft.udf("mo_decode", udf((b: Array[Byte], k: String) =>
       if (b == null || k == null) null
-      else new String(cryptAesCtr(b, k), "UTF-8"))
-    nat("encode", "encode(str, key) - obfuscated bytes")(a =>
+      else new String(cryptAesCtr(b, k), "UTF-8")))
+    ft.column("encode", "encode(str, key) - obfuscated bytes")(a =>
       call_udf("mo_encode", a(0).cast("string"), a(1).cast("string")))
-    nat("decode", "decode(bytes, key) - inverse of encode")(a =>
+    ft.column("decode", "decode(bytes, key) - inverse of encode")(a =>
       call_udf("mo_decode", a(0).cast("binary"), a(1).cast("string")))
     // NAME_CONST(name, value) → value labeled with the name, so
     // `(select name_const('x', 1)) t` exposes column t.x
-    nat("name_const", "name_const(name, value)") { a =>
+    ft.column("name_const", "name_const(name, value)") { a =>
       val nm = try strLit(a(0)) catch { case _: Exception => null }
       if (nm == null) a(1) else a(1).as(nm)
     }
-    nat("addtime", "addtime(t, delta)")(a => MoFunctions.addTime(a(0), a(1)))
-    nat("subtime", "subtime(t, delta)")(a => MoFunctions.subTime(a(0), a(1)))
-    nat("timediff", "timediff(t1, t2)")(a => MoFunctions.timeDiff(a(0), a(1)))
-    nat("str_to_date", "str_to_date(s, mysql_fmt)")(a =>
+    ft.column("addtime", "addtime(t, delta)")(a => MoFunctions.addTime(a(0), a(1)))
+    ft.column("subtime", "subtime(t, delta)")(a => MoFunctions.subTime(a(0), a(1)))
+    ft.column("timediff", "timediff(t1, t2)")(a => MoFunctions.timeDiff(a(0), a(1)))
+    ft.column("str_to_date", "str_to_date(s, mysql_fmt)")(a =>
       if (foldableStr(a(1))) MoFunctions.moStrToDate(a(0), a(1))
       else MoFunctions.moStrToDateDyn(a(0), a(1)))
     // TO_DATE(str, fmt) ≡ STR_TO_DATE in the current reference (the
     // datetime_todate goldens keeping impossible dates are the older
     // behavior; strict wins the conflict — see moToDate for the lenient
     // variant if that flips back)
-    nat("mo_to_date", "mo_to_date(s, mysql_fmt)")(a =>
+    ft.column("mo_to_date", "mo_to_date(s, mysql_fmt)")(a =>
       if (foldableStr(a(1))) MoFunctions.moStrToDate(a(0), a(1))
       else MoFunctions.moStrToDateDyn(a(0), a(1)))
 
     // ------------------------------------------------------- predicates
-    nat("is_null", "is_null(x)")(a => a(0).isNull)
-    nat("is_not_null", "is_not_null(x)")(a => a(0).isNotNull)
-    nat("iff", "iff(cond, then, else)")(a =>
+    ft.column("is_null", "is_null(x)")(a => a(0).isNull)
+    ft.column("is_not_null", "is_not_null(x)")(a => a(0).isNotNull)
+    ft.column("iff", "iff(cond, then, else)")(a =>
       when(a(0).cast("boolean"), a(1)).otherwise(a(2)))
-    nat("istrue", "istrue(x) - NULL counts as false")(a => a(0) <=> true)
-    nat("isfalse", "isfalse(x)")(a => a(0) <=> false)
-    nat("isnottrue", "isnottrue(x)")(a => !(a(0) <=> true))
-    nat("isnotfalse", "isnotfalse(x)")(a => !(a(0) <=> false))
-    nat("isunknown", "isunknown(x)")(a => a(0).isNull)
-    nat("isnotunknown", "isnotunknown(x)")(a => a(0).isNotNull)
+    ft.column("istrue", "istrue(x) - NULL counts as false")(a => a(0) <=> true)
+    ft.column("isfalse", "isfalse(x)")(a => a(0) <=> false)
+    ft.column("isnottrue", "isnottrue(x)")(a => !(a(0) <=> true))
+    ft.column("isnotfalse", "isnotfalse(x)")(a => !(a(0) <=> false))
+    ft.column("isunknown", "isunknown(x)")(a => a(0).isNull)
+    ft.column("isnotunknown", "isnotunknown(x)")(a => a(0).isNotNull)
 
     // ---------------------------------------------------------- vectors
-    nat("l1_norm", "l1_norm(v)")(a => VectorFunctions.l1Norm(a(0)))
-    nat("l2_norm", "l2_norm(v)")(a => VectorFunctions.l2Norm(a(0)))
-    nat("l2_distance_sq", "l2_distance_sq(a, b)")(a =>
+    ft.column("l1_norm", "l1_norm(v)")(a => VectorFunctions.l1Norm(a(0)))
+    ft.column("l2_norm", "l2_norm(v)")(a => VectorFunctions.l2Norm(a(0)))
+    ft.column("l2_distance_sq", "l2_distance_sq(a, b)")(a =>
       VectorFunctions.l2DistanceSq(a(0), a(1)))
-    nat("cosine_distance", "cosine_distance(a, b)")(a =>
+    ft.column("cosine_distance", "cosine_distance(a, b)")(a =>
       VectorFunctions.cosineDistance(a(0), a(1)))
-    nat("normalize_l2", "normalize_l2(v)")(a => VectorFunctions.normalizeL2(a(0)))
-    nat("subvector", "subvector(v, start[, len])")(a =>
+    ft.column("normalize_l2", "normalize_l2(v)")(a => VectorFunctions.normalizeL2(a(0)))
+    ft.column("subvector", "subvector(v, start[, len])")(a =>
       VectorFunctions.subvectorCol(a(0), a(1),
         if (a.length > 2) Some(a(2)) else None))
-    nat("summation", "summation(v)")(a => VectorFunctions.summation(a(0)))
-    nat("vector_dims", "vector_dims(v)")(a => VectorFunctions.vectorDims(a(0)))
+    ft.column("summation", "summation(v)")(a => VectorFunctions.summation(a(0)))
+    ft.column("vector_dims", "vector_dims(v)")(a => VectorFunctions.vectorDims(a(0)))
 
     // ------------------------------------------------------- misc codecs
     // octets reject leading zeros ('192.168.01.1' is NOT ipv4 —
     // func_misc_is_ipv4.result)
-    nat("is_ipv4", "is_ipv4(s)")(a => MoFunctions.isIpv4(a(0)))
-    nat("is_uuid", "is_uuid(s)")(a => MoFunctions.isUuid(a(0)))
+    ft.column("is_ipv4", "is_ipv4(s)")(a => MoFunctions.isIpv4(a(0)))
+    ft.column("is_uuid", "is_uuid(s)")(a => MoFunctions.isUuid(a(0)))
     // uuid_to_bin / bin_to_uuid registered above with the optional swap
     // flag (the kernel UDFs accept every MySQL uuid spelling)
-    nat("serial", "serial(c1, c2, ...) - NULL-propagating composite key")(a =>
+    ft.column("serial", "serial(c1, c2, ...) - NULL-propagating composite key")(a =>
       MoFunctions.serial(a))
-    nat("serial_full", "serial_full(c1, c2, ...) - NULL-preserving composite key")(a =>
+    ft.column("serial_full", "serial_full(c1, c2, ...) - NULL-preserving composite key")(a =>
       MoFunctions.serialFull(a))
-    nat("serial_extract", "serial_extract(s, idx)")(a =>
+    ft.column("serial_extract", "serial_extract(s, idx)")(a =>
       MoFunctions.serialExtract(a(0), intLit(a(1))))
     // MySQL group_concat(e1, e2, ...) concatenates the expressions per
     // row and joins rows with ',' — a separator is only ever the
@@ -550,7 +544,7 @@ object MoAliases {
     // Without an ORDER BY the reference emits scan order; a sorted join
     // is the deterministic stand-in an oracle can reproduce
     // (function_group_concat.result goldens list values ascending).
-    nat("group_concat", "group_concat(e1, e2, ...) - sorted join of the row-wise concat")({ a =>
+    ft.column("group_concat", "group_concat(e1, e2, ...) - sorted join of the row-wise concat")({ a =>
       val v =
         if (a.length == 1) a(0).cast("string")
         else concat(a.map(_.cast("string")): _*)
@@ -561,7 +555,7 @@ object MoAliases {
     // MySQL CONV with full sign/base semantics (negative bases are
     // signed views of the unsigned-64 domain; overflow clamps) — Spark's
     // conv keeps -1 as -1 and misses the +/- from-base rules
-    nat("conv", "conv(s, from_base, to_base) - MySQL two's-complement semantics")(a =>
+    ft.column("conv", "conv(s, from_base, to_base) - MySQL two's-complement semantics")(a =>
       MoFunctions.moConv(a(0), a(1), a(2)))
   }
 }

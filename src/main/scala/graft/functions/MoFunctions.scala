@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * 562 ids in `function_id.go:809`). Spark built-ins cover most families
   * (SURVEY §2.13) — this module fills the gaps as *expression combinators*
   * (stay inside whole-stage codegen; no UDF serialization) and registers
-  * SQL names for `spark.sql` users via `registerAll`.
+  * SQL names for `spark.sql` users via `functions`.
   */
 object MoFunctions {
 
@@ -955,7 +955,7 @@ object MoFunctions {
       s.cast("decimal(38,30)"), lit(scale), lit(truncH), lit(truncM))
 
   /** MAKETIME over integer columns (Column API; SQL dispatch with
-    * declared-scale rendering lives in registerAll).
+    * declared-scale rendering lives in `functions`).
     */
   def makeTime(h: Column, m: Column, s: Column): Column =
     makeTimeCall(h, m, s, 0, truncH = false, truncM = false)
@@ -1283,23 +1283,17 @@ object MoFunctions {
         "\u0001\u0003", "\u0001"))
   }
 
-  /** Register SQL names usable from `spark.sql`. Each name resolves to
-    * the SAME expression tree the Column API above builds (stays in
-    * whole-stage codegen — no ScalaUDF on the SQL surface); only the
-    * byte-level IPv6 helpers and dynamic (non-literal) format arguments
-    * fall back to a UDF.
+  /** SQL names usable from `spark.sql`. Each name resolves to the SAME
+    * expression tree the Column API above builds (stays in whole-stage
+    * codegen — no ScalaUDF on the SQL surface); only the byte-level IPv6
+    * helpers and dynamic (non-literal) format arguments fall back to a
+    * UDF.
     */
-  def registerAll(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => asCol, eagerExpression}
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    import org.apache.spark.sql.GraftColumnBridge.eagerExpression
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
 
-    def nat(name: String, usage: String)(build: Seq[Column] => Column): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "built-in"),
-        (args: Seq[Expression]) => eagerExpression(build(args.map(asCol))))
     def strLit(e: Column): Option[String] = eagerExpression(e) match {
       case Literal(s: UTF8String, _) => Some(s.toString)
       case _ => None
@@ -1316,7 +1310,7 @@ object MoFunctions {
     val dynGetFormat = udf((k: String, std: String) =>
       if (k == null || std == null) null else getFormat(k, std).orNull)
 
-    nat("mo_date_format", "mo_date_format(ts, mysql_fmt)") { args =>
+    ft.column("mo_date_format", "mo_date_format(ts, mysql_fmt)") { args =>
       strLit(args(1)) match {
         // an empty format is NULL, not '' (func_date_format.result)
         case Some("") => lit(null).cast("string")
@@ -1324,23 +1318,23 @@ object MoFunctions {
         case None => dynDateFormat(args(0), args(1))
       }
     }
-    nat("to_days", "to_days(date)")(args => toDays(args(0)))
-    nat("period_add", "period_add(yyyymm, n)")(args => periodAdd(args(0), args(1)))
-    nat("period_diff", "period_diff(p1, p2)")(args => periodDiff(args(0), args(1)))
-    nat("inet_aton", "inet_aton(ip)")(args => inetAton(args(0)))
-    nat("inet_ntoa", "inet_ntoa(n)")(args => inetNtoa(args(0)))
-    nat("sec_to_time", "sec_to_time(seconds)")(args => secToTimeExact(args(0)))
-    nat("time_to_sec", "time_to_sec(time)")(args => timeToSec(args(0)))
-    nat("mo_extract", "mo_extract(unit, s) - composite EXTRACT units")(args =>
+    ft.column("to_days", "to_days(date)")(args => toDays(args(0)))
+    ft.column("period_add", "period_add(yyyymm, n)")(args => periodAdd(args(0), args(1)))
+    ft.column("period_diff", "period_diff(p1, p2)")(args => periodDiff(args(0), args(1)))
+    ft.column("inet_aton", "inet_aton(ip)")(args => inetAton(args(0)))
+    ft.column("inet_ntoa", "inet_ntoa(n)")(args => inetNtoa(args(0)))
+    ft.column("sec_to_time", "sec_to_time(seconds)")(args => secToTimeExact(args(0)))
+    ft.column("time_to_sec", "time_to_sec(time)")(args => timeToSec(args(0)))
+    ft.column("mo_extract", "mo_extract(unit, s) - composite EXTRACT units")(args =>
       moExtractU(args(0).cast("string"), args(1).cast("string")))
-    nat("mo_time", "mo_time(s) - MySQL CAST(x AS TIME) normalization")(args =>
+    ft.column("mo_time", "mo_time(s) - MySQL CAST(x AS TIME) normalization")(args =>
       moTimeU(args(0).cast("string")))
     // MySQL's UNIX_TIMESTAMP range is [epoch, 3001-01-19 03:14:07 UTC);
     // outside it (incl. pre-1970) is NULL, as is invalid datetime TEXT
     // ('2021-02-29') — func_datetime_unixtime.result. Computed through
     // to_unix_timestamp/try_to_timestamp so the override never
     // self-resolves.
-    nat("unix_timestamp", "unix_timestamp([ts]) - MySQL range guards") { args =>
+    ft.column("unix_timestamp", "unix_timestamp([ts]) - MySQL range guards") { args =>
       if (args.isEmpty) to_unix_timestamp(current_timestamp())
       else if (args.length > 1) to_unix_timestamp(args(0), args(1))
       else {
@@ -1354,7 +1348,7 @@ object MoFunctions {
         when(u < 0L || u >= 32536771200L, lit(null)).otherwise(u)
       }
     }
-    nat("from_unixtime", "from_unixtime(n[, fmt]) - MySQL range guards") { args =>
+    ft.column("from_unixtime", "from_unixtime(n[, fmt]) - MySQL range guards") { args =>
       val n = args(0).cast("decimal(26,6)")
       val ts = timestamp_seconds(n)
       val body =
@@ -1367,11 +1361,11 @@ object MoFunctions {
     }
     // CAST(TIMEDIFF(…) AS CHAR) renders TIME(6): a fraction-free diff
     // gains '.000000' (func_datetime_timediff.result mixed_format1)
-    nat("mo_timediff_char", "mo_timediff_char(t1, t2)") { args =>
+    ft.column("mo_timediff_char", "mo_timediff_char(t1, t2)") { args =>
       val d = timeDiff(args(0), args(1))
       when(instr(d, ".") > 0, d).otherwise(concat(d, lit(".000000")))
     }
-    nat("maketime", "maketime(h, m, s)") { args =>
+    ft.column("maketime", "maketime(h, m, s)") { args =>
       def typeOf(i: Int) =
         try Some(eagerExpression(args(i)).dataType)
         catch { case _: Exception => None } // unresolved column refs
@@ -1392,13 +1386,13 @@ object MoFunctions {
       makeTimeCall(args(0), args(1), args(2), sc,
         truncH = isString(0), truncM = isString(1))
     }
-    nat("get_format", "get_format(kind, standard)") { args =>
+    ft.column("get_format", "get_format(kind, standard)") { args =>
       (strLit(args(0)), strLit(args(1))) match {
         case (Some(k), Some(std)) => lit(getFormat(k, std).orNull)
         case _ => dynGetFormat(args(0), args(1))
       }
     }
-    nat("convert_tz", "convert_tz(ts, from_tz, to_tz)")(args =>
+    ft.column("convert_tz", "convert_tz(ts, from_tz, to_tz)")(args =>
       convertTzExactU(args(0).cast("string"), args(1).cast("string"),
         args(2).cast("string")))
     // byte-level codecs: no expression-combinator equivalent
@@ -1406,7 +1400,7 @@ object MoFunctions {
     // (flush/checkpoint are storage maintenance; a no-op here). Output
     // matches the reference's JSON envelope verbatim
     // (vector_ivfflat_null_entry_panic_minimal.result:13-21).
-    spark.udf.register("mo_ctl", (_: String, cmd: String, arg: String) => {
+    ft.udf("mo_ctl", udf((_: String, cmd: String, arg: String) => {
       // inspect objprune: the prune status message (func_purge_log.sql
       // masks digits, so fixed counters render faithfully)
       if (cmd != null && cmd.equalsIgnoreCase("inspect") && arg != null &&
@@ -1420,43 +1414,43 @@ object MoFunctions {
         s"{\n  \"method\": \"$m\",\n  \"result\": [\n    {\n      " +
           "\"returnStr\": \"OK\"\n    }\n  ]\n}"
       }
-    })
+    }))
     // fulltext_index_tokenize TVF kernel (`pkg/fulltext/tokenize`,
     // gojieba.sql:429): parser comes from the JSON options argument
-    spark.udf.register("mo_ft_tokenize", (optsJson: String, text: String) => {
+    ft.udf("mo_ft_tokenize", udf((optsJson: String, text: String) => {
       val parser =
         if (optsJson != null && optsJson.contains("gojieba")) "gojieba" else "simple"
       if (text == null) Seq.empty[String]
       else if (parser == "gojieba") graft.fulltext.CjkSegmenter.tokenize(text)
       else text.toLowerCase.split("[^\\p{L}\\p{N}]+").toSeq.filter(_.nonEmpty)
-    })
-    spark.udf.register("inet6_aton", inet6AtonBytes _)
-    spark.udf.register("inet6_ntoa", inet6NtoaStr _)
+    }))
+    ft.udf("inet6_aton", udf(inet6AtonBytes _))
+    ft.udf("inet6_ntoa", udf(inet6NtoaStr _))
     // prefix/suffix predicates return MySQL 1/0 (func_string_startsWith).
     // Registered under mo_-prefixed names ONLY: a session UDF named
     // "startswith" shadows Spark 4.1's boolean builtin for every
     // Column.startsWith call site (the Column API resolves by name
     // through the function registry). The MySQL-facing spelling is
     // rewritten to these names by the conformance shim.
-    spark.udf.register("mo_startswith", (s: String, p: String) =>
+    ft.udf("mo_startswith", udf((s: String, p: String) =>
       if (s == null || p == null) null
-      else java.lang.Integer.valueOf(if (s.startsWith(p)) 1 else 0))
-    spark.udf.register("mo_endswith", (s: String, p: String) =>
+      else java.lang.Integer.valueOf(if (s.startsWith(p)) 1 else 0)))
+    ft.udf("mo_endswith", udf((s: String, p: String) =>
       if (s == null || p == null) null
-      else java.lang.Integer.valueOf(if (s.endsWith(p)) 1 else 0))
+      else java.lang.Integer.valueOf(if (s.endsWith(p)) 1 else 0)))
     // SLEEP(n): MO's argument errors (func_sleep.result); returns 0
-    spark.udf.register("sleep", (d: java.lang.Double) => {
+    ft.udf("sleep", udf((d: java.lang.Double) => {
       if (d == null) throw new RuntimeException(
         "invalid argument sleep, bad value input contains null")
       if (d.doubleValue() < 0) throw new RuntimeException(
         "invalid argument sleep, bad value input contains negative")
       Thread.sleep((d.doubleValue() * 1000).toLong)
       0L
-    })
+    }))
     // MO_LOG_DATE: first `\d{1,4}/\d{1,2}/\d{1,2}` substring parsed as
     // %Y/%m/%d with MySQL 2-digit-year mapping; NULL when absent/invalid
     // (reference func_builtin.go:1278 builtInMoLogDate)
-    spark.udf.register("mo_log_date", (s: String) =>
+    ft.udf("mo_log_date", udf((s: String) =>
       if (s == null) null
       else moLogDateRe.findFirstIn(s).flatMap { m =>
         val parts = m.split("/")
@@ -1471,10 +1465,10 @@ object MoFunctions {
           d <= dim(mm - 1))
           Some(java.sql.Date.valueOf(f"$y%04d-$mm%02d-$d%02d"))
         else None
-      }.orNull)
+      }.orNull))
     // UUID_TO_BIN / BIN_TO_UUID kernels (MoAliases wires the optional
     // swap flag): swap = time_hi, time_mid, time_low reorder
-    spark.udf.register("mo_uuid_to_bin", (s: String, flag: String) => {
+    ft.udf("mo_uuid_to_bin", udf((s: String, flag: String) => {
       if (s == null || flag == null) null
       else {
         val hexs = canonUuid(s).getOrElse(throw new RuntimeException(
@@ -1486,8 +1480,8 @@ object MoFunctions {
           else hexs
         ordered.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
       }
-    })
-    spark.udf.register("mo_bin_to_uuid", (b: Array[Byte], flag: String) => {
+    }))
+    ft.udf("mo_bin_to_uuid", udf((b: Array[Byte], flag: String) => {
       if (b == null || flag == null) null
       else {
         val hexs = b.map("%02x".format(_)).mkString
@@ -1502,11 +1496,11 @@ object MoFunctions {
           s"${plain.substring(12, 16)}-${plain.substring(16, 20)}-" +
           s"${plain.substring(20)}"
       }
-    })
+    }))
     // PURGE_LOG (reference func_builtin.go builtInPurgeLog): sys-only
     // log-table maintenance; ≤24h targets take the delete path
     // ('success'), older ones the prune path (the inspect message)
-    spark.udf.register("purge_log", (tbl: String, date: String) => {
+    ft.udf("purge_log", udf((tbl: String, date: String) => {
       if (tbl == null || date == null) null
       else if (!date.matches("""\d{4}-\d{1,2}-\d{1,2}.*""")) null
       else if (tbl.contains(",")) throw new RuntimeException(
@@ -1522,13 +1516,13 @@ object MoFunctions {
           else prunedMsg(tbl.toLowerCase)
         }.orNull
       }
-    })
+    }))
     // user locks (GET_LOCK family): a JVM-global name → (holder, count)
     // registry; one session here, so the holder is the fixed
     // connection_id. Cross-session contention lives in the reference's
     // lock service — out of scope for a single-session engine.
-    spark.udf.register("connection_id", () => ConnId)
-    spark.udf.register("get_lock", (name: String, t: java.lang.Double) => {
+    ft.udf("connection_id", udf(() => ConnId))
+    ft.udf("get_lock", udf((name: String, t: java.lang.Double) => {
       if (name == null || t == null) null // MySQL: NULL args → NULL
       else {
         userLocks.updateWith(name.toLowerCase) {
@@ -1539,8 +1533,8 @@ object MoFunctions {
         java.lang.Long.valueOf(
           if (userLocks(name.toLowerCase)._1 == ConnId) 1L else 0L)
       }
-    })
-    spark.udf.register("release_lock", (name: String) => {
+    }))
+    ft.udf("release_lock", udf((name: String) => {
       if (name == null) null
       else userLocks.get(name.toLowerCase) match {
         case Some((h, c)) if h == ConnId =>
@@ -1550,36 +1544,36 @@ object MoFunctions {
         case Some(_) => java.lang.Long.valueOf(0L)
         case None => null // never held: NULL (MySQL contract)
       }
-    })
-    spark.udf.register("is_free_lock", (name: String) =>
+    }))
+    ft.udf("is_free_lock", udf((name: String) =>
       if (name == null) null
       else java.lang.Long.valueOf(
-        if (userLocks.contains(name.toLowerCase)) 0L else 1L))
-    spark.udf.register("is_used_lock", (name: String) =>
+        if (userLocks.contains(name.toLowerCase)) 0L else 1L)))
+    ft.udf("is_used_lock", udf((name: String) =>
       if (name == null) null
       else userLocks.get(name.toLowerCase)
-        .map(h => java.lang.Long.valueOf(h._1)).orNull)
-    spark.udf.register("release_all_locks", () => {
+        .map(h => java.lang.Long.valueOf(h._1)).orNull))
+    ft.udf("release_all_locks", udf(() => {
       // MySQL counts RELEASES, not names: a lock acquired 3× contributes 3
       val mine = userLocks.filter(_._2._1 == ConnId).toSeq
       mine.foreach { case (k, _) => userLocks.remove(k) }
       java.lang.Long.valueOf(mine.map(_._2._2.toLong).sum)
-    })
+    }))
     // SYSDATE kernel: per-call clock read (MoAliases wires the name)
-    spark.udf.register("mo_sysdate",
+    ft.udf("mo_sysdate",
       udf(() => new java.sql.Timestamp(System.currentTimeMillis()))
         .asNondeterministic())
     // account introspection (account_info_func.result): the fixed sys
     // session identity — sys/0, dump/1, moadmin/0
-    spark.udf.register("current_account_name", () => "sys")
-    spark.udf.register("current_account_id", () => 0)
-    spark.udf.register("current_user_name", () => "dump")
-    spark.udf.register("current_user_id", () => 1)
-    spark.udf.register("current_role_name", () => "moadmin")
-    spark.udf.register("current_role_id", () => 0)
+    ft.udf("current_account_name", udf(() => "sys"))
+    ft.udf("current_account_id", udf(() => 0))
+    ft.udf("current_user_name", udf(() => "dump"))
+    ft.udf("current_user_id", udf(() => 1))
+    ft.udf("current_role_name", udf(() => "moadmin"))
+    ft.udf("current_role_id", udf(() => 0))
     // MySQL COMPRESS: 4-byte little-endian uncompressed length + zlib
     // stream (reference pkg/sql/plan/function/func_builtin_compress.go)
-    spark.udf.register("compress", (s: String) =>
+    ft.udf("compress", udf((s: String) =>
       if (s == null) null
       else {
         val in = s.getBytes("UTF-8")
@@ -1592,8 +1586,8 @@ object MoFunctions {
         while (!d.finished()) out.write(buf, 0, d.deflate(buf))
         d.end()
         out.toByteArray
-      })
-    spark.udf.register("uncompress", (b: Array[Byte]) =>
+      }))
+    ft.udf("uncompress", udf((b: Array[Byte]) =>
       if (b == null) null
       else if (b.length < 5) ""
       // declared length 0: an empty deflate stream (JDK's Inflater
@@ -1611,7 +1605,7 @@ object MoFunctions {
         }
         inf.end()
         new String(out.toByteArray, "UTF-8")
-      } catch { case _: Exception => null })
+      } catch { case _: Exception => null }))
     // MySQL AES_ENCRYPT/AES_DECRYPT: aes-128-ecb with the cyclic-XOR
     // key fold (key bytes XOR into a 16-byte buffer)
     def mysqlAesKeyN(k: String, n: Int): javax.crypto.spec.SecretKeySpec = {
@@ -1623,42 +1617,42 @@ object MoFunctions {
     }
     def mysqlAesKey(k: String): javax.crypto.spec.SecretKeySpec =
       mysqlAesKeyN(k, 16)
-    spark.udf.register("aes_encrypt", (s: String, k: String) =>
+    ft.udf("aes_encrypt", udf((s: String, k: String) =>
       if (s == null || k == null) null
       else {
         val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
         c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKey(k))
         c.doFinal(s.getBytes("UTF-8"))
-      })
-    spark.udf.register("aes_decrypt", (b: Array[Byte], k: String) =>
+      }))
+    ft.udf("aes_decrypt", udf((b: Array[Byte], k: String) =>
       if (b == null || k == null) null
       else try {
         val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
         c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKey(k))
         new String(c.doFinal(b), "UTF-8")
-      } catch { case _: Exception => null })
+      } catch { case _: Exception => null }))
     // the reference's 3-arg (IV) form is its aes-256-cbc mode: the key
     // XOR-folds into 32 bytes (func_binary.go generateAESKey), first 16
     // IV bytes seed CBC, PKCS7 padding
-    spark.udf.register("mo_aes_encrypt_cbc", (v: String, k: String, iv: String) =>
+    ft.udf("mo_aes_encrypt_cbc", udf((v: String, k: String, iv: String) =>
       if (v == null || k == null || iv == null) null
       else {
         val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
         c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKeyN(k, 32),
           new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
         c.doFinal(v.getBytes("UTF-8"))
-      })
-    spark.udf.register("mo_aes_decrypt_cbc", (b: Array[Byte], k: String, iv: String) =>
+      }))
+    ft.udf("mo_aes_decrypt_cbc", udf((b: Array[Byte], k: String, iv: String) =>
       if (b == null || k == null || iv == null) null
       else try {
         val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
         c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKeyN(k, 32),
           new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
         new String(c.doFinal(b), "UTF-8")
-      } catch { case _: Exception => null })
+      } catch { case _: Exception => null }))
     // MySQL TRIM(remstr FROM str): strips the exact substring
     // repeatedly from the chosen end(s)
-    spark.udf.register("mo_trim_str", (mode: String, rem: String, str: String) =>
+    ft.udf("mo_trim_str", udf((mode: String, rem: String, str: String) =>
       if (rem == null || str == null) null
       else if (rem.isEmpty) str
       else {
@@ -1669,14 +1663,14 @@ object MoFunctions {
         if (m == "both" || m == "trailing")
           while (out.endsWith(rem)) out = out.substring(0, out.length - rem.length)
         out
-      })
+      }))
     // MO packed-tuple display: NULL/garbage → NULL, '' → '()' (the real
     // decoder lives with the hidden-index layout we don't materialize)
-    spark.udf.register("mo_tuple_expr", (s: String) =>
+    ft.udf("mo_tuple_expr", udf((s: String) =>
       if (s == null) null
       else if (s.isEmpty) "()"
-      else null)
-    spark.udf.register("is_ipv6", (s: String) => isIpv6Str(s))
+      else null))
+    ft.udf("is_ipv6", udf((s: String) => isIpv6Str(s)))
     // load_file(datalink): the reference reads the URI's target and
     // returns its contents (`pkg/sql/plan/function/func_mo.go` LoadFile;
     // fulltext/datalink.sql, array_vecnarrow_export.sql). file:// and
@@ -1685,7 +1679,7 @@ object MoFunctions {
     // datalink contract (small documents), not a bulk-scan path.
     // save_file(datalink, text): write-side of the datalink pair —
     // returns the byte count written (func_load_file_datalink.sql)
-    spark.udf.register("save_file", (u0: String, content: String) => {
+    ft.udf("save_file", udf((u0: String, content: String) => {
       if (u0 == null || content == null) null
       else {
         val base = u0.split('?').head
@@ -1704,8 +1698,8 @@ object MoFunctions {
         java.nio.file.Files.write(p, b)
         java.lang.Long.valueOf(b.length.toLong)
       }
-    })
-    spark.udf.register("load_file", (u0: String) => {
+    }))
+    ft.udf("load_file", udf((u0: String) => {
       if (u0 == null) null
       else {
         // BLOB semantics: raw bytes (LENGTH counts bytes, not decoded
@@ -1738,6 +1732,6 @@ object MoFunctions {
           if (b.isEmpty) null else b
         }
       }
-    })
+    }))
   }
 }

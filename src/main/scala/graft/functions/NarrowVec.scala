@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 
 /** Narrow vector types — the reference's quantized embedding columns
@@ -200,32 +199,27 @@ object NarrowVec {
     case _ => -1
   }
 
-  /** Register the UDFs on this session (idempotent: the session's own
-    * function registry is the flag).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("mo_vec_text_d"))) return
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     // float-returning variants for every kind but f64: downstream
     // arithmetic then runs at FLOAT32 precision, which is what the
     // reference's vecf32 kernels do (vector_ivf_quant_boundary.result
     // pins an int8 round that only falls out of f32 intermediates)
-    spark.udf.register("mo_vec_parse_f",
+    ft.udf("mo_vec_parse_f",
       udf((s: String, kind: String, dim: Int) =>
         Option(parse(s, kind, dim)).map(_.map(_.toFloat)).orNull))
-    spark.udf.register("mo_vec_parse_d",
+    ft.udf("mo_vec_parse_d",
       udf((s: String, kind: String, dim: Int) => parse(s, kind, dim)))
-    spark.udf.register("mo_vec_quant_f",
+    ft.udf("mo_vec_quant_f",
       udf((xs: Seq[Double], kind: String, dim: Int) =>
         Option(quant(xs, kind, dim)).map(_.map(_.toFloat)).orNull))
-    spark.udf.register("mo_vec_quant_d",
+    ft.udf("mo_vec_quant_d",
       udf((xs: Seq[Double], kind: String, dim: Int) => quant(xs, kind, dim)))
-    spark.udf.register("mo_vec_store",
+    ft.udf("mo_vec_store",
       udf((xs: Seq[Double], kind: String, dim: Int) => strictStore(xs, kind, dim)))
-    spark.udf.register("mo_vec_text_f",
+    ft.udf("mo_vec_text_f",
       udf((xs: Seq[Float], sep: String) =>
         if (xs == null) null else xs.map(goFloat).mkString("[", sep, "]")))
-    spark.udf.register("mo_vec_text_d",
+    ft.udf("mo_vec_text_d",
       udf((xs: Seq[Double], sep: String) =>
         if (xs == null) null else xs.map(goDouble).mkString("[", sep, "]")))
   }

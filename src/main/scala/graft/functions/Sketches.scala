@@ -1,6 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, ShiftRight, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Re-aggregatable sketch aggregates — the reference's
   * `bitmap_construct_agg`/`bitmap_or_agg`/`bitmap_count`
@@ -73,35 +76,50 @@ object Sketches {
   def hll_merge(c: Column): Column =
     asCol(HllMergeAggExpr(asExpr(c)).toAggregateExpression())
 
-  /** Register scalar + aggregate SQL names. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+  def bitmap_count(c: Column): Column = asCol(SketchScalar("bitmap_count", asExpr(c)))
+  def hll_cardinality(c: Column): Column = asCol(SketchScalar("hll_cardinality", asExpr(c)))
+
+  /** Scalar + aggregate SQL names. */
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     // aggregate names resolve to the native AggregateFunctions (the
     // analyzer wraps them in AggregateExpression); builders keep the
     // SAME names/semantics the reference registry exposes
-    def agg(name: String, usage: String)(build: Expression => Expression): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "built-in"),
-        (args: Seq[Expression]) => build(args.head))
-    agg("bitmap_construct_agg", "bitmap_construct_agg(bigint)")(BitmapConstructAggExpr(_))
-    agg("bitmap_or_agg", "bitmap_or_agg(binary)")(BitmapOrAggExpr(_))
-    agg("hll_add", "hll_add(bigint)")(HllAddAggExpr(_))
-    agg("hll_merge", "hll_merge(binary)")(HllMergeAggExpr(_))
+    ft.native("bitmap_construct_agg", "bitmap_construct_agg(bigint)")(a => BitmapConstructAggExpr(a.head))
+    ft.native("bitmap_or_agg", "bitmap_or_agg(binary)")(a => BitmapOrAggExpr(a.head))
+    ft.native("hll_add", "hll_add(bigint)")(a => HllAddAggExpr(a.head))
+    ft.native("hll_merge", "hll_merge(binary)")(a => HllMergeAggExpr(a.head))
     // reference registry spells the aggregate forms with _agg
-    agg("hll_add_agg", "hll_add_agg(bigint)")(HllAddAggExpr(_))
-    agg("hll_merge_agg", "hll_merge_agg(binary)")(HllMergeAggExpr(_))
-    spark.udf.register("bitmap_count", (b: Array[Byte]) => bitmapCount(b))
-    spark.udf.register("hll_cardinality", (b: Array[Byte]) =>
-      if (b == null) null
-      else java.lang.Long.valueOf(hllEstimate(b)))
-    // the reference's buckets are 0-BASED val>>15 / val&32767
-    // (func_bitmap2.result: 65536 → bucket 2); Spark 4's builtins of the
-    // same names are 1-based, so explicit registrations shadow them
-    spark.udf.register("bitmap_bucket_number", (v: java.lang.Long) =>
-      if (v == null) null else java.lang.Long.valueOf(v.longValue >> 15))
-    spark.udf.register("bitmap_bit_position", (v: java.lang.Long) =>
-      if (v == null) null else java.lang.Long.valueOf(v.longValue & 32767L))
+    ft.native("hll_add_agg", "hll_add_agg(bigint)")(a => HllAddAggExpr(a.head))
+    ft.native("hll_merge_agg", "hll_merge_agg(binary)")(a => HllMergeAggExpr(a.head))
+    Seq("bitmap_count", "hll_cardinality", "bitmap_bucket_number", "bitmap_bit_position")
+      .foreach(name => ft.native(name, s"$name(x)")(a => SketchScalar(name, a.head)))
   }
+}
+
+/** The sketch scalars as native expressions. Analysis, column names and
+  * the analyzed plan show `name(child)`; the optimizer plans the
+  * replacement:
+  *  - `bitmap_count(b)`: set bits of a bitmap sketch; NULL counts 0;
+  *  - `hll_cardinality(b)`: the HLL estimate; NULL stays NULL;
+  *  - `bitmap_bucket_number(v)` / `bitmap_bit_position(v)`: the
+  *    reference's 0-BASED `v >> 15` / `v & 32767` (func_bitmap2.result:
+  *    65536 → bucket 2, position 0). Spark 4's built-ins of the same
+  *    names are 1-based, so these shadow them.
+  */
+case class SketchScalar(name: String, child: Expression)
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
+  private def onSketch = name == "bitmap_count" || name == "hll_cardinality"
+  override def prettyName: String = name
+  override def flatArguments: Iterator[Any] = Iterator(child)
+  override def inputTypes: Seq[DataType] = Seq(if (onSketch) BinaryType else LongType)
+  override def dataType: DataType = LongType
+  override lazy val replacement: Expression = name match {
+    case "bitmap_count" => StaticInvoke(Sketches.getClass, LongType, "bitmapCount",
+      Seq(child), Seq(BinaryType), propagateNull = false, returnNullable = false)
+    case "hll_cardinality" => StaticInvoke(Sketches.getClass, LongType, "hllEstimate",
+      Seq(child), Seq(BinaryType))
+    case "bitmap_bucket_number" => ShiftRight(child, Literal(15))
+    case "bitmap_bit_position" => BitwiseAnd(child, Literal(32767L))
+  }
+  override protected def withNewChildInternal(c: Expression): SketchScalar = copy(child = c)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable
 
@@ -1105,8 +1105,8 @@ object Starlark {
     catch { case _: Exception => null }
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("starlark", starlarkEval _)
-    spark.udf.register("try_starlark", tryStarlarkEval _)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("starlark", udf(starlarkEval _))
+    ft.udf("try_starlark", udf(tryStarlarkEval _))
   }
 }

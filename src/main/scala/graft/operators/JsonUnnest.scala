@@ -1,7 +1,7 @@
 package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ListBuffer
@@ -163,15 +163,15 @@ object JsonUnnest {
   case class TfRow(col: String, seq: Int, key: String, path: String,
       index: java.lang.Integer, value: String, this_json: String)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("unnest_json",
-      (doc: String, path: String, outer: Boolean) => unnestSeq(doc, path, outer))
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("unnest_json",
+      udf((doc: String, path: String, outer: Boolean) => unnestSeq(doc, path, outer)))
     // backing UDF for the SQL `FROM unnest(...)` surface
     // (MySqlCompat.unnestTvf rewrites to `inline(unnest_table(...))`)
-    spark.udf.register("unnest_table",
-      (label: String, doc: String, path: String, outer: Boolean) =>
+    ft.udf("unnest_table",
+      udf((label: String, doc: String, path: String, outer: Boolean) =>
         unnestSeq(doc, path, outer).zipWithIndex.map { case (e, i) =>
           TfRow(label, i, e.key, e.path, e.index, e.value, e.this_json)
-        })
+        }))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** `llm_chat` / `llm_embedding` — the reference's LLM builtins
@@ -207,8 +207,8 @@ object Llm {
   def llm_embedding(server: Column, addr: Column, model: Column, options: Column,
       text: Column): Column = embedU(server, addr, model, options, text)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("llm_chat", chatOnce _)
-    spark.udf.register("llm_embedding", embedOnce _)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    ft.udf("llm_chat", udf(chatOnce _))
+    ft.udf("llm_embedding", udf(embedOnce _))
   }
 }

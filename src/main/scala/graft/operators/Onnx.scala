@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** `onnx_run(model, input, input_shape, output_shape)` — the reference's
@@ -112,6 +112,6 @@ object Onnx {
   def onnx_run(model: Column, input: Column, inShape: Column, outShape: Column): Column =
     runU(model, input, inShape, outShape)
 
-  def registerAll(spark: SparkSession): Unit =
-    spark.udf.register("onnx_run", runOnce _)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit =
+    ft.udf("onnx_run", udf(runOnce _))
 }

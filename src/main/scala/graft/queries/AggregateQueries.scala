@@ -96,12 +96,12 @@ object AggregateQueries extends QueryModule {
       .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(Sketches.bitmap_construct_agg(col("o_custkey")).as("bm"))
-    val bmCount = udf((b: Array[Byte]) => Sketches.bitmapCount(b))
     val perSegCounts = perSeg
-      .select(col("c_mktsegment"), bmCount(col("bm")).as("n_distinct"))
+      .select(col("c_mktsegment"), Sketches.bitmap_count(col("bm")).as("n_distinct"))
     val total = perSeg
       .agg(Sketches.bitmap_or_agg(col("bm")).as("merged"))
-      .select(lit("__ALL__").as("c_mktsegment"), bmCount(col("merged")).as("n_distinct"))
+      .select(lit("__ALL__").as("c_mktsegment"),
+        Sketches.bitmap_count(col("merged")).as("n_distinct"))
     perSegCounts.union(total).orderBy(col("c_mktsegment"))
   }
 
@@ -123,7 +123,6 @@ object AggregateQueries extends QueryModule {
     * global exact count.
     */
   private def a5(s: SparkSession, d: String): DataFrame = {
-    val hllCard = udf((b: Array[Byte]) => Sketches.hllEstimate(b))
     val li = Tables.lineitem(s, d)
     // keep the sketch aggregate OUT of the same agg() as countDistinct:
     // a distinct aggregate makes Spark's first phase group by
@@ -138,11 +137,11 @@ object AggregateQueries extends QueryModule {
       .agg(countDistinct(col("l_orderkey")).as("exact_orders"))
     val perFlag = sketches.join(exacts, Seq("l_returnflag"))
     val per = perFlag.select(col("l_returnflag"), col("exact_orders"),
-      hllCard(col("sketch")).as("_est"))
+      Sketches.hll_cardinality(col("sketch")).as("_est"))
     val merged = perFlag.agg(Sketches.hll_merge(col("sketch")).as("m"))
       .crossJoin(li.agg(countDistinct(col("l_orderkey")).as("exact_orders")))
       .select(lit("__ALL__").as("l_returnflag"), col("exact_orders"),
-        hllCard(col("m")).as("_est"))
+        Sketches.hll_cardinality(col("m")).as("_est"))
     per.union(merged)
       .select(col("l_returnflag"), col("exact_orders"),
         (abs(col("_est") - col("exact_orders")).cast("double") / col("exact_orders")

@@ -528,7 +528,6 @@ object FunctionQueries extends QueryModule {
     * program's output in plain SQL.
     */
   private def fn14(s: SparkSession, d: String): DataFrame = {
-    graft.GraftSession.init(s)
     Tables.documents(s, d).createOrReplaceTempView("documents")
     s.sql(
       """SELECT doc_id,

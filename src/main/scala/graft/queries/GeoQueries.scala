@@ -132,7 +132,6 @@ object GeoQueries extends QueryModule {
     * strings by direct construction.
     */
   private def geo3(s: SparkSession, d: String): DataFrame = {
-    graft.GraftSession.init(s)
     Tables.part(s, d).createOrReplaceTempView("part")
     s.sql(
       """SELECT p_partkey,

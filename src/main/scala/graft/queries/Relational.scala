@@ -370,9 +370,9 @@ object Relational extends QueryModule {
   /** Spark 4.1's native WITH RECURSIVE plans the whole fixpoint as one
     * query (UnionLoop) — no driver round-trips per level, which is what
     * survives a 1000-executor recursion. Locally it measures within
-    * noise of the driver loop (1.3–1.5 s either way at sf0.1);
-    * `RecursiveCte.iterate` remains the driver for the shapes native
-    * recursion rejects (multi-anchor, >2 branches, UNION DISTINCT).
+    * noise of the driver loop (1.3–1.5 s either way at sf0.1). The
+    * shapes native recursion rejects (several recursive branches, UNION
+    * DISTINCT) run through `GraftSql`'s own delta iteration.
     */
   private def recursiveHierarchy(s: SparkSession, d: String): DataFrame = {
     Tables.registerAll(s, d)

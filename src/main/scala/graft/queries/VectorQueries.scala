@@ -342,7 +342,6 @@ object VectorQueries extends QueryModule {
     * kernel arithmetic.
     */
   private def v10(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NarrowVec.registerAll(s)
     val qv = "mo_vec_quant_d(transform(embedding, x -> CAST(x AS DOUBLE) * 37.5D), 'int8', 0)"
     Tables.embeddings(s, d).selectExpr(
         "vec_id",

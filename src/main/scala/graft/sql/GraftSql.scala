@@ -732,10 +732,6 @@ object GraftSql {
   private val SaveHintRe = """(?is)^/\*\s*save_result\s*\*/\s*""".r
 
   def sql(spark: SparkSession, query: String): DataFrame = {
-    Sequences.registerUdfs(spark)
-    QueryResults.registerUdfs(spark)
-    graft.functions.NarrowVec.registerAll(spark)
-
     val qTrim = query.trim.stripSuffix(";").trim
     // the reference's save_result hint tags a query whose result set is
     // retained for result_scan/meta_scan; zero-arg last_query_id()
@@ -1607,7 +1603,7 @@ object GraftSql {
   /** Drive the recursive-CTE shapes Spark's native recursion rejects —
     * more than one recursive branch, UNION(DISTINCT) recursion, and the
     * reference's anchor-literal column-width truncation — through
-    * [[graft.operators.RecursiveCte]]-style delta iteration (reference
+    * delta iteration on the driver (reference
     * operators `pkg/sql/colexec/mergerecursive/`, goldens
     * `recursive_cte/recursive_cte.result:665`,
     * `recursive_cte_union_distinct.result`,

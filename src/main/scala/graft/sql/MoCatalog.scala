@@ -374,7 +374,9 @@ object MoCatalog {
         // Built as SQL TEXT over a registered assign function so the
         // base table resolves by NAME at every query — the view then
         // follows UPDATE/DELETE overwrites instead of pinning the file
-        // listing of the build-time snapshot.
+        // listing of the build-time snapshot. The one function registered
+        // outside GraftExtensions' table: its closure holds this index's
+        // centroids, so it is per-index data, not SQL surface.
         val cents = centroids
         val assignName = s"__mo_assign_${tid}_${idxName.toLowerCase}"
         spark.udf.register(assignName, (v: Seq[Double]) =>

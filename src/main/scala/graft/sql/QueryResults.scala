@@ -109,18 +109,14 @@ object QueryResults {
       .toDF("query_id", "tables", "result_path", "result_size")
   }
 
-  /** Register `last_query_id(n)` (idempotent per session). The SQL
-    * surface's zero-arg form is textually normalized to `(-1)` before
-    * parse ([[GraftSql.sql]]). The closure captures a session handle,
-    * not the state: UDF bodies run on task threads from a serialized
-    * copy of the closure.
+  /** `last_query_id(n)`. The SQL surface's zero-arg form is textually
+    * normalized to `(-1)` before parse ([[GraftSql.sql]]). The closure
+    * captures the analyzing session's handle, not the state: UDF bodies
+    * run on task threads from a serialized copy of the closure.
     */
-  def registerUdfs(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("last_query_id"))) return
-    val h = graft.SessionScoped.handle(spark)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     import org.apache.spark.sql.functions.udf
-    spark.udf.register("last_query_id",
+    ft.sessionUdf("last_query_id")(h =>
       udf((n: Int) => idAt(state(h), n)).asNondeterministic())
   }
 }

@@ -135,7 +135,6 @@ object Sequences {
 
   def create(spark: SparkSession, name0: String, tail: String,
       ifNotExists: Boolean): Unit = {
-    registerUdfs(spark)
     val name = norm(name0)
     if (name == "table")
       throw new IllegalArgumentException(
@@ -337,27 +336,20 @@ object Sequences {
     v
   }
 
-  /** Register the four scalar functions on this session (idempotent).
-    * Marked nondeterministic so Catalyst neither CSEs duplicate calls
-    * nor reorders them — `SELECT currval(s), nextval(s), currval(s)`
-    * must evaluate left-to-right (seq_func.result:33). The closures
-    * capture a session HANDLE, not the state: UDF bodies run on task
-    * threads from a serialized copy of the closure, and touching the
-    * driver SparkSession there NPEs.
+  /** The four scalar functions. Marked nondeterministic so Catalyst
+    * neither CSEs duplicate calls nor reorders them — `SELECT
+    * currval(s), nextval(s), currval(s)` must evaluate left-to-right
+    * (seq_func.result:33). The closures capture the analyzing session's
+    * HANDLE, not the state: UDF bodies run on task threads from a
+    * serialized copy of the closure, and touching the driver
+    * SparkSession there NPEs.
     */
-  def registerUdfs(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("setval"))) return
-    val h = SessionScoped.handle(spark)
+  private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     import org.apache.spark.sql.functions.udf
-    spark.udf.register("nextval",
-      udf((n: String) => nextval(h, n)).asNondeterministic())
-    spark.udf.register("currval",
-      udf((n: String) => currval(h, n)).asNondeterministic())
-    spark.udf.register("lastval",
-      udf(() => lastval(h)).asNondeterministic())
-    spark.udf.register("setval",
-      udf((n: String, v: Long, b: Boolean) => setval(h, n, v, b))
-        .asNondeterministic())
+    ft.sessionUdf("nextval")(h => udf((n: String) => nextval(h, n)).asNondeterministic())
+    ft.sessionUdf("currval")(h => udf((n: String) => currval(h, n)).asNondeterministic())
+    ft.sessionUdf("lastval")(h => udf(() => lastval(h)).asNondeterministic())
+    ft.sessionUdf("setval")(h =>
+      udf((n: String, v: Long, b: Boolean) => setval(h, n, v, b)).asNondeterministic())
   }
 }

@@ -159,20 +159,11 @@ class MatchLocalSpec extends AnyFunSuite {
 
   test("a session sees none of the state of an earlier session of the same JVM") {
     // the suite's shared session cannot be stopped, so the two sessions
-    // run in a child JVM with this JVM's classpath and module flags
-    import scala.jdk.CollectionConverters._
+    // run in a child JVM
     val wh = java.nio.file.Files.createTempDirectory("ftl-two-sessions")
-    val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ flags ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.TwoSessions", wh.toString)
-    val out = new StringBuilder
-    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
-      l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    val lines = out.toString.split('\n').filter(_.startsWith("session"))
-    assert(rc == 0, out.toString.takeRight(4000))
-    val Array(a, b) = lines.map(_.dropWhile(_ != ' '))
+    val out = ChildJvm.run("graft.TwoSessions", wh.toString)
+    val lines = out.filter(_.startsWith("session"))
+    val Seq(a, b) = lines.map(_.dropWhile(_ != ' '))
     // each session runs the same script, so every result must repeat
     assert(a == b, lines.mkString("\n"))
     val got = b.trim.split(" \\| ").map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap

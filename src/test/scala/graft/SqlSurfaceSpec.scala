@@ -9,21 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlSurfaceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  test("RecursiveCte.iterate reaches the fixpoint with exact levels") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // chain 1 → 2 → 4 → 8 … ≤ 100: 7 levels after the anchor
-    val edges = (1 to 100).map(n => (n, n * 2)).filter(_._2 <= 100)
-      .toDF("src", "dst")
-    val anchor = Seq((1, 0)).toDF("node", "depth")
-    val out = graft.operators.RecursiveCte.iterate(anchor, f =>
-      edges.join(f, edges("src") === f("node"))
-        .select(col("dst").as("node"), (col("depth") + 1).as("depth")))
-      .orderBy("depth").collect().map(r => (r.getInt(0), r.getInt(1)))
-    assert(out.toSeq == Seq(1 -> 0, 2 -> 1, 4 -> 2, 8 -> 3, 16 -> 4,
-      32 -> 5, 64 -> 6))
-  }
-
   test("extension-injected vector functions resolve in SQL") {
     val r = spark.sql(
       """SELECT l2_distance(array(0.0F, 3.0F), array(4.0F, 0.0F)) AS d,

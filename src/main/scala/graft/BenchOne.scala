@@ -2,7 +2,10 @@ package graft
 
 /** Measurement utility (optimization guide §1): times ONE declared query
   * `runs` times to the noop sink and prints every sample, so a change's
-  * effect is visible without re-running the whole bench.
+  * effect is visible without re-running the whole bench. Next to the
+  * times it prints how many classes each run compiled with Janino
+  * (`compiles=`, from Spark's `CodegenMetrics`): 0 after the warm-up
+  * means the run reused every generated class.
   * Usage: runMain graft.BenchOne <name> [runs]
   */
 object BenchOne {
@@ -31,18 +34,23 @@ object BenchOne {
               println(f"[job] ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f  $desc")
             }
         })
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val samples = (0 until runs + 1).map { i =>
       spark.sparkContext.setJobDescription(s"$name run $i")
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val t = (System.nanoTime() - t0) / 1e9
+      val c = compiles.getCount - c0
       spark.catalog.clearCache()
       System.gc()
-      t
+      (t, c)
     }
     spark.stop()
-    println(f"[benchone] $name warmup=${samples.head}%.3f runs=" +
-      samples.tail.map(t => f"$t%.3f").mkString(","))
+    val (warm, warmCompiles) = samples.head
+    println(f"[benchone] $name warmup=$warm%.3f runs=" +
+      samples.tail.map(s => f"${s._1}%.3f").mkString(",") +
+      s" compiles=$warmCompiles;" + samples.tail.map(_._2).mkString(","))
   }
 }

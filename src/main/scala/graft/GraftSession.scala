@@ -11,6 +11,28 @@ import org.apache.spark.sql.SparkSession
   * on here instead of re-implementing them.
   */
 object GraftSession {
+  /** A builder with graft's extension and engine confs.
+    *
+    * Compile once: Spark keeps the classes that whole-stage codegen
+    * compiles (with Janino) in one JVM-wide LRU cache of
+    * `spark.sql.codegen.cache.maxEntries` entries, 100 by default. That
+    * is smaller than graft's working set: the benchmark's 9 `olap`
+    * queries compile 161 classes and the 34 [[Bench.headlineNames]]
+    * queries 539 (sf0.001), so at 100 entries a round-robin mix evicts
+    * each class before its reuse and recompiles (and re-JITs) almost all
+    * of them on every request. At 1024 a query shape compiles once per
+    * JVM. A cached class holds about 26 KB of heap (536 entries held
+    * 13.9 MB after GC), so a full cache holds about 27 MB. The conf is
+    * static, read once per JVM when the first class is generated: only a
+    * builder conf or `--conf` sets it, `SparkSessionExtensions` cannot.
+    *
+    * The cache finds a class by its source text, and whole-stage codegen
+    * names each class after its codegen stage id, which AQE hands out in
+    * the order that sibling query stages finish: q21 at sf0.001 swapped
+    * two ids in about 1 of 20 runs and compiled 4 classes again each
+    * time. `useIdInClassName=false` names them all `GeneratedIterator`,
+    * so the same pipeline is the same text whatever its id.
+    */
   def builder(master: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
@@ -36,6 +58,8 @@ object GraftSession {
       // with micros timestamps (the current testdata) is unaffected
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.sql.codegen.useIdInClassName", "false")
     // deployment/measurement overrides without a rebuild:
     // SPARK_GRAFT_CONF="k1=v1;k2=v2" (cluster runs re-tune
     // shuffle.partitions etc. here; local defaults above stay the

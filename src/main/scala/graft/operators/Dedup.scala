@@ -82,18 +82,17 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = minhashCandidatesFromShingles(sh, numHashes, bands)
     // exact-Jaccard verify, §8-style "decide small, attach payloads":
-    // the PAIR LIST is the small decision table — broadcast it and
-    // stream the (persisted) shingle table past it, so the corpus-wide
-    // shingle arrays are never the build side of anything (the previous
-    // shape broadcast the FULL shingle table twice, once per pair side).
-    // Candidate generation executes exactly once, inside the first
-    // broadcast. |cands| is LSH-bounded (maxBucket caps bucket fan-out);
-    // a corpus whose candidate pairs outgrow a broadcast has outgrown
-    // pairwise verify itself and needs the maxBucket guard tightened.
+    // the PAIR LIST is the small decision table — broadcast it (ids only)
+    // and stream the (persisted) shingle table past it to attach the a
+    // side's shingles; the b side's shingles then meet those pairs in a
+    // sort-merge join, which streams both inputs. No shingle array may
+    // sit on the build side of a join: there it is held once per pair,
+    // and one hot LSH bucket makes up to maxBucket² / 2 pairs. Candidate
+    // generation executes exactly once, inside the broadcast.
     val withA = sh.select(col("_sid").as("a_id"), col("_sh").as("_sha"))
       .join(broadcast(cands), Seq("a_id"))
     sh.select(col("_sid").as("b_id"), col("_sh").as("_shb"))
-      .join(broadcast(withA), Seq("b_id"))
+      .join(withA.hint("merge"), Seq("b_id"))
       .withColumn("jacc", jaccardSorted(col("_sha"), col("_shb")))
       .filter(col("jacc") >= threshold)
       .select(col("a_id"), col("b_id"), round(col("jacc"), 6).as("jacc"))

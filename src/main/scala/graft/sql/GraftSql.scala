@@ -727,6 +727,32 @@ object GraftSql {
       }
 
   private val viewSeq = new AtomicLong(0L)
+  private val CreateViewRe =
+    """(?is)^\s*create\s+(?:or\s+replace\s+)?(?:(?:global\s+)?temp(?:orary)?\s+)?view\b""".r
+
+  /** Run `stmt` through `body`, then drop the statement's own temp
+    * `views`: `spark.sql` analyzes eagerly, so the DataFrame `body`
+    * returns already holds each view's plan inlined, and a view left in
+    * the catalog only keeps that plan (and its data) alive for the rest of
+    * the session. A `CREATE VIEW` statement keeps them, because Spark
+    * stores a SQL view's text and resolves the names in it on every read.
+    * Dropped through the session catalog, which leaves the cache alone
+    * (`Catalog.dropTempView` would also uncache a plan equal to the view's).
+    */
+  private def dropViewsAfter(spark: SparkSession, stmt: String, views: Seq[String])(
+      body: => DataFrame): DataFrame =
+    if (CreateViewRe.findFirstIn(stmt).isDefined) body
+    else try body finally views.foreach(spark.sessionState.catalog.dropTempView)
+
+  /** Register `df` as the fresh temp view `<prefix>N`, run `body` on its
+    * name for the statement `stmt`, and drop the view again.
+    */
+  private def overView(spark: SparkSession, stmt: String, prefix: String, df: DataFrame)(
+      body: String => DataFrame): DataFrame = {
+    val v = s"$prefix${viewSeq.incrementAndGet()}"
+    df.createOrReplaceTempView(v)
+    dropViewsAfter(spark, stmt, Seq(v))(body(v))
+  }
 
   /** Entry point: accept reference-dialect SQL, return the DataFrame. */
   private val SaveHintRe = """(?is)^/\*\s*save_result\s*\*/\s*""".r
@@ -1478,9 +1504,8 @@ object GraftSql {
       // projection over a sequence's state row (`SELECT laSt_seq_nuM,
       // min_value FROM Seq` — ddl/lowercase.result:328-330)
       case SelectColsSeqRe(items, n1, n2) if Sequences.exists(spark, pick(n1, n2)) =>
-        val v = s"_graft_seq_${viewSeq.incrementAndGet()}"
-        Sequences.stateDf(spark, pick(n1, n2)).createOrReplaceTempView(v)
-        Some(spark.sql(s"SELECT $items FROM $v"))
+        Some(overView(spark, q, "_graft_seq_", Sequences.stateDf(spark, pick(n1, n2)))(
+          v => spark.sql(s"SELECT $items FROM $v")))
       case DropTableNameRe(n1, n2) if Sequences.exists(spark, pick(n1, n2)) =>
         throw new IllegalArgumentException(
           "internal error: Should use 'drop sequence' to drop a sequence")
@@ -1731,7 +1756,10 @@ object GraftSql {
       throw new IllegalStateException("recursive level out of range")
     acc.createOrReplaceTempView(vname)
     Some(sql(spark, refRe.replaceAllIn(main, vname)))
-    } finally spark.conf.set(cpKey, cpPrev)
+    } finally {
+      spark.conf.set(cpKey, cpPrev)
+      spark.sessionState.catalog.dropTempView(vname)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -5942,11 +5970,7 @@ object GraftSql {
     */
   private def applySuffix(spark: SparkSession, df: DataFrame, suffix: String): DataFrame =
     if (suffix.isEmpty) df
-    else {
-      val v = s"_graft_sql_${viewSeq.incrementAndGet()}"
-      df.createOrReplaceTempView(v)
-      spark.sql(s"SELECT * FROM $v $suffix")
-    }
+    else overView(spark, "", "_graft_sql_", df)(v => spark.sql(s"SELECT * FROM $v $suffix"))
 
   // ------------------------------------------------------------------
   // sample(expr, N rows | K percent)
@@ -6002,11 +6026,8 @@ object GraftSql {
       }
       best.foreach { case (open, close) =>
         val inner = q.substring(open + 1, close - 1)
-        val df = sql(spark, inner)
-        val v = s"_graft_sql_${viewSeq.incrementAndGet()}"
-        df.createOrReplaceTempView(v)
-        return Some(sql(spark, q.substring(0, open + 1) + s"SELECT * FROM $v" +
-          q.substring(close - 1)))
+        return Some(overView(spark, q, "_graft_sql_", sql(spark, inner))(v => sql(spark,
+          q.substring(0, open + 1) + s"SELECT * FROM $v" + q.substring(close - 1))))
       }
     }
 
@@ -6168,20 +6189,18 @@ object GraftSql {
     // every branch's score joins splice into its OWN FROM
     // (fulltext1.sql: `select ... match(...) union select ... match(...)`)
     val parts = splitSetOps(q)
-    if (parts.length > 1) {
-      val rewritten = parts.zipWithIndex.map { case (p, i) =>
-        if (i % 2 == 1 || MatchRe.findFirstIn(p).isEmpty) p
-        else matchText(spark, p)
-      }.mkString(" ")
-      return Some(spark.sql(rewritten))
+    val rewritten = parts.zipWithIndex.map { case (p, i) =>
+      if (i % 2 == 1 || MatchRe.findFirstIn(p).isEmpty) (p, Nil)
+      else matchText(spark, p)
     }
-    Some(spark.sql(matchText(spark, q)))
+    Some(dropViewsAfter(spark, q, rewritten.flatMap(_._2))(
+      spark.sql(rewritten.map(_._1).mkString(" "))))
   }
 
-  /** Rewrite one MATCH-bearing SELECT into plain Spark SQL text (score
-    * views created as a side effect).
+  /** Rewrite one MATCH-bearing SELECT into plain Spark SQL text over the
+    * score views it creates, returned with the text.
     */
-  private def matchText(spark: SparkSession, q: String): String = {
+  private def matchText(spark: SparkSession, q: String): (String, Seq[String]) = {
     val hits = MatchRe.findAllMatchIn(q).toList
 
     val from = FromRe.findFirstMatchIn(q).getOrElse(
@@ -6278,6 +6297,7 @@ object GraftSql {
       .replaceFirst("(?is)^\\s*select\\s+\\*", s"SELECT $tblRef.*")
     val from2 = FromRe.findFirstMatchIn(replaced).get
     val fromEnd = from2.start + from2.matched.length
-    replaced.substring(0, fromEnd) + joins + replaced.substring(fromEnd)
+    (replaced.substring(0, fromEnd) + joins + replaced.substring(fromEnd),
+      views.values.map(_._1).toSeq)
   }
 }

@@ -2,10 +2,14 @@ package graft
 
 import graft.operators.Dedup
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -37,6 +41,19 @@ class DedupSpec extends AnyFunSuite {
     }
     // base/noise vocabularies are disjoint: no cross pairs
     assert(!pairs.exists { case (a, b) => a < 2000 && b >= 2000 })
+  }
+
+  test("minhash verify builds no hash table or broadcast of shingle arrays") {
+    val df = Dedup.minhashPairs(fixture, "doc_id", "text", threshold = 0.5)
+    assert(df.collect().length >= 30)
+    // the final adaptive plan, after AQE's runtime re-planning
+    val builds = collect(df.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => if (j.buildSide == BuildLeft) j.left else j.right
+      case j: ShuffledHashJoinExec => if (j.buildSide == BuildLeft) j.left else j.right
+    }
+    assert(builds.nonEmpty) // the candidate pairs' broadcast
+    builds.foreach(b =>
+      assert(!b.output.exists(_.dataType.isInstanceOf[ArrayType]), b.treeString))
   }
 
   test("simhash finds planted near-dups within small hamming distance") {

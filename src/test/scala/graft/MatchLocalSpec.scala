@@ -111,6 +111,20 @@ class MatchLocalSpec extends AnyFunSuite {
     assert(same(bool("+火花 -数据库", cols = "t", table = "ftl_zh")).keySet == Set(1L, 3L))
   }
 
+  test("MATCH statements leave no temp view behind and score the same") {
+    // a view per statement would hold its scores for the rest of the session
+    assert(same(nl("spark join")).nonEmpty)
+    assert(same(bool("+spark -error join")).nonEmpty)
+    val union = s"${nl("spark")} UNION ALL ${bool("+window")}"
+    def rows() = sql(union).collect().map(_.toString).sorted.toSeq
+    val once = rows()
+    assert(once.nonEmpty && rows() == once)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => Seq("_graft_ft_", "_graft_sql_", "_graft_seq_", "_graft_rcte_")
+        .exists(n.startsWith))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
   test("a MATCH on a small index runs at most 3 Spark jobs; its probe is bucket-pruned") {
     tables
     sql(nl("spark")).collect() // the first MATCH on the column builds the postings

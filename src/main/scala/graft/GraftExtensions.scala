@@ -12,6 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Session extensions: graft's optimizer/analyzer rules and its whole
   * SQL function surface.
   *
+  * Rules: ONE post-hoc resolution rule, [[graft.plans.AnnRule]], serves
+  * the ANN top-k pushdown for every vector index kind (IVF-flat, HNSW,
+  * IVF-PQ); an optimizer rule prunes `Partitions`-managed tables; a
+  * resolution rule types elementwise vector arithmetic.
+  *
   * Functions come from ONE table, [[GraftExtensions.functions]], built
   * once per JVM from every module's contribution (native Catalyst
   * builders, Column-combinator trees converted eagerly, and Scala UDFs
@@ -43,10 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // ANN top-k pushdown over registered IVF/HNSW indexes (no-op when none)
-    e.injectPostHocResolutionRule(session => new graft.plans.IvfAnnRule(session))
-    e.injectPostHocResolutionRule(session => new graft.plans.HnswAnnRule(session))
-    e.injectPostHocResolutionRule(session => new graft.plans.IvfPqAnnRule(session))
+    // ANN top-k pushdown over every registered vector index (no-op when none)
+    e.injectPostHocResolutionRule(session => new graft.plans.AnnRule(session))
     // partition pruning over Partitions-managed tables (no-op when none)
     e.injectOptimizerRule(session => new graft.plans.PartitionPruneRule(session))
     // elementwise vector arithmetic: `vec + vec`, `vec * scalar` — the

@@ -292,11 +292,6 @@ object Bm25 {
     ngramTokenize(text, n).map { case (t, p) => NgramTok(t, p) })
   private def ngramTokensU(text: Column, n: Column): Column = ngramTokU(text, n)
 
-  /** Corpus stats (N, avgdl) as a 1-row DataFrame (broadcast later). */
-  def corpusStats(index: DataFrame): DataFrame =
-    index.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-
   /** Document frequency per term. */
   def docFreq(index: DataFrame): DataFrame =
     index.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -990,27 +985,6 @@ object Bm25 {
   }
 
   // --------------------------------------------------- one-call helpers
-  /** BM25 score of every document matching ≥1 query term (legacy entry
-    * used by specs; prefer [[searchNatural]] on a [[FulltextIndex]]).
-    */
-  def scoreNatural(index: DataFrame, queryTerms: Seq[String]): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val q = queryTerms.distinct.toDF("term")
-    val withDf = index
-      .join(broadcast(q), Seq("term"))
-      .join(broadcast(docFreq(index).join(broadcast(q), Seq("term"))), Seq("term"))
-      .crossJoin(broadcast(corpusStats(index)))
-    withDf
-      .withColumn("_idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("_w",
-        col("_idf") * (col("tf") * (K1 + 1)) /
-          (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / col("avgdl"))))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("_w")).as("score"))
-  }
-
   /** One-call `match ... against` on a raw document table. Pass
     * `cacheKey` to reuse a persisted per-corpus index across calls.
     */

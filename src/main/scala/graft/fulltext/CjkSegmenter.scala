@@ -112,15 +112,6 @@ object CjkSegmenter {
     out.result()
   }
 
-  /** Column form for index building (driver dictionary ships in the UDF
-    * closure once per stage — same shape as the reference's shared
-    * jieba singleton per process).
-    */
-  def tokensCol(c: Column, dict: Map[String, Int] = defaultDict): Column = {
-    val f = udf((s: String) => tokenize(s, dict))
-    f(c)
-  }
-
   /** Positioned tokenization: every emitted token takes one ordinal
     * slot, and every SKIPPED character (whitespace, punctuation) also
     * advances the ordinal. gojieba's cut keeps separators as tokens, so

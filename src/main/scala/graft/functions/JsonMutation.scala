@@ -173,12 +173,6 @@ object JsonMutation {
     }
   }
 
-  def jsonInsert(doc: String, path: String, value: String): String =
-    mutate(doc, path, value, "insert")
-
-  def jsonReplace(doc: String, path: String, value: String): String =
-    mutate(doc, path, value, "replace")
-
   def jsonSet(doc: String, path: String, value: String): String =
     mutate(doc, path, value, "set")
 

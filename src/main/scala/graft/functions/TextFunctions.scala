@@ -53,15 +53,6 @@ object TextFunctions {
     * 64 string hashes per shingle (the classic a·x+b trick; overflow-free
     * in the 2^32 × small-constant range, so no ANSI wrap dependence).
     */
-  /** 32-bit string-hash bases — compute ONCE per row into a column, then
-    * derive the k permutations with [[minhashSignatureFromBases]] /
-    * [[simhashBitsFromBases]]. Inlining the base hashes inside the outer
-    * per-permutation lambda re-evaluates the string hashing k times (no
-    * CSE across higher-order lambda iterations).
-    */
-  def hashBases(arr: Column): Column =
-    transform(arr, x => xxhash64(x).bitwiseAND(lit(0xffffffffL)))
-
   def minhashSignature(shingles: Column, k: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column => asCol, expression => asExpr}
     asCol(MinHashSignatureExpr(asExpr(shingles), k))

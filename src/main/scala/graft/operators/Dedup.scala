@@ -26,36 +26,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
       .drop("_key")
 
-  /** Candidate pairs whose MinHash band keys collide; `a_id < b_id`. */
-  def minhashCandidates(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = 1000): DataFrame = {
-    val rows = numHashes / bands
-    // persisted for the same three-reader reason as
-    // [[minhashCandidatesFromShingles]]
-    val sigs = df
-      .select(col(idCol).as("_id"), tokens(col(textCol)).as("_tk"))
-      .withColumn("_sh", wordShingles(col("_tk"), shingleN))
-      .filter(size(col("_sh")) > 0)
-      .withColumn("_sig", minhashSignature(col("_sh"), numHashes))
-      .select(col("_id"), posexplode(bandKeys(col("_sig"), bands, rows)))
-      .withColumnRenamed("pos", "_band").withColumnRenamed("col", "_key")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // drop degenerate buckets before the self-join (skew guard): bucket
-    // sizes via hash AGGREGATE + semi-join on the small survivor set —
-    // no per-partition sort, unlike a count-over-window
-    val okBuckets = sigs.groupBy(col("_band"), col("_key"))
-      .agg(count(lit(1)).as("_bucket_n"))
-      .filter(col("_bucket_n") <= maxBucket)
-      .select(col("_band"), col("_key"))
-    val sized = sigs.join(okBuckets, Seq("_band", "_key"), "left_semi")
-    val a = sized.select(col("_band"), col("_key"), col("_id").as("a_id"))
-    val b = sized.select(col("_band"), col("_key"), col("_id").as("b_id"))
-    a.join(b, Seq("_band", "_key")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
-  }
-
   /** MinHash LSH candidates verified with exact shingle Jaccard.
     *
     * NOTE (lifetime contract): the returned plan reads two frames this
@@ -230,20 +200,5 @@ object Dedup {
       .filter(col("n_pairs") > 0)
     nonzeroHist.union(zeroRow)
       .groupBy(col("bucket")).agg(sum(col("n_pairs")).cast("long").as("n_pairs"))
-  }
-
-  /** Blocked exact n-gram Jaccard: all pairs WITHIN a blocking key. */
-  def blockedJaccard(
-      df: DataFrame, idCol: String, textCol: String, blockCols: Seq[Column],
-      shingleN: Int = 2): DataFrame = {
-    val base = df.select(
-      struct(blockCols: _*).as("_block"),
-      col(idCol).as("_id"),
-      wordShingles(tokens(col(textCol)), shingleN).as("_sh") /* sorted */)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = base.select(col("_block"), col("_id").as("a_id"), col("_sh").as("_sha"))
-    val b = base.select(col("_block"), col("_id").as("b_id"), col("_sh").as("_shb"))
-    a.join(b, Seq("_block")).filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), jaccardSorted(col("_sha"), col("_shb")).as("jacc"))
   }
 }

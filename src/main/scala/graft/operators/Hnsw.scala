@@ -214,7 +214,7 @@ object Hnsw {
   }
 
   /** Probe prebuilt shard graphs (from [[buildShardedGraphs]] /
-    * `HnswIndex.forCorpus`) with a broadcast query set — the pure
+    * `VectorIndex.hnsw`) with a broadcast query set — the pure
     * `hnsw_search` path: each shard deserializes once per task and
     * answers every query; output schema matches `Knn.bruteForceTopK`.
     */
@@ -243,49 +243,6 @@ object Hnsw {
       org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType)))
     spark.createDataFrame(rows, schema)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(asc("score"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("score"))
-  }
-
-  /** Approximate top-k join: same output schema as `Knn.bruteForceTopK`
-    * (query_id, rank, neighbor_id, score=L2 distance). Queries are
-    * broadcast (small side); the corpus never shuffles. Builds graphs
-    * inline — for a reusable index, build via `HnswIndex.forCorpus` and
-    * query with [[probeShards]].
-    */
-  def hnswTopK(
-      corpus: DataFrame, corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String,
-      k: Int, m: Int = 16, efConstruction: Int = 100, efSearch: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    QueryGuard.check(queries, "Hnsw.hnswTopK")
-    val qRows: Array[(Long, Array[Float])] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = spark.sparkContext.broadcast(qRows)
-
-    val src = corpus.select(col(corpusId).cast("long"), col(corpusVec))
-    val candidates = src.rdd.mapPartitions { it =>
-      val g = new Graph(m, efConstruction)
-      it.foreach { r =>
-        g.insert(r.getLong(0), r.getSeq[Float](1).toArray)
-      }
-      if (g.size == 0) Iterator.empty
-      else qB.value.iterator.flatMap { case (qid, qv) =>
-        g.search(qv, k + 1, efSearch).collect {
-          case (nid, d) if nid != qid => Row(qid, nid, d)
-        }
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("score", org.apache.spark.sql.types.DoubleType)))
-    val merged = spark.createDataFrame(candidates, schema)
-    merged
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(asc("score"), col("neighbor_id"))))
       .filter(col("rank") <= k)

@@ -42,25 +42,63 @@ object IvfPq {
   final case class Model(
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
-      mSub: Int, dsub: Int)
-
-  private def l2sq(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
+      mSub: Int, dsub: Int) {
+    /** Lookup-table stride: the longest codebook. KMeans drops duplicate
+      * initial centers, so a subspace whose residuals repeat can come out
+      * with fewer codewords than asked.
+      */
+    def kk: Int = codebooks.map(_.length).max
   }
 
-  private def nearest(v: Array[Double], cents: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var j = 0
-    while (j < cents.length) {
-      val d = l2sq(v, cents(j))
-      if (d < bestD) { bestD = d; best = j }
-      j += 1
+  /** ADC lookup tables of one query for its `nprobe` nearest coarse
+    * cells: per cell, entry `s * m.kk + j` is the squared distance from
+    * the query's residual in subspace `s` to codeword `j`.
+    */
+  def lookupTables(m: Model, q: Array[Double], nprobe: Int): Map[Int, Array[Double]] = {
+    val kk = m.kk
+    Centroids.rank(m.centroids, q, nprobe).map { cell =>
+      val cent = m.centroids(cell)
+      val t = new Array[Double](m.mSub * kk)
+      var s = 0
+      while (s < m.mSub) {
+        val qres = new Array[Double](m.dsub)
+        var i = 0
+        while (i < m.dsub) { qres(i) = q(s * m.dsub + i) - cent(s * m.dsub + i); i += 1 }
+        var j = 0
+        while (j < m.codebooks(s).length) {
+          t(s * kk + j) = Centroids.l2sq(m.codebooks(s)(j), qres)
+          j += 1
+        }
+        s += 1
+      }
+      cell -> t
+    }.toMap
+  }
+
+  /** ADC scan of code rows `(_id, _cell, _codes)` against each query's
+    * [[lookupTables]]: keeps a bounded max-heap of the `fetch` nearest
+    * rows per query and emits them as (query id, row id, squared ADC
+    * distance). With `skipSelf` a row is never its own query's neighbor.
+    */
+  def adcTopK(rows: Iterator[Row], tables: Array[(Long, Map[Int, Array[Double]])],
+      mSub: Int, kk: Int, fetch: Int, skipSelf: Boolean): Iterator[(Long, Long, Double)] = {
+    val heaps = tables.map { case (qid, _) =>
+      qid -> collection.mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(_._1))
+    }.toMap
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      val cell = r.getInt(1)
+      val cs = r.getSeq[Int](2)
+      for ((qid, ts) <- tables; t <- ts.get(cell); if !skipSelf || id != qid) {
+        var d = 0.0
+        var s = 0
+        while (s < mSub) { d += t(s * kk + cs(s)); s += 1 }
+        val h = heaps(qid)
+        if (h.size < fetch) h.enqueue((d, id))
+        else if (d < h.head._1) { h.dequeue(); h.enqueue((d, id)) }
+      }
     }
-    best
+    heaps.iterator.flatMap { case (qid, h) => h.iterator.map { case (d, id) => (qid, id, d) } }
   }
 
   /** Fit coarse + subspace codebooks and encode the corpus.
@@ -119,7 +157,7 @@ object IvfPq {
             val sub = new Array[Double](m.dsub)
             var i = 0
             while (i < m.dsub) { sub(i) = v(s * m.dsub + i) - cent(s * m.dsub + i); i += 1 }
-            codes(s) = nearest(sub, m.codebooks(s))
+            codes(s) = Centroids.nearest(m.codebooks(s), sub)
             s += 1
           }
           Row(id, cell, codes.toSeq)
@@ -154,61 +192,23 @@ object IvfPq {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
 
-    // per-query probed cells + ADC lookup tables, computed once, tiny:
-    // luts(q) = (query_id, Map(cell -> Array(mSub * codebookSize)))
-    val luts: Array[(Long, Map[Int, Array[Double]])] = qRows.map { case (qid, qv) =>
-      val ranked = model.centroids.zipWithIndex
-        .map { case (c, i) => (l2sq(qv, c), i) }.sortBy(_._1).take(nprobe).map(_._2)
-      val tables = ranked.map { cell =>
-        val cent = model.centroids(cell)
-        val kk = model.codebooks(0).length
-        val t = new Array[Double](model.mSub * kk)
-        var s = 0
-        while (s < model.mSub) {
-          val qres = new Array[Double](model.dsub)
-          var i = 0
-          while (i < model.dsub) { qres(i) = qv(s * model.dsub + i) - cent(s * model.dsub + i); i += 1 }
-          var j = 0
-          while (j < kk) { t(s * kk + j) = l2sq(qres, model.codebooks(s)(j)); j += 1 }
-          s += 1
-        }
-        cell -> t
-      }.toMap
-      (qid, tables)
-    }
+    // per-query probed cells + ADC lookup tables, computed once, tiny
+    val luts: Array[(Long, Map[Int, Array[Double]])] =
+      qRows.map { case (qid, qv) => (qid, lookupTables(model, qv, nprobe)) }
     val lutB: Broadcast[Array[(Long, Map[Int, Array[Double]])]] =
       spark.sparkContext.broadcast(luts)
-    val kk = model.codebooks(0).length
+    val kk = model.kk
     val mSub = model.mSub
     val fetch = math.max(k, refine)
 
     // scan only the union of probed cells — on a codes table partitioned
-    // by `_cell` (IvfPqIndex.forCorpus) this prunes at the file level
+    // by `_cell` (the index store's layout) this prunes at the file level
     val probedCells = luts.flatMap(_._2.keys).distinct.toIndexedSeq
     val candRdd = codes.filter(col("_cell").isin(probedCells: _*))
       .select(col("_id"), col("_cell"), col("_codes")).rdd
       .mapPartitions { it =>
-        val ls = lutB.value
-        // per-query bounded top-`fetch` buffers (max-heap by dist)
-        val heaps = ls.map { case (qid, _) =>
-          qid -> collection.mutable.PriorityQueue.empty[(Double, Long)](Ordering.by(_._1))
-        }.toMap
-        it.foreach { r =>
-          val id = r.getLong(0)
-          val cell = r.getInt(1)
-          val cs = r.getSeq[Int](2)
-          for ((qid, tables) <- ls; t <- tables.get(cell); if id != qid) {
-            var d = 0.0
-            var s = 0
-            while (s < mSub) { d += t(s * kk + cs(s)); s += 1 }
-            val h = heaps(qid)
-            if (h.size < fetch) h.enqueue((d, id))
-            else if (d < h.head._1) { h.dequeue(); h.enqueue((d, id)) }
-          }
-        }
-        heaps.iterator.flatMap { case (qid, h) =>
-          h.iterator.map { case (d, id) => Row(qid, id, math.sqrt(d)) }
-        }
+        adcTopK(it, lutB.value, mSub, kk, fetch, skipSelf = true)
+          .map { case (qid, id, d) => Row(qid, id, math.sqrt(d)) }
       }
     val schema = StructType(Seq(
       StructField("query_id", LongType), StructField("neighbor_id", LongType),

@@ -4,8 +4,6 @@ import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 
 /** K-nearest-neighbor search over embedding columns.
   *
@@ -138,59 +136,13 @@ object Knn {
           score(metric, col("_va"), col("_vb")).as("score"))
   }
 
-  /** IVF-FLAT: k-means cells + nprobe-cell search.
-    * Returns the same schema as [[bruteForceTopK]]; approximate (recall
-    * depends on nprobe/nlist).
-    */
-  def ivfTopK(
-      corpus: DataFrame, corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String,
-      k: Int, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-      maxIter: Int = 8): DataFrame = {
-    val featurized = corpus.select(col(corpusId).as("neighbor_id"),
-      col(corpusVec).as("_cv"), array_to_vector(col(corpusVec)).as("_features"))
-    // cell quality saturates quickly for coarse quantizers: capped
-    // iterations + random init cut the build's Spark-job count ~3x with
-    // no measurable recall change (KnnSpec bound holds) — centroids only
-    // steer PROBING; distances are always exact within probed cells
-    val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("_features")
-      .setMaxIter(maxIter).setInitMode("random")
-      .fit(featurized)
-    // corpus side: one pass, every vector lands in exactly one cell
-    val cells = model.transform(featurized)
-      .select(col("neighbor_id"), col("_cv"), col("prediction").as("_cell"))
-    // centroid table is tiny: broadcast to rank cells per query
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray)
-    }
-    val centroidDf = corpus.sparkSession.createDataFrame(centroids.toSeq)
-      .toDF("_cell", "_centroid")
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("_qv"))
-      .crossJoin(broadcast(centroidDf))
-      .withColumn("_cdist", l2Distance(col("_qv"), col("_centroid")))
-      .withColumn("_crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(asc("_cdist"), col("_cell"))))
-      .filter(col("_crank") <= nprobe)
-      .select(col("query_id"), col("_qv"), col("_cell"))
-    // search only the probed cells
-    val scored = probes.join(cells, Seq("_cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("_score", l2Distance(col("_cv"), col("_qv")))
-    scored
-      .withColumn("_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(asc("_score"), col("neighbor_id"))))
-      .filter(col("_rank") <= k)
-      .select(col("query_id"), col("_rank").as("rank"),
-        col("neighbor_id"), col("_score").as("score"))
-  }
-
-  /** Probe-only IVF search against a prebuilt [[graft.plans.IvfIndex]]
+  /** Probe-only IVF search against a prebuilt
+    * [[graft.plans.VectorIndex.IvfFlat]]
     * (≙ `ivf_search`): rank cells per query against the broadcast
     * centroid table, scan just those cell partitions, exact distances
     * within. The KMeans build is never charged to the query.
     */
-  def ivfProbe(idx: graft.plans.IvfIndex.Index,
+  def ivfProbe(idx: graft.plans.VectorIndex.IvfFlat,
       queries: DataFrame, queryId: String, queryVec: String,
       k: Int, corpusId: String, nprobe: Int = 0): DataFrame = {
     val np = if (nprobe > 0) nprobe else idx.nprobe
@@ -214,19 +166,9 @@ object Knn {
     val probeRows: java.util.List[org.apache.spark.sql.Row] =
       java.util.Arrays.asList(qRaw.flatMap { r =>
         val qv = r.getSeq[Float](1).toArray
-        idx.centroids.zipWithIndex
-          .map { case (c, i) =>
-            var s = 0.0; var d = 0
-            while (d < qv.length && d < c.length) {
-              val x = qv(d).toDouble - c(d); s += x * x; d += 1
-            }
-            (s, i)
-          }
-          .sortBy { case (dist, cell) => (dist, cell) }
-          .take(np)
-          .map { case (_, cell) =>
-            org.apache.spark.sql.Row(r.get(0), qv.toSeq, cell)
-          }
+        Centroids.rank(idx.centroids, qv.map(_.toDouble), np).map { cell =>
+          org.apache.spark.sql.Row(r.get(0), qv.toSeq, cell)
+        }
       }: _*)
     val probeSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(

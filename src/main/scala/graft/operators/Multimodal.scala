@@ -103,19 +103,6 @@ object Multimodal {
   def resize(decoded: Dataset[Decoded], w: Int, h: Int): DataFrame =
     decoded.toDF().withColumn("width", lit(w)).withColumn("height", lit(h))
 
-  /** Frame sampling: slice the payload into fixed-size "frames" and keep
-    * every `stride`-th — binary slicing is a codegen'd expression, the
-    * explode is the only row-multiplier.
-    */
-  def frameSample(media: DataFrame, frameBytes: Int, stride: Int): DataFrame =
-    media.select(col("media_id"), col("bytes"),
-        (length(col("bytes")) / frameBytes).cast("int").as("_nframes"))
-      .select(col("media_id"),
-        posexplode(transform(sequence(lit(0), greatest(col("_nframes") - 1, lit(0))),
-          i => i)).as(Seq("_i", "frame_idx")))
-      .filter(col("frame_idx") % stride === 0)
-      .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"))
-
   /** Frame payloads with checksums (binary substring + md5, both
     * codegen'd expressions).
     */

@@ -39,8 +39,4 @@ object Sampling {
       .filter(col("_rn") <= n)
       .drop("_rn")
   }
-
-  /** Percent sample (Bernoulli) — maps to TABLESAMPLE / df.sample. */
-  def percentSample(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
 }

@@ -188,7 +188,7 @@ object VectorQueries extends QueryModule {
     val q = emb.filter(col("vec_id") < 5)
     // index DDL once per corpus (ivf_create), pure probe per query
     // (ivf_search) — the KMeans fit is never charged to the query
-    val idx = graft.plans.IvfIndex.forCorpus(s"emb-$d", emb, "embedding",
+    val idx = graft.plans.VectorIndex.ivfFlat(s"emb-$d", emb, "embedding",
       nlist = 16, nprobe = 4)
     val res = Knn.ivfProbe(idx, q, "vec_id", "embedding",
       k = 10, corpusId = "vec_id", nprobe = 8)
@@ -256,7 +256,7 @@ object VectorQueries extends QueryModule {
     val q = emb.filter(col("vec_id") < 5)
     // index DDL once per corpus (hnsw_create), pure graph probe per
     // query (hnsw_search) — graph construction never charged to the query
-    val idx = graft.plans.HnswIndex.forCorpus(s"emb-$d", emb, "vec_id",
+    val idx = graft.plans.VectorIndex.hnsw(s"emb-$d", emb, "vec_id",
       "embedding", m = 16, efConstruction = 100, efSearch = 80)
     val res = graft.operators.Hnsw.probeShards(idx.graphs, q, "vec_id",
       "embedding", k = 10, efSearch = idx.efSearch)
@@ -274,7 +274,7 @@ object VectorQueries extends QueryModule {
     val q = emb.filter(col("vec_id") < 5)
     // index DDL once per corpus (ivfpq_create: coarse KMeans + subspace
     // codebooks + materialized codes), pure ADC probe per query
-    val idx = graft.plans.IvfPqIndex.forCorpus(s"emb-$d", emb, "vec_id",
+    val idx = graft.plans.VectorIndex.ivfPq(s"emb-$d", emb, "vec_id",
       "embedding", nlist = 16, mSub = 8, codebookSize = 16, nprobe = 12)
     val res = graft.operators.IvfPq.search(idx.codes, idx.model, q,
       "vec_id", "embedding", k = 10, nprobe = 12, refine = 200, corpus = emb,

@@ -193,14 +193,6 @@ object GraftSql {
       refs.filter(_.parent == parent.toLowerCase)
         .map(r => (child, r.childCols, r.parentCols, r.onDelete))
     }
-  /** Child references on `parent` carrying the ON UPDATE action. */
-  private def childUpdateRefsOf(spark: SparkSession,
-      parent: String): Seq[(String, Seq[String], Seq[String], String)] =
-    state(spark).foreignKeys.toSeq.flatMap { case (child, refs) =>
-      refs.filter(_.parent == parent.toLowerCase)
-        .map(r => (child, r.childCols, r.parentCols, r.onUpdate))
-    }
-
   private def fkChecksOn(spark: SparkSession): Boolean =
     sysVarValue(spark, "session", "foreign_key_checks").trim != "0"
 
@@ -2911,20 +2903,8 @@ object GraftSql {
     // vector indexes die with their table too (registry keys are
     // "$name-$table-$vecCol")
     val mid = s"-$phys-"
-    annIndexNames(spark).filter(_.contains(mid)).distinct
-      .foreach(dropAnnIndex(spark, _))
-  }
-
-  /** Names of this session's vector indexes, every kind. */
-  private def annIndexNames(spark: SparkSession): Seq[String] =
-    graft.plans.IvfIndex.indexes(spark).map(_.name) ++
-      graft.plans.HnswIndex.indexes(spark).map(_.name) ++
-      graft.plans.IvfPqIndex.indexes(spark).map(_.name)
-
-  private def dropAnnIndex(spark: SparkSession, name: String): Unit = {
-    graft.plans.IvfIndex.drop(spark, name)
-    graft.plans.HnswIndex.drop(spark, name)
-    graft.plans.IvfPqIndex.drop(spark, name)
+    graft.plans.VectorIndex.indexes(spark).map(_.name).filter(_.contains(mid)).distinct
+      .foreach(graft.plans.VectorIndex.drop(spark, _))
   }
 
   /** Resolution pass — replaces the flat-storage qualifier strip.
@@ -3116,22 +3096,6 @@ object GraftSql {
           })
     if (tok.exists(!_.contains(".")) || selFrom.nonEmpty)
       throw new IllegalStateException("No database selected")
-  }
-
-  /** Delete every match of `re` found against the literal-MASKED copy
-    * of `s` (so data like 'a.b' is never touched, but backtick-quoted
-    * identifiers — invisible to replaceOutsideQuotes — are).
-    */
-  private def deleteMasked(s: String, re: scala.util.matching.Regex): String = {
-    val masked = MySqlCompat.maskLiterals(s)
-    if (re.findFirstIn(masked).isEmpty) return s
-    val sb = new java.lang.StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(s, last, m.start); last = m.end
-    }
-    sb.append(s, last, s.length)
-    sb.toString
   }
 
   /** replaceAllIn against the literal-MASKED copy (matches can't sit
@@ -5370,8 +5334,10 @@ object GraftSql {
           .map(m => Option(m.group(1)).getOrElse(m.group(2))).getOrElse("")
         val vecNums = splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
         if (vecNums.isEmpty) return None
-        val idxOpt = graft.plans.IvfIndex.indexes(spark).find(
-          _.name.toLowerCase.endsWith(s"-${table.toLowerCase}-${vcol.toLowerCase}"))
+        val idxOpt = graft.plans.VectorIndex.indexes(spark).collectFirst {
+          case ix: graft.plans.VectorIndex.IvfFlat
+              if ix.name.toLowerCase.endsWith(s"-${table.toLowerCase}-${vcol.toLowerCase}") => ix
+        }
         if (idxOpt.isEmpty && modeOpt.isEmpty) return None // no index, no hint
         val mode = modeOpt.getOrElse(
           if (sysVarValue(spark, "session", "enable_vector_auto_mode_by_default") == "1")
@@ -5393,15 +5359,16 @@ object GraftSql {
         // reference resolves them in insertion (= pk) order
         val pkOrd = state(spark).primaryKeys.getOrElse(table, spark.table(table).columns.head)
           .split(",").map(c => col(s"`${c.trim}`").asc).toIndexedSeq
-        val w = org.apache.spark.sql.expressions.Window.orderBy(ord0 +: pkOrd: _*)
         val off = Option(offTxt).map(_.toInt).getOrElse(0)
+        // the (off, off+k] slice as a top-k (sort + offset + limit), not
+        // a row_number() over an unpartitioned window, which would pull
+        // every candidate row into one task
         def ranked(df: DataFrame): DataFrame = df
           .withColumn("__dist", distCol)
-          .withColumn("__rank", row_number().over(w))
-          .filter(col("__rank") > off && col("__rank") <= off + k)
+          .orderBy(ord0 +: pkOrd: _*).offset(off).limit(k)
         def finish(df: DataFrame): DataFrame = {
           val items = splitTop(proj).map(_.trim)
-          val out = df.orderBy(col("__rank"))
+          val out = df.orderBy(ord0 +: pkOrd: _*)
           if (items == Seq("*")) out.select(
             spark.table(table).columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
           else out.selectExpr(items: _*)
@@ -5425,22 +5392,12 @@ object GraftSql {
             val metric = if (fn.startsWith("cosine")) "cosine" else "l2"
             val qv = vecNums.map(_.toDouble).toArray
             val cents = idx.centroids
-            val assign = udf((v: Seq[Double]) => {
-              var best = 0; var bd = Double.MaxValue; var i = 0
-              while (i < cents.length) {
-                val c = cents(i); var s = 0.0; var j = 0
-                val n = math.min(c.length, v.length)
-                while (j < n) { val d = c(j) - v(j); s += d * d; j += 1 }
-                if (s < bd) { bd = s; best = i }
-                i += 1
-              }
-              best
-            })
+            val assign = udf((v: Seq[Double]) =>
+              graft.operators.Centroids.nearest(cents, v.toArray))
             val assigned = spark.table(table).filter(col(vcol).isNotNull)
               .withColumn("__ivf_cell", assign(col(s"`$vcol`").cast("array<double>")))
             def candIn(n: Int): DataFrame = {
-              val cells = graft.plans.IvfIndex.nearestCells(
-                idx.copy(nprobe = n), qv, metric).toSet
+              val cells = graft.operators.Centroids.rank(cents, qv, n, metric).toSet
               Option(whereOrNull).map(_.trim).filter(_.nonEmpty)
                 .foldLeft(assigned.filter(
                   col("__ivf_cell").isin(cells.toSeq: _*)))((d, c) => d.where(c))
@@ -5461,12 +5418,37 @@ object GraftSql {
     case _ => None
   }
 
+  /** Build and register one vector index of kind `method` (CREATE INDEX
+    * and ALTER REINDEX): the DDL options map onto each kind's build
+    * parameters. IVF-flat's list count is clamped to [1, `nRows`]: more
+    * centroids than rows would break the kmeans.
+    */
+  private def buildAnnIndex(method: String, key: String, df: DataFrame,
+      pk: String, vecCol: String, opts: Map[String, String],
+      nRows: Long): graft.plans.VectorIndex.Index = {
+    def iOpt(k: String, dflt: Int) = opts.get(k).map(_.toInt).getOrElse(dflt)
+    def clamp(v: Int): Int = math.max(1, math.min(v, nRows).toInt)
+    method match {
+      case "ivfflat" =>
+        graft.plans.VectorIndex.ivfFlat(key, df, vecCol,
+          nlist = clamp(iOpt("lists", 16)), nprobe = iOpt("nprobe", 4))
+      case "hnsw" =>
+        graft.plans.VectorIndex.hnsw(key, df, pk, vecCol,
+          m = iOpt("m", 16), efConstruction = iOpt("ef_construction", 100),
+          efSearch = iOpt("ef_search", 64))
+      case _ =>
+        graft.plans.VectorIndex.ivfPq(key, df, pk, vecCol,
+          nlist = iOpt("lists", 16), mSub = iOpt("m", 8),
+          codebookSize = iOpt("codebook", 16), nprobe = iOpt("nprobe", 8))
+    }
+  }
+
   /** The reference's vector-index DDL (`create index ... using ivfflat on
     * t(col) lists=N op_type "vector_l2_ops"`, BVT
     * `cases/vector/vector_ivfflat_*.sql`; HNSW params `m/ef_construction/
     * ef_search`, `pkg/vectorindex/hnsw/`). Builds + registers the index
-    * through the same registries the ANN planner rules probe
-    * ([[graft.plans.IvfAnnRule]]), so a subsequent plain
+    * through the one registry the ANN planner rule probes
+    * ([[graft.plans.AnnRule]]), so a subsequent plain
     * `ORDER BY l2_distance(col, array(...)) LIMIT k` takes the index —
     * exactly the reference's `ivf_create` once / `ivf_search` per query
     * split (`table_function.go:180-201`). `include(...)` carry columns
@@ -5556,31 +5538,18 @@ object GraftSql {
           return Some(Seq((name, table, vecCol, method.toLowerCase, "created"))
             .toDF("index_name", "table_name", "column_name", "method", "status"))
         }
-        def clamp(v: Int): Int = math.max(1, math.min(v, nRows).toInt)
         val pk = state(spark).primaryKeys.getOrElse(table, df.columns.head)
-        def iOpt(k: String, dflt: Int) = opts.get(k).map(_.toInt).getOrElse(dflt)
         val key = s"$name-$table-$vecCol"
         // one name per table (the reference errors on re-use,
         // vector_index.result: "duplicate key name 'idx01'")
         val prefix = s"$name-$table-"
-        if (annIndexNames(spark).exists(_.startsWith(prefix)))
+        if (graft.plans.VectorIndex.indexes(spark).map(_.name).exists(_.startsWith(prefix)))
           throw new IllegalArgumentException(s"duplicate key name '$name'")
-        val builtCentroids = method.toLowerCase match {
-          case "ivfflat" =>
-            graft.plans.IvfIndex.forCorpus(key, df, vecCol,
-              nlist = clamp(iOpt("lists", 16)), nprobe = iOpt("nprobe", 4))
-              .centroids
-          case "hnsw" =>
-            graft.plans.HnswIndex.forCorpus(key, df, pk, vecCol,
-              m = iOpt("m", 16), efConstruction = iOpt("ef_construction", 100),
-              efSearch = iOpt("ef_search", 64))
-            Array.empty[Array[Double]]
-          case "ivfpq" =>
-            graft.plans.IvfPqIndex.forCorpus(key, df, pk, vecCol,
-              nlist = iOpt("lists", 16), mSub = iOpt("m", 8),
-              codebookSize = iOpt("codebook", 16), nprobe = iOpt("nprobe", 8))
-            Array.empty[Array[Double]]
-        }
+        val builtCentroids =
+          buildAnnIndex(method.toLowerCase, key, df, pk, vecCol, opts, nRows) match {
+            case ix: graft.plans.VectorIndex.IvfFlat => ix.centroids
+            case _ => Array.empty[Array[Double]]
+          }
         // surface the index in the mo_catalog slice (+ the live entries
         // view for ivfflat); include(...) carry columns come from the DDL
         moRegister(builtCentroids)
@@ -5608,7 +5577,7 @@ object GraftSql {
         }
         val prefix = s"$name-$table-"
         val existing =
-          annIndexNames(spark)
+          graft.plans.VectorIndex.indexes(spark).map(_.name)
             .find(_.startsWith(prefix)).getOrElse(throw new IllegalArgumentException(
               s"invalid input: index $name does not exist on $table"))
         val vecCol = existing.stripPrefix(prefix)
@@ -5623,27 +5592,13 @@ object GraftSql {
         validateQuantization(optsTxt, method,
           graft.functions.NarrowVec.widthOf(baseKind), baseKind)
         val opts = parseIndexOpts(optsTxt)
-        def iOpt(k: String, dflt: Int) = opts.get(k).map(_.toInt).getOrElse(dflt)
         val nRows = df.filter(col(vecCol).isNotNull).count()
-        def clamp(v: Int): Int = math.max(1, math.min(v, nRows).toInt)
         // rebuild in place: drop, then re-register under the same key —
         // the reference's ALTER REINDEX is exactly a rebuild with the
         // merged option set (`alter_table.go` reindex path)
-        dropAnnIndex(spark, existing)
+        graft.plans.VectorIndex.drop(spark, existing)
         val pk = state(spark).primaryKeys.getOrElse(table, df.columns.head)
-        if (nRows > 0) method match {
-          case "ivfflat" =>
-            graft.plans.IvfIndex.forCorpus(existing, df, vecCol,
-              nlist = clamp(iOpt("lists", 16)), nprobe = iOpt("nprobe", 4))
-          case "hnsw" =>
-            graft.plans.HnswIndex.forCorpus(existing, df, pk, vecCol,
-              m = iOpt("m", 16), efConstruction = iOpt("ef_construction", 100),
-              efSearch = iOpt("ef_search", 64))
-          case _ =>
-            graft.plans.IvfPqIndex.forCorpus(existing, df, pk, vecCol,
-              nlist = iOpt("lists", 16), mSub = iOpt("m", 8),
-              codebookSize = iOpt("codebook", 16), nprobe = iOpt("nprobe", 8))
-        }
+        if (nRows > 0) buildAnnIndex(method, existing, df, pk, vecCol, opts, nRows)
         Some(Seq((name, table, method, "rebuilt"))
           .toDF("index_name", "table_name", "method", "status"))
       case CreatePlainIndexRe(kindOrNull, name, usingOrNull, table, colsTxt, _) =>
@@ -5673,10 +5628,10 @@ object GraftSql {
         val table = Option(tableOrNull)
         val prefix = table.map(t => s"$name-$t-").getOrElse(s"$name-")
         val dropped =
-          annIndexNames(spark)
+          graft.plans.VectorIndex.indexes(spark).map(_.name)
             .filter(n => n == name || n.startsWith(prefix)).distinct
         dropped.foreach { n =>
-          dropAnnIndex(spark, n)
+          graft.plans.VectorIndex.drop(spark, n)
           n.split("-") match {
             case Array(i, t, _*) => MoCatalog.dropIndex(spark, i, t)
             case _ =>

@@ -66,7 +66,6 @@ object MoCatalog {
     cs.everUsed = true
     cs.allDbs.put(db, ())
   }
-  def seenDbs(spark: SparkSession): Seq[String] = state(spark).allDbs.keys.toSeq
   /** Every db name this session could legally qualify a table with:
     * `use`d names plus created-but-never-used ones (bare, account
     * prefix stripped) — the flat-storage qualifier strip needs both
@@ -381,17 +380,7 @@ object MoCatalog {
         val assignName = s"__mo_assign_${tid}_${idxName.toLowerCase}"
         spark.udf.register(assignName, (v: Seq[Double]) =>
           if (v == null) null
-          else {
-            var best = 0; var bd = Double.MaxValue; var i = 0
-            while (i < cents.length) {
-              val c = cents(i); var s = 0.0; var j = 0
-              val n = math.min(c.length, v.length)
-              while (j < n) { val d = c(j) - v(j); s += d * d; j += 1 }
-              if (s < bd) { bd = s; best = i }
-              i += 1
-            }
-            java.lang.Integer.valueOf(best)
-          })
+          else java.lang.Integer.valueOf(graft.operators.Centroids.nearest(cents, v.toArray)))
         val pkSql =
           if (pkCols.length == 1) s"`${pkCols.head}`"
           else pkCols.map(c => s"CAST(`$c` AS STRING)")

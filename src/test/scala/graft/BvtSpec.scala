@@ -2693,9 +2693,7 @@ class BvtSpec extends AnyFunSuite {
     // vector indexes are materialized on disk: drop them (a leftover name
     // from a prior file's un-dropped table would also hit the
     // duplicate-name check)
-    graft.plans.IvfIndex.clear(spark)
-    graft.plans.HnswIndex.clear(spark)
-    graft.plans.IvfPqIndex.clear(spark)
+    graft.plans.VectorIndex.clear(spark)
     // the reference's BVT gets a fresh session per file: forget every
     // registry this session holds (catalog, keys, variables, sequences,
     // stages, partitions, caches)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Hnsw, IvfPq, Knn}
+import graft.plans.VectorIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,27 +11,13 @@ class KnnSpec extends AnyFunSuite {
 
   private lazy val emb = Tables.embeddings(spark, sf)
 
-  test("ivf recall vs brute force is high") {
-    val queries = emb.filter(col("vec_id") < 10)
-    val brute = Knn.bruteForceTopK(emb, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 10, metric = Knn.L2)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Knn.ivfTopK(emb, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 10, nlist = 16, nprobe = 8)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute intersect ivf).size.toDouble / brute.size
-    assert(recall >= 0.7, s"IVF recall $recall too low")
-  }
-
   test("prebuilt ivf index probe matches the recall bound too") {
     val queries = emb.filter(col("vec_id") < 10)
     val brute = Knn.bruteForceTopK(emb, "vec_id", "embedding",
         queries, "vec_id", "embedding", k = 10, metric = Knn.L2)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idx = graft.plans.IvfIndex.forCorpus("knnspec", emb, "embedding",
+    val idx = VectorIndex.ivfFlat("knnspec", emb, "embedding",
       nlist = 16, nprobe = 8)
     val probed = Knn.ivfProbe(idx, queries, "vec_id", "embedding",
         k = 10, corpusId = "vec_id")
@@ -46,26 +33,33 @@ class KnnSpec extends AnyFunSuite {
         queries, "vec_id", "embedding", k = 10, metric = Knn.L2)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hnsw = Hnsw.hnswTopK(emb, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 10, m = 16,
-        efConstruction = 100, efSearch = 80)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute intersect hnsw).size.toDouble / brute.size
-    assert(recall >= 0.9, s"HNSW recall $recall too low")
+    val idx = VectorIndex.hnsw("knnspec_hnsw", emb, "vec_id", "embedding",
+      m = 16, efConstruction = 100, efSearch = 80)
+    try {
+      val hnsw = Hnsw.probeShards(idx.graphs, queries, "vec_id", "embedding",
+          k = 10, efSearch = idx.efSearch)
+        .select("query_id", "neighbor_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (brute intersect hnsw).size.toDouble / brute.size
+      assert(recall >= 0.9, s"HNSW recall $recall too low")
+    } finally VectorIndex.drop(spark, idx.name)
   }
 
   test("hnsw graph search matches exact scan on a single shard") {
     // one partition = one graph: results must be properly ranked and
     // distances must be true L2 distances
-    val one = emb.repartition(1)
-    val res = Hnsw.hnswTopK(one, "vec_id", "embedding",
-      emb.filter(col("vec_id") === 3), "vec_id", "embedding",
-      k = 5, efSearch = 120).collect().sortBy(_.getAs[Int]("rank"))
-    assert(res.length == 5)
-    val scores = res.map(_.getAs[Double]("score"))
-    assert(scores.sliding(2).forall(p => p(0) <= p(1)), "distances not ascending")
-    assert(res.forall(_.getAs[Long]("neighbor_id") != 3L), "query row not excluded")
+    val idx = VectorIndex.hnsw("knnspec_hnsw_one", emb.repartition(1),
+      "vec_id", "embedding")
+    try {
+      assert(idx.graphs.count() == 1)
+      val res = Hnsw.probeShards(idx.graphs, emb.filter(col("vec_id") === 3),
+        "vec_id", "embedding", k = 5, efSearch = 120)
+        .collect().sortBy(_.getAs[Int]("rank"))
+      assert(res.length == 5)
+      val scores = res.map(_.getAs[Double]("score"))
+      assert(scores.sliding(2).forall(p => p(0) <= p(1)), "distances not ascending")
+      assert(res.forall(_.getAs[Long]("neighbor_id") != 3L), "query row not excluded")
+    } finally VectorIndex.drop(spark, idx.name)
   }
 
   test("ivfpq with exact refine recovers brute-force neighbors") {

@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import scala.collection.mutable.ArrayBuffer
 
 /** Document deduplication for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and blocked n-gram Jaccard.
@@ -16,6 +18,9 @@ import org.apache.spark.sql.functions._
   *  - Hot buckets (boilerplate docs) are the classic skew risk — AQE skew
   *    join handles moderate cases; `maxBucket` drops degenerate buckets
   *    (a bucket with 10⁶ identical-signature docs is itself a finding).
+  *  - A MinHash LSH corpus under 256 KB skips the shuffles altogether:
+  *    it is bucketed and paired in one task, where each Spark job
+  *    boundary would cost more than the work.
   */
 object Dedup {
 
@@ -26,17 +31,33 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
       .drop("_key")
 
-  /** MinHash LSH candidates verified with exact shingle Jaccard.
+  /** MinHash LSH candidates verified with exact shingle Jaccard: the
+    * pairs `a_id < b_id` at Jaccard ≥ `threshold`, `jacc` rounded to 6
+    * places. Ids are assumed unique.
     *
-    * NOTE (lifetime contract): the returned plan reads two frames this
-    * call persists (the shingle table and the banded signature table).
-    * They stay registered until the caller's `spark.catalog.clearCache()`
-    * — which Bench/Verify issue after every query — or session end; a
-    * long-lived service embedding this operator must do the same.
+    * A corpus whose estimated size (`optimizedPlan.stats.sizeInBytes`)
+    * is at most [[OneTaskMaxBytes]] and at most
+    * `spark.sql.autoBroadcastJoinThreshold` is deduplicated in ONE task
+    * ([[minhashPairsOneTask]]): one Spark job, nothing persisted, nothing
+    * executed at construction. Above either, or with the threshold at -1,
+    * the distributed plan below runs. Both give the same rows.
+    *
+    * NOTE (lifetime contract, distributed path only): the returned plan
+    * reads two frames this call persists (the shingle table and the
+    * banded signature table). They stay registered until the caller's
+    * `spark.catalog.clearCache()` — which Bench/Verify issue after every
+    * query — or session end; a long-lived service embedding this
+    * operator must do the same.
     */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String, threshold: Double,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
+    val docs = df.select(col(idCol), col(textCol))
+    val oneTaskBound = math.min(OneTaskMaxBytes,
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTaskBound)
+      return minhashPairsOneTask(docs, idCol, textCol, threshold, shingleN,
+        numHashes, bands)
     // shingling is the expensive projection and is needed by candidate
     // generation AND both verify sides — persist so it is computed once
     // (at cluster scale this materializes as a signature table).
@@ -50,7 +71,7 @@ object Dedup {
         wordShingles(tokens(col(textCol)), shingleN).as("_sh") /* sorted */)
       .filter(size(col("_sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = minhashCandidatesFromShingles(sh, numHashes, bands)
+    val cands = minhashCandidatesFromShingles(sh, numHashes, bands, MaxBucket)
     // exact-Jaccard verify, §8-style "decide small, attach payloads":
     // the PAIR LIST is the small decision table — broadcast it (ids only)
     // and stream the (persisted) shingle table past it to attach the a
@@ -61,17 +82,110 @@ object Dedup {
     // generation executes exactly once, inside the broadcast.
     val withA = sh.select(col("_sid").as("a_id"), col("_sh").as("_sha"))
       .join(broadcast(cands), Seq("a_id"))
-    sh.select(col("_sid").as("b_id"), col("_sh").as("_shb"))
-      .join(withA.hint("merge"), Seq("b_id"))
-      .withColumn("jacc", jaccardSorted(col("_sha"), col("_shb")))
+    verified(sh.select(col("_sid").as("b_id"), col("_sh").as("_shb"))
+      .join(withA.hint("merge"), Seq("b_id")), threshold)
+  }
+
+  /** LSH buckets larger than this are dropped: a degenerate bucket (10⁶
+    * boilerplate documents) is a finding, not 10¹² candidate pairs.
+    */
+  private val MaxBucket = 1000
+
+  /** The largest estimated corpus (`sizeInBytes` of the id and text
+    * columns) deduplicated in one task, whatever the broadcast threshold.
+    * The one task runs the shingle and MinHash kernels serially, so past
+    * this the distributed plan's parallel kernels win. dd2 timed on both
+    * paths (4 cores, 8-file corpora built from sf0.1 `documents`): one
+    * task / distributed took 0.77 / 1.86 s at 1,250 documents (0.07 MB
+    * estimated), 1.35 / 2.59 s at 2,500 (0.13 MB), 2.34 / 2.35 s at
+    * 5,000 (0.26 MB), 6.8 / 4.6 s at 20,000 (1.0 MB) and 29 / 9 s at
+    * 80,000 (4.1 MB). At this bound the task held about 20 MB of heap.
+    * `repartition(1)` after the kernels instead of `coalesce(1)` keeps
+    * them parallel but adds a shuffle stage: 1.1–1.5 s at 5,000
+    * documents, yet 0.73–0.97 s against 0.41–0.56 s at 500 (the `olap`
+    * benchmark's corpora hold 300).
+    */
+  private[graft] val OneTaskMaxBytes = 256L * 1024
+
+  /** Exact Jaccard of `(a_id, b_id, _sha, _shb)` candidate pairs, kept at
+    * `threshold` or more and rounded to 6 places — one Catalyst
+    * expression chain for both paths, so their rows are bit-identical.
+    */
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("jacc", jaccardSorted(col("_sha"), col("_shb")))
       .filter(col("jacc") >= threshold)
       .select(col("a_id"), col("b_id"), round(col("jacc"), 6).as("jacc"))
+
+  /** [[minhashPairs]] for a corpus small enough for one task (the
+    * reference's `forceJoinOnOneCN`). One projection runs the same
+    * Catalyst kernels as the distributed path; `coalesce(1)` puts the
+    * rows in one partition, which already satisfies a caller's sort, so
+    * the plan has no exchange; one `mapPartitions` buckets and pairs in
+    * plain Scala ([[lshCandidates]]). Ids are compared only by Catalyst's
+    * `<` after it, and the pairs are verified by [[verified]], as on the
+    * distributed path.
+    */
+  private def minhashPairsOneTask(docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
+    val rows = numHashes / bands
+    // the empty-shingle filter runs in the task: a Catalyst filter on
+    // `size(_sh)` is pushed below the projection and shingles twice
+    val keyed = docs.select(col(idCol).as("_sid"),
+        wordShingles(tokens(col(textCol)), shingleN).as("_sh"))
+      .select(col("_sid"), col("_sh"),
+        bandKeys(minhashSignature(col("_sh"), numHashes), bands, rows).as("_keys"))
+    val Seq(id, sh) = Seq("_sid", "_sh").map(keyed.schema(_).dataType)
+    val pairSchema = StructType(Seq(StructField("a_id", id), StructField("b_id", id),
+      StructField("_sha", sh), StructField("_shb", sh)))
+    verified(keyed.coalesce(1)
+      .mapPartitions(it => lshCandidates(it, bands, MaxBucket))(Encoders.row(pairSchema))
+      .filter(col("a_id") < col("b_id")), threshold)
+  }
+
+  /** LSH bucketing and pair generation over one partition of
+    * `(_sid, _sh, _keys)` rows. The task holds each document's id,
+    * shingles and band keys, plus per band an ordering and bucket sizes:
+    * O(documents × bands), no set of candidate pairs. A pair is emitted
+    * from the first band where its two documents share a bucket of at
+    * most `maxBucket` — the set the distributed `distinct` leaves — in
+    * both orientations, so that Catalyst picks `a_id < b_id`.
+    */
+  private def lshCandidates(it: Iterator[Row], bands: Int, maxBucket: Int): Iterator[Row] = {
+    val ids = ArrayBuffer.empty[Any]
+    val sh = ArrayBuffer.empty[collection.Seq[String]]
+    val keys = ArrayBuffer.empty[Array[Long]]
+    it.foreach { r =>
+      if (!r.isNullAt(1) && r.getSeq[String](1).nonEmpty) {
+        ids += r.get(0); sh += r.getSeq[String](1); keys += r.getSeq[Long](2).toArray
+      }
+    }
+    // per band: the documents ordered by bucket key (a bucket is a run)
+    // and each document's bucket size
+    val byKey = Array.tabulate(bands)(b => Array.range(0, ids.length).sortBy(keys(_)(b)))
+    val bucketSize = Array.fill(bands)(new Array[Int](ids.length))
+    def runs(b: Int): Iterator[(Int, Int)] = {
+      val o = byKey(b)
+      Iterator.unfold(0)(s => Option.when(s < o.length) {
+        var e = s + 1
+        while (e < o.length && keys(o(e))(b) == keys(o(s))(b)) e += 1
+        ((s, e), e)
+      })
+    }
+    for (b <- 0 until bands; (s, e) <- runs(b); k <- s until e) bucketSize(b)(byKey(b)(k)) = e - s
+    def paired(i: Int, j: Int, b: Int): Boolean =
+      keys(i)(b) == keys(j)(b) && bucketSize(b)(i) <= maxBucket
+    for {
+      b <- Iterator.range(0, bands)
+      (s, e) <- runs(b) if e - s > 1 && e - s <= maxBucket
+      p <- Iterator.range(s, e); q <- Iterator.range(p + 1, e)
+      (i, j) = (byKey(b)(p), byKey(b)(q)) if !(0 until b).exists(paired(i, j, _))
+      row <- Iterator(Row(ids(i), ids(j), sh(i), sh(j)), Row(ids(j), ids(i), sh(j), sh(i)))
+    } yield row
   }
 
   /** Candidate pairs from a pre-shingled (_sid, _sh) frame. */
   private def minhashCandidatesFromShingles(
-      sh: DataFrame, numHashes: Int, bands: Int,
-      maxBucket: Int = 1000): DataFrame = {
+      sh: DataFrame, numHashes: Int, bands: Int, maxBucket: Int): DataFrame = {
     val rows = numHashes / bands
     // the banded signature is read THREE times downstream (bucket-size
     // aggregate + both self-join sides); without a persist the 64-hash

@@ -69,8 +69,9 @@ private[plans] object AnnSortPattern {
   * It matches a metric ORDER BY + LIMIT k whose sort child is exactly an
   * indexed corpus (by CANONICALIZED plan, so any DataFrame or SQL query
   * over it qualifies) and asks the matching index for its candidates.
-  * The kinds are tried IVF-flat, then HNSW, then IVF-PQ. The query's own
-  * sort and limit stay on top and rank the candidates exactly:
+  * The kinds are tried IVF-flat, then HNSW, then IVF-PQ; of several
+  * indexes of one kind, the most recently (re)registered serves. The
+  * query's own sort and limit stay on top and rank the candidates exactly:
   *  - IVF-flat rows (only the `nprobe` nearest cells, chosen driver-side
   *    against the tiny centroid table by the QUERY's metric) replace
   *    the corpus, rebound to its attribute ids;
@@ -104,7 +105,8 @@ class AnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           }
         lazy val corpus = child.canonicalized
-        // the first index of each kind on this corpus column, in order
+        // the most recently registered index of each kind on this corpus
+        // column, kinds in order
         VectorIndex.Kind.inOrder.iterator
           .flatMap(kind => all.find(ix =>
             ix.kind == kind && ix.vecCol == attr.name && ix.corpusPlan == corpus))

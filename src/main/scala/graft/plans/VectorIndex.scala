@@ -123,9 +123,11 @@ object VectorIndex {
   }
 
   private final class State {
-    // kind → name → index armed for the planner rule. Of several indexes
-    // of one kind on one corpus column, the first in its map serves.
-    val registry = Kind.inOrder.map(_ -> TrieMap.empty[String, Index]).toMap
+    // kind → name → (registration number, index) armed for the planner
+    // rule. Of several indexes of one kind on one corpus column, the most
+    // recently (re)registered serves.
+    val registry = Kind.inOrder.map(_ -> TrieMap.empty[String, (Long, Index)]).toMap
+    val registrations = new java.util.concurrent.atomic.AtomicLong()
     // build-once cache, keyed by kind, name and every build parameter
     val built = TrieMap.empty[String, Index]
     // (kind, index, query vector, k) → lazy candidate plan: the analyzer
@@ -134,16 +136,18 @@ object VectorIndex {
   }
   private val state = new graft.SessionScoped(() => new State)
 
-  /** This session's indexes, in [[AnnRule]]'s order of kinds. */
+  /** This session's indexes, in [[AnnRule]]'s order of kinds and, within
+    * a kind, the most recently registered first.
+    */
   def indexes(spark: SparkSession): Seq[Index] = {
     val st = state(spark)
-    Kind.inOrder.flatMap(st.registry(_).values)
+    Kind.inOrder.flatMap(st.registry(_).values.toSeq.sortBy(-_._1).map(_._2))
   }
 
   /** Drop every index called `name`, whatever its kind, with its rows. */
   def drop(spark: SparkSession, name: String): Unit = {
     val st = state(spark)
-    val gone = Kind.inOrder.flatMap(st.registry(_).remove(name))
+    val gone = Kind.inOrder.flatMap(st.registry(_).remove(name)).map(_._2)
     gone.foreach(idx => IndexStore.delete(spark, idx.dir))
     if (gone.nonEmpty) {
       st.built.filterInPlace((_, v) => v.name != name)
@@ -161,7 +165,7 @@ object VectorIndex {
       cacheKey: String)(build: => I): I = {
     val st = state(spark)
     val idx = st.built.getOrElseUpdate(s"$kind#$cacheKey", build).asInstanceOf[I]
-    st.registry(kind).put(idx.name, idx)
+    st.registry(kind).put(idx.name, (st.registrations.incrementAndGet(), idx))
     idx
   }
 

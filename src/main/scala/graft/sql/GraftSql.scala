@@ -5443,6 +5443,15 @@ object GraftSql {
     }
   }
 
+  /** An IVF-flat index's centroids (the mo_catalog entries view assigns
+    * by them); other kinds have none.
+    */
+  private def ivfCentroids(ix: graft.plans.VectorIndex.Index): Array[Array[Double]] =
+    ix match {
+      case f: graft.plans.VectorIndex.IvfFlat => f.centroids
+      case _ => Array.empty
+    }
+
   /** The reference's vector-index DDL (`create index ... using ivfflat on
     * t(col) lists=N op_type "vector_l2_ops"`, BVT
     * `cases/vector/vector_ivfflat_*.sql`; HNSW params `m/ef_construction/
@@ -5545,14 +5554,10 @@ object GraftSql {
         val prefix = s"$name-$table-"
         if (graft.plans.VectorIndex.indexes(spark).map(_.name).exists(_.startsWith(prefix)))
           throw new IllegalArgumentException(s"duplicate key name '$name'")
-        val builtCentroids =
-          buildAnnIndex(method.toLowerCase, key, df, pk, vecCol, opts, nRows) match {
-            case ix: graft.plans.VectorIndex.IvfFlat => ix.centroids
-            case _ => Array.empty[Array[Double]]
-          }
         // surface the index in the mo_catalog slice (+ the live entries
         // view for ivfflat); include(...) carry columns come from the DDL
-        moRegister(builtCentroids)
+        moRegister(ivfCentroids(
+          buildAnnIndex(method.toLowerCase, key, df, pk, vecCol, opts, nRows)))
         Some(Seq((name, table, vecCol, method.toLowerCase, "created"))
           .toDF("index_name", "table_name", "column_name", "method", "status"))
       case AlterReindexRe(table, name, method0, optsTxt) =>
@@ -5598,7 +5603,14 @@ object GraftSql {
         // merged option set (`alter_table.go` reindex path)
         graft.plans.VectorIndex.drop(spark, existing)
         val pk = state(spark).primaryKeys.getOrElse(table, df.columns.head)
-        if (nRows > 0) buildAnnIndex(method, existing, df, pk, vecCol, opts, nRows)
+        val centroids =
+          if (nRows > 0) ivfCentroids(buildAnnIndex(method, existing, df, pk, vecCol, opts, nRows))
+          else Array.empty[Array[Double]]
+        // the live entries view assigns rows by the REBUILT centroids,
+        // keeping the include(...) columns of the CREATE
+        MoCatalog.registerVectorIndex(spark, name, table, method, vecCol,
+          pk.split(",").map(_.trim).toSeq, MoCatalog.vectorIndexIncludes(spark, name, table),
+          centroids)
         Some(Seq((name, table, method, "rebuilt"))
           .toDF("index_name", "table_name", "method", "status"))
       case CreatePlainIndexRe(kindOrNull, name, usingOrNull, table, colsTxt, _) =>

@@ -412,6 +412,18 @@ object MoCatalog {
       rows.map(_.copy(columns = Seq(vecCol))))
   }
 
+  /** The include(...) carry columns a vector index was registered with,
+    * read back from its rows' `algo_params` (`included_columns`).
+    */
+  def vectorIndexIncludes(spark: SparkSession, idxName: String, table: String): Seq[String] =
+    state(spark).indexRows.get(s"${idxName.toLowerCase}-${table.toLowerCase}")
+      .flatMap(_.headOption).map(_.algoParams).filter(_.nonEmpty)
+      .fold(Seq.empty[String]) { params =>
+        import scala.jdk.CollectionConverters._
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(params)
+          .path("included_columns").elements().asScala.map(_.asText).toSeq
+      }
+
   /** A non-vector secondary index (plain KEY / UNIQUE / SPATIAL): its
     * physical layout is Catalyst's business, but the mo_indexes rows are
     * real introspection surface — func_geometry reads

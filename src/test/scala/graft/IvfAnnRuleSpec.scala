@@ -321,7 +321,7 @@ class IvfAnnRuleSpec extends AnyFunSuite {
     val t = "vix_alter"
     clustered(t)
     try {
-      sql(s"CREATE INDEX vix_a USING IVFFLAT ON $t(v) lists=4")
+      sql(s"CREATE INDEX vix_a USING IVFFLAT ON $t(v) lists=4 include(tag)")
       assert(ivf(s"vix_a-$t-v").centroids.length == 4)
       val r = sql(s"ALTER TABLE $t ALTER REINDEX vix_a IVFFLAT lists=2")
       assert(r.head.getAs[String]("status") == "rebuilt")
@@ -329,6 +329,50 @@ class IvfAnnRuleSpec extends AnyFunSuite {
       assert(rebuilt.nlist == 2 && rebuilt.centroids.length == 2)
       assert(rebuilt.cells.select("__ivf_cell").distinct().count() == 2)
       assert(nestedKnn(t, q0, 3).queryExecution.optimizedPlan.toString.contains("__ivf_cell"))
+      // the mo_catalog entries view assigns by the rebuilt centroids and
+      // still carries the include(...) column
+      val cells = rebuilt.cells.select("id", "__ivf_cell").collect()
+        .map(r => r.getInt(0).toLong -> r.getInt(1).toLong).toMap
+      val entries = spark.table(
+          s"__mo_index_secondary_${MoCatalog.tableId(spark, t)}_vix_a_entries")
+        .select(col("__mo_index_pri_col").cast("long"),
+          col("__mo_index_centroid_fk_id").cast("long"), col("__mo_index_include_tag"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(cells.size == 20)
+      assert(entries == cells)
+    } finally {
+      sql(s"DROP TABLE IF EXISTS $t")
+      VectorIndex.clear(spark)
+    }
+  }
+
+  test("of two IVF indexes on one column, the later created serves") {
+    VectorIndex.clear(spark)
+    val t = "vix_two"
+    clustered(t)
+    // the indexes whose rows the kNN query reads
+    def served: Set[String] = {
+      val files = nestedKnn(t, q0, 3).inputFiles
+      VectorIndex.indexes(spark).filter(_.name.contains(s"-$t-")).collect {
+        case ix if files.exists(_.contains(s"/${new org.apache.hadoop.fs.Path(ix.dir).getName}/")) =>
+          ix.name
+      }.toSet
+    }
+    def create(name: String, lists: Int): Unit =
+      sql(s"CREATE INDEX $name USING IVFFLAT ON $t(v) lists=$lists")
+    try {
+      create("vix_t1", 4)
+      create("vix_t2", 2)
+      assert(served == Set(s"vix_t2-$t-v"))
+      // re-created after a drop, an index is the later one
+      sql(s"DROP INDEX vix_t1 ON $t")
+      create("vix_t1", 4)
+      assert(served == Set(s"vix_t1-$t-v"))
+      // and in the other order of creation
+      VectorIndex.clear(spark)
+      create("vix_t2", 2)
+      create("vix_t1", 4)
+      assert(served == Set(s"vix_t1-$t-v"))
     } finally {
       sql(s"DROP TABLE IF EXISTS $t")
       VectorIndex.clear(spark)

@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.{CosineSimilarityExpr, InnerProductExpr, L2DistanceExpr}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.GraftColumnBridge.{column => asCol, eagerExpression}
+import org.apache.spark.sql.GraftColumnBridge.{column => asCol, eagerExpression, udfArity,
+  wrongNumArgs}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -20,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Functions come from ONE table, [[GraftExtensions.functions]], built
   * once per JVM from every module's contribution (native Catalyst
   * builders, Column-combinator trees converted eagerly, and Scala UDFs
-  * registered exactly as `UDFRegistration.register` would). `apply` injects
+  * built exactly as `UDFRegistration.register` would). `apply` injects
   * that table, so either route gives a session the full surface:
   *  - `SparkSession.builder().withExtensions(new GraftExtensions)`
   *    ([[GraftSession.builder]] does this);
@@ -29,16 +30,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[GraftSession.init]] registers the same table into a session built
   * without the extension.
   *
-  * Shadowed built-ins: 54 names deliberately replace Spark built-ins
+  * Dispatch: each name has one builder per argument count (an
+  * [[GraftExtensions.Arity]] range). A call picks its builder by its
+  * argument count alone, so MySQL's optional arguments (`st_area(g,
+  * srid)`, `regexp_like(s, p, flags)`, 3-argument AES, 2-argument
+  * `setval`) resolve here and not in rewritten SQL text; any other count
+  * raises Spark's WRONG_NUM_ARGS error naming the function and the
+  * counts it takes. The distance kernels also read a quoted `'[…]'`
+  * operand as the reference's text→vector cast.
+  *
+  * Shadowed built-ins: 55 names deliberately replace Spark built-ins
   * with the reference's semantics (MySQL string/date/math rules, its
   * bitmap wire format and 0-based buckets, its WKT geometry surface),
   * among them `bitmap_construct_agg`, `bitmap_or_agg`, `bitmap_count`,
   * `bitmap_bucket_number`, `bitmap_bit_position`, `st_srid`, `upper`,
-  * `substring`, `round`, `unix_timestamp`. Spark logs "replaced a
-  * previously registered function" once per shadow each time a
-  * session's registry is built; re-registering the table's own tuples
-  * (a second `init`) logs nothing, since the entries are the same
-  * instances.
+  * `substring`, `round`, `unix_timestamp`; `regexp_like` keeps Spark's
+  * own builder for two arguments. The test resource
+  * `graft/shadowed-builtins.txt` lists all of them, and
+  * `FunctionTableSpec` fails on a shadow that is not listed. Spark logs
+  * "replaced a previously registered function" once per shadow each
+  * time a session's registry is built; re-registering the table's own
+  * tuples (a second `init`) logs nothing, since the entries are the
+  * same instances.
   *
   * One registration stays outside the table: `CREATE INDEX … IVFFLAT`
   * registers a per-index `__mo_assign_<table>_<index>` function whose
@@ -61,41 +74,72 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+  type Builder = Seq[Expression] => Expression
+  type Entry = (FunctionIdentifier, ExpressionInfo, Builder)
 
-  /** Collects the entries of the function table; each module adds its
-    * names through one of three builder shapes.
+  /** The argument counts one builder takes, `min` to `max` inclusive. */
+  final case class Arity(min: Int, max: Int) {
+    def accepts(n: Int): Boolean = n >= min && n <= max
+    /** As Spark's WRONG_NUM_ARGS error lists accepted counts. */
+    def shown: Seq[Any] = if (max == Int.MaxValue) Seq(s"> ${min - 1}") else min to max
+  }
+  object Arity {
+    def apply(n: Int): Arity = Arity(n, n)
+    /** `min` or more arguments; the builder checks any further shape. */
+    def atLeast(min: Int): Arity = Arity(min, Int.MaxValue)
+  }
+
+  /** Collects the entries of the function table. Each name is added
+    * once, with one builder per argument count; its entry dispatches a
+    * call on the call's argument count alone, and any other count raises
+    * Spark's WRONG_NUM_ARGS error naming the function and the counts it
+    * accepts.
     */
   final class FunctionTable {
     private val out = Seq.newBuilder[Entry]
 
-    /** A native Catalyst builder. */
-    def native(name: String, usage: String = "")(build: Seq[Expression] => Expression): Unit =
+    /** `name`'s builders by argument count (ranges must not overlap). */
+    def overloads(name: String, usage: String = "")(byArity: (Arity, Builder)*): Unit = {
+      val accepted = byArity.map(_._1).sortBy(_.min).flatMap(_.shown)
       out += ((FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "built-in"),
-        build))
+        args => byArity.collectFirst { case (a, build) if a.accepts(args.length) => build(args) }
+          .getOrElse(throw wrongNumArgs(name, accepted, args.length))))
+    }
+
+    /** A native Catalyst builder. */
+    def native(name: String, usage: String, arity: Arity)(build: Builder): Unit =
+      overloads(name, usage)(arity -> build)
 
     /** A Column-combinator tree, converted eagerly so the analyzer's
       * fixed-point resolution sees its unresolved nodes.
       */
-    def column(name: String, usage: String = "")(build: Seq[Column] => Column): Unit =
-      native(name, usage)(args => eagerExpression(build(args.map(asCol))))
+    def column(name: String, usage: String, arity: Arity)(build: Seq[Column] => Column): Unit =
+      native(name, usage, arity)(args => eagerExpression(build(args.map(asCol))))
 
-    /** A Scala UDF under `name`: the same `ScalaUDF` node (and plan
-      * string) that `UDFRegistration.register(name, f)` produces.
+    /** Scala UDFs under `name`, one per argument count: the same
+      * `ScalaUDF` node (and plan string) that
+      * `UDFRegistration.register(name, f)` produces.
       */
-    def udf(name: String, f: UserDefinedFunction): Unit = {
-      val named = f.withName(name)
-      column(name)(args => named(args: _*))
-    }
+    def udf(name: String, fs: UserDefinedFunction*): Unit =
+      overloads(name)(fs.map(f => Arity(udfArity(f)) -> udfBuilder(name, f)): _*)
 
     /** A Scala UDF bound to the analyzing session: `bind` receives the
       * handle of `SparkSession.active` each time the name resolves
       * (analysis runs with its session active).
       */
-    def sessionUdf(name: String)(bind: SessionScoped.Handle => UserDefinedFunction): Unit =
-      column(name)(args =>
-        bind(SessionScoped.handle(SparkSession.active)).withName(name)(args: _*))
+    def sessionUdf(name: String, arity: Int)(
+        bind: SessionScoped.Handle => UserDefinedFunction): Unit =
+      overloads(name)(Arity(arity) -> sessionUdfBuilder(name)(bind))
+
+    def udfBuilder(name: String, f: UserDefinedFunction): Builder = {
+      val named = f.withName(name)
+      args => eagerExpression(named(args.map(asCol): _*))
+    }
+
+    def sessionUdfBuilder(name: String)(bind: SessionScoped.Handle => UserDefinedFunction): Builder =
+      args => eagerExpression(
+        bind(SessionScoped.handle(SparkSession.active)).withName(name)(args.map(asCol): _*))
 
     def result: Seq[Entry] = out.result()
   }
@@ -128,15 +172,24 @@ object GraftExtensions {
   }
 
   private def own(ft: FunctionTable): Unit = {
-    ft.native("l2_distance", "l2_distance(a, b) - euclidean distance of two vectors")(
-      args => L2DistanceExpr(args(0), args(1)))
+    // the distance kernels take a quoted '[…]' operand as the
+    // reference's implicit text→vector cast
+    def distance(name: String, usage: String)(kernel: (Expression, Expression) => Expression): Unit =
+      ft.native(name, usage, Arity(2))(a => kernel(vectorText(a(0)), vectorText(a(1))))
+    def viaColumn(f: (Column, Column) => Column)(a: Expression, b: Expression): Expression =
+      eagerExpression(f(asCol(a), asCol(b)))
+    distance("l2_distance", "l2_distance(a, b) - euclidean distance of two vectors")(L2DistanceExpr)
+    distance("l2_distance_sq", "l2_distance_sq(a, b)")(
+      viaColumn(graft.functions.VectorFunctions.l2DistanceSq))
+    distance("cosine_distance", "cosine_distance(a, b)")(
+      viaColumn(graft.functions.VectorFunctions.cosineDistance))
     // the reference's SQL inner_product is the NEGATIVE dot product (a
     // distance, pkg/vectorindex/metric/distance_func.go:158-168 returns
     // -sum); the positive kernel stays internal for cosine/norm reuse
-    ft.native("inner_product", "inner_product(a, b) - negative dot product (reference distance semantics)")(
-      args => UnaryMinus(InnerProductExpr(args(0), args(1)), failOnError = false))
-    ft.native("cosine_similarity", "cosine_similarity(a, b)")(
-      args => CosineSimilarityExpr(args(0), args(1)))
+    distance("inner_product",
+        "inner_product(a, b) - negative dot product (reference distance semantics)")(
+      (a, b) => UnaryMinus(InnerProductExpr(a, b), failOnError = false))
+    distance("cosine_similarity", "cosine_similarity(a, b)")(CosineSimilarityExpr)
     // single-pass JSON mutation program (chains fuse at build time);
     // MySQL's variadic (path, value)* pairs fold into one program
     def pathValuePairs(name: String,
@@ -150,38 +203,51 @@ object GraftExtensions {
         case (doc, _) => doc
       }
     }
-    ft.native("json_insert", "json_insert(doc, (path, value)+)")(
+    ft.native("json_insert", "json_insert(doc, (path, value)+)", Arity.atLeast(1))(
       pathValuePairs("json_insert", graft.functions.JsonMutateExpr.insert) _)
-    ft.native("json_replace", "json_replace(doc, (path, value)+)")(
+    ft.native("json_replace", "json_replace(doc, (path, value)+)", Arity.atLeast(1))(
       pathValuePairs("json_replace", graft.functions.JsonMutateExpr.replace) _)
-    ft.native("json_set", "json_set(doc, (path, value)+)")(
+    ft.native("json_set", "json_set(doc, (path, value)+)", Arity.atLeast(1))(
       pathValuePairs("json_set", graft.functions.JsonMutateExpr.set) _)
-    ft.native("json_remove", "json_remove(doc, path+)") { args =>
+    ft.native("json_remove", "json_remove(doc, path+)", Arity.atLeast(1)) { args =>
       require(args.length >= 2,
         s"invalid argument function json_remove, bad value length ${args.length}")
       args.tail.foldLeft(args.head)(graft.functions.JsonMutateExpr.remove)
     }
-    ft.native("json_merge_patch", "json_merge_patch(target, patch+)") { args =>
+    ft.native("json_merge_patch", "json_merge_patch(target, patch+)", Arity.atLeast(1)) { args =>
       require(args.length >= 2,
         s"invalid argument function json_merge_patch, bad value length ${args.length}")
       args.tail.foldLeft(args.head)(graft.functions.JsonMutateExpr.mergePatch)
     }
     ft.native("fulltext_match",
       "fulltext_match(text, query) - MATCH ... AGAINST predicate " +
-        "(natural mode: any term; boolean mode: +must / -mustnot / should)")(
+        "(natural mode: any term; boolean mode: +must / -mustnot / should)", Arity(2))(
       args => fulltextMatch(args(0), args(1)))
     ft.native("in_range",
       "in_range(v, lo, hi, mode) - range predicate; mode bit0 = strict " +
-        "lower bound, bit1 = strict upper bound")(
+        "lower bound, bit1 = strict upper bound", Arity(4))(
       args => inRange(args(0), args(1), args(2), args(3)))
     // hot geometry predicates as native expressions: foldable sides parse
     // once per operator, WKB binary operands accepted (GeoFunctions keeps
     // the WKT UDFs for the long tail)
     graft.functions.GeoPredicateExpr.ops.foreach { op =>
       val name = graft.functions.GeoPredicateExpr.sqlName(op)
-      ft.native(name, s"$name(g1, g2) - geometry predicate over WKT or WKB")(
+      ft.native(name, s"$name(g1, g2) - geometry predicate over WKT or WKB", Arity(2))(
         args => graft.functions.GeoPredicateExpr(op, args(0), args(1)))
     }
+  }
+
+  /** A quoted `'[…]'` operand as the vector the reference casts it to:
+    * the analyzing session's parser reads `CAST(array(…) AS ARRAY<FLOAT>)`
+    * over the text between the brackets. Any other operand passes.
+    */
+  private def vectorText(e: Expression): Expression = e match {
+    case Literal(s: UTF8String, StringType) if s.startsWith(UTF8String.fromString("[")) &&
+        s.endsWith(UTF8String.fromString("]")) =>
+      val t = s.toString
+      SparkSession.active.sessionState.sqlParser.parseExpression(
+        s"CAST(array(${t.substring(1, t.length - 1)}) AS ARRAY<FLOAT>)")
+    case other => other
   }
 
   /** The reference's zonemappable `in_range` operator

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions.Arity
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
@@ -68,7 +69,7 @@ object DecimalGuard {
 
   private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit =
     ft.native("checked_decimal",
-      "checked_decimal(e, p, s) - DECIMAL(p, s) cast that throws on overflow") { args =>
+      "checked_decimal(e, p, s) - DECIMAL(p, s) cast that throws on overflow", Arity(3)) { args =>
       def lit(e: Expression, what: String): Int = e match {
         case Literal(v: Int, _) => v
         case other => throw new IllegalArgumentException(

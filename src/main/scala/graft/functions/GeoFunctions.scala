@@ -763,7 +763,10 @@ object GeoFunctions {
   def st_pointfromgeohash(h: Column): Column = fromGeohashU(h)
 
   private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
-    ft.udf("st_geomfromtext", udf((w: String) => parseWkt(w).map(toWkt).orNull))
+    ft.udf("st_geomfromtext", udf((w: String) => parseWkt(w).map(toWkt).orNull),
+      udf((w: String, srid: Int) =>
+        parseWkt(w).map(g =>
+          if (srid != 0) s"SRID=$srid;${toWkt(g)}" else toWkt(g)).orNull))
     ft.udf("st_astext", udf((w: String) => parseWkt(w).map(toWkt).orNull))
     ft.udf("st_x", udf((w: String) =>
       parseWkt(w).collect { case GPoint(x, _) => x }))
@@ -776,9 +779,17 @@ object GeoFunctions {
     // expressions (GeoPredicateExpr) and a UDF entry here would shadow
     // them back to the slow path
     ft.udf("st_geohash", udf((lon: Double, lat: Double, len: Int) =>
-      geohashEncode(lon, lat, len).orNull))
+      geohashEncode(lon, lat, len).orNull),
+      udf((w: String, len: Int) =>
+        parseWkt(w).flatMap {
+          case GPoint(x, y) => geohashEncode(x, y, len)
+          case _ => None
+        }.orNull))
     ft.udf("st_pointfromgeohash", udf((h: String) =>
-      geohashDecode(h).map(toWkt).orNull))
+      geohashDecode(h).map(toWkt).orNull),
+      udf((h: String, srid: Int) =>
+        geohashDecode(h).map(p =>
+          (if (srid != 0) s"SRID=$srid;" else "") + toWkt(p)).orNull))
     ft.udf("st_geometrytype", udf(g1(g => Some(geometryType(g)))))
     ft.udf("st_isempty", udf(g1 {
       case GPoint(x, y) if x.isNaN && y.isNaN => Some(true)
@@ -811,7 +822,10 @@ object GeoFunctions {
     ft.udf("st_simplify", udf((w: String, tol: Double) =>
       parseWkt(w).map(g => toWkt(GeoOverlay.simplify(g, tol))).orNull))
     ft.udf("st_buffer", udf((w: String, d: Double) =>
-      parseWkt(w).flatMap(g => GeoOverlay.buffer(g, d)).map(toWkt).orNull))
+      parseWkt(w).flatMap(g => GeoOverlay.buffer(g, d)).map(toWkt).orNull),
+      udf((w: String, d: Double, quadSegs: Int) =>
+        parseWkt(w).flatMap(g =>
+          GeoOverlay.bufferN(g, d, math.max(4, quadSegs * 4))).map(toWkt).orNull))
 
     // --------------------------------------------------------- binary io
     ft.udf("st_aswkb",
@@ -835,7 +849,14 @@ object GeoFunctions {
 
     // ------------------------------------------------------- geojson io
     ft.udf("st_asgeojson",
-      udf((w: String) => parseWkt(w).map(GeoOverlay.toGeoJson).orNull))
+      udf((w: String) => parseWkt(w).map(GeoOverlay.toGeoJson).orNull),
+      udf((w: String, nd: Int) =>
+        parseWkt(w).map(g => GeoOverlay.toGeoJson(mapPts(g) {
+          case (x, y) if x.isNaN || y.isNaN => (x, y)
+          case (x, y) =>
+            (BigDecimal(x).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
+              BigDecimal(y).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
+        })).orNull))
 
     // ------------------------------------------- typed text constructors
     Seq[(String, Geom => Boolean)](
@@ -902,7 +923,17 @@ object GeoFunctions {
         val (a, b) = (math.min(x0, x1), math.max(x0, x1))
         val (c, d) = (math.min(y0, y1), math.max(y0, y1))
         toWkt(GPolygon(Vector(Vector((a, c), (b, c), (b, d), (a, d), (a, c)))))
-      }))
+      }),
+      udf((a: String, b: String) =>
+        (parseWkt(a), parseWkt(b)) match {
+          case (Some(GPoint(x0, y0)), Some(GPoint(x1, y1)))
+              if !x0.isNaN && !x1.isNaN =>
+            val (lo, hi) = (math.min(x0, x1), math.max(x0, x1))
+            val (lo2, hi2) = (math.min(y0, y1), math.max(y0, y1))
+            toWkt(GPolygon(Vector(Vector(
+              (lo, lo2), (hi, lo2), (hi, hi2), (lo, hi2), (lo, lo2)))))
+          case _ => null
+        }))
     ft.udf("st_latfromgeohash",
       udf((h: String) => geohashDecode(h).map(_.y)))
     ft.udf("st_longfromgeohash",
@@ -1001,63 +1032,32 @@ object GeoFunctions {
     // access) — a local helper def would capture the method frame and
     // make the UDF non-serializable.
     ft.udf("st_area", udf((w: String) =>
-      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticArea(g) else area(g))))
+      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticArea(g) else area(g))),
+      udf((w: String, srid: Int) =>
+        parseWkt(w).flatMap(g => if (srid == 4326) geodeticArea(g) else area(g))))
     ft.udf("st_length", udf((w: String) =>
-      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticLength(g) else length(g))))
+      parseWkt(w).flatMap(g => if (sridOf(w) == 4326) geodeticLength(g) else length(g))),
+      udf((w: String, srid: Int) =>
+        parseWkt(w).flatMap(g => if (srid == 4326) geodeticLength(g) else length(g))))
     ft.udf("st_distance", udf((a: String, b: String) =>
       for {
         x <- parseWkt(a); y <- parseWkt(b)
         d <- if (sridOf(a) == 4326 || sridOf(b) == 4326) geodeticDistance(x, y)
           else Some(distance(x, y))
-      } yield d))
+      } yield d),
+      udf((a: String, b: String, srid: Int) =>
+        for {
+          x <- parseWkt(a); y <- parseWkt(b)
+          d <- if (srid == 4326) geodeticDistance(x, y) else Some(distance(x, y))
+        } yield d))
     ft.udf("st_srid", udf((w: String) => parseWkt(w).map(_ => sridOf(w))))
-    ft.udf("st_geomfromtext_srid", udf((w: String, srid: Int) =>
-      parseWkt(w).map(g =>
-        if (srid != 0) s"SRID=$srid;${toWkt(g)}" else toWkt(g)).orNull))
-    ft.udf("st_area_srid", udf((w: String, srid: Int) =>
-      parseWkt(w).flatMap(g => if (srid == 4326) geodeticArea(g) else area(g))))
-    ft.udf("st_length_srid", udf((w: String, srid: Int) =>
-      parseWkt(w).flatMap(g => if (srid == 4326) geodeticLength(g) else length(g))))
-    ft.udf("st_distance_srid", udf((a: String, b: String, srid: Int) =>
-      for {
-        x <- parseWkt(a); y <- parseWkt(b)
-        d <- if (srid == 4326) geodeticDistance(x, y) else Some(distance(x, y))
-      } yield d))
-    ft.udf("st_buffer_segs", udf((w: String, d: Double, quadSegs: Int) =>
-      parseWkt(w).flatMap(g =>
-        GeoOverlay.bufferN(g, d, math.max(4, quadSegs * 4))).map(toWkt).orNull))
-    ft.udf("st_geohash_pt", udf((w: String, len: Int) =>
-      parseWkt(w).flatMap {
-        case GPoint(x, y) => geohashEncode(x, y, len)
-        case _ => None
-      }.orNull))
-    ft.udf("st_pointfromgeohash_srid", udf((h: String, srid: Int) =>
-      geohashDecode(h).map(p =>
-        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(p)).orNull))
-    ft.udf("st_asgeojson_digits", udf((w: String, nd: Int) =>
-      parseWkt(w).map(g => GeoOverlay.toGeoJson(mapPts(g) {
-        case (x, y) if x.isNaN || y.isNaN => (x, y)
-        case (x, y) =>
-          (BigDecimal(x).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble,
-            BigDecimal(y).setScale(nd, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      })).orNull))
     // GeoJSON is WGS 84 by definition: parse defaults to SRID 4326; the
     // explicit form can force another id (geo_geojson.result:default_srid)
     ft.udf("st_geomfromgeojson",
-      udf((j: String) => GeoOverlay.fromGeoJson(j).map(g => s"SRID=4326;${toWkt(g)}").orNull))
-    ft.udf("st_geomfromgeojson_srid", udf((j: String, srid: Int) =>
-      GeoOverlay.fromGeoJson(j).map(g =>
-        (if (srid != 0) s"SRID=$srid;" else "") + toWkt(g)).orNull))
-    ft.udf("st_makeenvelope_pts", udf((a: String, b: String) =>
-      (parseWkt(a), parseWkt(b)) match {
-        case (Some(GPoint(x0, y0)), Some(GPoint(x1, y1)))
-            if !x0.isNaN && !x1.isNaN =>
-          val (lo, hi) = (math.min(x0, x1), math.max(x0, x1))
-          val (lo2, hi2) = (math.min(y0, y1), math.max(y0, y1))
-          toWkt(GPolygon(Vector(Vector(
-            (lo, lo2), (hi, lo2), (hi, hi2), (lo, hi2), (lo, lo2)))))
-        case _ => null
-      }))
+      udf((j: String) => GeoOverlay.fromGeoJson(j).map(g => s"SRID=4326;${toWkt(g)}").orNull),
+      udf((j: String, srid: Int) =>
+        GeoOverlay.fromGeoJson(j).map(g =>
+          (if (srid != 0) s"SRID=$srid;" else "") + toWkt(g)).orNull))
     // SRID propagates through derived geometries (geo_srid.result)
     ft.udf("st_centroid", udf((w: String) =>
       parseWkt(w).map(g => withSridOf(w, toWkt(centroid(g)))).orNull))

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions.Arity
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -189,9 +190,11 @@ object JsonExtras {
       "json_quote" -> "json_quote(s)", "json_unquote" -> "json_unquote(doc)",
       "json_contains" -> "json_contains(target, cand)", "json_depth" -> "json_depth(doc)",
       "json_merge_preserve" -> "json_merge_preserve(a, b)"
-    ).foreach { case (name, usage) => ft.native(name, usage)(JsonScalarExpr(name, _)) }
+    ).foreach { case (name, usage) =>
+      ft.native(name, usage, JsonScalarExpr.arity(name))(JsonScalarExpr(name, _))
+    }
     // MySQL's variadic form: json_contains_path(doc, 'one'|'all', p, ...)
-    ft.native("json_contains_path",
-      "json_contains_path(doc, one_or_all, path, ...)")(JsonScalarExpr.containsPath)
+    ft.native("json_contains_path", "json_contains_path(doc, one_or_all, path, ...)",
+      Arity.atLeast(3))(JsonScalarExpr.containsPath)
   }
 }

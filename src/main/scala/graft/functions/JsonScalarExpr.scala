@@ -130,9 +130,11 @@ object JsonScalarExpr {
   /** SQL builder for `json_contains_path(doc, mode, path, path, ...)` —
     * MySQL's variadic form folds the paths into one ARRAY child.
     */
-  def containsPath(args: Seq[Expression]): Expression = {
-    require(args.length >= 3, s"json_contains_path: expected >= 3 args, got ${args.length}")
+  def containsPath(args: Seq[Expression]): Expression =
     JsonScalarExpr("json_contains_path",
       Seq(args(0), args(1), CreateArray(args.drop(2))))
-  }
+
+  /** The SQL argument counts of `fn`. */
+  private[functions] def arity(fn: String): graft.GraftExtensions.Arity =
+    graft.GraftExtensions.Arity(arities(fn).min, arities(fn).max)
 }

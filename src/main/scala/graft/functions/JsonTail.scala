@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions.Arity
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
@@ -549,9 +550,13 @@ object JsonTail {
       "json_overlaps" -> "json_overlaps(a, b)",
       "json_schema_valid" -> "json_schema_valid(schema, doc)",
       "json_schema_validation_report" -> "json_schema_validation_report(schema, doc)"
-    ).foreach { case (name, usage) => ft.native(name, usage)(JsonScalarExpr(name, _)) }
+    ).foreach { case (name, usage) =>
+      ft.native(name, usage, JsonScalarExpr.arity(name))(JsonScalarExpr(name, _))
+    }
     // legacy 2-arg aliases kept for SQL callers of the round-2 names
-    ft.native("json_length_path", "json_length_path(doc, path)")(JsonScalarExpr("json_length", _))
-    ft.native("json_keys_path", "json_keys_path(doc, path)")(JsonScalarExpr("json_keys", _))
+    ft.native("json_length_path", "json_length_path(doc, path)",
+      Arity(2))(JsonScalarExpr("json_length", _))
+    ft.native("json_keys_path", "json_keys_path(doc, path)",
+      Arity(2))(JsonScalarExpr("json_keys", _))
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions.Arity
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1310,7 +1311,7 @@ object MoFunctions {
     val dynGetFormat = udf((k: String, std: String) =>
       if (k == null || std == null) null else getFormat(k, std).orNull)
 
-    ft.column("mo_date_format", "mo_date_format(ts, mysql_fmt)") { args =>
+    ft.column("mo_date_format", "mo_date_format(ts, mysql_fmt)", Arity(2)) { args =>
       strLit(args(1)) match {
         // an empty format is NULL, not '' (func_date_format.result)
         case Some("") => lit(null).cast("string")
@@ -1318,23 +1319,23 @@ object MoFunctions {
         case None => dynDateFormat(args(0), args(1))
       }
     }
-    ft.column("to_days", "to_days(date)")(args => toDays(args(0)))
-    ft.column("period_add", "period_add(yyyymm, n)")(args => periodAdd(args(0), args(1)))
-    ft.column("period_diff", "period_diff(p1, p2)")(args => periodDiff(args(0), args(1)))
-    ft.column("inet_aton", "inet_aton(ip)")(args => inetAton(args(0)))
-    ft.column("inet_ntoa", "inet_ntoa(n)")(args => inetNtoa(args(0)))
-    ft.column("sec_to_time", "sec_to_time(seconds)")(args => secToTimeExact(args(0)))
-    ft.column("time_to_sec", "time_to_sec(time)")(args => timeToSec(args(0)))
-    ft.column("mo_extract", "mo_extract(unit, s) - composite EXTRACT units")(args =>
+    ft.column("to_days", "to_days(date)", Arity(1))(args => toDays(args(0)))
+    ft.column("period_add", "period_add(yyyymm, n)", Arity(2))(args => periodAdd(args(0), args(1)))
+    ft.column("period_diff", "period_diff(p1, p2)", Arity(2))(args => periodDiff(args(0), args(1)))
+    ft.column("inet_aton", "inet_aton(ip)", Arity(1))(args => inetAton(args(0)))
+    ft.column("inet_ntoa", "inet_ntoa(n)", Arity(1))(args => inetNtoa(args(0)))
+    ft.column("sec_to_time", "sec_to_time(seconds)", Arity(1))(args => secToTimeExact(args(0)))
+    ft.column("time_to_sec", "time_to_sec(time)", Arity(1))(args => timeToSec(args(0)))
+    ft.column("mo_extract", "mo_extract(unit, s) - composite EXTRACT units", Arity(2))(args =>
       moExtractU(args(0).cast("string"), args(1).cast("string")))
-    ft.column("mo_time", "mo_time(s) - MySQL CAST(x AS TIME) normalization")(args =>
+    ft.column("mo_time", "mo_time(s) - MySQL CAST(x AS TIME) normalization", Arity(1))(args =>
       moTimeU(args(0).cast("string")))
     // MySQL's UNIX_TIMESTAMP range is [epoch, 3001-01-19 03:14:07 UTC);
     // outside it (incl. pre-1970) is NULL, as is invalid datetime TEXT
     // ('2021-02-29') — func_datetime_unixtime.result. Computed through
     // to_unix_timestamp/try_to_timestamp so the override never
     // self-resolves.
-    ft.column("unix_timestamp", "unix_timestamp([ts]) - MySQL range guards") { args =>
+    ft.column("unix_timestamp", "unix_timestamp([ts]) - MySQL range guards", Arity(0, 2)) { args =>
       if (args.isEmpty) to_unix_timestamp(current_timestamp())
       else if (args.length > 1) to_unix_timestamp(args(0), args(1))
       else {
@@ -1348,7 +1349,8 @@ object MoFunctions {
         when(u < 0L || u >= 32536771200L, lit(null)).otherwise(u)
       }
     }
-    ft.column("from_unixtime", "from_unixtime(n[, fmt]) - MySQL range guards") { args =>
+    ft.column("from_unixtime", "from_unixtime(n[, fmt]) - MySQL range guards",
+      Arity(1, 2)) { args =>
       val n = args(0).cast("decimal(26,6)")
       val ts = timestamp_seconds(n)
       val body =
@@ -1361,11 +1363,11 @@ object MoFunctions {
     }
     // CAST(TIMEDIFF(…) AS CHAR) renders TIME(6): a fraction-free diff
     // gains '.000000' (func_datetime_timediff.result mixed_format1)
-    ft.column("mo_timediff_char", "mo_timediff_char(t1, t2)") { args =>
+    ft.column("mo_timediff_char", "mo_timediff_char(t1, t2)", Arity(2)) { args =>
       val d = timeDiff(args(0), args(1))
       when(instr(d, ".") > 0, d).otherwise(concat(d, lit(".000000")))
     }
-    ft.column("maketime", "maketime(h, m, s)") { args =>
+    ft.column("maketime", "maketime(h, m, s)", Arity(3)) { args =>
       def typeOf(i: Int) =
         try Some(eagerExpression(args(i)).dataType)
         catch { case _: Exception => None } // unresolved column refs
@@ -1386,13 +1388,13 @@ object MoFunctions {
       makeTimeCall(args(0), args(1), args(2), sc,
         truncH = isString(0), truncM = isString(1))
     }
-    ft.column("get_format", "get_format(kind, standard)") { args =>
+    ft.column("get_format", "get_format(kind, standard)", Arity(2)) { args =>
       (strLit(args(0)), strLit(args(1))) match {
         case (Some(k), Some(std)) => lit(getFormat(k, std).orNull)
         case _ => dynGetFormat(args(0), args(1))
       }
     }
-    ft.column("convert_tz", "convert_tz(ts, from_tz, to_tz)")(args =>
+    ft.column("convert_tz", "convert_tz(ts, from_tz, to_tz)", Arity(3))(args =>
       convertTzExactU(args(0).cast("string"), args(1).cast("string"),
         args(2).cast("string")))
     // byte-level codecs: no expression-combinator equivalent
@@ -1617,39 +1619,41 @@ object MoFunctions {
     }
     def mysqlAesKey(k: String): javax.crypto.spec.SecretKeySpec =
       mysqlAesKeyN(k, 16)
-    ft.udf("aes_encrypt", udf((s: String, k: String) =>
-      if (s == null || k == null) null
-      else {
-        val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
-        c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKey(k))
-        c.doFinal(s.getBytes("UTF-8"))
-      }))
-    ft.udf("aes_decrypt", udf((b: Array[Byte], k: String) =>
-      if (b == null || k == null) null
-      else try {
-        val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
-        c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKey(k))
-        new String(c.doFinal(b), "UTF-8")
-      } catch { case _: Exception => null }))
     // the reference's 3-arg (IV) form is its aes-256-cbc mode: the key
     // XOR-folds into 32 bytes (func_binary.go generateAESKey), first 16
     // IV bytes seed CBC, PKCS7 padding
-    ft.udf("mo_aes_encrypt_cbc", udf((v: String, k: String, iv: String) =>
-      if (v == null || k == null || iv == null) null
-      else {
-        val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
-        c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKeyN(k, 32),
-          new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
-        c.doFinal(v.getBytes("UTF-8"))
-      }))
-    ft.udf("mo_aes_decrypt_cbc", udf((b: Array[Byte], k: String, iv: String) =>
-      if (b == null || k == null || iv == null) null
-      else try {
-        val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
-        c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKeyN(k, 32),
-          new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
-        new String(c.doFinal(b), "UTF-8")
-      } catch { case _: Exception => null }))
+    ft.udf("aes_encrypt",
+      udf((s: String, k: String) =>
+        if (s == null || k == null) null
+        else {
+          val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
+          c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKey(k))
+          c.doFinal(s.getBytes("UTF-8"))
+        }),
+      udf((v: String, k: String, iv: String) =>
+        if (v == null || k == null || iv == null) null
+        else {
+          val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
+          c.init(javax.crypto.Cipher.ENCRYPT_MODE, mysqlAesKeyN(k, 32),
+            new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
+          c.doFinal(v.getBytes("UTF-8"))
+        }))
+    ft.udf("aes_decrypt",
+      udf((b: Array[Byte], k: String) =>
+        if (b == null || k == null) null
+        else try {
+          val c = javax.crypto.Cipher.getInstance("AES/ECB/PKCS5Padding")
+          c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKey(k))
+          new String(c.doFinal(b), "UTF-8")
+        } catch { case _: Exception => null }),
+      udf((b: Array[Byte], k: String, iv: String) =>
+        if (b == null || k == null || iv == null) null
+        else try {
+          val c = javax.crypto.Cipher.getInstance("AES/CBC/PKCS5Padding")
+          c.init(javax.crypto.Cipher.DECRYPT_MODE, mysqlAesKeyN(k, 32),
+            new javax.crypto.spec.IvParameterSpec(iv.getBytes("UTF-8").take(16)))
+          new String(c.doFinal(b), "UTF-8")
+        } catch { case _: Exception => null }))
     // MySQL TRIM(remstr FROM str): strips the exact substring
     // repeatedly from the chosen end(s)
     ft.udf("mo_trim_str", udf((mode: String, rem: String, str: String) =>

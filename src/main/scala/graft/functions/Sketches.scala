@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftExtensions.Arity
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, ShiftRight, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -84,15 +85,16 @@ object Sketches {
     // aggregate names resolve to the native AggregateFunctions (the
     // analyzer wraps them in AggregateExpression); builders keep the
     // SAME names/semantics the reference registry exposes
-    ft.native("bitmap_construct_agg", "bitmap_construct_agg(bigint)")(a => BitmapConstructAggExpr(a.head))
-    ft.native("bitmap_or_agg", "bitmap_or_agg(binary)")(a => BitmapOrAggExpr(a.head))
-    ft.native("hll_add", "hll_add(bigint)")(a => HllAddAggExpr(a.head))
-    ft.native("hll_merge", "hll_merge(binary)")(a => HllMergeAggExpr(a.head))
+    ft.native("bitmap_construct_agg", "bitmap_construct_agg(bigint)",
+      Arity(1))(a => BitmapConstructAggExpr(a.head))
+    ft.native("bitmap_or_agg", "bitmap_or_agg(binary)", Arity(1))(a => BitmapOrAggExpr(a.head))
+    ft.native("hll_add", "hll_add(bigint)", Arity(1))(a => HllAddAggExpr(a.head))
+    ft.native("hll_merge", "hll_merge(binary)", Arity(1))(a => HllMergeAggExpr(a.head))
     // reference registry spells the aggregate forms with _agg
-    ft.native("hll_add_agg", "hll_add_agg(bigint)")(a => HllAddAggExpr(a.head))
-    ft.native("hll_merge_agg", "hll_merge_agg(binary)")(a => HllMergeAggExpr(a.head))
+    ft.native("hll_add_agg", "hll_add_agg(bigint)", Arity(1))(a => HllAddAggExpr(a.head))
+    ft.native("hll_merge_agg", "hll_merge_agg(binary)", Arity(1))(a => HllMergeAggExpr(a.head))
     Seq("bitmap_count", "hll_cardinality", "bitmap_bucket_number", "bitmap_bit_position")
-      .foreach(name => ft.native(name, s"$name(x)")(a => SketchScalar(name, a.head)))
+      .foreach(name => ft.native(name, s"$name(x)", Arity(1))(a => SketchScalar(name, a.head)))
   }
 }
 

@@ -89,37 +89,16 @@ object TextFunctions {
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(slice(sig, b * rows + 1, lit(rows))))
 
-  /** 64-bit SimHash as a 64-element 0/1 array: bit b is the sign of the
-    * summed (+1/-1) votes from each token's b-th independent hash. The
-    * array representation keeps everything in higher-order codegen'd
-    * expressions (no variable-shift gymnastics) and slices directly into
-    * LSH chunks.
-    */
-  def simhashBits(tk: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => asCol, expression => asExpr}
-    asCol(SimHashBitsExpr(asExpr(tk)))
-  }
-
-  /** Per-bit ±1 votes from precomputed 32-bit bases (parity of an affine
-    * mix mod prime).
-    */
-  def simhashBitsFromBases(bases: Column): Column =
-    transform(sequence(lit(0), lit(63)), b =>
-      when(aggregate(bases, lit(0L), (acc, h) =>
-        acc + when(pmod(h * (b * 2 + 1) + b * lit(2654435761L), lit(1000003L))
-          .bitwiseAND(lit(1L)) =!= 0, 1L).otherwise(-1L)) > 0,
-        lit(1L)).otherwise(lit(0L)))
-
   /** Hamming distance between two bit arrays. */
   def hammingBits(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => abs(x - y)), lit(0L), (acc, x) => acc + x)
 
-  /** PORTABLE 64-bit SimHash: per-token hash = the md5 digest's second
-    * half read little-endian — exactly DuckDB's `md5_number_lower`, so an
-    * oracle can re-derive every signature bit in SQL and hash-compare the
-    * near-dup pair set across engines (the xxhash64 variant above is
-    * engine-local). Bit b votes +1/−1 by the b-th bit of each token's
-    * hash; tie (sum 0) resolves to 0.
+  /** 64-bit SimHash as a 64-element 0/1 array. The per-token hash is the
+    * md5 digest's second half read little-endian — exactly DuckDB's
+    * `md5_number_lower`, so an oracle can re-derive every signature bit in
+    * SQL and hash-compare the near-dup pair set across engines. Bit b
+    * votes +1/−1 by the b-th bit of each token's hash; tie (sum 0)
+    * resolves to 0.
     */
   def simhashBitsMd5(tk: Column): Column = {
     // per-token little-endian byte values of digest bytes 8..15

@@ -296,40 +296,6 @@ case class MinHashSignatureExpr(child: Expression, k: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** 64-bit SimHash bits (0/1 array) in one interpreted call per row. */
-case class SimHashBitsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val bases = new Array[Long](n)
-    var i = 0
-    while (i < n) { bases(i) = SignatureHash.base32(a.getUTF8String(i)); i += 1 }
-    val votes = new Array[Long](64)
-    var b = 0
-    while (b < 64) {
-      val mult = b * 2 + 1
-      val add = b * SignatureHash.Golden
-      var s = 0L
-      i = 0
-      while (i < n) {
-        val mixed = (bases(i) * mult + add) % 1000003L
-        s += (if ((mixed & 1L) != 0) 1L else -1L)
-        i += 1
-      }
-      votes(b) = if (s > 0) 1L else 0L
-      b += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(votes)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Sorted distinct word n-gram shingles from a token array, built in one
   * eval per row (replaces an interpreted transform+array_join+distinct
   * chain).
@@ -343,7 +309,10 @@ case class WordShinglesExpr(child: Expression, n: Int)
   override protected def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
     val m = a.numElements()
-    val set = new java.util.TreeSet[String]()
+    // UTF8String order (bytes), the order SortedIntersectCountExpr merges
+    // in: a String's UTF-16 order puts U+E000–U+FFFF after supplementary
+    // characters, UTF-8 bytes put them before
+    val set = new java.util.TreeSet[org.apache.spark.unsafe.types.UTF8String]()
     var i = 0
     while (i + n <= m) {
       val sb = new java.lang.StringBuilder()
@@ -353,17 +322,10 @@ case class WordShinglesExpr(child: Expression, n: Int)
         sb.append(a.getUTF8String(i + j).toString)
         j += 1
       }
-      set.add(sb.toString)
+      set.add(org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString))
       i += 1
     }
-    val out = new Array[AnyRef](set.size)
-    val it = set.iterator()
-    i = 0
-    while (it.hasNext) {
-      out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(it.next())
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(set.toArray())
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

@@ -67,10 +67,14 @@ object Dedup {
     // downstream stage then schedules 32 tiny tasks against the
     // 32-block cache and the added latency dwarfs the parallel kernel
     // win. Same conclusion as r12's global parallelism floor.
+    // The empty-shingle filter reads the persisted frame: above the
+    // projection, Catalyst would push it below with the alias inlined,
+    // and the shingle kernel would run in the Filter and again in the
+    // Project.
     val sh = df.select(col(idCol).as("_sid"),
         wordShingles(tokens(col(textCol)), shingleN).as("_sh") /* sorted */)
-      .filter(size(col("_sh")) > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("_sh")) > 0)
     val cands = minhashCandidatesFromShingles(sh, numHashes, bands, MaxBucket)
     // exact-Jaccard verify, §8-style "decide small, attach payloads":
     // the PAIR LIST is the small decision table — broadcast it (ids only)
@@ -230,21 +234,17 @@ object Dedup {
     * collides on every key (2^8 keys), which goes quadratic at scale; a
     * maxHamming of 3 gets 16-bit chunks (2^16 keys).
     */
-  /** `portable = true` switches the signature to [[simhashBitsMd5]]
-    * (md5-derived bits a DuckDB oracle re-derives exactly); the default
-    * xxhash64 signature is faster but engine-local.
+  /** The signature is [[simhashBitsMd5]]: md5-derived bits that a DuckDB
+    * oracle re-derives exactly.
     */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
-      maxBucket: Int = 1000, portable: Boolean = false): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = {
     require(maxHamming <= 7, "chunking supports maxHamming <= 7")
     val nChunks = maxHamming + 1
     val chunkBits = 64 / nChunks // last (64 mod nChunks) bits join no chunk
-    val bitsOf =
-      if (portable) simhashBitsMd5(tokens(col(textCol)))
-      else simhashBits(tokens(col(textCol)))
     val sigs = df
-      .select(col(idCol).as("_id"), bitsOf.as("_bits"))
+      .select(col(idCol).as("_id"), simhashBitsMd5(tokens(col(textCol))).as("_bits"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // chunk key = 64-bit hash of the bit slice (not the "0101…" string):
     // narrower exchange/join keys; collisions only add candidates, and

@@ -158,8 +158,7 @@ object TextQueries extends QueryModule {
     * the performance default, recall-tested in DedupSpec.
     */
   private def simhashQ(s: SparkSession, d: String): DataFrame =
-    Dedup.simhashPairs(Tables.documents(s, d), "doc_id", "text", maxHamming = 3,
-        portable = true)
+    Dedup.simhashPairs(Tables.documents(s, d), "doc_id", "text", maxHamming = 3)
       .orderBy(col("a_id"), col("b_id"))
 
   private val simhashSql =

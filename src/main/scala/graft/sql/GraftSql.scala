@@ -1123,12 +1123,12 @@ object GraftSql {
         return spark.emptyDataFrame
       }
       val q2 = partSubtables(spark, parseJsonlRewrite(spark, subqueryIntervalViews(spark,
-        tableStatsRewrite(spark, ftTokenizeApply(vecLitFns(narrowVecFns(spark,
-          narrowVecInsert(spark, normalizeSetval(
+        tableStatsRewrite(spark, ftTokenizeApply(narrowVecFns(spark,
+          narrowVecInsert(spark,
           MySqlCompat.projectionIn(quantifiedRewrite(MySqlCompat.pre(
-            ifToIff(fnArity(geoArity(narrowVecDdl(spark, autoIncDdl(spark, moFilepathRewrite(spark,
+            ifToIff(narrowVecDdl(spark, autoIncDdl(spark, moFilepathRewrite(spark,
               EnumSet.exprRewrite(spark, EnumSet.dmlRewrite(spark,
-                EnumSet.ddlRewrite(spark, qAi)))))))))))))))))))))
+                EnumSet.ddlRewrite(spark, qAi)))))))))))))))))
       sequenceRewrite(spark, q2)
         .orElse(stageRewrite(spark, q2))
         .orElse(queryResultRewrite(spark, q2))
@@ -1466,14 +1466,6 @@ object GraftSql {
   private val DropTableNameRe =
     """(?is)^drop\s+table\s+(?:if\s+exists\s+)?(?:`([^`]+)`|(\S+))\s*$""".r
 
-  /** MySQL's 2-arg `setval(seq, v)` defaults the third is_called flag to
-    * true; the registered UDF is fixed-arity, so normalize pre-parse.
-    */
-  private def normalizeSetval(q: String): String =
-    """(?i)\bsetval\s*\(\s*('(?:[^'\\]|\\.)*')\s*,\s*([^,()']+?)\s*\)""".r
-      .replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(
-        s"setval(${m.group(1)}, ${m.group(2)}, true)"))
-
   /** Sequence DDL + state surfaces (see [[Sequences]] for semantics and
     * reference citations).
     */
@@ -1754,57 +1746,6 @@ object GraftSql {
     }
   }
 
-  // ------------------------------------------------------------------
-  // Geo function optional arguments (SRID / precision forms)
-  // ------------------------------------------------------------------
-
-  /** Rename `from(...)` calls with exactly `arity` top-level arguments to
-    * `to(...)` — Spark UDF registrations are fixed-arity, so the MySQL
-    * optional-argument geo forms dispatch to sibling registrations.
-    */
-  private def renameByArity(q0: String, from: String, arity: Int, to: String): String = {
-    var q = q0
-    var changed = true
-    val re = ("(?i)\\b" + from + "\\s*\\(").r
-    while (changed) {
-      changed = false
-      re.findAllMatchIn(q).toList.reverseIterator.foreach { m =>
-        if (!changed) {
-          val open = m.end - 1
-          balancedSpan(q, open).foreach { case (inner, _) =>
-            if (splitTop(inner).lengthIs == arity) {
-              q = q.substring(0, m.start) + to + q.substring(open)
-              changed = true
-            }
-          }
-        }
-      }
-    }
-    q
-  }
-
-  /** The reference's geo functions take optional SRID / precision /
-    * segment arguments (`ST_GeomFromText(wkt, srid)`,
-    * `ST_Area(g, srid)`, … — `cases/geo/geo_srid.sql`,
-    * `geo_geodetic.sql`); route each arity to its registration.
-    */
-  private[graft] def geoArity(q0: String): String = {
-    if (!q0.toLowerCase.contains("st_")) return q0
-    var q = q0
-    q = renameByArity(q, "st_geomfromtext", 2, "st_geomfromtext_srid")
-    q = renameByArity(q, "st_area", 2, "st_area_srid")
-    q = renameByArity(q, "st_length", 2, "st_length_srid")
-    q = renameByArity(q, "st_distance", 3, "st_distance_srid")
-    q = renameByArity(q, "st_buffer", 3, "st_buffer_segs")
-    q = renameByArity(q, "st_geohash", 2, "st_geohash_pt")
-    q = renameByArity(q, "st_pointfromgeohash", 2, "st_pointfromgeohash_srid")
-    q = renameByArity(q, "st_asgeojson", 2, "st_asgeojson_digits")
-    q = renameByArity(q, "st_geomfromgeojson", 2, "st_geomfromgeojson_srid")
-    q = renameByArity(q, "st_makeenvelope", 2, "st_makeenvelope_pts")
-    q
-  }
-
-  /** Non-geo optional-argument dispatch (same mechanism). */
   /** MySQL's `if(cond, a, b)` takes ANY condition with `!= 0`
     * truthiness; Spark's `if` demands a boolean. Route through the
     * engine's `iff` (when(cond CAST boolean)) — identical for already
@@ -1907,18 +1848,6 @@ object GraftSql {
           q.substring(0, end) + ifCondCast(q.substring(end))
       case None => q
     }
-  }
-
-  private[graft] def fnArity(q0: String): String = {
-    var q = q0
-    if (q.toLowerCase.contains("regexp_like"))
-      q = renameByArity(q, "regexp_like", 3, "mo_regexp_like3")
-    // 3-arg AES takes an init vector (block mode aes-128-cbc)
-    if (q.toLowerCase.contains("aes_")) {
-      q = renameByArity(q, "aes_encrypt", 3, "mo_aes_encrypt_cbc")
-      q = renameByArity(q, "aes_decrypt", 3, "mo_aes_decrypt_cbc")
-    }
-    q
   }
 
   // ------------------------------------------------------------------
@@ -4920,23 +4849,6 @@ object GraftSql {
     FtTokenizeRe.replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(
       s" LATERAL VIEW explode(mo_ft_tokenize(${m.group(1)}, `${m.group(2)}`)) " +
         s"${Option(m.group(3)).getOrElse("f")} AS tk"))
-  }
-
-  /** Distance kernels want array operands; a quoted `'[...]'` literal
-    * (the reference's implicit string→vector cast) becomes a typed
-    * array. Reached by SQL that BYPASSES the harness shims — prepared
-    * bodies built with concat() (null_entry_panic p_q).
-    */
-  private val DistLitRe =
-    ("""(?i)\b(l2_distance|l2_distance_sq|cosine_distance|cosine_similarity|""" +
-      """inner_product)\s*\(\s*([^,()']+)\s*,\s*'(\[[^']*\])'\s*\)""").r
-  private def vecLitFns(q: String): String = {
-    if (!q.toLowerCase.contains("distance") &&
-      !q.toLowerCase.contains("inner_product") &&
-      !q.toLowerCase.contains("cosine_similarity")) return q
-    DistLitRe.replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(
-      s"${m.group(1)}(${m.group(2)}, CAST(array(" +
-        m.group(3).stripPrefix("[").stripSuffix("]") + ") AS ARRAY<FLOAT>))"))
   }
 
   private def narrowVecFns(spark: SparkSession, q: String): String = {

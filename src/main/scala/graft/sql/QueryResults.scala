@@ -116,7 +116,7 @@ object QueryResults {
     */
   private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
     import org.apache.spark.sql.functions.udf
-    ft.sessionUdf("last_query_id")(h =>
+    ft.sessionUdf("last_query_id", 1)(h =>
       udf((n: Int) => idAt(state(h), n)).asNondeterministic())
   }
 }

@@ -345,11 +345,17 @@ object Sequences {
     * SparkSession there NPEs.
     */
   private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    import graft.GraftExtensions.Arity
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.functions.udf
-    ft.sessionUdf("nextval")(h => udf((n: String) => nextval(h, n)).asNondeterministic())
-    ft.sessionUdf("currval")(h => udf((n: String) => currval(h, n)).asNondeterministic())
-    ft.sessionUdf("lastval")(h => udf(() => lastval(h)).asNondeterministic())
-    ft.sessionUdf("setval")(h =>
+    ft.sessionUdf("nextval", 1)(h => udf((n: String) => nextval(h, n)).asNondeterministic())
+    ft.sessionUdf("currval", 1)(h => udf((n: String) => currval(h, n)).asNondeterministic())
+    ft.sessionUdf("lastval", 0)(h => udf(() => lastval(h)).asNondeterministic())
+    // MySQL's 2-arg setval(seq, v) defaults is_called to true
+    val setvalFn = ft.sessionUdfBuilder("setval")(h =>
       udf((n: String, v: Long, b: Boolean) => setval(h, n, v, b)).asNondeterministic())
+    ft.overloads("setval")(
+      Arity(2) -> (a => setvalFn(a :+ Literal(true))),
+      Arity(3) -> setvalFn)
   }
 }

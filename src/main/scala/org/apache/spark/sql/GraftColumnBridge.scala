@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
 /** Bridge into Spark's classic Column↔Expression conversion (private[sql]
   * in Spark 4) so graft's native Catalyst expressions can be exposed as
@@ -18,4 +19,12 @@ object GraftColumnBridge {
     */
   def eagerExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Spark's WRONG_NUM_ARGS analysis error for a call of `name`. */
+  def wrongNumArgs(name: String, accepted: Seq[Any], actual: Int): Throwable =
+    errors.QueryCompilationErrors.wrongNumArgsError(name, accepted, actual)
+
+  /** The argument count of a typed Scala UDF (one input encoder each). */
+  def udfArity(f: UserDefinedFunction): Int =
+    f.asInstanceOf[SparkUserDefinedFunction].inputEncoders.length
 }

@@ -3,7 +3,9 @@ package graft
 import graft.operators.Dedup
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
@@ -155,6 +157,29 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(!b.output.exists(_.dataType.isInstanceOf[ArrayType]), b.treeString))
   }
 
+  test("minhash distributed path runs the shingle kernel once per document") {
+    // read from parquet: over the local fixture the optimizer would fold
+    // the filter and projection, kernels included, into a LocalRelation
+    val dir = java.nio.file.Files.createTempDirectory("dedup-fixture")
+    fixture.write.parquet(dir.resolve("docs").toString)
+    val df = withBroadcastThreshold(-1) {
+      Dedup.minhashPairs(spark.read.parquet(dir.resolve("docs").toString),
+        "doc_id", "text", threshold = 0.5)
+    }
+    try assert(df.collect().length >= 30)
+    finally spark.catalog.clearCache()
+    // in the persisted projection only: the empty-shingle filter must not
+    // carry a second copy
+    def cached(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan
+    }.distinct.flatMap(c => c +: cached(c))
+    val plans = df.queryExecution.executedPlan +: cached(df.queryExecution.executedPlan).distinct
+    val kernels = plans.flatMap(p => collect(p) { case n => n }).flatMap(_.expressions)
+      .flatMap(_.collect { case w: graft.functions.WordShinglesExpr => w })
+    assert(kernels.size == 1, plans.mkString("\n"))
+    scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
+
   test("simhash finds planted near-dups within small hamming distance") {
     val pairs = Dedup.simhashPairs(fixture, "doc_id", "text", maxHamming = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -170,13 +195,24 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(out == Set((1L, 2L), (3L, 1L))) // keep min id, count dups
   }
 
+  test("sorted shingles merge in the order they were sorted: emoji against fullwidth punctuation") {
+    // UTF-16 order puts U+FF0C after the emoji's surrogates, UTF-8 bytes
+    // put it before; shingles sorted one way and merged the other miss
+    // the shared "，"
+    val df = Seq(("a b \uD83D\uDE00 \uFF0C", "\uFF0C")).toDF("x", "y")
+    val shx = wordShingles(tokens(col("x")), 1)
+    val shy = wordShingles(tokens(col("y")), 1)
+    val r = df.select(jaccardSorted(shx, shy), jaccard(shx, shy)).head
+    assert(r.getDouble(0) == 0.25 && r.getDouble(1) == 0.25)
+  }
+
   test("jaccard/hamming primitives behave") {
     val df = Seq(("a b c d", "a b c e")).toDF("x", "y")
     val j = df.select(jaccard(wordShingles(tokens(col("x")), 2),
       wordShingles(tokens(col("y")), 2)).as("j")).head.getDouble(0)
     assert(j > 0.3 && j < 0.9)
-    val h = df.select(hammingBits(simhashBits(tokens(col("x"))),
-      simhashBits(tokens(col("x")))).as("h")).head.getLong(0)
+    val h = df.select(hammingBits(simhashBitsMd5(tokens(col("x"))),
+      simhashBitsMd5(tokens(col("x")))).as("h")).head.getLong(0)
     assert(h == 0L)
   }
 }

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession.init` and no `GraftSql.sql` call.
   */
 class FunctionTableSpec extends AnyFunSuite {
+  private lazy val child = ChildJvm.run("graft.ExtensionOnly")
 
   test("the function table names each function once") {
     val names = GraftExtensions.functions.map(_._1.funcName)
@@ -17,12 +18,21 @@ class FunctionTableSpec extends AnyFunSuite {
   }
 
   test("an extension-only session resolves every graft function name") {
-    val lines = ChildJvm.run("graft.ExtensionOnly").filter(_.contains("="))
+    val lines = child.filter(_.contains("="))
     val got = lines.map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
     assert(got("missing") == "", lines.mkString("\n"))
     val Array(first, second, afterInit) = got("sizes").split(",")
     assert(first == second && second == afterInit, lines.mkString("\n"))
     assert(got("nextval") == "1,2", lines.mkString("\n"))
+  }
+
+  test("the graft names that shadow a Spark builtin are exactly the committed list") {
+    val replaced = """The function (\w+) replaced a previously registered function""".r
+    val warned = child.flatMap(l => replaced.findFirstMatchIn(l).map(_.group(1))).toSet
+    val listed = scala.io.Source.fromResource("graft/shadowed-builtins.txt")
+      .getLines().map(_.trim).filter(_.nonEmpty).toSet
+    assert(warned -- listed == Set.empty, "new shadows: add each to shadowed-builtins.txt on purpose")
+    assert(listed -- warned == Set.empty, "listed names that no longer shadow a builtin")
   }
 }
 
@@ -50,7 +60,10 @@ object ChildJvm {
   }
 }
 
-/** A plain session configured only with `spark.sql.extensions`. Prints
+/** A plain session configured only with `spark.sql.extensions`. Its
+  * registry is built before the log level drops to ERROR, so Spark's
+  * "replaced a previously registered function" warnings reach the output.
+  * Prints
   *  - `missing=` the names of `graft/function-names.txt` (the surface
   *    that `GraftSession.init` plus one `GraftSql.sql` statement used to
   *    leave) that do not resolve to a graft function;
@@ -63,6 +76,9 @@ object ExtensionOnly {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[1]").appName("extension-only")
       .config("spark.sql.extensions", "graft.GraftExtensions").getOrCreate()
+    // build the registry at the default log level: Spark warns once per
+    // graft name that replaces a builtin, which the shadow check reads
+    spark.sessionState.functionRegistry
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val registry = spark.sessionState.functionRegistry

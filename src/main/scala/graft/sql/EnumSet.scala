@@ -46,14 +46,14 @@ object EnumSet {
     val tm = """(?is)^create\s+(?:external\s+)?table\s+(?:if\s+not\s+exists\s+)?`?([\w$]+)`?\s*\(""".r
       .findFirstMatchIn(q).getOrElse(return q)
     val open = q.indexOf('(', tm.end - 1)
-    val (body, closeEnd) = GraftSql.balancedSpan(q, open).getOrElse(return q)
-    val items = GraftSql.splitTop(body)
+    val (body, closeEnd) = SqlText.balancedSpan(q, open).getOrElse(return q)
+    val items = SqlText.splitTop(body)
     var registered = Vector.empty[Col]
     val items2 = items.map { item =>
       """(?is)^(\s*`?([\w$-￿]+)`?\s+)(enum|set)\s*\(([^)]*)\)(.*)$""".r
         .findFirstMatchIn(item) match {
         case Some(m) =>
-          val raw = GraftSql.splitTop(m.group(4)).map(_.trim)
+          val raw = SqlText.splitTop(m.group(4)).map(_.trim)
           if (raw.exists(l => !(l.startsWith("'") && l.endsWith("'") &&
               l.length >= 2)))
             throw new IllegalArgumentException(
@@ -164,11 +164,11 @@ object EnumSet {
         if (posOf.nonEmpty) {
           var rowsOut = Vector.empty[String]
           var dropped = false
-          GraftSql.splitTop(m.group(5)).foreach { r0 =>
+          SqlText.splitTop(m.group(5)).foreach { r0 =>
             val r = r0.trim
             if (!r.startsWith("(") || !r.endsWith(")")) rowsOut :+= r
             else {
-              val items = GraftSql.splitTop(
+              val items = SqlText.splitTop(
                 r.stripPrefix("(").stripSuffix(")"))
               try {
                 rowsOut :+= items.zipWithIndex.map { case (it, i) =>
@@ -206,7 +206,7 @@ object EnumSet {
     um.foreach { m =>
       val ecols = colsOf(spark, m.group(2))
       if (ecols.nonEmpty) {
-        val assigns = GraftSql.splitTop(m.group(4)).map { a =>
+        val assigns = SqlText.splitTop(m.group(4)).map { a =>
           """(?is)^\s*`?([\w$-￿]+)`?\s*=\s*(.+)$""".r
             .findFirstMatchIn(a) match {
             case Some(am) =>
@@ -299,7 +299,7 @@ object EnumSet {
       else if (low.startsWith("update"))
         Some("""(?is)^update\s+(?:ignore\s+)?`?([\w$]+)`?(?![\w$.(])""".r)
       else None
-    val fm = tableRe.flatMap(_.findFirstMatchIn(MySqlCompat.maskLiterals(q0)))
+    val fm = tableRe.flatMap(_.findFirstMatchIn(SqlText.mask(q0)))
       .getOrElse(return q0)
     val allCols = colsOf(spark, fm.group(1))
     val ecols = allCols.filterNot(_.isSet)
@@ -324,16 +324,10 @@ object EnumSet {
     // ordinal/bitmap space (numeric operand contract); runs FIRST so the
     // single-column rules below see the rewritten tuple members as
     // opaque expressions, not bare columns
-    // NOTE: the match runs over MASKED text (string literals blanked), so
-    // the tuple CONTENT must be re-read from the raw query at the same
-    // offsets (masking is length-preserving) — same contract as the
-    // IN-list rule below; a literal inside the tuple, e.g.
-    // `('red', e) IN (SELECT …)`, would otherwise be emitted as NULs
-    val qRawTup = q
-    q = GraftSql.replaceMaskedAll(q,
-      """(?i)(?<![\w$`])\(([^()]+)\)(\s*(?:not\s+)?in\s*\(\s*select\b|\s*=\s*any\s*\(\s*select\b)""".r,
+    q = SqlText.replaceOutside(q,
+      """(?i)(?<![\w$`])\(((?:'(?:[^'\\]|\\.)*'|[^()'])+)\)(\s*(?:not\s+)?in\s*\(\s*select\b|\s*=\s*any\s*\(\s*select\b)""".r,
       m => {
-        var tup = qRawTup.substring(m.start(1), m.end(1))
+        var tup = m.group(1)
         allCols.foreach { c =>
           val qn = java.util.regex.Pattern.quote(c.name)
           tup = tup.replaceAll(
@@ -355,20 +349,20 @@ object EnumSet {
       val mask = s"(CASE WHEN `${c.name}` IS NULL THEN CAST(NULL AS BIGINT) " +
         s"ELSE aggregate(filter(split(`${c.name}`, ','), x -> x != ''), " +
         s"CAST(0 AS BIGINT), (acc, x) -> acc + CASE x $cases ELSE 0 END) END)"
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s*\\+\\s*0(?![\\w$$.])".r, _ => mask)
       // `WHERE colors & 1` is truthiness; in a projection the bitwise
       // AND keeps its numeric value
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\b(where\\s+)`?$qn`?\\s*&\\s*(\\d+)(?![\\w$$.])".r,
         m => s"${m.group(1)}($mask & ${m.group(2)}) != 0")
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s*&\\s*(\\d+)(?![\\w$$.])".r,
         m => s"($mask & ${m.group(1)})")
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s*(=|!=|<>|>=|<=|>|<)\\s*\\+?(\\d+)(?![\\w$$.])".r,
         m => s"$mask ${m.group(1)} ${m.group(2)}")
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\b(order\\s+by\\s+)`?$qn`?(?![\\w$$])".r,
         m => m.group(1) + mask)
       // numeric subquery operand contract (mysql_compat_enum_set_numeric):
@@ -378,7 +372,7 @@ object EnumSet {
       // bitmap/ordinal by the rules below, so both sides stay numeric); a
       // DISTINCT/ALL keyword means the projection starts elsewhere —
       // leave those untouched
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         (s"(?i)(?<![\\w$$.`])`?$qn`?(\\s+(?:not\\s+)?in\\s*\\(\\s*select\\s+" +
           s"|\\s*=\\s*any\\s*\\(\\s*select\\s+)(`?[\\w$$]+`?)(\\s+from)").r,
         m => {
@@ -388,7 +382,7 @@ object EnumSet {
         })
       // … and a SUBQUERY projecting the set column under a numeric left
       // operand yields bitmaps (`i IN (SELECT s …)`)
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\b((?:in|any)\\s*\\(\\s*select\\s+)`?$qn`?(\\s+from)".r,
         m => m.group(1) + mask + m.group(2))
     }
@@ -399,7 +393,7 @@ object EnumSet {
         s"), `${c.name}`)"
       // numeric subquery operand contract — see the SET analog above:
       // ordinal space when the subquery projects a bare column
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         (s"(?i)(?<![\\w$$.`])`?$qn`?(\\s+(?:not\\s+)?in\\s*\\(\\s*select\\s+" +
           s"|\\s*=\\s*any\\s*\\(\\s*select\\s+)(`?[\\w$$]+`?)(\\s+from)").r,
         m => {
@@ -407,41 +401,36 @@ object EnumSet {
           if (inner.matches("(?i)distinct|all")) m.matched
           else ord + m.group(1) + m.group(2) + m.group(3)
         })
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\b((?:in|any)\\s*\\(\\s*select\\s+)`?$qn`?(\\s+from)".r,
         m => m.group(1) + ord + m.group(2))
       // col + 0 → 1-based ordinal
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s*\\+\\s*0(?![\\w$$.])".r, _ => ord)
       // ORDER BY an enum column sorts by member ordinal (MySQL) — in
       // window OVER clauses and aggregate inner sorts too
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\b(order\\s+by\\s+)`?$qn`?(?![\\w$$])".r,
         m => m.group(1) + ord)
       // abs(col) → ordinal (numeric context)
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)\\babs\\s*\\(\\s*`?$qn`?\\s*\\)".r, _ => s"abs($ord)")
       // col <cmp> <number | bare column> → ordinal comparison (string
       // literals keep LABEL semantics; a dotted/parenthesized RHS is
       // someone else's reference)
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s*(=|!=|<>|>=|<=|>|<)\\s*\\+?(\\d+|`?[\\w$$]+`?)(?![\\w$$.(])".r,
         m => s"$ord ${m.group(1)} ${m.group(2)}")
       // col BETWEEN a AND b (numeric/column bounds) → ordinal range
-      q = GraftSql.replaceMaskedAll(q,
+      q = SqlText.replaceOutside(q,
         s"(?i)(?<![\\w$$.`])`?$qn`?\\s+between\\s+(\\d+|`?[\\w$$]+`?)\\s+and\\s+(\\d+|`?[\\w$$]+`?)(?![\\w$$.(])".r,
         m => s"$ord BETWEEN ${m.group(1)} AND ${m.group(2)}")
       // IN list: numeric items map to their labels; a bare-column item
-      // switches the whole predicate to ordinal space. NOTE: the match
-      // ran over the MASKED text (string literals blanked), so item
-      // CONTENT must come from the raw q at the same offsets — masking
-      // is length-preserving
-      val qRaw = q
-      q = GraftSql.replaceMaskedAll(q,
-        s"(?i)(?<![\\w$$.`])`?$qn`?(\\s+in\\s*\\()([^)]*)(\\))".r,
+      // switches the whole predicate to ordinal space
+      q = SqlText.replaceOutside(q,
+        s"(?i)(?<![\\w$$.`])`?$qn`?(\\s+in\\s*\\()((?:'(?:[^'\\\\]|\\\\.)*'|[^)'])*)(\\))".r,
         m => {
-          val items = GraftSql
-            .splitTop(qRaw.substring(m.start(2), m.end(2))).map(_.trim)
+          val items = SqlText.splitTop(m.group(2)).map(_.trim)
           val hasColRef = items.exists(_.matches("`?[A-Za-z_][\\w$]*`?"))
           val hasStr = items.exists(_.startsWith("'"))
           val hasNum = items.exists(_.matches("\\d+"))

@@ -470,13 +470,13 @@ object GraftSql {
     * validates the DDL and the EXISTING rows.
     */
   private def alterFkRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
-    matchMasked(AlterDropFkRe, q).foreach { g =>
+    SqlText.matchMasked(AlterDropFkRe, q).foreach { g =>
       dropForeignKey(spark, g(0), g(1))
       return Some(spark.emptyDataFrame)
     }
-    val g = matchMasked(AlterAddFkRe, q).getOrElse(return None)
+    val g = SqlText.matchMasked(AlterAddFkRe, q).getOrElse(return None)
     val table = g(0)
-    val items = splitTop(g(1)).map(_.trim)
+    val items = SqlText.splitTop(g(1)).map(_.trim)
     if (!items.forall(i => AddFkItemRe.findFirstMatchIn(i).isDefined))
       return None // other ALTER ADD forms (columns, plain indexes)
     val parsed = items.map { i =>
@@ -530,7 +530,7 @@ object GraftSql {
     val m = AnalyzeRe.findFirstMatchIn(q).getOrElse(return None)
     // strip a trailing {snapshot = '...'} clause (time-travel scan)
     val listTxt = m.group(1).replaceAll("""(?is)\{\s*snapshot\s*=[^}]*\}""", "").trim
-    val items = splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
+    val items = SqlText.splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
     if (items.isEmpty) return None
     val parsed = items.map { it =>
       val (namePart, colsPart) = it.indexOf('(') match {
@@ -580,7 +580,7 @@ object GraftSql {
     */
   private def fkCheckPlainInsert(spark: SparkSession, q: String): Unit = {
     if (!fkChecksOn(spark)) return
-    val g = matchMasked(PlainInsertHeadRe, q).getOrElse(return)
+    val g = SqlText.matchMasked(PlainInsertHeadRe, q).getOrElse(return)
     val table = g(0)
     if (!state(spark).foreignKeys.contains(table.toLowerCase)) return
     if (!(try spark.catalog.tableExists(table)
@@ -588,7 +588,7 @@ object GraftSql {
     try {
       val target = spark.table(table)
       val listed = Option(g(1))
-        .map(splitTop(_).map(_.trim.stripPrefix("`").stripSuffix("`")))
+        .map(SqlText.splitTop(_).map(_.trim.stripPrefix("`").stripSuffix("`")))
         .getOrElse(target.columns.toSeq)
       val body = g(2).trim
       val src = spark.sql(
@@ -752,11 +752,9 @@ object GraftSql {
   def sql(spark: SparkSession, query: String): DataFrame = {
     val qTrim = query.trim.stripSuffix(";").trim
     // the reference's save_result hint tags a query whose result set is
-    // retained for result_scan/meta_scan; zero-arg last_query_id()
-    // normalizes to the UDF's explicit-offset form
+    // retained for result_scan/meta_scan
     val doSave = SaveHintRe.findFirstIn(qTrim).isDefined
     val q0 = SaveHintRe.replaceFirstIn(qTrim, "")
-      .replaceAll("(?i)\\blast_query_id\\s*\\(\\s*\\)", "last_query_id(-1)")
     val writesBefore = state(spark).rowCountWrites
     sqlDepth.set(sqlDepth.get() + 1)
     val res =
@@ -860,7 +858,7 @@ object GraftSql {
       else q0m
     prepareRewrite(spark, q0s).getOrElse {
       // user variables resolve to their SET-time literals everywhere else
-      val qUv0 = substituteOutsideQuotes(q0s, "@", name => userVarLit(spark, name))
+      val qUv0 = SqlText.replaceOutside(q0s, UserVarRe, m => userVarLit(spark, m.group(1)))
       val q = clusterDdl(spark, qUv0)
       // auto-increment fill + allocator hooks run AFTER the namespacing
       // pass below (so qualified/mangled targets resolve first); the
@@ -932,7 +930,7 @@ object GraftSql {
       // row_count() is a session counter — substitute the literal
       val qRc =
         if (!q.toLowerCase.contains("row_count")) q
-        else replaceOutsideQuotes(q, """(?i)\brow_count\s*\(\s*\)""".r,
+        else SqlText.replaceOutside(q, """(?i)\brow_count\s*\(\s*\)""".r,
           _ => currentRowCount(spark).toString)
       val qMo =
         if (!qRc.toLowerCase.contains("mo_catalog") &&
@@ -942,8 +940,8 @@ object GraftSql {
             MoCatalog.ensureViews(spark, t => state(spark).primaryKeys.contains(t.toLowerCase))
           val dbLit = MoCatalog.currentDb(spark)
             .map(d => s"'$d'").getOrElse("CAST(NULL AS STRING)")
-          replaceOutsideQuotes(
-            replaceMaskedAll(qRc,
+          SqlText.replaceOutside(
+            SqlText.replaceOutside(qRc,
               "(?i)`?\\bmo_catalog`?\\s*\\.\\s*`?mo_(\\w+)`?".r,
               m => "_graft_mo_" + m.group(1)),
             """(?i)\bdatabase\s*\(\s*\)""".r, _ => dbLit)
@@ -952,7 +950,7 @@ object GraftSql {
       // (account_info_func.result)
       val qAcct =
         if (!qMo.toLowerCase.contains("current_account")) qMo
-        else replaceMaskedAll(qMo,
+        else SqlText.replaceOutside(qMo,
           "(?i)\\bcurrent_account\\s*\\(\\s*\\)".r,
           _ => "(select 'sys' as account_name, 0 as account_id, " +
             "'dump' as user_name, 1 as user_id, 'moadmin' as role_name, " +
@@ -965,8 +963,8 @@ object GraftSql {
           !low0.contains("statement_info")) qAcct
         else {
           MoCatalog.ensureMetricsView(spark)
-          replaceMaskedAll(
-            replaceMaskedAll(qAcct,
+          SqlText.replaceOutside(
+            SqlText.replaceOutside(qAcct,
               "(?i)`?\\bsystem_metrics`?\\s*\\.\\s*`?metric`?".r,
               _ => "_graft_sm_metric"),
             "(?i)`?\\bsystem`?\\s*\\.\\s*`?statement_info`?".r,
@@ -988,14 +986,14 @@ object GraftSql {
             "referential_constraints", "key_column_usage", "partitions",
             "schemata", "character_sets", "table_constraints")
           val q1 = isViews.foldLeft(qSm) { (s, v) =>
-            replaceMaskedAll(s,
+            SqlText.replaceOutside(s,
               s"(?i)`?\\binformation_schema`?\\s*\\.\\s*`?$v`?".r,
               _ => s"_graft_is_$v")
           }
           // `use information_schema` makes the bare view names resolve
           // (lower_case_table_names reads TABLES unqualified)
           if (!isDbCur) q1
-          else replaceMaskedAll(q1,
+          else SqlText.replaceOutside(q1,
             ("(?i)\\b(from|join)\\s+`?(" + isViews.mkString("|") +
               ")`?(?![\\w$.(])").r,
             m => s"${m.group(1)} _graft_is_${m.group(2).toLowerCase}")
@@ -1122,13 +1120,18 @@ object GraftSql {
         aiDone(None)
         return spark.emptyDataFrame
       }
-      val q2 = partSubtables(spark, parseJsonlRewrite(spark, subqueryIntervalViews(spark,
-        tableStatsRewrite(spark, ftTokenizeApply(narrowVecFns(spark,
-          narrowVecInsert(spark,
-          MySqlCompat.projectionIn(quantifiedRewrite(MySqlCompat.pre(
-            ifToIff(narrowVecDdl(spark, autoIncDdl(spark, moFilepathRewrite(spark,
-              EnumSet.exprRewrite(spark, EnumSet.dmlRewrite(spark,
-                EnumSet.ddlRewrite(spark, qAi)))))))))))))))))
+      // the statement's own temp views (table stats, subquery interval
+      // windows, parsed JSONL) are dropped once it has run
+      val (qStats, statsViews) = tableStatsRewrite(spark, ftTokenizeApply(narrowVecFns(spark,
+        narrowVecInsert(spark,
+        MySqlCompat.projectionIn(quantifiedRewrite(MySqlCompat.pre(
+          ifToIff(narrowVecDdl(spark, autoIncDdl(spark, moFilepathRewrite(spark,
+            EnumSet.exprRewrite(spark, EnumSet.dmlRewrite(spark,
+              EnumSet.ddlRewrite(spark, qAi))))))))))))))
+      val (qItw, itwViews) = subqueryIntervalViews(spark, qStats)
+      val (qJsonl, jsonlViews) = parseJsonlRewrite(spark, qItw)
+      val q2 = partSubtables(spark, qJsonl)
+      dropViewsAfter(spark, q2, statsViews ++ itwViews ++ jsonlViews) {
       sequenceRewrite(spark, q2)
         .orElse(stageRewrite(spark, q2))
         .orElse(queryResultRewrite(spark, q2))
@@ -1165,11 +1168,12 @@ object GraftSql {
           val df = spark.sql(q2)
           // affected-rows bookkeeping for row_count(): a plain
           // INSERT ... VALUES counts its literal rows
-          matchMasked(PlainInsertValsRe, q2).foreach { g =>
-            setRowCount(spark, splitTop(g(0)).length.toLong)
+          SqlText.matchMasked(PlainInsertValsRe, q2).foreach { g =>
+            setRowCount(spark, SqlText.splitTop(g(0)).length.toLong)
           }
           df
         }
+      }
       }
       aiDone(None)
       df0
@@ -1314,7 +1318,7 @@ object GraftSql {
         knownSysVar(m.group(2))) => a
       case _ => return None
     }
-    val items = splitTop(assignsTxt).map(_.trim)
+    val items = SqlText.splitTop(assignsTxt).map(_.trim)
     // every item must be a sysvar assignment — `set @u = 1` stays on
     // the user-var path
     if (!items.forall(i => SysAssignRe.findFirstMatchIn(i).isDefined))
@@ -1393,7 +1397,7 @@ object GraftSql {
   private val SysVarRefRe = """(?i)@@(?:(global|session)\.)?(\w+)""".r
   private def sysVarSubst(spark: SparkSession, q: String): String = {
     if (!q.contains("@@")) return q
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     val sb = new StringBuilder; var last = 0
     SysVarRefRe.findAllMatchIn(masked).foreach { m =>
       val name = m.group(2).toLowerCase
@@ -1412,16 +1416,12 @@ object GraftSql {
     * strings untouched).
     */
   private def ansiQuotes(q: String): String = {
-    val sb = new StringBuilder; var i = 0; var inStr = false
-    while (i < q.length) {
-      val c = q(i)
-      if (inStr) { sb.append(c); if (c == '\'') inStr = false }
-      else if (c == '\'') { sb.append(c); inStr = true }
-      else if (c == '"') sb.append('`')
-      else sb.append(c)
-      i += 1
+    val b = q.toCharArray
+    SqlText.spans(q).filter(sp => q(sp.start) == '"').foreach { sp =>
+      b(sp.start) = '`'
+      if (sp.closed) b(sp.end - 1) = '`'
     }
-    sb.toString
+    new String(b)
   }
 
   /** `/*!NNNNN content */` versioned comments execute their content
@@ -1429,7 +1429,7 @@ object GraftSql {
     */
   private[graft] def versionedComments(q: String): String = {
     if (!q.contains("/*!")) return q
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     val sb = new StringBuilder; var last = 0
     var i = masked.indexOf("/*!")
     while (i >= 0) {
@@ -1522,14 +1522,14 @@ object GraftSql {
       case SetQrMaxRe(n) =>
         QueryResults.setMaxSize(spark, n.toLong)
         Some(spark.emptyDataFrame)
-      case _ if ScanCallRe.findFirstIn(q).isDefined =>
+      case _ if ScanCallRe.findFirstIn(SqlText.mask(q)).isDefined =>
         if (!QueryResults.everConfigured(spark))
           throw new IllegalStateException("no configure: save query result")
-        val LastIdRe = """(?i)^last_query_id\s*\(\s*(-?\d+)\s*\)$""".r
-        val rewritten = ScanCallRe.replaceAllIn(q, m => {
+        val LastIdRe = """(?i)^last_query_id\s*\(\s*(-?\d+)?\s*\)$""".r
+        val rewritten = SqlText.replaceOutside(q, ScanCallRe, m => {
           val fn = m.group(1).toLowerCase
           val id = m.group(2).trim match {
-            case LastIdRe(n) => QueryResults.idAt(spark, n.toInt)
+            case LastIdRe(n) => QueryResults.idAt(spark, Option(n).fold(-1)(_.toInt))
             case lit => lit.stripPrefix("'").stripSuffix("'")
           }
           val v = "_graft_qr_" + id.replaceAll("\\W", "_") +
@@ -1561,7 +1561,7 @@ object GraftSql {
   private def insertSeqRewrite(spark: SparkSession, q: String): Option[DataFrame] = q match {
     case InsertValuesRe(table, cols, valuesTxt)
         if SeqFnRe.findFirstIn(valuesTxt).isDefined =>
-      val selects = splitTop(valuesTxt).map(_.trim)
+      val selects = SqlText.splitTop(valuesTxt).map(_.trim)
         .map(r => s"SELECT ${r.stripPrefix("(").stripSuffix(")")}")
       Some(sql(spark,
         s"INSERT INTO $table ${Option(cols).getOrElse("")} " +
@@ -1578,32 +1578,10 @@ object GraftSql {
     * (a bare UNION is distinct).
     */
   private def splitUnions(body: String): Seq[(String, String)] = {
-    val branches = Seq.newBuilder[(String, String)]
-    var depth = 0; var quote: Char = 0; var i = 0; var start = 0
-    var mode = ""
-    while (i < body.length) {
-      val c = body(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case 'u' | 'U' if depth == 0 &&
-            body.regionMatches(true, i, "union", 0, 5) &&
-            (i == 0 || !Character.isLetterOrDigit(body(i - 1))) &&
-            (i + 5 >= body.length || !Character.isLetterOrDigit(body(i + 5))) =>
-          branches += ((mode, body.substring(start, i)))
-          i += 5
-          val rest = body.substring(i)
-          val k = """(?is)^\s*(all|distinct)\b""".r.findFirstMatchIn(rest)
-          mode = k.map(_.group(1).toLowerCase).getOrElse("distinct")
-          k.foreach(x => i += x.end)
-          start = i
-        case _ => i += 1
-      }
-    }
-    branches += ((mode, body.substring(start)))
-    branches.result()
+    val parts = SqlText.splitTopAt(body, """(?i)union\b(?:\s*(?:all|distinct)\b)?""".r)
+    val modes = parts.indices.filter(_ % 2 == 1).map(i =>
+      parts(i).drop(5).trim.toLowerCase match { case "" => "distinct"; case m => m })
+    ("" +: modes).zip(parts.indices.filter(_ % 2 == 0).map(parts))
   }
 
   private val WithRecRe =
@@ -1642,9 +1620,9 @@ object GraftSql {
     val m = WithRecRe.findFirstMatchIn(q).getOrElse(return None)
     val name = m.group(1)
     val colList = Option(m.group(2))
-      .map(splitTop(_).map(_.trim.stripPrefix("`").stripSuffix("`")))
+      .map(SqlText.splitTop(_).map(_.trim.stripPrefix("`").stripSuffix("`")))
     val open = m.end - 1
-    val (body, close) = balancedSpan(q, open).getOrElse(return None)
+    val (body, close) = SqlText.balancedSpan(q, open).getOrElse(return None)
     val main = q.substring(close).trim
     if (main.startsWith(",")) return None // multi-CTE → native engine
     if (!main.toLowerCase.startsWith("select")) return None
@@ -1658,7 +1636,7 @@ object GraftSql {
     // width of each bare-literal string column in the first anchor
     val anchorItems = """(?is)^\s*select\s+(.*?)(\s+from\s.*)?$""".r
       .findFirstMatchIn(anchors.head._2)
-      .map(mm => splitTop(mm.group(1)).map(_.trim)).getOrElse(Seq.empty)
+      .map(mm => SqlText.splitTop(mm.group(1)).map(_.trim)).getOrElse(Seq.empty)
     val litWidths: Map[Int, Int] = anchorItems.zipWithIndex.collect {
       case (it, i) if it.matches("^'[^']*'$") => i -> (it.length - 2)
     }.toMap
@@ -1762,7 +1740,7 @@ object GraftSql {
       out = ifCondCast(out)
     // CASE WHEN <numeric literal>: MySQL truthiness, Spark wants bool
     if (low.contains("when"))
-      out = replaceMaskedAll(out,
+      out = SqlText.replaceOutside(out,
         """(?i)\bwhen\s+(\d+(?:\.\d+)?)\s+then\b""".r,
         m => s"when ${m.group(1)} != 0 then")
     // sized binary CAST targets: Spark types them width-less (the MO
@@ -1771,7 +1749,7 @@ object GraftSql {
     // n bytes (func_if golden hex 61000000); VARBINARY(n) does not.
     if (low.contains("binary")) {
       out = binCastPad(out)
-      out = replaceMaskedAll(out,
+      out = SqlText.replaceOutside(out,
         """(?i)\b(as\s+)(?:var)?binary\s*\(\s*\d+\s*\)""".r,
         m => m.group(1) + "BINARY")
     }
@@ -1784,24 +1762,15 @@ object GraftSql {
     * lengths — a char-semantics rpad would count characters).
     */
   private def binCastPad(q: String): String = {
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     """(?i)\bcast\s*\(""".r.findAllMatchIn(masked).foreach { m =>
       val open = m.end - 1
-      balancedSpan(q, open) match {
+      SqlText.balancedSpan(q, open) match {
         case Some((inner, end)) =>
-          val innerMasked = MySqlCompat.maskLiterals(inner).toLowerCase
-          // top-level ` as ` split
-          var depth = 0; var i = 0; var asIdx = -1
-          while (i < innerMasked.length - 3 && asIdx < 0) {
-            val c = innerMasked(i)
-            if (c == '(') depth += 1
-            else if (c == ')') depth -= 1
-            else if (depth == 0 && innerMasked.startsWith(" as ", i)) asIdx = i
-            i += 1
-          }
+          val asIdx = SqlText.topIndexOf(inner, "as")
           if (asIdx >= 0) {
             val src = inner.substring(0, asIdx)
-            val ty = inner.substring(asIdx + 4).trim
+            val ty = inner.substring(asIdx + 2).trim
             BinCastWidthRe.findFirstMatchIn(ty).foreach { wm =>
               val n = wm.group(1).toInt
               // MySQL BINARY(n) cast semantics on the VALUE: truncate to
@@ -1832,13 +1801,13 @@ object GraftSql {
     * conditions, MySQL-true for numeric ones.
     */
   private def ifCondCast(q: String): String = {
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     val m = """(?i)(?<![\w$.`])if\s*\(""".r.findFirstMatchIn(masked)
       .getOrElse(return q)
     val open = m.end - 1
-    balancedSpan(q, open) match {
+    SqlText.balancedSpan(q, open) match {
       case Some((inner, end)) =>
-        val args = splitTop(inner)
+        val args = SqlText.splitTop(inner)
         if (args.length == 3)
           q.substring(0, m.start) +
             s"if(CAST((${ifCondCast(args(0))}) AS BOOLEAN), " +
@@ -2001,7 +1970,7 @@ object GraftSql {
     val df0 =
       if (src.toLowerCase.startsWith("values")) spark.sql(s"SELECT * FROM $src")
       else sql(spark, src)
-    val listed = Option(colsOrNull).map(c => splitTop(
+    val listed = Option(colsOrNull).map(c => SqlText.splitTop(
       c.stripPrefix("(").stripSuffix(")"))
       .map(_.trim.stripPrefix("`").stripSuffix("`")))
     val named = listed match {
@@ -2024,11 +1993,11 @@ object GraftSql {
     """(?is)^replace\s+into\s+(?:`?\w+`?\.)?`?(\w+)`?\s+set\s+(.+)$""".r
 
   private def replaceIntoRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(ReplaceSetRe, q) match {
+    SqlText.matchMasked(ReplaceSetRe, q) match {
       case Some(IndexedSeq(table, setTxt)) if spark.catalog.tableExists(table) =>
         val target = spark.table(table)
         val fields = target.schema.fields.map(f => f.name.toLowerCase -> f).toMap
-        val assigns = splitTop(setTxt).map { a =>
+        val assigns = SqlText.splitTop(setTxt).map { a =>
           val m = """(?is)^\s*`?(\w+)`?\s*=\s*(.+)$""".r
             .findFirstMatchIn(a).getOrElse(return None)
           (m.group(1).toLowerCase, m.group(2).trim)
@@ -2218,7 +2187,7 @@ object GraftSql {
       uniqueKeysOf(spark, table).map(_._2)
 
   private def insertOnDupRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(InsertDupRe, q) match {
+    SqlText.matchMasked(InsertDupRe, q) match {
       case Some(IndexedSeq(table, colsOrNull, srcTxt, setTxt)) =>
         if (!spark.catalog.tableExists(table)) return None
         val target = spark.table(table)
@@ -2230,7 +2199,7 @@ object GraftSql {
           commitTable(spark, table, target.unionByName(named0))
           return Some(spark.emptyDataFrame)
         }
-        val assigns = splitTop(setTxt).map { a =>
+        val assigns = SqlText.splitTop(setTxt).map { a =>
           val m = """(?is)^\s*(?:`?\w+`?\.)?`?(\w+)`?\s*=\s*(.+)$""".r
             .findFirstMatchIn(a).getOrElse(return None)
           (m.group(1), m.group(2).trim)
@@ -2342,7 +2311,7 @@ object GraftSql {
     }
 
   private def insertIgnoreRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(InsertIgnoreRe, q) match {
+    SqlText.matchMasked(InsertIgnoreRe, q) match {
       case Some(IndexedSeq(table, colsOrNull, srcTxt)) =>
         if (!spark.catalog.tableExists(table)) return None
         val target = spark.table(table)
@@ -2430,8 +2399,8 @@ object GraftSql {
   private val MultiDeleteUsingRe =
     """(?is)^delete\s+from\s+((?:`?\w+`?\s*,\s*)*`?\w+`?)\s+using\s+(.+?)\s*(?:where\s+(.+?))?\s*$""".r
   private def multiDeleteRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(MultiDeleteUsingRe, q)
-      .orElse(matchMasked(MultiDeleteRe, q)) match {
+    SqlText.matchMasked(MultiDeleteUsingRe, q)
+      .orElse(SqlText.matchMasked(MultiDeleteRe, q)) match {
       case Some(IndexedSeq(targetsTxt, fromTxt, condOrNull)) =>
         val AliasedRe =
           """(?i)(?:^|,|\bjoin\s)\s*`?(\w+)`?(?:\s+(?:as\s+)?(?!on\b|join\b|inner\b|left\b|right\b|cross\b|where\b|using\b)`?(\w+)`?)?""".r
@@ -2440,7 +2409,7 @@ object GraftSql {
             val t = m.group(1); val a = Option(m.group(2)).getOrElse(t)
             a.toLowerCase -> t
           }.toMap
-        val targets = splitTop(targetsTxt)
+        val targets = SqlText.splitTop(targetsTxt)
           .map(_.trim.stripPrefix("`").stripSuffix("`").toLowerCase)
         if (targets.isEmpty || targets.exists(!aliases.contains(_))) return None
         if (targets.exists(t => !spark.catalog.tableExists(aliases(t)))) return None
@@ -2501,7 +2470,7 @@ object GraftSql {
   private def withDmlRewrite(spark: SparkSession, q: String): Option[DataFrame] =
     q match {
       case WithDmlRe(ctes, rest) if !ctes.trim.toLowerCase.startsWith("recursive") =>
-        val defs = splitTop(ctes).map(_.trim)
+        val defs = SqlText.splitTop(ctes).map(_.trim)
         val made = defs.flatMap(d =>
           """(?is)^`?(\w+)`?\s+as\s*\((.*)\)\s*$""".r.findFirstMatchIn(d)
             .map(m => (m.group(1), m.group(2))))
@@ -2539,17 +2508,6 @@ object GraftSql {
     """(?is)^insert\s+into\s+`?(\w+)`?""".r.findFirstMatchIn(q)
       .filter(m => MoCatalog.isEntriesView(spark, m.group(1)))
       .map(_ => spark.emptyDataFrame)
-
-  /** Anchored-regex match against the literal-MASKED copy of `q`
-    * (length-preserving), groups sliced from the ORIGINAL by offset — so
-    * clause keywords inside string data (`SET a = 'x where y'`) never
-    * split the statement. Absent optional groups come back null.
-    */
-  private def matchMasked(re: scala.util.matching.Regex, q: String): Option[IndexedSeq[String]] =
-    re.findFirstMatchIn(MySqlCompat.maskLiterals(q)).map { m =>
-      (1 to m.groupCount).map(i =>
-        if (m.start(i) < 0) null else q.substring(m.start(i), m.end(i)))
-    }
 
   // ------------------------------------------------------------------
   // RBAC DDL + MySQL session-db error states (reference:
@@ -2597,7 +2555,7 @@ object GraftSql {
     */
   private def pubClauses(tail: String): (Option[Seq[String]],
       Option[Seq[String]], String, Option[String]) = {
-    val masked = MySqlCompat.maskLiterals(tail)
+    val masked = SqlText.mask(tail)
     def listAt(kw: String): Option[Seq[String]] =
       s"(?is)\\b$kw\\s+(.+?)(?=\\s+(?:table|account|database|comment)\\b|\\s*;?\\s*$$)".r
         .findFirstMatchIn(masked).map { m =>
@@ -2663,7 +2621,7 @@ object GraftSql {
     * read-only on the subscriber side.
     */
   private def pubSubGuard(spark: SparkSession, q: String): Unit = {
-    val masked = MySqlCompat.maskLiterals(q).trim
+    val masked = SqlText.mask(q).trim
     def isSub(db: String): Boolean =
       MoCatalog.subOf(spark, db).isDefined
     def targetDbTable(tok: String): (Option[String], String) = {
@@ -2776,7 +2734,7 @@ object GraftSql {
           // qualifier positions alone (`dsrc.base` with a table `dsrc`)
           val dotFollow =
             if (known.exists(_.equalsIgnoreCase(l))) "(?!\\s*\\.)" else ""
-          s = replaceMaskedAll(s,
+          s = SqlText.replaceOutside(s,
             s"(?i)(?:(\\.\\s*)`?$ql`?|(?<![.\\w$$@%`])`?$ql`?$dotFollow)(?![\\w$$])".r,
             m => if (m.group(1) != null) m.matched else p)
         }
@@ -2788,7 +2746,7 @@ object GraftSql {
         val key = nsKeyFor(spark, Some(db)).get
         // emit the bare physical token (always \w+): downstream
         // rewrites (MATCH single-table FROM etc.) match unbackticked
-        s = replaceMaskedAll(s,
+        s = SqlText.replaceOutside(s,
           s"(?i)(?<![\\w$$@.])`?$qd`?\\s*\\.\\s*(?:`([\\w$$]+)`|([\\w$$]+))".r,
           m => Namespaces.resolve(spark, key,
             Option(m.group(1)).getOrElse(m.group(2))))
@@ -2895,7 +2853,7 @@ object GraftSql {
         }
       case NsRenameRe(pre, list) if nsKeyFor(spark, None).isDefined ||
           list.contains(".") =>
-        val items = splitTop(list).map(_.trim).map {
+        val items = SqlText.splitTop(list).map(_.trim).map {
           case NsRenamePairRe(db1, a, db2, b) =>
             (nsKeyFor(spark, Option(db1)), nsKeyFor(spark, Option(db2))) match {
               case (Some(k1), Some(k2)) =>
@@ -2914,27 +2872,27 @@ object GraftSql {
 
   private def rbacRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
     def names(txt: String): Seq[String] =
-      splitTop(txt).map(_.trim.stripPrefix("`").stripSuffix("`")
+      SqlText.splitTop(txt).map(_.trim.stripPrefix("`").stripSuffix("`")
         .stripPrefix("'").stripSuffix("'")).filter(_.matches("[\\w$]+"))
-    matchMasked(CreateUserRe, q).foreach { g =>
+    SqlText.matchMasked(CreateUserRe, q).foreach { g =>
       MoCatalog.createUser(spark, g(0)); return Some(spark.emptyDataFrame) }
-    matchMasked(DropUserRe, q).foreach { g =>
+    SqlText.matchMasked(DropUserRe, q).foreach { g =>
       MoCatalog.dropUser(spark, g(0)); return Some(spark.emptyDataFrame) }
-    matchMasked(CreateAccountRe, q).foreach { g =>
+    SqlText.matchMasked(CreateAccountRe, q).foreach { g =>
       val rest = q.substring(q.length - g(1).length)
       val admin = """(?is)admin_name\s*=?\s*'([^']*)'""".r
         .findFirstMatchIn(rest).map(_.group(1)).getOrElse("root")
       val comments = """(?is)\bcomment\s+'([^']*)'""".r
         .findFirstMatchIn(rest).map(_.group(1)).getOrElse("")
       val status =
-        if ("""(?i)\bsuspend\b""".r.findFirstIn(MySqlCompat.maskLiterals(rest))
+        if ("""(?i)\bsuspend\b""".r.findFirstIn(SqlText.mask(rest))
           .isDefined) "suspend" else "open"
       MoCatalog.createAccount(spark, g(0), admin, status, comments)
       return Some(spark.emptyDataFrame)
     }
-    matchMasked(AlterAccountRe, q).foreach { g =>
+    SqlText.matchMasked(AlterAccountRe, q).foreach { g =>
       val rest = q.substring(q.length - g(1).length)
-      val masked = MySqlCompat.maskLiterals(rest)
+      val masked = SqlText.mask(rest)
       val comments = """(?is)\bcomment\s+'([^']*)'""".r
         .findFirstMatchIn(rest).map(_.group(1))
       val status =
@@ -2944,15 +2902,15 @@ object GraftSql {
       MoCatalog.alterAccount(spark, g(0), status, comments)
       return Some(spark.emptyDataFrame)
     }
-    matchMasked(DropAccountRe, q).foreach { g =>
+    SqlText.matchMasked(DropAccountRe, q).foreach { g =>
       // the tenant's tables die with its databases
       Namespaces.accountDbKeys(spark, g(0))
         .foreach(dropDbTables(spark, _))
       MoCatalog.dropAccount(spark, g(0)); return Some(spark.emptyDataFrame) }
-    matchMasked(CreateRoleRe, q).foreach { g =>
+    SqlText.matchMasked(CreateRoleRe, q).foreach { g =>
       names(g(0)).foreach(MoCatalog.createRole(spark, _))
       return Some(spark.emptyDataFrame) }
-    matchMasked(DropRoleRe, q).foreach { g =>
+    SqlText.matchMasked(DropRoleRe, q).foreach { g =>
       names(g(0)).foreach(MoCatalog.dropRole(spark, _))
       return Some(spark.emptyDataFrame) }
     // unparsed variants (ALTER USER password policy etc.): accepted
@@ -2987,7 +2945,7 @@ object GraftSql {
     // unqualified SELECT — that inner statement must not error)
     if (sqlDepth.get() > 1) return
     val cur = MoCatalog.currentDb(spark)
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     if (cur.exists(d => MoCatalog.SystemDbs.contains(d.toLowerCase))) {
       // writes that RESOLVE into a predefined system db are privilege
       // errors; a statement fully qualified to a user database is fine
@@ -3027,24 +2985,8 @@ object GraftSql {
       throw new IllegalStateException("No database selected")
   }
 
-  /** replaceAllIn against the literal-MASKED copy (matches can't sit
-    * inside string literals; groups contain no quote chars).
-    */
-  private[sql] def replaceMaskedAll(s: String, re: scala.util.matching.Regex,
-      f: scala.util.matching.Regex.Match => String): String = {
-    val masked = MySqlCompat.maskLiterals(s)
-    if (re.findFirstIn(masked).isEmpty) return s
-    val sb = new java.lang.StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(s, last, m.start).append(f(m)); last = m.end
-    }
-    sb.append(s, last, s.length)
-    sb.toString
-  }
-
   private def deleteRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(DeleteRe, q) match {
+    SqlText.matchMasked(DeleteRe, q) match {
       case Some(IndexedSeq(table, condOrNull, limitOrNull)) =>
         if (!spark.catalog.tableExists(table)) return None
         // partitioned tables route rows through per-partition subtables;
@@ -3177,14 +3119,14 @@ object GraftSql {
     else "NULL"
 
   private def updateRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(UpdateRe, q) match {
+    SqlText.matchMasked(UpdateRe, q) match {
       case Some(IndexedSeq(ignoreOrNull, table, setTxt, condOrNull, orderOrNull, limitOrNull)) =>
         if (!spark.catalog.tableExists(table)) return None
         val isIgnore = ignoreOrNull != null
         if (Partitions.get(spark, table).isDefined) return None
         val target = spark.table(table)
         val fields = target.schema.fields.map(f => f.name.toLowerCase -> f).toMap
-        val assigns = splitTop(setTxt).map { a =>
+        val assigns = SqlText.splitTop(setTxt).map { a =>
           val m = """(?is)^\s*`?(\w+)`?\s*=\s*(.+)$""".r.findFirstMatchIn(a)
             .getOrElse(throw new IllegalArgumentException(
               s"invalid UPDATE assignment: $a"))
@@ -3210,7 +3152,7 @@ object GraftSql {
             // LIMIT keeps the first n MATCHING rows; identity-free via a
             // running count over a deterministic order (explicit ORDER
             // BY, else all columns — standing in for insertion order)
-            val ordCols = orderOpt.map(o => splitTop(o).map(x => expr(x.trim)))
+            val ordCols = orderOpt.map(o => SqlText.splitTop(o).map(x => expr(x.trim)))
               .getOrElse(target.columns.toSeq.map(c => col(s"`$c`").asc))
             val w = org.apache.spark.sql.expressions.Window
               .orderBy(ordCols.toIndexedSeq: _*)
@@ -3362,7 +3304,7 @@ object GraftSql {
   private val MultiUpdateRe =
     """(?is)^update\s+(.+?)\s+set\s+(.+?)(?:\s+from\s+(.+?))?\s*(?:where\s+(.+?))?\s*$""".r
   private def multiUpdateRewrite(spark: SparkSession, q: String): Option[DataFrame] =
-    matchMasked(MultiUpdateRe, q) match {
+    SqlText.matchMasked(MultiUpdateRe, q) match {
       case Some(IndexedSeq(tablesTxt0, setTxt, fromOrNull, condOrNull)) if
           tablesTxt0.contains(",") ||
             """(?i)\bjoin\b""".r.findFirstIn(tablesTxt0).isDefined ||
@@ -3377,7 +3319,7 @@ object GraftSql {
           val t = m.group(1); val a = Option(m.group(2)).getOrElse(t)
           a.toLowerCase -> t
         }.toMap
-        val assigns = splitTop(setTxt).map { a =>
+        val assigns = SqlText.splitTop(setTxt).map { a =>
           val m = """(?is)^\s*(?:`?(\w+)`?\.)?`?(\w+)`?\s*=\s*(.+)$""".r
             .findFirstMatchIn(a).getOrElse(return None)
           (Option(m.group(1)).map(_.toLowerCase), m.group(2), m.group(3).trim)
@@ -3464,7 +3406,7 @@ object GraftSql {
   private def procedureRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
     CreateProcHeadRe.findFirstMatchIn(q).foreach { m =>
       // the param list nests parens (`decimal(10,2)`) — balanced scan
-      balancedSpan(q, m.end - 1).foreach { case (params, after) =>
+      SqlText.balancedSpan(q, m.end - 1).foreach { case (params, after) =>
         val rest = q.substring(after).trim
         """(?is)^(['"])([\s\S]*)\1\s*$""".r.findFirstMatchIn(rest).foreach { bm =>
           val quote = bm.group(1)
@@ -3497,7 +3439,7 @@ object GraftSql {
   private def renameRewrite(spark: SparkSession, q: String): Option[DataFrame] =
     q match {
       case RenameTableRe(pairs) =>
-        splitTop(pairs).foreach { p =>
+        SqlText.splitTop(pairs).foreach { p =>
           val m = """(?is)^\s*(?:`([^`]+)`|([^\s`]+))\s+to\s+(?:`([^`]+)`|([^\s`]+))\s*$""".r
             .findFirstMatchIn(p).getOrElse(throw new IllegalArgumentException(
               s"invalid RENAME TABLE pair: $p"))
@@ -3529,7 +3471,7 @@ object GraftSql {
         }
       }
     CreatePartHeadRe.findFirstMatchIn(q).foreach { m =>
-      balancedSpan(q, m.end - 1).foreach { case (cols, after) =>
+      SqlText.balancedSpan(q, m.end - 1).foreach { case (cols, after) =>
         val rest = q.substring(after).trim
         """(?is)^partition\s+by\s+(.*)$""".r.findFirstMatchIn(rest) match {
           case Some(bm) =>
@@ -3542,7 +3484,7 @@ object GraftSql {
       }
     }
     AlterAddPartRe.findFirstMatchIn(q).foreach { m =>
-      balancedSpan(q, m.end - 1).foreach { case (defs, _) =>
+      SqlText.balancedSpan(q, m.end - 1).foreach { case (defs, _) =>
         Partitions.alterAdd(spark, m.group(1), defs)
         return Some(spark.emptyDataFrame)
       }
@@ -3556,7 +3498,7 @@ object GraftSql {
       }
     InsertPartRe.findFirstMatchIn(q).foreach { m =>
       Partitions.get(spark, m.group(1)).foreach { spec =>
-        val listed = Option(m.group(2)).map(c => splitTop(
+        val listed = Option(m.group(2)).map(c => SqlText.splitTop(
           c.stripPrefix("(").stripSuffix(")"))
           .map(_.trim.stripPrefix("`").stripSuffix("`")))
         val src = m.group(3).trim
@@ -3588,7 +3530,7 @@ object GraftSql {
   private def externalTableRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
     val m = ExtTableHeadRe.findFirstMatchIn(q).getOrElse(return None)
     val table = m.group(2)
-    val (cols, after) = balancedSpan(q, m.end - 1).getOrElse(return None)
+    val (cols, after) = SqlText.balancedSpan(q, m.end - 1).getOrElse(return None)
     val rest = q.substring(after).trim
     // both INFILE forms: the brace option map and the bare quoted path
     // (stage/external_stage.sql:384 uses `infile 'stage://…'`)
@@ -3661,7 +3603,7 @@ object GraftSql {
         // is parallel either way.
         val tailNoPar = tail.replaceAll("(?is)parallel\\s+'[^']*'", "").trim
         val listed = """(?is)\(([^)]*)\)\s*$""".r.findFirstMatchIn(tailNoPar)
-          .map(m => splitTop(m.group(1)).map(_.trim.stripPrefix("`").stripSuffix("`")))
+          .map(m => SqlText.splitTop(m.group(1)).map(_.trim.stripPrefix("`").stripSuffix("`")))
         def fieldOf(c: String) = target.schema.fields
           .find(_.name.equalsIgnoreCase(c))
           .getOrElse(throw new IllegalArgumentException(
@@ -3961,7 +3903,7 @@ object GraftSql {
     if (EnumSet.colsOf(spark, table).isEmpty) return None
     if (!spark.catalog.tableExists(table)) return None
     val target = spark.table(table)
-    val listed = Option(m.group(2)).map(l => splitTop(
+    val listed = Option(m.group(2)).map(l => SqlText.splitTop(
         l.trim.stripPrefix("(").stripSuffix(")"))
       .map(_.trim.stripPrefix("`").stripSuffix("`")))
       .getOrElse(target.columns.toSeq)
@@ -3992,7 +3934,7 @@ object GraftSql {
     if (!q.contains("__mo_filepath")) return q
     // the bare token only — `customer.__mo_filepath` backtick-quoted
     // column names are ordinary columns (issue_25908's decoys)
-    val masked = MySqlCompat.maskLiterals(q)
+    val masked = SqlText.mask(q)
     val tbl = """(?is)\bfrom\s+`?(\w+)`?""".r.findAllMatchIn(masked)
       .map(_.group(1).toLowerCase).find(state(spark).loadPaths.contains)
       .getOrElse(return q)
@@ -4173,7 +4115,7 @@ object GraftSql {
       val hit = KeyRe.findAllMatchIn(s).flatMap { m =>
         lhsBefore(s, m.start).flatMap { case (lhs, op, lhsStart) =>
           val open = s.indexOf('(', m.start)
-          balancedSpan(s, open).flatMap { case (inner, end) =>
+          SqlText.balancedSpan(s, open).flatMap { case (inner, end) =>
             if ("""(?is)^\s*(select|with)\b""".r.findFirstIn(inner).isDefined)
               Some((lhs, op, m.group(1).toLowerCase, inner, lhsStart, end))
             else None
@@ -4221,28 +4163,6 @@ object GraftSql {
       """[\w.`']+$""".r.findFirstIn(pre.substring(0, e))
         .map(t => (t, op, e - t.length))
     }
-  }
-
-  /** `(inner, endIndexAfterClose)` for the paren opening at `open`,
-    * skipping quoted strings.
-    */
-  private[sql] def balancedSpan(s: String, open: Int): Option[(String, Int)] = {
-    if (open < 0 || s(open) != '(') return None
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') {
-        depth -= 1
-        if (depth == 0) return Some((s.substring(open + 1, i), i + 1))
-      }
-      i += 1
-    }
-    None
   }
 
   private def quantTemplate(x: String, op0: String, kind: String, sq: String): String = {
@@ -4305,7 +4225,7 @@ object GraftSql {
       """`?(\w+)`?\s*\(([^)]*)\)\s*(?:with\s+parser\s+(\w+))?\s*$""").r
 
   private def ftCols(txt: String): Set[String] =
-    splitTop(txt).map(_.trim.stripPrefix("`").stripSuffix("`").toLowerCase)
+    SqlText.splitTop(txt).map(_.trim.stripPrefix("`").stripSuffix("`").toLowerCase)
       .filter(_.nonEmpty).toSet
 
   private def fulltextDdlRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
@@ -4373,60 +4293,11 @@ object GraftSql {
     case x => x.toString
   }
 
-  /** Replace tokens introduced by `marker` (`"@"` names or `"?"`
-    * placeholders) outside single/double-quoted literals and backticks.
-    * `@@system` variables are left untouched.
+  /** A user variable `@name` (not a `@@` system variable) and a `?`
+    * placeholder, substituted outside quoted text.
     */
-  /** Regex replacement applied only to unquoted segments of `s`. */
-  private def replaceOutsideQuotes(s: String, re: scala.util.matching.Regex,
-      repl: scala.util.matching.Regex.Match => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var q: Char = 0
-    def flush(): Unit = {
-      out.append(re.replaceAllIn(seg.toString,
-        m => java.util.regex.Matcher.quoteReplacement(repl(m))))
-      seg.clear()
-    }
-    s.foreach { c =>
-      if (q != 0) { out.append(c); if (c == q) q = 0 }
-      else if (c == '\'' || c == '"' || c == '`') { flush(); out.append(c); q = c }
-      else seg.append(c)
-    }
-    flush()
-    out.toString
-  }
-
-  private def substituteOutsideQuotes(
-      q: String, marker: String, resolve: String => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var quote: Char = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < q.length && quote != '`') {
-          sb.append(q.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; sb.append(c); i += 1
-      } else if (marker == "?" && c == '?') {
-        sb.append(resolve("?")); i += 1
-      } else if (marker == "@" && c == '@' &&
-          i + 1 < q.length && q.charAt(i + 1) != '@' &&
-          (i == 0 || q.charAt(i - 1) != '@') &&
-          q.charAt(i + 1).isUnicodeIdentifierPart) {
-        var j = i + 1
-        while (j < q.length && (q.charAt(j).isUnicodeIdentifierPart ||
-          q.charAt(j) == '_')) j += 1
-        sb.append(resolve(q.substring(i + 1, j)))
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  private val UserVarRe = """(?<!@)@(\p{javaUnicodeIdentifierPart}+)""".r
+  private val PlaceholderRe = """\?""".r
 
   /** MySQL prepared-statement surface (reference
     * `test/distributed/cases/prepare/prepare.test`; wire-protocol
@@ -4468,19 +4339,19 @@ object GraftSql {
           throw new IllegalStateException(
             s"prepared statement '$name' does not exist"))
         val params = Option(usingOrNull).toSeq
-          .flatMap(u => splitTop(u)).map(_.trim).map {
+          .flatMap(u => SqlText.splitTop(u)).map(_.trim).map {
             case v if v.startsWith("@") => userVarLit(spark, v.drop(1))
             case v => v // literal argument
           }
         val it = params.iterator
-        val bound = substituteOutsideQuotes(body, "?",
+        val bound = SqlText.replaceOutside(body, PlaceholderRe,
           _ => if (it.hasNext) it.next()
           else throw new IllegalArgumentException(
             s"not enough USING parameters for '$name'"))
         // the reference rejects a PREPARED multi-assignment SET that
         // mixes user variables with system variables
         // (prepare_all.result:810) — and leaves every variable untouched
-        if (bound.matches("(?is)^set\\s+@.*") && splitTop(
+        if (bound.matches("(?is)^set\\s+@.*") && SqlText.splitTop(
           bound.trim.replaceFirst("(?is)^set\\s+", "")).exists(a =>
           !a.trim.startsWith("@") && a.contains("=")))
           throw new UnsupportedOperationException(
@@ -4495,11 +4366,10 @@ object GraftSql {
         // commit only if the whole list succeeds — an erroring subquery
         // leaves all variables untouched (prepare_all.result:779-785)
         val overlay = scala.collection.mutable.LinkedHashMap[String, String]()
-        splitTop(assigns).foreach { a =>
+        SqlText.splitTop(assigns).foreach { a =>
           """(?is)^\s*@(\w+)\s*:?=\s*(.+)$""".r.findFirstMatchIn(a).foreach { m =>
-            val rhs = substituteOutsideQuotes(
-              m.group(2).trim, "@", n =>
-                overlay.getOrElse(n.toLowerCase, userVarLit(spark, n)))
+            val rhs = SqlText.replaceOutside(m.group(2).trim, UserVarRe, v =>
+              overlay.getOrElse(v.group(1).toLowerCase, userVarLit(spark, v.group(1))))
             // a parenthesized subquery RHS follows MySQL SET semantics:
             // the FIRST column of the single row (multi-column scalar
             // subqueries are legal here, seq_func2.result:79-84), and
@@ -4603,7 +4473,7 @@ object GraftSql {
     val ctrs = state(spark).autoIncCols(key).map(_._2).toArray
     val out = rows.map { r =>
       val inner = r.trim.stripPrefix("(").stripSuffix(")")
-      var items = splitTop(inner).map(_.trim)
+      var items = SqlText.splitTop(inner).map(_.trim)
       posIdx.foreach { case (pos, ai) =>
         if (pos < items.length) {
           val raw = items(pos).replaceAll("^'|'$", "").trim
@@ -4641,7 +4511,7 @@ object GraftSql {
     // an ON DUPLICATE KEY tail is not VALUES text — split it off so the
     // row transform never sees it, reattach verbatim
     val dupAt = """(?i)\son\s+duplicate\s+key\s+update\s""".r
-      .findFirstMatchIn(MySqlCompat.maskLiterals(sql0)).map(_.start)
+      .findFirstMatchIn(SqlText.mask(sql0)).map(_.start)
     val (head, dupTail) = dupAt
       .map(i => (sql0.substring(0, i), sql0.substring(i)))
       .getOrElse((sql0, ""))
@@ -4658,7 +4528,7 @@ object GraftSql {
         }
         val missing = acols.zipWithIndex
           .filter { case ((c, _), _) => !listed.exists(_.equalsIgnoreCase(c)) }
-        val rows0 = splitTop(valuesTxt)
+        val rows0 = SqlText.splitTop(valuesTxt)
         val (rows1, ctrs1) = aiXformRows(spark, key, present, rows0)
         val ctrs = ctrs1.toArray
         // MISSING auto columns prepend, each running its own counter
@@ -4718,7 +4588,7 @@ object GraftSql {
         }
         if (posIdx.isEmpty) (sql0, () => ())
         else {
-          val (rows, ctrs) = aiXformRows(spark, key, posIdx, splitTop(valuesTxt))
+          val (rows, ctrs) = aiXformRows(spark, key, posIdx, SqlText.splitTop(valuesTxt))
           (s"$pre $t VALUES ${rows.mkString(", ")}$dupTail",
             () => aiCommitCtrs(spark, key, ctrs))
         }
@@ -4875,15 +4745,16 @@ object GraftSql {
     * (numbers as DOUBLE, nested maps as their JSON text).
     */
   private lazy val statsJson = new com.fasterxml.jackson.databind.ObjectMapper()
-  private def tableStatsRewrite(spark: SparkSession, q: String): String = {
-    if (!q.toLowerCase.contains("table_stats")) return q
+  private def tableStatsRewrite(spark: SparkSession, q: String): (String, Seq[String]) = {
+    if (!q.toLowerCase.contains("table_stats")) return (q, Nil)
     var s = q
+    val views = Seq.newBuilder[String]
     var changed = true
     while (changed) {
       changed = false
-      """(?i)\btable_stats\s*\(""".r.findFirstMatchIn(s).foreach { m =>
-        balancedSpan(s, s.indexOf('(', m.start)).foreach { case (inner, end) =>
-          val args = splitTop(inner).map(_.trim)
+      """(?i)\btable_stats\s*\(""".r.findFirstMatchIn(SqlText.mask(s)).foreach { m =>
+        SqlText.balancedSpan(s, s.indexOf('(', m.start)).foreach { case (inner, end) =>
+          val args = SqlText.splitTop(inner).map(_.trim)
           val fullName = args.head.replaceAll("[\"'`]", "")
           val tbl = fullName.split("\\.").last.toLowerCase
           val cmd = args.lift(1)
@@ -4917,12 +4788,13 @@ object GraftSql {
             node.fields().forEachRemaining(e => acc.put(e.getKey, e.getValue))
           }
           val view = statsView(spark, fullName, tbl)
+          views += view
           s = s.substring(0, m.start) + view + s.substring(end)
           changed = true
         }
       }
     }
-    s
+    (s, views.result())
   }
 
   /** Materialize the stats row for a table as a temp view: exact
@@ -4999,15 +4871,16 @@ object GraftSql {
     * table functions ([[ParseJsonl]]): materialize as a temp view and
     * splice the view name in place of the call.
     */
-  private def parseJsonlRewrite(spark: SparkSession, q: String): String = {
-    if (!q.toLowerCase.contains("parse_jsonl_")) return q
+  private def parseJsonlRewrite(spark: SparkSession, q: String): (String, Seq[String]) = {
+    if (!q.toLowerCase.contains("parse_jsonl_")) return (q, Nil)
     var s = q
+    val views = Seq.newBuilder[String]
     var changed = true
     while (changed) {
       changed = false
-      """(?i)\bparse_jsonl_(data|file)\s*\(""".r.findFirstMatchIn(s).foreach { m =>
-        balancedSpan(s, s.indexOf('(', m.end - 2)).foreach { case (inner, end) =>
-          val args = splitTop(inner).map(_.trim)
+      """(?i)\bparse_jsonl_(data|file)\s*\(""".r.findFirstMatchIn(SqlText.mask(s)).foreach { m =>
+        SqlText.balancedSpan(s, s.indexOf('(', m.end - 2)).foreach { case (inner, end) =>
+          val args = SqlText.splitTop(inner).map(_.trim)
           def lit(a: String): String = {
             val body = a.stripPrefix("'").stripSuffix("'")
             body.replace("\\'", "'").replace("\\\\", "\\")
@@ -5020,12 +4893,13 @@ object GraftSql {
             else ParseJsonl.frame(spark, None, Some(lit(args.head)), spec)
           val view = s"__graft_jsonl_${viewCounter.incrementAndGet()}"
           df.createOrReplaceTempView(view)
+          views += view
           s = s.substring(0, m.start) + view + s.substring(end)
           changed = true
         }
       }
     }
-    s
+    (s, views.result())
   }
 
   /** An `interval(ts, n, unit)` time-window query nested INSIDE a
@@ -5033,46 +4907,37 @@ object GraftSql {
     * DataFrame rewrite — materialize the inner query as a temp view and
     * splice the view name into the outer statement.
     */
-  private def subqueryIntervalViews(spark: SparkSession, q: String): String = {
-    if (!q.toLowerCase.contains("interval(")) return q
+  private def subqueryIntervalViews(spark: SparkSession, q: String): (String, Seq[String]) = {
+    if (!q.toLowerCase.contains("interval(")) return (q, Nil)
     var s = q
+    val views = Seq.newBuilder[String]
     var changed = true
     var guard = 0
     while (changed && guard < 16) {
       changed = false; guard += 1
-      // deepest-first: scan for a parenthesized `(select … interval(…))`
-      var i = 0
-      var quoteC: Char = 0
-      val stack = scala.collection.mutable.Stack[Int]()
-      var target = -1
-      var targetClose = -1
-      while (i < s.length) {
-        val c = s(i)
-        if (quoteC != 0) { if (c == quoteC) quoteC = 0 }
-        else if (c == '\'' || c == '"') quoteC = c
-        else if (c == '(') stack.push(i)
-        else if (c == ')') if (stack.nonEmpty) {
-          val open = stack.pop()
-          val inner = s.substring(open + 1, i)
-          if (target < 0 &&
+      // deepest-first: the first parenthesized `(select … interval(…))`
+      // to close
+      val quoted = SqlText.spans(s)
+      s.indices.filter(i => s(i) == '(' && !quoted.exists(_.contains(i)))
+        .map(open => (open, SqlText.closeParen(s, open)))
+        .filter { case (open, close) =>
+          close > 0 && {
+            val inner = s.substring(open + 1, close)
             """(?is)^\s*select\b""".r.findFirstIn(inner).isDefined &&
-            IntervalRe.findFirstMatchIn(inner).isDefined) {
-            target = open; targetClose = i
+              IntervalRe.findFirstMatchIn(inner).isDefined
           }
         }
-        i += 1
-      }
-      if (target >= 0) {
-        val inner = s.substring(target + 1, targetClose)
-        intervalRewrite(spark, inner.trim).foreach { df =>
-          val view = s"__graft_itw_${viewCounter.incrementAndGet()}"
-          df.createOrReplaceTempView(view)
-          s = s.substring(0, target) + view + s.substring(targetClose + 1)
-          changed = true
+        .minByOption(_._2).foreach { case (open, close) =>
+          intervalRewrite(spark, s.substring(open + 1, close).trim).foreach { df =>
+            val view = s"__graft_itw_${viewCounter.incrementAndGet()}"
+            df.createOrReplaceTempView(view)
+            views += view
+            s = s.substring(0, open) + view + s.substring(close + 1)
+            changed = true
+          }
         }
-      }
     }
-    s
+    (s, views.result())
   }
 
   private val NarrowInsertRe =
@@ -5102,9 +4967,9 @@ object GraftSql {
           // Spark inline tables must be foldable — the strict kernels
           // are UDFs, so the VALUES stay raw and the kernel applies in a
           // SELECT projection over them
-          val rows = splitTop(valuesTxt).map(_.trim)
+          val rows = SqlText.splitTop(valuesTxt).map(_.trim)
           if (rows.exists(r => !r.startsWith("(") || !r.endsWith(")"))) return q
-          val fieldRows = rows.map(r => splitTop(r.substring(1, r.length - 1)))
+          val fieldRows = rows.map(r => SqlText.splitTop(r.substring(1, r.length - 1)))
           if (fieldRows.exists(_.length != order.length)) return q
           // per narrow column: all-string literals → strict parse path,
           // otherwise the numeric-array store path
@@ -5175,7 +5040,7 @@ object GraftSql {
   }
 
   private def indexColNames(colsTxt: String): Seq[String] =
-    splitTop(colsTxt).map(_.trim
+    SqlText.splitTop(colsTxt).map(_.trim
       .replaceAll("(?i)\\s+(asc|desc)$", "")
       .replaceAll("\\(\\s*\\d+\\s*\\)$", "") // prefix length `col(10)`
       .stripPrefix("`").stripSuffix("`").trim).filter(_.nonEmpty)
@@ -5244,7 +5109,7 @@ object GraftSql {
         val listTxt = """\[([^\]]*)\]|array\s*\(([^()]*)\)""".r
           .findFirstMatchIn(vecArg)
           .map(m => Option(m.group(1)).getOrElse(m.group(2))).getOrElse("")
-        val vecNums = splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
+        val vecNums = SqlText.splitTop(listTxt).map(_.trim).filter(_.nonEmpty)
         if (vecNums.isEmpty) return None
         val idxOpt = graft.plans.VectorIndex.indexes(spark).collectFirst {
           case ix: graft.plans.VectorIndex.IvfFlat
@@ -5279,7 +5144,7 @@ object GraftSql {
           .withColumn("__dist", distCol)
           .orderBy(ord0 +: pkOrd: _*).offset(off).limit(k)
         def finish(df: DataFrame): DataFrame = {
-          val items = splitTop(proj).map(_.trim)
+          val items = SqlText.splitTop(proj).map(_.trim)
           val out = df.orderBy(ord0 +: pkOrd: _*)
           if (items == Seq("*")) out.select(
             spark.table(table).columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
@@ -5442,7 +5307,7 @@ object GraftSql {
         def moRegister(centroids: Array[Array[Double]]): Unit = {
           val includeCols = """(?i)include\s*\(([^)]*)\)""".r
             .findFirstMatchIn(optsTxt).toSeq
-            .flatMap(mm => splitTop(mm.group(1)).map(
+            .flatMap(mm => SqlText.splitTop(mm.group(1)).map(
               _.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty))
           MoCatalog.registerVectorIndex(spark, name, table, method.toLowerCase,
             vecCol, state(spark).primaryKeys.getOrElse(table, df.columns.head)
@@ -5651,23 +5516,6 @@ object GraftSql {
       s"interval(): unsupported unit '$other' (second|minute|hour|day)")
   }
 
-  /** Split a select list on top-level commas (paren-aware). */
-  private[graft] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inStr = false
-    val cur = new StringBuilder
-    for (c <- s) c match {
-      case '\'' => inStr = !inStr; cur += c
-      case '(' if !inStr => depth += 1; cur += c
-      case ')' if !inStr => depth -= 1; cur += c
-      case ',' if depth == 0 && !inStr => out += cur.toString.trim; cur.clear()
-      case _ => cur += c
-    }
-    if (cur.nonEmpty) out += cur.toString.trim
-    out.result()
-  }
-
   private def intervalRewrite(spark: SparkSession, q: String): Option[DataFrame] =
     IntervalRe.findFirstMatchIn(q).map { m =>
       val (selectList, fromPart0, tsCol, n, unit) =
@@ -5678,7 +5526,7 @@ object GraftSql {
       val gbM = """(?is)^(.*?)\s+group\s+by\s+(.+)$""".r.findFirstMatchIn(fromPart0)
       val fromPart = gbM.map(_.group(1)).getOrElse(fromPart0)
       val extraKeys: Seq[String] =
-        gbM.map(g => splitTop(g.group(2)).map(_.trim)).getOrElse(Nil)
+        gbM.map(g => SqlText.splitTop(g.group(2)).map(_.trim)).getOrElse(Nil)
       var rest = m.group(6).trim
       var widthSec = n * unitSeconds(unit)
       var stepSec = widthSec
@@ -5706,7 +5554,7 @@ object GraftSql {
       // rewrite the select list onto the standard window() group:
       // _wstart/_wend come from the window struct; everything else is a
       // grouped aggregate and passes through verbatim
-      val items = splitTop(selectList)
+      val items = SqlText.splitTop(selectList)
       // un-aliased aggregates get an explicit alias equal to their item
       // text — Spark's natural output name can differ from it
       // (approx_percentile(v, 0) surfaces as approx_percentile(v, 0,
@@ -5895,7 +5743,7 @@ object GraftSql {
       var best: Option[(Int, Int)] = None // (open, close) smallest span
       var i = 0
       while (i < q.length) {
-        if (q(i) == '(') balancedSpan(q, i).foreach { case (inner, close) =>
+        if (q(i) == '(') SqlText.balancedSpan(q, i).foreach { case (inner, close) =>
           if (i < c.start && c.end <= close &&
             """(?is)^\s*select\b""".r.findFirstIn(inner).isDefined &&
             best.forall { case (o2, c2) => close - i < c2 - o2 })
@@ -5948,13 +5796,13 @@ object GraftSql {
     val GroupRe = """(?is)^(.*?)\s+group\s+by\s+(.*)$""".r
     fromRest match {
       case GroupRe(pre, cols) =>
-        fromRest = pre.trim; groupCols = splitTop(cols).map(_.trim)
+        fromRest = pre.trim; groupCols = SqlText.splitTop(cols).map(_.trim)
       case _ =>
     }
 
     val exprs: Seq[String] =
       if (expr0.trim == "*") spark.sql(s"SELECT * FROM $fromRest LIMIT 0").columns.toSeq
-      else splitTop(expr0).map(_.trim)
+      else SqlText.splitTop(expr0).map(_.trim)
     if (exprs.sizeIs > 1 && alias.isDefined)
       throw new IllegalArgumentException(
         "SQL syntax error: sample multi columns cannot have alias")
@@ -5971,7 +5819,7 @@ object GraftSql {
       if (exprs.sizeIs == 1) alias.getOrElse(base) else base
     }
 
-    val others = splitTop(selectList).filterNot(SampleCallRe.findFirstIn(_).isDefined)
+    val others = SqlText.splitTop(selectList).filterNot(SampleCallRe.findFirstIn(_).isDefined)
     val partBy =
       if (groupCols.nonEmpty) s"PARTITION BY ${groupCols.mkString(", ")}"
       else ""
@@ -6027,41 +5875,19 @@ object GraftSql {
   private val FromRe =
     """(?is)\bfrom\s+([A-Za-z_]\w*)(\s+(?:as\s+)?(?!where\b|group\b|order\b|limit\b|left\b|right\b|inner\b|join\b|on\b)([A-Za-z_]\w*))?""".r
 
+  /** Split on top-level `UNION [ALL|DISTINCT]` / `INTERSECT` / `EXCEPT`
+    * (outside quotes and parens): returns alternating segment/separator
+    * pieces, segments at even indexes.
+    */
+  private def splitSetOps(q: String): Seq[String] =
+    SqlText.splitTopAt(q, """(?i)(union|intersect|except|minus)(\s+(all|distinct))?\b""".r)
+
   /** Rewrites every MATCH…AGAINST into a reference to a LEFT-JOINed
     * score table computed by [[Bm25.matchAgainst]] against the cached
     * postings index — scored in projections (MySQL relevance value,
     * 0 for non-matches), a `score IS NOT NULL` predicate in boolean
     * contexts (MySQL's "relevance > 0" WHERE semantics).
     */
-  /** Split on top-level `UNION [ALL|DISTINCT]` / `INTERSECT` / `EXCEPT`
-    * (outside quotes and parens): returns alternating segment/separator
-    * pieces, segments at even indexes.
-    */
-  private def splitSetOps(q: String): Seq[String] = {
-    val SetOp = """(?i)^(union|intersect|except|minus)(\s+(all|distinct))?\b""".r
-    val out = Seq.newBuilder[String]
-    var depth = 0; var quote: Char = 0; var segStart = 0; var i = 0
-    while (i < q.length) {
-      val c = q(i)
-      if (quote != 0) { if (c == quote && (i == 0 || q(i - 1) != '\\')) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { quote = c; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (i == 0 || !q(i - 1).isLetterOrDigit && q(i - 1) != '_')) {
-        SetOp.findFirstMatchIn(q.substring(i)) match {
-          case Some(m) =>
-            out += q.substring(segStart, i)
-            out += m.matched
-            i += m.matched.length
-            segStart = i
-          case None => i += 1
-        }
-      } else i += 1
-    }
-    out += q.substring(segStart)
-    out.result()
-  }
-
   private def matchRewrite(spark: SparkSession, q: String): Option[DataFrame] = {
     if (MatchRe.findFirstIn(q).isEmpty) return None
     // a top-level set operation rewrites each branch independently —
@@ -6109,7 +5935,7 @@ object GraftSql {
       // MATCH(col1, col2, ...) scores over ONE combined index across all
       // listed columns (the reference concatenates them at tokenize time,
       // fulltext_tokenize.go:142-150)
-      val textCols = splitTop(colsTxt).map(_.trim.split('.').last)
+      val textCols = SqlText.splitTop(colsTxt).map(_.trim.split('.').last)
       // once the table has DDL-registered fulltext indexes, the
       // reference's rules apply: the MATCH columns must equal one
       // index's column set; the index's parser picks the tokenizer

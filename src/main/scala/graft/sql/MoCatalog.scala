@@ -724,7 +724,7 @@ object MoCatalog {
     else if (base == "enum" || base == "set") {
       val inner = decl.substring(decl.indexOf('(') + 1, decl.lastIndexOf(')'))
       base.toUpperCase + "(" +
-        graft.sql.GraftSql.splitTop(inner).map(_.trim).mkString(",") + ")"
+        SqlText.splitTop(inner).map(_.trim).mkString(",") + ")"
     }
     else decl.trim.toUpperCase
   }

@@ -255,7 +255,7 @@ object MoTypeInfer {
   private def stripOuter(e0: String): String = {
     var e = e0.trim
     while (e.startsWith("(") && e.endsWith(")") &&
-      GraftSql.balancedSpan(e, 0).exists(_._2 == e.length))
+      SqlText.balancedSpan(e, 0).exists(_._2 == e.length))
       e = e.substring(1, e.length - 1).trim
     e
   }
@@ -303,11 +303,11 @@ object MoTypeInfer {
     }
     if (CastRe.findFirstIn(e).isDefined) {
       val open = e.indexOf('(')
-      val (inner, end) = GraftSql.balancedSpan(e, open).getOrElse(return None)
+      val (inner, end) = SqlText.balancedSpan(e, open).getOrElse(return None)
       if (end != e.length) return None
       val asIdx = topLevelAs(inner).getOrElse(return None)
       val src = inner.substring(0, asIdx)
-      val ty = inner.substring(asIdx + 4).trim
+      val ty = inner.substring(asIdx + 2).trim
       val srcT = infer(src, env)
       val nullable = src.trim.equalsIgnoreCase("null") ||
         srcT.map(_.nullable).getOrElse(true)
@@ -335,9 +335,9 @@ object MoTypeInfer {
     // types the result by the declared length
     """(?is)^substr(?:ing)?\s*\(""".r.findFirstMatchIn(e).foreach { sm =>
       val open = e.indexOf('(', sm.end - 1)
-      GraftSql.balancedSpan(e, open).foreach { case (inner, end) =>
+      SqlText.balancedSpan(e, open).foreach { case (inner, end) =>
         if (end == e.length) {
-          val args = GraftSql.splitTop(inner).map(_.trim)
+          val args = SqlText.splitTop(inner).map(_.trim)
           if (args.length == 3 && args(1) == "1" &&
             args(2).matches("\\d+"))
             return Some(MoT("varchar", args(2).toInt,
@@ -348,10 +348,10 @@ object MoTypeInfer {
     }
     FuncRe.findFirstMatchIn(e).foreach { m =>
       val open = e.indexOf('(', m.end - 1)
-      val (inner, end) = GraftSql.balancedSpan(e, open).getOrElse(return None)
+      val (inner, end) = SqlText.balancedSpan(e, open).getOrElse(return None)
       if (end != e.length) return None
       val fn = m.group(1).toLowerCase
-      val args = GraftSql.splitTop(inner)
+      val args = SqlText.splitTop(inner)
       val argTs0 = fn match {
         case "if" | "iff" =>
           if (args.length != 3) return None
@@ -372,9 +372,9 @@ object MoTypeInfer {
     """(?is)^(round|floor|ceil|ceiling|abs)\s*\(""".r.findFirstMatchIn(e)
       .foreach { rm =>
         val open = e.indexOf('(', rm.end - 1)
-        GraftSql.balancedSpan(e, open).foreach { case (inner, end) =>
+        SqlText.balancedSpan(e, open).foreach { case (inner, end) =>
           if (end == e.length) {
-            val args = GraftSql.splitTop(inner)
+            val args = SqlText.splitTop(inner)
             if (args.nonEmpty) return infer(args.head, env)
           }
         }
@@ -385,58 +385,24 @@ object MoTypeInfer {
   }
 
   /** index of an operator char at paren depth 0 outside quotes */
-  private def topLevelOp(e: String, op: Char): Option[Int] = {
-    val masked = MySqlCompat.maskLiterals(e)
-    var depth = 0
-    var i = 0
-    while (i < masked.length) {
-      val c = masked(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == op && depth == 0) return Some(i)
-      i += 1
-    }
-    None
-  }
+  private def topLevelOp(e: String, op: Char): Option[Int] =
+    Some(SqlText.topIndexWhere(e)(e(_) == op)).filter(_ >= 0)
 
-  /** start index of the top-level ` as ` keyword inside a CAST body */
-  private def topLevelAs(inner: String): Option[Int] = {
-    val masked = MySqlCompat.maskLiterals(inner).toLowerCase
-    var depth = 0
-    var i = 0
-    while (i < masked.length - 3) {
-      val c = masked(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && masked.startsWith(" as ", i)) return Some(i)
-      i += 1
-    }
-    None
-  }
+  /** start index of the top-level `as` keyword inside a CAST body */
+  private def topLevelAs(inner: String): Option[Int] =
+    Some(SqlText.topIndexOf(inner, "as")).filter(_ >= 0)
 
   private def inferCase(e: String,
       env: String => Option[MoT]): Option[MoT] = {
-    val masked = MySqlCompat.maskLiterals(e).toLowerCase
     // top-level keyword positions
-    var depth = 0
-    var i = 4 // past "case"
+    val kws = Seq("when", "then", "else", "end")
+    def next(from: Int): Int = SqlText.topIndexWhere(e, from)(i => kws.exists(SqlText.wordAt(e, i, _)))
     var marks = Vector.empty[(Int, String)] // (pos, kw)
-    while (i < masked.length) {
-      val c = masked(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0) {
-        def kwAt(kw: String): Boolean =
-          masked.startsWith(kw, i) &&
-            (i == 0 || !masked(i - 1).isLetterOrDigit) &&
-            (i + kw.length >= masked.length ||
-              !masked(i + kw.length).isLetterOrDigit)
-        Seq("when", "then", "else", "end").find(kwAt) match {
-          case Some(kw) => marks :+= ((i, kw)); i += kw.length - 1
-          case None =>
-        }
-      }
-      i += 1
+    var i = next(4) // past "case"
+    while (i >= 0) {
+      val kw = kws.find(SqlText.wordAt(e, i, _)).get
+      marks :+= ((i, kw))
+      i = next(i + kw.length)
     }
     if (marks.isEmpty || marks.last._2 != "end") return None
     // value expressions: after each THEN (to next WHEN/ELSE/END) and
@@ -471,21 +437,8 @@ object MoTypeInfer {
       val m = """(?is)^\s*as\s+select\s+(.+)$""".r.findFirstMatchIn(rest)
         .getOrElse(return)
       val body = m.group(1)
-      val masked = MySqlCompat.maskLiterals(body).toLowerCase
       // top-level FROM (absent = literal-only view)
-      var depth = 0
-      var fromIdx = -1
-      var i = 0
-      while (i < masked.length && fromIdx < 0) {
-        val c = masked(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && masked.startsWith("from", i) &&
-          (i == 0 || !masked(i - 1).isLetterOrDigit) &&
-          (i + 4 >= masked.length || !masked(i + 4).isLetterOrDigit))
-          fromIdx = i
-        i += 1
-      }
+      val fromIdx = SqlText.topIndexOf(body, "from")
       val selectList =
         (if (fromIdx >= 0) body.substring(0, fromIdx) else body)
           .trim.stripSuffix(";")
@@ -506,13 +459,13 @@ object MoTypeInfer {
             .flatMap { case (_, ty, notNull) => parseDeclType(ty, !notNull) }
         }
       }
-      val items = GraftSql.splitTop(selectList).map(_.trim)
+      val items = SqlText.splitTop(selectList).map(_.trim)
       if (items.isEmpty || items.exists(_ == "*")) return
       val cols = items.map { item =>
         val am = """(?is)^(.*?)\s+as\s+`?([\w$]+)`?\s*$""".r
           .findFirstMatchIn(item)
         val (exprTxt, alias) = am match {
-          case Some(x) if topLevelAs(" " + x.group(1)).isEmpty =>
+          case Some(x) if topLevelAs(x.group(1)).isEmpty =>
             (x.group(1), x.group(2))
           case _ =>
             // a bare column reference names itself

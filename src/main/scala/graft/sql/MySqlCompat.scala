@@ -7,90 +7,8 @@ package graft.sql
   */
 object MySqlCompat {
 
-  // ------------------------------------------------------------------
-  // shared scanning helpers
-  // ------------------------------------------------------------------
-
-  /** Index of the matching close paren for the open at `open`, or -1. */
-  private def closeOf(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var q: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '"') q = c
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  /** First depth-0, unquoted occurrence of word `w` at/after `from`. */
-  private def topIndexOf(s: String, w: String, from: Int = 0): Int = {
-    var depth = 0; var i = from; var q: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '"' || c == '`') q = c
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s(i - 1)) && s(i - 1) != '_') &&
-        (i + w.length >= s.length ||
-          !Character.isLetterOrDigit(s(i + w.length)) && s(i + w.length) != '_'))
-        return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Copy of `s` with the CONTENTS of quoted string literals replaced by
-    *  (same length — positions line up with the original), so the
-    * pre-parse regex passes can't fire on SQL-looking words inside DATA
-    * (`'wait interval 1.5 minute'` must survive untouched). Backslash
-    * escapes inside literals stay masked too.
-    */
-  private[graft] def maskLiterals(s: String): String = {
-    val b = s.toCharArray
-    var i = 0; var q: Char = 0
-    while (i < b.length) {
-      val c = b(i)
-      if (q != 0) {
-        if (c == '\\' && i + 1 < b.length) {
-          b(i) = ''; b(i + 1) = ''; i += 1
-        } else if (c == q) q = 0
-        else b(i) = ''
-      } else if (c == '\'' || c == '"') q = c
-      i += 1
-    }
-    new String(b)
-  }
-
-  /** `re.replaceAllIn` that only fires on matches found OUTSIDE string
-    * literals. Groups are re-derived from the ORIGINAL text (a match may
-    * legitimately contain a quoted literal, e.g. an INTERVAL count); a
-    * span that no longer matches whole against the original is left
-    * untouched. The replacement returned by `f` is appended VERBATIM —
-    * no `$n`/`\` processing, so no quoteReplacement at call sites.
-    */
-  private def replaceOutsideLiterals(re: scala.util.matching.Regex, s: String)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val masked = maskLiterals(s)
-    if (re.findFirstIn(masked).isEmpty) return s
-    val sb = new java.lang.StringBuilder
-    var last = 0
-    for (m <- re.findAllMatchIn(masked)) {
-      sb.append(s, last, m.start)
-      val seg = s.substring(m.start, m.end)
-      re.findPrefixMatchOf(seg) match {
-        case Some(om) if om.end == seg.length => sb.append(f(om))
-        case _ => sb.append(seg)
-      }
-      last = m.end
-    }
-    sb.append(s, last, s.length)
-    sb.toString
-  }
+  // Quoted text, parentheses and top-level words are found by
+  // [[SqlText]], the one lexer of the text layer.
 
   // ------------------------------------------------------------------
   // MySQL compound INTERVAL units
@@ -136,7 +54,7 @@ object MySqlCompat {
     * `INTERVAL life_time DAY`) → make_interval/make_dt_interval calls.
     */
   private def identIntervals(q0: String): String =
-    replaceOutsideLiterals(IdentIntervalRe, q0)(m => {
+    SqlText.replaceOutside(q0, IdentIntervalRe, m => {
       val v = m.group(1)
       if (v.equalsIgnoreCase("null")) m.matched // handled by IntervalRe
       else {
@@ -156,7 +74,7 @@ object MySqlCompat {
 
   def intervalUnits(q0raw: String): String = {
     val q0 = identIntervals(q0raw)
-    replaceOutsideLiterals(IntervalRe, q0)(m => {
+    SqlText.replaceOutside(q0, IntervalRe, m => {
       val rawVal = m.group(1)
       val unit = m.group(2).toLowerCase
       val quoted = rawVal.head == '"' || rawVal.head == '\''
@@ -250,11 +168,11 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      TsAddRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.foreach { m =>
+      TsAddRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.foreach { m =>
         if (!changed) {
-          val close = closeOf(q, m.end - 1)
+          val close = SqlText.closeParen(q, m.end - 1)
           if (close > 0) {
-            val args = GraftSql.splitTop(q.substring(m.end, close)).map(_.trim)
+            val args = SqlText.splitTop(q.substring(m.end, close)).map(_.trim)
             if (args.lengthIs == 3) {
               val unit = args(0).toLowerCase.replaceAll("^sql_tsi_", "")
               val n = args(1)
@@ -309,17 +227,17 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      DateAddRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.find { m =>
-        val close = closeOf(q, m.end - 1)
+      DateAddRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.find { m =>
+        val close = SqlText.closeParen(q, m.end - 1)
         close > 0 && {
-          val args = GraftSql.splitTop(q.substring(m.end, close)).map(_.trim)
+          val args = SqlText.splitTop(q.substring(m.end, close)).map(_.trim)
           args.lengthIs == 2 &&
             """(?i)^(interval\b|make_interval|make_dt_interval)""".r
               .findFirstIn(args(1)).isDefined
         }
       }.foreach { m =>
-        val close = closeOf(q, m.end - 1)
-        val args = GraftSql.splitTop(q.substring(m.end, close)).map(_.trim)
+        val close = SqlText.closeParen(q, m.end - 1)
+        val args = SqlText.splitTop(q.substring(m.end, close)).map(_.trim)
         val op = if (m.group(1).toLowerCase.startsWith("date_a") ||
           m.group(1).equalsIgnoreCase("adddate")) "+" else "-"
         val dateOnly =
@@ -361,15 +279,15 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      GroupConcatRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.foreach { m =>
+      GroupConcatRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.foreach { m =>
         if (!changed) {
-          val close = closeOf(q, m.end - 1)
+          val close = SqlText.closeParen(q, m.end - 1)
           if (close > 0) {
             val a = q.substring(m.end, close).trim
             val distinct = """(?is)^distinct\b""".r.findFirstIn(a).isDefined
             val sepM = """(?is)\bseparator\s+('(?:[^'\\]|\\.)*')\s*$""".r
               .findFirstMatchIn(a)
-            val obIdx = topIndexOf(a, "order")
+            val obIdx = SqlText.topIndexOf(a, "order")
             if (distinct || sepM.isDefined || obIdx >= 0) {
               val sep = sepM.map(_.group(1)).getOrElse("','")
               val noSep = sepM.map(x => a.substring(0, x.start)).getOrElse(a).trim
@@ -378,7 +296,7 @@ object MySqlCompat {
                   (noSep.substring(0, obIdx).trim,
                     noSep.substring(obIdx).replaceAll("(?is)^order\\s+by\\s+", ""))
                 else (noSep, null)
-              val exprs = GraftSql.splitTop(
+              val exprs = SqlText.splitTop(
                 listPart.replaceAll("(?is)^distinct\\b", "").trim).map(_.trim)
               val value =
                 if (exprs.lengthIs == 1) s"CAST(${exprs.head} AS STRING)"
@@ -431,9 +349,9 @@ object MySqlCompat {
     val HeadRe = """(?i)\bvalues\s+row\s*\(""".r
     var q = q0
     var changed = true
-    while (changed && HeadRe.findFirstIn(maskLiterals(q)).isDefined) {
+    while (changed && HeadRe.findFirstIn(SqlText.mask(q)).isDefined) {
       changed = false
-      val masked = maskLiterals(q)
+      val masked = SqlText.mask(q)
       HeadRe.findFirstMatchIn(masked).foreach { m =>
         var i = m.end - 1 // the '(' of the first row
         val rows = Seq.newBuilder[String]
@@ -441,7 +359,7 @@ object MySqlCompat {
         var endIdx = -1
         val RowSep = """(?is)^\s*,\s*row\s*\(""".r
         while (endIdx < 0 && ok) {
-          val close = closeOf(q, i)
+          val close = SqlText.closeParen(q, i)
           if (close < 0) ok = false
           else {
             rows += q.substring(i, close + 1)
@@ -458,7 +376,7 @@ object MySqlCompat {
           // may hold arbitrary expressions (casts/UDFs — Spark's inline
           // table only evaluates foldables)
           val sels = rs.map { r =>
-            val cells = GraftSql.splitTop(r.substring(1, r.length - 1))
+            val cells = SqlText.splitTop(r.substring(1, r.length - 1))
             "SELECT " + cells.zipWithIndex
               .map { case (c, k) => s"($c) AS column_$k" }.mkString(", ")
           }
@@ -470,7 +388,7 @@ object MySqlCompat {
       }
     }
     // `TABLE t` query shorthand in subquery / set-operation position
-    q = replaceOutsideLiterals(TableShorthandRe, q)(m =>
+    q = SqlText.replaceOutside(q, TableShorthandRe, m =>
       s"${m.group(1)} SELECT * FROM ${m.group(2)}")
     q
   }
@@ -495,26 +413,26 @@ object MySqlCompat {
       changed = false
       // scan positions on the masked copy so parens/keywords inside
       // string literals never pair up (same length → same offsets)
-      val mq = maskLiterals(q)
+      val mq = SqlText.mask(q)
       // `(tuple) [NOT] IN ((t1),(t2),…)` — a list of row constructors:
       // OR of row equalities (each re-expanded by the pass below), so
       // NULL components propagate like MySQL (row_constructor.result:63)
       val inHit = InListRe.findAllMatchIn(mq).find { m =>
-        val lOpen = openOf(mq, m.start)
-        val rClose = closeOf(q, m.end - 1)
+        val lOpen = SqlText.openParen(q, m.start)
+        val rClose = SqlText.closeParen(q, m.end - 1)
         lOpen >= 0 && rClose > 0 && !isFunctionCall(q, lOpen) &&
           isTuple(q.substring(lOpen + 1, m.start)) && {
-            val items = GraftSql.splitTop(q.substring(m.end, rClose)).map(_.trim)
+            val items = SqlText.splitTop(q.substring(m.end, rClose)).map(_.trim)
             items.nonEmpty && items.forall(it =>
               it.startsWith("(") && it.endsWith(")") &&
                 isTuple(it.substring(1, it.length - 1)))
           }
       }
       inHit.foreach { m =>
-        val lOpen = openOf(mq, m.start)
-        val rClose = closeOf(q, m.end - 1)
+        val lOpen = SqlText.openParen(q, m.start)
+        val rClose = SqlText.closeParen(q, m.end - 1)
         val lhs = q.substring(lOpen, m.start + 1)
-        val items = GraftSql.splitTop(q.substring(m.end, rClose)).map(_.trim)
+        val items = SqlText.splitTop(q.substring(m.end, rClose)).map(_.trim)
         val eqs = items.map(it => s"($lhs = $it)").mkString(" OR ")
         val body = if (m.group(1) != null) s"(NOT ($eqs))" else s"($eqs)"
         q = q.substring(0, lOpen) + body + q.substring(rClose + 1)
@@ -522,9 +440,9 @@ object MySqlCompat {
       }
       if (changed) { /* re-scan from the top */ }
       val hit = if (changed) None else OpRe.findAllMatchIn(mq).find { m =>
-        val rClose = closeOf(q, m.end - 1)
+        val rClose = SqlText.closeParen(q, m.end - 1)
         val lClose = m.start
-        val lOpen = openOf(mq, lClose)
+        val lOpen = SqlText.openParen(q, lClose)
         rClose > 0 && lOpen >= 0 &&
           isTuple(q.substring(lOpen + 1, lClose)) &&
           isTuple(q.substring(m.end, rClose)) &&
@@ -533,11 +451,11 @@ object MySqlCompat {
       hit.foreach { m =>
         val op0 = m.group(1)
         val rOpen = m.end - 1
-        val rClose = closeOf(q, rOpen)
+        val rClose = SqlText.closeParen(q, rOpen)
         val lClose = m.start
-        val lOpen = openOf(mq, lClose)
-        val ls = GraftSql.splitTop(q.substring(lOpen + 1, lClose)).map(_.trim)
-        val rs = GraftSql.splitTop(q.substring(m.end, rClose)).map(_.trim)
+        val lOpen = SqlText.openParen(q, lClose)
+        val ls = SqlText.splitTop(q.substring(lOpen + 1, lClose)).map(_.trim)
+        val rs = SqlText.splitTop(q.substring(m.end, rClose)).map(_.trim)
         val rep =
           if (ls.length != rs.length) null
           else {
@@ -567,20 +485,9 @@ object MySqlCompat {
   }
 
   /** Matching open paren for the close at `close`, or -1. */
-  private def openOf(s: String, close: Int): Int = {
-    var depth = 0; var i = close
-    while (i >= 0) {
-      val c = s(i)
-      if (c == ')') depth += 1
-      else if (c == '(') { depth -= 1; if (depth == 0) return i }
-      i -= 1
-    }
-    -1
-  }
-
   /** ≥2 top-level comma items, none of which opens a SELECT. */
   private def isTuple(inner: String): Boolean =
-    GraftSql.splitTop(inner).lengthIs >= 2 &&
+    SqlText.splitTop(inner).lengthIs >= 2 &&
       !"""(?is)^\s*select\b""".r.findFirstIn(inner).isDefined
 
   private val SqlKeywords = Set(
@@ -623,7 +530,7 @@ object MySqlCompat {
       }
     if (!"""(?is)^\s*select\b""".r.findFirstIn(q0).isDefined) return q0
     val selStart = q0.toLowerCase.indexOf("select") + 6
-    val fromIdx = topIndexOf(q0, "from", selStart)
+    val fromIdx = SqlText.topIndexOf(q0, "from", selStart)
     // predicate-position IN already filters identically under Spark's
     // 2VL (null rows drop either way) — but a query that OBSERVES the
     // unknown (`(x IN (...)) IS NULL`, subquery-with-in.result:608)
@@ -648,7 +555,7 @@ object MySqlCompat {
     var q = q0
     for (m <- hits) {
       val open = m.end - 1
-      val close = closeOf(q, open)
+      val close = SqlText.closeParen(q, open)
       if (close > 0) {
         val sub = q.substring(open + 1, close).trim
         if ("""(?is)^select\b""".r.findFirstIn(sub).isDefined) {
@@ -657,18 +564,17 @@ object MySqlCompat {
           while (e >= 0 && q(e).isWhitespace) e -= 1
           val (lOpen, lhsItems0) =
             if (e >= 0 && q(e) == ')') {
-              val lo = openOf(q, e)
+              val lo = SqlText.openParen(q, e)
               if (lo >= 0 && !isFunctionCall(q, lo))
-                (lo, GraftSql.splitTop(q.substring(lo + 1, e)).map(_.trim))
+                (lo, SqlText.splitTop(q.substring(lo + 1, e)).map(_.trim))
               else (-1, Seq.empty[String])
             } else if (e >= 0 && q(e) == '\'') {
               // string-literal lhs (`'XYZS' IN (SELECT * FROM t1)` —
               // subquery-with-in.result:244 expects UNKNOWN, which
               // Spark's projection-context IN does not produce)
-              var b = e - 1
-              while (b >= 0 && q(b) != '\'') b -= 1
-              if (b >= 0) (b, Seq(q.substring(b, e + 1)))
-              else (-1, Seq.empty[String])
+              SqlText.spans(q).find(_.end == e + 1)
+                .map(sp => (sp.start, Seq(q.substring(sp.start, e + 1))))
+                .getOrElse((-1, Seq.empty[String]))
             } else {
               var b = e
               while (b >= 0 && (q(b).isLetterOrDigit || "._`".contains(q(b)))) b -= 1
@@ -694,12 +600,12 @@ object MySqlCompat {
               case _ => it
             }
           }
-          val plainShape = topIndexOf(sub, "union") < 0 &&
-            topIndexOf(sub, "group") < 0 && topIndexOf(sub, "order") < 0 &&
-            topIndexOf(sub, "limit") < 0
-          val subFrom = topIndexOf(sub, "from")
+          val plainShape = SqlText.topIndexOf(sub, "union") < 0 &&
+            SqlText.topIndexOf(sub, "group") < 0 && SqlText.topIndexOf(sub, "order") < 0 &&
+            SqlText.topIndexOf(sub, "limit") < 0
+          val subFrom = SqlText.topIndexOf(sub, "from")
           val subItems =
-            if (subFrom > 0) GraftSql.splitTop(sub.substring(6, subFrom).trim).map(_.trim)
+            if (subFrom > 0) SqlText.splitTop(sub.substring(6, subFrom).trim).map(_.trim)
             else Seq.empty
           // MySQL IN = OR over rows of (AND over components), each 3VL.
           // The unknown-probe asks: does a row exist whose equality is
@@ -732,7 +638,7 @@ object MySqlCompat {
           // just as badly as `FROM t1` does. Over-matching is safe: it
           // merely forces the always-correct derived-table wrap.
           val selfTable = outerAlias.exists { a =>
-            val subFromIdx = topIndexOf(sub, "from")
+            val subFromIdx = SqlText.topIndexOf(sub, "from")
             subFromIdx > 0 && {
               val qa = java.util.regex.Pattern.quote(a)
               ("(?is)(?:\\bfrom\\s+|\\bjoin\\s+|,\\s*)`?" + qa + "`?(?![\\w$.])").r
@@ -744,7 +650,7 @@ object MySqlCompat {
                 subItems.length == lhsItems.length &&
                 subItems.forall(_ != "*")) {
               val fromTail = sub.substring(subFrom)
-              val whereIdx = topIndexOf(fromTail, "where")
+              val whereIdx = SqlText.topIndexOf(fromTail, "where")
               val c = cond(subItems)
               if (whereIdx < 0) s"SELECT 1 $fromTail WHERE $c"
               else s"SELECT 1 ${fromTail.substring(0, whereIdx)} WHERE (" +
@@ -792,9 +698,9 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      UnnestRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.foreach { m =>
+      UnnestRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.foreach { m =>
         if (!changed) {
-          val close = closeOf(q, m.end - 1)
+          val close = SqlText.closeParen(q, m.end - 1)
           if (close > 0) {
             var p = m.start - 1
             while (p >= 0 && q(p).isWhitespace) p -= 1
@@ -810,7 +716,7 @@ object MySqlCompat {
               .findFirstMatchIn(q.substring(close + 1))
               .filterNot(x => SqlKeywords.contains(x.group(1).toLowerCase))
             if ((beforeComma || beforeFrom || beforeJoin) && am.isDefined) {
-              val args = GraftSql.splitTop(q.substring(m.end, close)).map(_.trim)
+              val args = SqlText.splitTop(q.substring(m.end, close)).map(_.trim)
               if (args.nonEmpty && args.length <= 3) {
                 val doc = args(0)
                 val path = if (args.length > 1) args(1) else "'$'"
@@ -868,8 +774,8 @@ object MySqlCompat {
   private val IntervalFnRe = """(?i)\binterval\s*\(([^()]+)\)""".r
 
   def intervalFn(q0: String): String =
-    replaceOutsideLiterals(IntervalFnRe, q0)(m => {
-      val args = GraftSql.splitTop(m.group(1)).map(_.trim)
+    SqlText.replaceOutside(q0, IntervalFnRe, m => {
+      val args = SqlText.splitTop(m.group(1)).map(_.trim)
       // `interval(ts, N, minute)` is the TIME-WINDOW operator's syntax
       // (GraftSql.intervalRewrite) — a bare unit keyword disambiguates
       val units = Set("microsecond", "second", "minute", "hour", "day",
@@ -895,7 +801,7 @@ object MySqlCompat {
     """(?i)('[^':]*')\s*([-+])\s*(interval\s+-?\d+\s+(?:year|quarter|month|week|day))\b""".r
 
   def plusDateLiteral(q0: String): String =
-    replaceOutsideLiterals(PlusDateLitRe, q0)(m =>
+    SqlText.replaceOutside(q0, PlusDateLitRe, m =>
       s"CAST(CAST(${m.group(1)} AS DATE) ${m.group(2)} ${m.group(3)} AS DATE)")
 
   // MySQL composite EXTRACT units Spark's parser rejects
@@ -914,7 +820,7 @@ object MySqlCompat {
       changed = false
       ExtractMicroRe.findFirstMatchIn(s).foreach { m =>
         val open = s.indexOf('(', m.start)
-        val close = closeOf(s, open)
+        val close = SqlText.closeParen(s, open)
         if (close > 0) {
           val operand = s.substring(m.end, close)
           s = s.substring(0, m.start) + s"microsecond($operand)" +
@@ -966,7 +872,7 @@ object MySqlCompat {
     val HeadRe = """(?i)\b(cross|outer)\s+apply\s*""".r
     while (changed) {
       changed = false
-      HeadRe.findFirstMatchIn(maskLiterals(q)).foreach { m =>
+      HeadRe.findFirstMatchIn(SqlText.mask(q)).foreach { m =>
         val join =
           if (m.group(1).equalsIgnoreCase("outer")) "LEFT JOIN"
           else "JOIN"
@@ -976,7 +882,7 @@ object MySqlCompat {
           if (rest.startsWith("(")) 0
           else fnM.map(_.group(1).length - 1).getOrElse(-1)
         if (open >= 0) {
-          val close = closeOf(rest, open)
+          val close = SqlText.closeParen(rest, open)
           if (close > 0) {
             val operand = rest.substring(0, close + 1)
             val tail0 = rest.substring(close + 1)
@@ -1034,7 +940,7 @@ object MySqlCompat {
       // match against the literal-MASKED copy so a keyword INSIDE a
       // string ('at utc_time now') is never rewritten; masked and
       // original are the same length, so offsets line up
-      val masked = maskLiterals(q1)
+      val masked = SqlText.mask(q1)
       val sb = new StringBuilder
       var at = 0
       BareUtcKwRe.findAllMatchIn(masked).foreach { m =>
@@ -1067,25 +973,7 @@ object MySqlCompat {
     """(?i)\s+(use|force|ignore)\s+index(?:\s+for\s+(?:join|order\s+by|group\s+by))?\s*\([^()]*\)""".r
   private[graft] def indexHints(q: String): String =
     if (!q.toLowerCase.contains(" index")) q
-    else maskAwareStrip(q)
-
-  // strip at the positions matched in a masked copy (maskLiterals is
-  // length-preserving) so a hint-looking phrase inside a string literal
-  // survives
-  private def maskAwareStrip(q: String): String = {
-    val masked = maskLiterals(q)
-    if (IndexHintRe.findFirstIn(masked).isEmpty) return q
-    // positions align (maskLiterals is length-preserving): rebuild from
-    // the masked match positions over the ORIGINAL text
-    val sb = new StringBuilder
-    var last = 0
-    IndexHintRe.findAllMatchIn(masked).foreach { m =>
-      sb.append(q.substring(last, m.start)).append(' ')
-      last = m.end
-    }
-    sb.append(q.substring(last))
-    sb.toString
-  }
+    else SqlText.replaceOutside(q, IndexHintRe, _ => " ")
 
   /** `CAST(x AS datalink)` — the reference's typed-URI wrapper
     * (`pkg/datalink/`): the value IS the URI string, so the cast is
@@ -1098,9 +986,9 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      CastOpenRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.foreach { m =>
+      CastOpenRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.foreach { m =>
         if (!changed) {
-          val close = closeOf(q, m.end - 1)
+          val close = SqlText.closeParen(q, m.end - 1)
           if (close > 0) q.substring(m.end, close) match {
             case DatalinkTail(arg) =>
               q = q.substring(0, m.start) + s"(${arg.trim})" + q.substring(close + 1)
@@ -1119,9 +1007,9 @@ object MySqlCompat {
     var changed = true
     while (changed) {
       changed = false
-      CastOpenRe.findAllMatchIn(maskLiterals(q)).toList.reverseIterator.foreach { m =>
+      CastOpenRe.findAllMatchIn(SqlText.mask(q)).toList.reverseIterator.foreach { m =>
         if (!changed) {
-          val close = closeOf(q, m.end - 1)
+          val close = SqlText.closeParen(q, m.end - 1)
           if (close > 0) q.substring(m.end, close) match {
             case VecCastTail(arg, kind, dim) =>
               val a = arg.trim
@@ -1155,23 +1043,21 @@ object MySqlCompat {
 
   private[graft] def pgCast(q0: String): String = {
     if (!q0.contains("::")) return q0
-    var q = replaceOutsideLiterals(
-      """(?i)::\s*(varchar|text)\b(?!\s*\()""".r, q0)(_ => "::string")
+    var q = SqlText.replaceOutside(
+      q0, """(?i)::\s*(varchar|text)\b(?!\s*\()""".r, _ => "::string")
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskLiterals(q)
+      val masked = SqlText.mask(q)
       PgIntCastRe.findFirstMatchIn(masked).foreach { m =>
         var i = m.start - 1
         while (i >= 0 && q(i).isWhitespace) i -= 1
         val end = i
         var start =
-          if (i >= 0 && q(i) == ')') openOf(q, i)
-          else if (i >= 0 && (q(i) == '\'' || q(i) == '"')) {
-            val quote = q(i); var j = i - 1
-            while (j >= 0 && q(j) != quote) j -= 1
-            j
-          } else {
+          if (i >= 0 && q(i) == ')') SqlText.openParen(q, i)
+          else if (i >= 0 && (q(i) == '\'' || q(i) == '"'))
+            SqlText.spans(q).find(_.end == i + 1).fold(-1)(_.start)
+          else {
             var j = i
             while (j >= 0 && (q(j).isLetterOrDigit || q(j) == '_' ||
               q(j) == '.' || q(j) == '`' || q(j) == '@')) j -= 1
@@ -1221,7 +1107,7 @@ object MySqlCompat {
     * expression becomes that item's ALIAS — same value, output scope.
     */
   private def groupingOrderBy(q: String): String = {
-    val masked = maskLiterals(q)
+    val masked = SqlText.mask(q)
     val low = masked.toLowerCase
     if (!low.contains("rollup") && !low.contains("cube") &&
       !low.contains("grouping sets")) return q
@@ -1239,7 +1125,7 @@ object MySqlCompat {
     if (fromM.start < selM.end) return q
     def norm(s: String) = s.toLowerCase.replaceAll("[\\s`]+", "")
     val aliasOf: Map[String, String] =
-      GraftSql.splitTop(q.substring(selM.end, fromM.start)).flatMap { it =>
+      SqlText.splitTop(q.substring(selM.end, fromM.start)).flatMap { it =>
         """(?is)^(.*?)\s+as\s+`?([\w$]+)`?\s*$""".r.findFirstMatchIn(it.trim)
           .map(m => norm(m.group(1)) -> m.group(2))
       }.toMap
@@ -1260,7 +1146,7 @@ object MySqlCompat {
   private def distinctOrderBy(q: String): String = {
     if (!"""(?is)^\s*select\s+distinct\b""".r.findFirstIn(q).isDefined)
       return q
-    val masked = maskLiterals(q)
+    val masked = SqlText.mask(q)
     val obM = """(?i)\border\s+by\s+""".r.findAllMatchIn(masked).toSeq
       .lastOption.getOrElse(return q)
     // the ORDER BY must be top-level (not inside parens)
@@ -1273,14 +1159,14 @@ object MySqlCompat {
     val selStart = """(?is)^\s*select\s+distinct\b""".r
       .findFirstMatchIn(masked).get.end
     if (fromM.start <= selStart) return q
-    val items = graft.sql.GraftSql.splitTop(
+    val items = SqlText.splitTop(
       q.substring(selStart, fromM.start)).map(_.trim)
     def norm(s: String) = s.replaceAll("\\s+", " ").toLowerCase
     // sort-list end: the statement tail (LIMIT/OFFSET) stays
     val tailM = """(?i)\b(limit|offset)\b""".r.findFirstMatchIn(
       masked.substring(obM.end))
     val sortEnd = tailM.map(_.start + obM.end).getOrElse(q.length)
-    val sortItems = graft.sql.GraftSql.splitTop(
+    val sortItems = SqlText.splitTop(
       q.substring(obM.end, sortEnd)).map(_.trim)
     var changed = false
     val mapped = sortItems.map { si =>

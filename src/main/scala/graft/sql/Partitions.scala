@@ -65,19 +65,6 @@ object Partitions {
 
   // ----------------------------------------------------------- parsing
 
-  private def closeOf(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var q: Char = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '"') q = c
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
   private val DefRe =
     """(?is)^partition\s+`?(\w+)`?\s+values\s+(less\s+than|in)\s*(.*)$""".r
   private val CommentRe = """(?is)\s+comment\s+'[^']*'\s*$""".r
@@ -92,17 +79,17 @@ object Partitions {
           val upper =
             if (rest.equalsIgnoreCase("maxvalue")) None
             else {
-              val c = closeOf(rest, 0)
+              val c = SqlText.closeParen(rest, 0)
               val inner = if (rest.startsWith("(") && c > 0)
                 rest.substring(1, c).trim else rest
               if (inner.equalsIgnoreCase("maxvalue")) None else Some(inner)
             }
           PartDef(name, upper, Seq.empty)
         } else {
-          val c = closeOf(rest, 0)
+          val c = SqlText.closeParen(rest, 0)
           val inner = if (rest.startsWith("(") && c > 0)
             rest.substring(1, c).trim else rest
-          PartDef(name, None, GraftSql.splitTop(inner).map(_.trim))
+          PartDef(name, None, SqlText.splitTop(inner).map(_.trim))
         }
       case _ =>
         throw new IllegalArgumentException(s"invalid partition definition: $txt")
@@ -118,7 +105,7 @@ object Partitions {
     val RlRe = """(?is)^(range|list)(\s+columns)?\s*\(""".r
     HashRe.findFirstMatchIn(clause) match {
       case Some(m) =>
-        val close = closeOf(clause, m.end - 1)
+        val close = SqlText.closeParen(clause, m.end - 1)
         require(close > 0, s"unbalanced partition expression: $clause")
         val exprSql = clause.substring(m.end, close).trim
         val n = """(?is)\bpartitions\s+(\d+)""".r.findFirstMatchIn(clause.substring(close + 1))
@@ -129,14 +116,14 @@ object Partitions {
         val m = RlRe.findFirstMatchIn(clause).getOrElse(
           throw new IllegalArgumentException(s"unsupported PARTITION BY: $clause"))
         val method = m.group(1).toLowerCase
-        val close = closeOf(clause, m.end - 1)
+        val close = SqlText.closeParen(clause, m.end - 1)
         require(close > 0, s"unbalanced partition expression: $clause")
         val exprSql = clause.substring(m.end, close).trim
         val rest = clause.substring(close + 1).trim
         require(rest.startsWith("("), s"missing partition definitions: $clause")
-        val dclose = closeOf(rest, 0)
+        val dclose = SqlText.closeParen(rest, 0)
         require(dclose > 0, s"unbalanced partition definitions: $clause")
-        val defs = GraftSql.splitTop(rest.substring(1, dclose)).map(parseDef).toVector
+        val defs = SqlText.splitTop(rest.substring(1, dclose)).map(parseDef).toVector
         (method, exprSql, defs, 0)
     }
   }
@@ -182,7 +169,7 @@ object Partitions {
         "MAXVALUE can only be used in last partition definition"))
     }
     val phys = s"${table}_gparts"
-    val cols = GraftSql.splitTop(colsDdl).map(_.trim).flatMap { item =>
+    val cols = SqlText.splitTop(colsDdl).map(_.trim).flatMap { item =>
       """^`?(\w+)`?\s""".r.findFirstMatchIn(item).map(_.group(1))
         .filterNot(c => Set("primary", "unique", "key", "index", "constraint",
           "foreign", "fulltext", "check").contains(c.toLowerCase))
@@ -225,7 +212,7 @@ object Partitions {
   def alterAdd(spark: SparkSession, table: String, defsTxt: String): Unit = {
     val spec = get(spark, table).getOrElse(throw new IllegalArgumentException(
       s"table $table is not partitioned"))
-    val defs = GraftSql.splitTop(defsTxt).map(parseDef)
+    val defs = SqlText.splitTop(defsTxt).map(parseDef)
     defs.foreach { d =>
       val isIn = d.items.nonEmpty
       spec.method match {

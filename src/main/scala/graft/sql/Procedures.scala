@@ -37,7 +37,7 @@ object Procedures {
       body: String): Unit = {
     if (exists(spark, name))
       throw new IllegalArgumentException(s"procedure $name already exists")
-    val params = GraftSql.splitTop(paramsTxt).map(_.trim).filter(_.nonEmpty)
+    val params = SqlText.splitTop(paramsTxt).map(_.trim).filter(_.nonEmpty)
       .map { p =>
         val m = """(?is)^(?:(in|out|inout)\s+)?`?(\w+)`?\s+(.+)$""".r
           .findFirstMatchIn(p).getOrElse(throw new IllegalArgumentException(
@@ -80,31 +80,16 @@ object Procedures {
   /** Substitute declared variables (whole word, outside quotes) with
     * typed literals so `select v1` displays with the DECLARE's type.
     */
-  private def subst(sql: String, scope: Scope): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var q: Char = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (q != 0) { sb.append(c); if (c == q) q = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { sb.append(c); q = c; i += 1 }
-      else if (Character.isLetter(c) || c == '_') {
-        var j = i
-        while (j < sql.length && (Character.isLetterOrDigit(sql(j)) || sql(j) == '_')) j += 1
-        val w = sql.substring(i, j)
-        scope.lookup(w) match {
-          // not a substitution when used as `tbl.w` or `w(`
-          case Some((t, lit)) if (i == 0 || sql(i - 1) != '.') &&
-              (j >= sql.length || sql(j) != '(') =>
-            if (lit == "NULL") sb.append(s"CAST(NULL AS $t)")
-            else sb.append(s"CAST($lit AS $t)")
-          case _ => sb.append(w)
-        }
-        i = j
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  private def subst(sql: String, scope: Scope): String =
+    SqlText.replaceOutside(sql, WordRe, m =>
+      scope.lookup(m.matched) match {
+        // not a substitution when used as `tbl.w` or `w(`
+        case Some((t, lit)) if (m.start == 0 || sql(m.start - 1) != '.') &&
+            (m.end >= sql.length || sql(m.end) != '(') =>
+          if (lit == "NULL") s"CAST(NULL AS $t)" else s"CAST($lit AS $t)"
+        case _ => m.matched
+      })
+  private val WordRe = """[\p{L}_][\p{L}\p{Nd}_]*""".r
 
   private def evalExpr(spark: SparkSession, e: String, scope: Scope): String = {
     if (e.trim.equalsIgnoreCase("null")) return "NULL"
@@ -118,20 +103,9 @@ object Procedures {
       s"SELECT coalesce(CAST((${subst(e, scope)}) AS BOOLEAN), false)")
       .collect().headOption.exists(_.getBoolean(0))
 
-  /** Split the body into quote-aware `;` fragments. */
-  private def fragments(body: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    val sb = new StringBuilder
-    var q: Char = 0
-    body.foreach { c =>
-      if (q != 0) { sb.append(c); if (c == q) q = 0 }
-      else if (c == '\'' || c == '"' || c == '`') { sb.append(c); q = c }
-      else if (c == ';') { out += sb.toString; sb.clear() }
-      else sb.append(c)
-    }
-    if (sb.toString.trim.nonEmpty) out += sb.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split the body at its top-level `;`. */
+  private def fragments(body: String): Vector[String] =
+    SqlText.splitTop(body, ';').filter(_.nonEmpty).toVector
 
   /** Execute fragments from `i0` until (and consuming) a terminator
     * matched by `stop`; returns the next index.
@@ -154,7 +128,7 @@ object Procedures {
       """if(?!\s*\()|while|repeat(?!\s*\()|loop)(?![\w$`(])""").r
 
   private def netDepth(frag: String): Int = {
-    val l = MySqlCompat.maskLiterals(frag).toLowerCase
+    val l = SqlText.mask(frag).toLowerCase
     var d = 0
     DepthTokRe.findAllMatchIn(l).foreach { m =>
       val t = m.group(1)
@@ -429,7 +403,7 @@ object Procedures {
   private def callInto(ctx: Ctx, name: String, argsTxt: String): Unit = {
     val spark = ctx.spark
     val proc = registry(spark)(name.toLowerCase)
-    val args = GraftSql.splitTop(argsTxt).map(_.trim).filter(_.nonEmpty)
+    val args = SqlText.splitTop(argsTxt).map(_.trim).filter(_.nonEmpty)
     if (args.length != proc.params.length)
       throw new IllegalArgumentException(
         s"procedure $name expects ${proc.params.length} arguments")

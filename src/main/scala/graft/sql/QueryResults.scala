@@ -109,14 +109,18 @@ object QueryResults {
       .toDF("query_id", "tables", "result_path", "result_size")
   }
 
-  /** `last_query_id(n)`. The SQL surface's zero-arg form is textually
-    * normalized to `(-1)` before parse ([[GraftSql.sql]]). The closure
-    * captures the analyzing session's handle, not the state: UDF bodies
-    * run on task threads from a serialized copy of the closure.
+  /** `last_query_id([n])`; `last_query_id()` is `last_query_id(-1)`.
+    * The closure captures the analyzing session's handle, not the state:
+    * UDF bodies run on task threads from a serialized copy of the closure.
     */
   private[graft] def functions(ft: graft.GraftExtensions.FunctionTable): Unit = {
+    import graft.GraftExtensions.Arity
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.functions.udf
-    ft.sessionUdf("last_query_id", 1)(h =>
+    val byOffset = ft.sessionUdfBuilder("last_query_id")(h =>
       udf((n: Int) => idAt(state(h), n)).asNondeterministic())
+    ft.overloads("last_query_id")(
+      Arity(0) -> (_ => byOffset(Seq(Literal(-1)))),
+      Arity(1) -> byOffset)
   }
 }

@@ -136,7 +136,7 @@ object Remap {
       if (q.toLowerCase.contains(src) &&
         !"""(?is)^(use|create\s+database|drop\s+database|alter\s+database)\b""".r
           .findFirstIn(low).isDefined)
-        q = GraftSql.replaceMaskedAll(q,
+        q = SqlText.replaceOutside(q,
           s"(?i)(?<![\\w`$$@])$src(?=\\s*\\.)".r, _ => dst)
     }
     val isAnalyze = low.startsWith("analyze")
@@ -145,7 +145,7 @@ object Remap {
       return q
     // CTE names defined by the statement SHADOW remap rules (hint_cte)
     val cteNames = """(?i)(?:\bwith\s+(?:recursive\s+)?|,\s*)`?(\w+)`?\s*(?:\([^)]*\)\s*)?as\s*\(""".r
-      .findAllMatchIn(MySqlCompat.maskLiterals(q0)).map(_.group(1).toLowerCase).toSet
+      .findAllMatchIn(SqlText.mask(q0)).map(_.group(1).toLowerCase).toSet
     // an unqualified name while the CURRENT db is a remapdb SOURCE
     // resolves in the destination (remap_db.sql:70-85) — map cur first
     val cur = MoCatalog.currentDb(spark).map(_.toLowerCase)
@@ -161,7 +161,7 @@ object Remap {
       val bareRe = s"(?i)(\\bfrom\\s+|\\bjoin\\s+|\\btable\\s+|,\\s*)`?$tbl`?(?![\\w$$.])"
       // probe against the masked copy: table words inside string data
       // must neither trigger nor receive a substitution
-      val qm = MySqlCompat.maskLiterals(q)
+      val qm = SqlText.mask(q)
       val applies = cur.contains(db) || qualRe.r.findFirstIn(qm).isDefined
       if (applies && (qualRe.r.findFirstIn(qm).isDefined ||
         (cur.contains(db) && bareRe.r.findFirstIn(qm).isDefined))) {
@@ -170,7 +170,7 @@ object Remap {
         try GraftSql.sql(spark, sql).createOrReplaceTempView(ph)
         finally inApply.set(false)
         def subst(re: String): Unit =
-          q = GraftSql.replaceMaskedAll(q, re.r, m => {
+          q = SqlText.replaceOutside(q, re.r, m => {
             // keep an explicit alias; otherwise alias back to the
             // original table name so qualified column refs still resolve
             val after = q.substring(m.end)

@@ -232,7 +232,7 @@ class BvtSpec extends AnyFunSuite {
         // CREATE PROCEDURE body carries inner `insert ...;` lines
         // (function/row_count.result) that must not split the statement
         def terminatedStmt(t: String): Boolean =
-          graft.sql.MySqlCompat.maskLiterals(t).trim.endsWith(";")
+          graft.sql.SqlText.mask(t).trim.endsWith(";")
         val sb = new StringBuilder(noComment(line))
         while (!terminatedStmt(sb.toString) &&
             // a statement that IS a versioned comment closes at its */
@@ -548,10 +548,10 @@ class BvtSpec extends AnyFunSuite {
                 case Some(l) => i < l.length && l(i) == cn.toLowerCase
                 case None => di == i
               }
-              val rows2 = graft.sql.GraftSql.splitTop(m.group(3)).map { r0 =>
+              val rows2 = graft.sql.SqlText.splitTop(m.group(3)).map { r0 =>
                 val r = r0.trim
                 if (!r.startsWith("(") || !r.endsWith(")")) r
-                else graft.sql.GraftSql
+                else graft.sql.SqlText
                   .splitTop(r.stripPrefix("(").stripSuffix(")"))
                   .zipWithIndex.map { case (it, i) =>
                     val padN = pads.find(p => hits(p._1, p._2, i)).map(_._3)
@@ -865,7 +865,7 @@ class BvtSpec extends AnyFunSuite {
           }
           val (list, tail2) =
             if (fromAt < 0) (rest, "") else (rest.substring(0, fromAt), rest.substring(fromAt))
-          val items = graft.sql.GraftSql.splitTop(list).map(_.trim)
+          val items = graft.sql.SqlText.splitTop(list).map(_.trim)
           if (items.exists(it => !it.matches("(?is)^(\\*|`?[\\w.]+`?\\*?|.*\\s+as\\s+`?\\w+`?|'[^']*'|\\d+)$"))) {
             val aliased = items.zipWithIndex.map { case (it, k) =>
               if (it.matches("(?is)^(\\*|`?[\\w.]+`?\\*?|.*\\s+as\\s+`?\\w+`?)$")) it
@@ -1026,7 +1026,7 @@ class BvtSpec extends AnyFunSuite {
       val open = s.indexOf('(', tm.end - 1)
       val close = if (open >= 0) parenClose(s, open) else -1
       if (close > open) {
-        val items = graft.sql.GraftSql.splitTop(s.substring(open + 1, close))
+        val items = graft.sql.SqlText.splitTop(s.substring(open + 1, close))
         val pads = items.zipWithIndex.flatMap { case (item, i) =>
           """(?is)^\s*`?(\w+)`?\s+binary\s*\(\s*(\d+)\s*\)""".r
             .findFirstMatchIn(item).map(m => (m.group(1), i, m.group(2).toInt))
@@ -1167,7 +1167,7 @@ class BvtSpec extends AnyFunSuite {
       if (open < 0) return Seq.empty
       val close = parenClose(stmt, open)
       if (close <= open) return Seq.empty
-      val items = graft.sql.GraftSql.splitTop(stmt.substring(open + 1, close))
+      val items = graft.sql.SqlText.splitTop(stmt.substring(open + 1, close))
       val ColDefRe =
         """(?is)^\s*`?(\w+)`?\s+(\w+(?:\s*\([^)]*\))?(?:\s+unsigned)?)(.*)$""".r
       val keyWords = Set("primary", "unique", "key", "index", "constraint",
@@ -1296,7 +1296,7 @@ class BvtSpec extends AnyFunSuite {
       .findFirstMatchIn(stmt).getOrElse(return)
     val body = cm.group(3)
     if ("""(?is)\b(from|union)\b""".r.findFirstIn(body).isDefined) return
-    val items = graft.sql.GraftSql.splitTop(body.stripSuffix(";"))
+    val items = graft.sql.SqlText.splitTop(body.stripSuffix(";"))
     val ItemRe =
       """(?is)^\s*cast\s*\(.*\s+as\s+(\w+(?:\(\d+(?:,\d+)?\))?)\s*\)\s+as\s+`?(\w+)`?\s*$""".r
     val defs = items.flatMap {
@@ -1357,13 +1357,13 @@ class BvtSpec extends AnyFunSuite {
     try spark.catalog.tableExists(n) catch { case _: Exception => false }
 
   /** `re.replaceAllIn` matching against the literal-masked copy of `s`
-    * (maskLiterals is length-preserving, so spans line up). Matches that
+    * (SqlText.mask is length-preserving, so spans line up). Matches that
     * can't include quote chars read identically from either copy, so
     * group texts are taken from the masked match directly.
     */
   private def replaceMasked(re: scala.util.matching.Regex, s: String)(
       f: scala.util.matching.Regex.Match => String): String = {
-    val masked = graft.sql.MySqlCompat.maskLiterals(s)
+    val masked = graft.sql.SqlText.mask(s)
     if (re.findFirstIn(masked).isEmpty) return s
     val sb = new java.lang.StringBuilder
     var last = 0
@@ -1402,7 +1402,7 @@ class BvtSpec extends AnyFunSuite {
         if (!changed) {
           val close = parenClose(e, m.end - 1)
           if (close > 0 &&
-              graft.sql.GraftSql.splitTop(e.substring(m.end, close)).lengthIs == 2) {
+              graft.sql.SqlText.splitTop(e.substring(m.end, close)).lengthIs == 2) {
             e = e.substring(0, m.start) + to + "(" +
               e.substring(m.end, close) + ")" + e.substring(close + 1)
             changed = true
@@ -1440,7 +1440,7 @@ class BvtSpec extends AnyFunSuite {
                 .contains(x.group(1).toLowerCase))
           else None
           val args = if (close > 0)
-            graft.sql.GraftSql.splitTop(e.substring(m.end, close)).map(_.trim)
+            graft.sql.SqlText.splitTop(e.substring(m.end, close)).map(_.trim)
           else Seq.empty
           val numeric = args.nonEmpty && args.forall(a =>
             a.matches("(?is)^-?\\d+$|^cast\\s*\\(.*\\)$"))
@@ -2343,7 +2343,7 @@ class BvtSpec extends AnyFunSuite {
     val RenameStmtRe = """(?is)^rename\s+table\s+(.+)$""".r
     def renamePairs(stmt: String): Seq[(String, String)] = stmt match {
       case RenameStmtRe(pairs) =>
-        graft.sql.GraftSql.splitTop(pairs).flatMap { p =>
+        graft.sql.SqlText.splitTop(pairs).flatMap { p =>
           """(?is)^\s*`?([^`\s]+)`?\s+to\s+`?([^`\s]+)`?\s*$""".r
             .findFirstMatchIn(p).map(m => (m.group(1), m.group(2)))
         }

@@ -26,13 +26,21 @@ class CallResolutionSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val plain = ChildJvm.run("graft.CallResolutionPlain")
+
   test("every optional-argument form through plain spark.sql on an extension-only session") {
-    val got = ChildJvm.run("graft.CallResolutionPlain")
+    val got = plain
       .collect { case l if l.startsWith("case ") => l.stripPrefix("case ").split("=", 2) }
       .map(kv => kv(0).toInt -> kv(1)).toMap
     cases.zipWithIndex.foreach { case ((q, want), i) =>
       assert(got.get(i).contains(want), q)
     }
+  }
+
+  test("last_query_id() through plain spark.sql is the latest saved result's id") {
+    def line(key: String) = plain.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
+    val saved = line("saved=").get
+    assert(line("last_query_id=").contains(s"$saved|$saved"))
   }
 
   test("a call with an argument count no builder takes raises WRONG_NUM_ARGS") {
@@ -121,7 +129,9 @@ object CallResolution {
 
 /** Runs [[CallResolution.cases]] through plain `spark.sql` on a session
   * configured only with `spark.sql.extensions`; prints `case i=rows`, or
-  * `case i=error: …` for a statement that fails.
+  * `case i=error: …` for a statement that fails. Then saves one result
+  * and prints its id (`saved=`) and `last_query_id()` with
+  * `last_query_id(-1)` (`last_query_id=`).
   */
 object CallResolutionPlain {
   def main(args: Array[String]): Unit = {
@@ -135,6 +145,10 @@ object CallResolutionPlain {
           catch { case e: Exception => s"error: ${e.getMessage.linesIterator.next()}" }
         println(s"case $i=$out")
       }
+      println(s"saved=${graft.sql.QueryResults.save(spark, spark.sql("SELECT 1"))}")
+      val lastId = try CallResolution.render(spark.sql("SELECT last_query_id(), last_query_id(-1)"))
+        catch { case e: Exception => s"error: ${e.getMessage.linesIterator.next()}" }
+      println(s"last_query_id=$lastId")
     } finally spark.stop()
   }
 }

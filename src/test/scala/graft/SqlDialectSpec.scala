@@ -14,11 +14,6 @@ class SqlDialectSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("splitTop splits only top-level commas") {
-    assert(GraftSql.splitTop("a, max(b, c), 'x,y', d as e") ==
-      Seq("a", "max(b, c)", "'x,y'", "d as e"))
-  }
-
   test("stored procedure: searched CASE (no subject) takes the right branch") {
     def run(s: String) = GraftSql.sql(spark, s)
     run("drop table if exists case_t")

@@ -16,7 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Rules: ONE post-hoc resolution rule, [[graft.plans.AnnRule]], serves
   * the ANN top-k pushdown for every vector index kind (IVF-flat, HNSW,
   * IVF-PQ); an optimizer rule prunes `Partitions`-managed tables; a
-  * resolution rule types elementwise vector arithmetic.
+  * resolution rule types elementwise vector arithmetic; a query-stage
+  * preparation rule, [[graft.plans.SmallSort]], gathers a small global
+  * sort into one task.
   *
   * Functions come from ONE table, [[GraftExtensions.functions]], built
   * once per JVM from every module's contribution (native Catalyst
@@ -69,6 +71,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // reference's vecf32/vecf64 operator family; resolves what Spark's
     // numeric-only BinaryArithmetic would reject
     e.injectResolutionRule(_ => VecArithRule)
+    // a final ORDER BY over input that AQE would leave in one partition
+    // sorts in one task, with no range exchange (after EnsureRequirements)
+    e.injectQueryStagePrepRule(session => graft.plans.SmallSort(session))
     GraftExtensions.functions.foreach(e.injectFunction)
   }
 }

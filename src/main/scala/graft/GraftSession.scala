@@ -32,6 +32,16 @@ object GraftSession {
     * two ids in about 1 of 20 runs and compiled 4 classes again each
     * time. `useIdInClassName=false` names them all `GeneratedIterator`,
     * so the same pipeline is the same text whatever its id.
+    *
+    * Small global sorts run in one task: a final ORDER BY over input that
+    * AQE's partition coalescing would leave in one partition sorts behind
+    * a `Coalesce 1`, with no range exchange, so its RangePartitioner
+    * sampling job and shuffle map stage do not run
+    * ([[graft.plans.SmallSort]], injected by [[GraftExtensions]]). The
+    * bound is AQE's own coalescing bound
+    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize` under
+    * `parallelismFirst`, otherwise `advisoryPartitionSizeInBytes`); no
+    * setting was added for it.
     */
   def builder(master: String): SparkSession.Builder = {
     val b = SparkSession.builder()

@@ -34,9 +34,6 @@ object EnumSet {
   def forget(spark: SparkSession, table: String): Unit =
     cols(spark).remove(table.toLowerCase)
 
-  private val TypeRe =
-    """(?i)\b(enum|set)\s*\(([^)]*)\)""".r
-
   /** CREATE TABLE: register enum/set columns, emit STRING storage. */
   def ddlRewrite(spark: SparkSession, q: String): String = {
     val low = q.toLowerCase
@@ -50,10 +47,12 @@ object EnumSet {
     val items = SqlText.splitTop(body)
     var registered = Vector.empty[Col]
     val items2 = items.map { item =>
-      """(?is)^(\s*`?([\w$-￿]+)`?\s+)(enum|set)\s*\(([^)]*)\)(.*)$""".r
-        .findFirstMatchIn(item) match {
-        case Some(m) =>
-          val raw = SqlText.splitTop(m.group(4)).map(_.trim)
+      // the member list ends at its balanced `)`, so a `)` inside a
+      // quoted member does not end it
+      """(?is)^(\s*`?([\w$-￿]+)`?\s+)(enum|set)\s*\(""".r.findFirstMatchIn(item)
+        .flatMap(m => SqlText.balancedSpan(item, m.end - 1).map(m -> _)) match {
+        case Some((m, (members, after))) =>
+          val raw = SqlText.splitTop(members).map(_.trim)
           if (raw.exists(l => !(l.startsWith("'") && l.endsWith("'") &&
               l.length >= 2)))
             throw new IllegalArgumentException(
@@ -65,7 +64,7 @@ object EnumSet {
           // DEFAULT resolves text-first, then as the 1-based ordinal
           // (dtype/enum default02: enum('T','E') default '1' stores 'T')
           val rest = """(?i)\bdefault\s+('[^']*'|\d+)""".r
-            .replaceAllIn(m.group(5), dm => {
+            .replaceAllIn(item.substring(after), dm => {
               val v0 = dm.group(1)
               val v = v0.stripPrefix("'").stripSuffix("'")
               val label = labels.find(_ == v)

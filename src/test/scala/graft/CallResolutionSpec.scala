@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One call resolution: the function table picks each name's builder by
@@ -13,10 +14,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * argument count, when text passes renamed these calls; doubles render
   * with `Double.toString` (bit-exact) and binaries as hex.
   */
-class CallResolutionSpec extends AnyFunSuite {
+class CallResolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   import CallResolution._
 
   private lazy val spark = SparkTestSession.spark
+
+  // the session is shared by every suite: a sequence left behind shows
+  // in a later suite's `show sequences`
+  override def afterAll(): Unit = {
+    graft.sql.GraftSql.sql(spark, s"DROP SEQUENCE IF EXISTS $SeqName")
+    super.afterAll()
+  }
 
   test("every optional-argument form through GraftSql.sql keeps its values") {
     graft.sql.GraftSql.sql(spark, s"CREATE SEQUENCE $SeqName")

@@ -112,33 +112,15 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("minhash one-task path: construction runs no job, collection exactly one") {
-    val sc = spark.sparkContext
-    val group = "dedup-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    // the listener bus is private[spark] but bytecode-public
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-    val drain = bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
     val docs = fixture
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "dedup")
-    try {
-      val df = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
+    val (df, built) = JobCount(spark.sparkContext) {
+      Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
         .orderBy(col("a_id"), col("b_id"))
-      drain.invoke(bus)
-      assert(jobs.getAndSet(0) == 0)
-      assert(df.collect().length >= 30)
-      drain.invoke(bus)
-      assert(jobs.get == 1)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(built == 0)
+    val (rows, ran) = JobCount(spark.sparkContext)(df.collect())
+    assert(rows.length >= 30)
+    assert(ran == 1)
   }
 
   test("minhash verify builds no hash table or broadcast of shingle arrays") {

@@ -36,30 +36,6 @@ class FunctionTableSpec extends AnyFunSuite {
   }
 }
 
-/** Runs a main of this build in a child JVM with this JVM's classpath
-  * and module flags (a suite's shared session cannot be stopped or
-  * rebuilt in-process). Returns the child's output lines; fails on a
-  * non-zero exit. `runWith` adds JVM flags after these (a later `-Xmx`
-  * or `-D` wins).
-  */
-object ChildJvm {
-  def run(main: String, args: String*): Seq[String] = runWith(Nil, main, args: _*)
-
-  def runWith(extra: Seq[String], main: String, args: String*): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.filterNot(_.startsWith("-Xmx")).toSeq
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ flags ++
-      Seq("-Xmx1g") ++ extra ++
-      Seq("-cp", System.getProperty("java.class.path"), main) ++ args
-    val out = new StringBuilder
-    val rc = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
-      l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    assert(rc == 0, out.toString.takeRight(4000))
-    out.toString.split('\n').toSeq
-  }
-}
-
 /** A plain session configured only with `spark.sql.extensions`. Its
   * registry is built before the log level drops to ERROR, so Spark's
   * "replaced a previously registered function" warnings reach the output.

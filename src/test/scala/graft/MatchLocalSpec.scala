@@ -128,15 +128,6 @@ class MatchLocalSpec extends AnyFunSuite {
   test("a MATCH on a small index runs at most 3 Spark jobs; its probe is bucket-pruned") {
     tables
     sql(nl("spark")).collect() // the first MATCH on the column builds the postings
-    val sc = spark.sparkContext
-    val group = "ftl-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val executions = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
@@ -145,19 +136,12 @@ class MatchLocalSpec extends AnyFunSuite {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(executions)
-    // the listener bus is private[spark] but bytecode-public
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-    val drain = bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
     val bucketPruned = """PartitionFilters: \[[^\]]*_tb""".r
     try {
       for ((q, exact) <- Seq(nl("stream spark join") -> true,
           bool("+spark -error join") -> true, bool("str*") -> false)) {
         plans.clear()
-        sc.setJobGroup(group, q)
-        try sql(q).collect() finally sc.clearJobGroup()
-        drain.invoke(bus)
-        val n = jobs.getAndSet(0)
+        val (_, n) = JobCount(spark.sparkContext)(sql(q).collect())
         assert(n >= 1 && n <= 3, s"$n jobs for $q")
         // the postings probe, then the query itself; exact terms read
         // only their own buckets (a STAR prefix reads them all)
@@ -165,10 +149,7 @@ class MatchLocalSpec extends AnyFunSuite {
         assert(probes.length == 1, probes.mkString("\n"))
         assert(bucketPruned.findFirstIn(probes.head).isDefined == exact, probes.head)
       }
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.listenerManager.unregister(executions)
-    }
+    } finally spark.listenerManager.unregister(executions)
   }
 
   test("a session sees none of the state of an earlier session of the same JVM") {

@@ -97,6 +97,16 @@ class SqlTextSpec extends AnyFunSuite {
       .map(r => s"${r.get(0)}:${r.get(1)}").toSeq == Seq("1:it's", "2:x", "5:a),(b"))
   }
 
+  test("an ENUM member holding a parenthesis stays one member") {
+    GraftSql.sql(spark, "DROP TABLE IF EXISTS sqltext_enum")
+    try {
+      GraftSql.sql(spark, "CREATE TABLE sqltext_enum (e ENUM('a)b', 'c'), i INT)")
+      GraftSql.sql(spark, "INSERT INTO sqltext_enum VALUES ('a)b', 1), ('c', 2)")
+      assert(GraftSql.sql(spark, "SELECT e, i FROM sqltext_enum ORDER BY i").collect()
+        .map(r => s"${r.get(0)}:${r.get(1)}").toSeq == Seq("a)b:1", "c:2"))
+    } finally GraftSql.sql(spark, "DROP TABLE IF EXISTS sqltext_enum")
+  }
+
   test("ANSI_QUOTES leaves a single-quoted literal with an escape alone") {
     GraftSql.sql(spark, "SET sql_mode = 'ANSI_QUOTES'")
     try assert(one("""SELECT 'it\'s "x"'""") == Seq("it's \"x\""))

@@ -70,6 +70,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
     // deployment/measurement overrides without a rebuild:
     // SPARK_GRAFT_CONF="k1=v1;k2=v2" (cluster runs re-tune
     // shuffle.partitions etc. here; local defaults above stay the

@@ -196,6 +196,23 @@ object GraftSql {
   private def fkChecksOn(spark: SparkSession): Boolean =
     sysVarValue(spark, "session", "foreign_key_checks").trim != "0"
 
+  /** A table that another existing table's foreign key references can
+    * be neither dropped nor truncated (`verb`): the bulk removal cannot
+    * fire referential actions. The table's own self-reference never
+    * blocks.
+    */
+  private def checkUnreferenced(spark: SparkSession, table: String, verb: String): Unit =
+    if (fkChecksOn(spark) && childRefsOf(spark, table)
+        .exists(r => !r._1.equalsIgnoreCase(table) && tableExists(spark, r._1)))
+      throw new IllegalStateException(s"internal error: can not $verb table " +
+        s"'$table' referenced by some foreign key constraint")
+
+  /** `spark.catalog.tableExists`, false where the name cannot even be
+    * looked up (a malformed or unresolvable qualifier).
+    */
+  private def tableExists(spark: SparkSession, table: String): Boolean =
+    try spark.catalog.tableExists(table) catch { case _: Exception => false }
+
   /** Per-column FK introspection rows for information_schema.
     * key_column_usage / referential_constraints and mo_foreign_keys:
     * (constraintName, db, child, childCol, ordinal, parent, parentCol,
@@ -259,8 +276,7 @@ object GraftSql {
         // self-referential ON UPDATE CASCADE definitions).
         if (selfRef && restrictOnly && !visited.contains(child.toLowerCase) &&
           ref.onUpdate != "cascade" && ref.onUpdate != "set null" &&
-          (try spark.catalog.tableExists(child)
-          catch { case _: Exception => false })) {
+          tableExists(spark, child)) {
           val n = ref.parentCols.length
           val changed = oldNewAll.select(
             (ref.parentCols.zipWithIndex.map { case (p, i) =>
@@ -314,8 +330,7 @@ object GraftSql {
           }
         }
         if (!visited.contains(child.toLowerCase) && !selfRef &&
-          (try spark.catalog.tableExists(child)
-          catch { case _: Exception => false })) {
+          tableExists(spark, child)) {
           val n = ref.parentCols.length
           val mapping0 = oldNewAll.select(
             (ref.parentCols.zipWithIndex.map { case (p, i) =>
@@ -349,8 +364,7 @@ object GraftSql {
                         !other.name.equalsIgnoreCase(ref.name) &&
                         other.childCols.map(_.toLowerCase) ==
                           ref.childCols.map(_.toLowerCase) &&
-                        (try spark.catalog.tableExists(other.parent)
-                        catch { case _: Exception => false }) && {
+                        tableExists(spark, other.parent) && {
                           val pk = broadcast(spark.table(other.parent)
                             .select(other.parentCols.zipWithIndex.map {
                               case (p, i) => col(s"`$p`").as(s"__op$i")
@@ -381,9 +395,8 @@ object GraftSql {
                             case None => col(s"`$c`").as(s"new_$c")
                           }
                         }).toIndexedSeq: _*).localCheckpoint(true)
-                    commitTable(spark, child,
-                      updatedChild.select(
-                        ccols.map(c => col(s"`$c`")).toIndexedSeq: _*))
+                    commitTable(spark, child, Effect(Some(updatedChild
+                      .withColumn(Hit, coalesce(col("__fkhit"), lit(false))))))
                     fkAfterUpdate(spark, child, childOldNew,
                       visited + table.toLowerCase)
                   }
@@ -413,8 +426,7 @@ object GraftSql {
   def validateForeignKeyDdl(spark: SparkSession, child: String,
       childCols: Seq[String], parent: String,
       parentCols: Seq[String]): Unit = {
-    if (!(try spark.catalog.tableExists(parent)
-    catch { case _: Exception => false })) return // forward/self refs
+    if (!tableExists(spark, parent)) return // forward/self refs
     val pSchema = spark.table(parent).schema
     parentCols.foreach { p =>
       if (!pSchema.exists(_.name.equalsIgnoreCase(p)))
@@ -429,8 +441,7 @@ object GraftSql {
     if (!covered)
       throw new IllegalStateException(
         "internal error: failed to add the foreign key constraint")
-    if ((try spark.catalog.tableExists(child)
-    catch { case _: Exception => false }) &&
+    if (tableExists(spark, child) &&
       !child.equalsIgnoreCase(parent)) {
       val cSchema = spark.table(child).schema
       childCols.zip(parentCols).foreach { case (c, p) =>
@@ -497,8 +508,7 @@ object GraftSql {
     parsed.foreach { case (name, childCols, parent, parentCols, acts) =>
       validateForeignKeyDdl(spark, table, childCols, parent, parentCols)
       // existing rows must already satisfy the new constraint
-      if (fkChecksOn(spark) && (try spark.catalog.tableExists(table)
-      catch { case _: Exception => false })) {
+      if (fkChecksOn(spark) && tableExists(spark, table)) {
         val t = spark.table(table)
         fkCheckIncomingRowsFor(spark, table, t.columns.toSeq, t,
           childCols, parent, parentCols)
@@ -552,8 +562,7 @@ object GraftSql {
       (db, tbl, cols)
     }
     parsed.foreach { case (db, tbl, _) =>
-      if (!(try spark.catalog.tableExists(tbl)
-      catch { case _: Exception => false })) {
+      if (!tableExists(spark, tbl)) {
         val d = db.orElse(MoCatalog.currentDb(spark)).getOrElse("default")
         throw new IllegalStateException(s"no such table $d.$tbl")
       }
@@ -583,8 +592,7 @@ object GraftSql {
     val g = SqlText.matchMasked(PlainInsertHeadRe, q).getOrElse(return)
     val table = g(0)
     if (!state(spark).foreignKeys.contains(table.toLowerCase)) return
-    if (!(try spark.catalog.tableExists(table)
-    catch { case _: Exception => false })) return
+    if (!tableExists(spark, table)) return
     try {
       val target = spark.table(table)
       val listed = Option(g(1))
@@ -658,34 +666,18 @@ object GraftSql {
   private def fkOnDelete(spark: SparkSession, parent: String,
       doomed: DataFrame): Unit = {
     if (!fkChecksOn(spark)) return
-    val refs = childRefsOf(spark, parent)
-    if (refs.isEmpty) return
-    refs.foreach { case (child, childCols, parentCols, action) =>
+    childRefsOf(spark, parent).foreach { case (child, childCols, parentCols, action) =>
       if (!child.equalsIgnoreCase(parent) && spark.catalog.tableExists(child)) {
-        val keys = broadcast(
-          doomed.select(parentCols.zipWithIndex.map { case (p, i) =>
-            col(s"`$p`").as(s"__fk$i") }: _*).distinct
-            .withColumn("__fkhit", lit(true)))
         val childDf = spark.table(child)
-        val ccols = childDf.columns.toSeq
-        // composite MATCH SIMPLE: a NULL in any child col never matches
-        val cond = childCols.zipWithIndex.map { case (c, i) =>
-          childDf(s"`$c`") === keys(s"__fk$i") }.reduce(_ && _)
+        val keys = doomed.select(parentCols.map(p => col(s"`$p`")): _*)
         action match {
           case "cascade" =>
             commitTable(spark, child,
-              childDf.join(keys, cond, "left_anti")
-                .select(ccols.map(c => col(s"`$c`")).toIndexedSeq: _*))
+              Effect(Some(flagKeys(childDf, childCols, keys)), removeHits = true))
           case "set null" =>
-            val joined = childDf.join(keys, cond, "left_outer")
-            commitTable(spark, child,
-              childCols.foldLeft(joined) { (df, c) =>
-                df.withColumn(c,
-                  when(col("__fkhit"), lit(null)).otherwise(col(s"`$c`")))
-              }.select(ccols.map(c => col(s"`$c`")).toIndexedSeq: _*))
+            commitTable(spark, child, Effect(Some(nullRefs(childDf, childCols, keys))))
           case _ =>
-            val refd = childDf.join(keys, cond, "left_semi")
-            if (refd.limit(1).count() > 0)
+            if (flagKeys(childDf, childCols, keys).filter(col(Hit)).limit(1).count() > 0)
               throw new IllegalStateException(
                 "internal error: Cannot delete or update a parent row: " +
                   "a foreign key constraint fails")
@@ -1009,30 +1001,14 @@ object GraftSql {
       // TRUNCATE of a referenced parent is rejected like DROP (MySQL/
       // reference: the bulk delete can't fire referential actions)
       """(?is)^truncate\s+(?:table\s+)?`?(\w+)`?\s*$""".r
-        .findFirstMatchIn(qDb).foreach { m =>
-          if (fkChecksOn(spark) && childRefsOf(spark, m.group(1))
-              .exists(r => !r._1.equalsIgnoreCase(m.group(1)) &&
-                (try spark.catalog.tableExists(r._1)
-                catch { case _: Exception => false })))
-            throw new IllegalStateException(
-              s"internal error: can not truncate table '${m.group(1)}' " +
-                "referenced by some foreign key constraint")
-        }
+        .findFirstMatchIn(qDb).foreach(m => checkUnreferenced(spark, m.group(1), "truncate"))
       // dropping a table forgets its fulltext indexes (a recreated
       // table starts with none — fulltext.sql:438-440 recreates and
       // re-registers the same index name)
       """(?is)^drop\s+table\s+(?:if\s+exists\s+)?`?(\w+)`?\s*$""".r
         .findFirstMatchIn(qDb)
         .foreach { m =>
-          // a parent still referenced by ANOTHER table's FK cannot drop
-          // (the child's own self-reference never blocks)
-          if (fkChecksOn(spark) && childRefsOf(spark, m.group(1))
-              .exists(r => !r._1.equalsIgnoreCase(m.group(1)) &&
-                (try spark.catalog.tableExists(r._1)
-                catch { case _: Exception => false })))
-            throw new IllegalStateException(
-              s"internal error: can not drop table '${m.group(1)}' " +
-                "referenced by some foreign key constraint")
+          checkUnreferenced(spark, m.group(1), "drop")
           forgetTable(spark, m.group(1))
         }
       // a dropped view leaves the namespace + info_schema registries too
@@ -1062,13 +1038,7 @@ object GraftSql {
           names.foreach { n =>
             val k = kind(n)
             if (k != "MISSING" && k != "VIEW" && k != "TEMPORARY") {
-              if (fkChecksOn(spark) && childRefsOf(spark, n)
-                  .exists(r => !r._1.equalsIgnoreCase(n) &&
-                    (try spark.catalog.tableExists(r._1)
-                    catch { case _: Exception => false })))
-                throw new IllegalStateException(
-                  s"internal error: can not drop table '$n' " +
-                    "referenced by some foreign key constraint")
+              checkUnreferenced(spark, n, "drop")
               spark.sql(s"DROP TABLE IF EXISTS `$n`")
               forgetTable(spark, n)
             }
@@ -1097,8 +1067,7 @@ object GraftSql {
       """(?is)^alter\s+table\s+`?(\w+)`?\s+change\s+(?:column\s+)?`?(\w+)`?\s+`?(\w+)`?\s+(\w+(?:\s*\([^)]*\))?(?:\s+unsigned)?)\b.*$""".r
         .findFirstMatchIn(qDb).foreach { m =>
           if (m.group(2).equalsIgnoreCase(m.group(3)) &&
-            (try spark.catalog.tableExists(m.group(1))
-            catch { case _: Exception => false })) {
+            tableExists(spark, m.group(1))) {
             renameFkColumn(spark, m.group(1), m.group(2), m.group(3))
             MoCatalog.renameDeclaredColumn(spark, m.group(1), m.group(2),
               m.group(3), Some(m.group(4)))
@@ -1113,8 +1082,7 @@ object GraftSql {
       // (already applied above) — MySQL accepts it on any existing table
       AiAlterRe.findFirstMatchIn(qAi).foreach { m =>
         val exists = Partitions.get(spark, m.group(1)).isDefined ||
-          (try spark.catalog.tableExists(m.group(1))
-          catch { case _: Exception => false })
+          tableExists(spark, m.group(1))
         if (!exists) throw new IllegalArgumentException(
           s"no such table ${m.group(1)}")
         aiDone(None)
@@ -2025,143 +1993,74 @@ object GraftSql {
     import spark.implicits._
     val target = spark.table(table)
     val tcols = target.columns.toSeq
-    // a row is replaced when it collides on the pk OR any UNIQUE
-    // index (the reference's dedup join keys on every unique index,
-    // pkg/sql/colexec/dedupjoin/) — one anti-join per key set;
-    // NULL key values never match, like MySQL's unique-null rule
-    val keySets: Seq[Seq[String]] =
-      state(spark).primaryKeys.get(table.toLowerCase)
-        .map(_.split(",").map(_.trim).toSeq).toSeq ++
-        uniqueKeysOf(spark, table).map(_._2)
+    // an existing row is replaced when it collides on the pk OR any
+    // UNIQUE index (the reference's dedup join keys on every unique
+    // index, pkg/sql/colexec/dedupjoin/); NULL key values never match,
+    // like MySQL's unique-null rule. A keyless table only appends.
+    val keySets = tableKeySets(spark, table)
+    val snap = if (keySets.isEmpty) named0 else named0.localCheckpoint(true)
     // a batch row can also replace a row the SAME statement inserted
-    // (`values (1,u,10),(2,u,20)` keeps only the second) — MySQL applies
-    // sequentially. VALUES batches are driver-sized; resolve them
-    // exactly with a sequential scan, fall back to the distributed
-    // anti-join shape (existing-row replacement is order-free) for bulk
-    // SELECT sources.
+    // (`values (1,u,10),(2,u,20)` keeps only the second); existing-row
+    // replacement is order-free, so a bulk SELECT source keeps every row
     val named =
       if (keySets.isEmpty) named0
-      else {
-        val snap = named0.localCheckpoint(true)
-        val n = snap.limit(10001).count()
-        if (n > 10000) snap
-        else {
-          val rows = snap.collect()
-          val colIdx = tcols.zipWithIndex.toMap
-          def keyTuple(r: org.apache.spark.sql.Row, keys: Seq[String]) = {
-            val vs = keys.map(k => r.get(colIdx(k)))
-            if (vs.contains(null)) None else Some(vs)
-          }
-          val acc = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-          rows.foreach { r =>
-            acc.filterInPlace { p =>
-              !keySets.exists(ks =>
-                keyTuple(r, ks).exists(t => keyTuple(p, ks).contains(t)))
-            }
-            acc += r
-          }
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(acc.toSeq: _*)),
-            snap.schema)
-        }
-      }
-    // FOREIGN KEY ON DELETE actions: replacing (= deleting) a parent
-    // row cascades/nulls/rejects per the child constraint. Existing-row
-    // deletion keys on the FULL batch (a batch row deletes its victim
-    // even when a later batch row replaces it in turn)
+      else resolveBatch(spark, snap, keySets, replace = true, Nil).getOrElse(snap)
     // REPLACE is an INSERT for the table's OWN foreign keys: each batch
     // row's FK columns must reference an existing parent row (a NULL in
     // any column exempts the row — MATCH SIMPLE). A self-referencing FK
     // checks against the post-statement state (existing ∪ incoming).
     fkCheckIncomingRows(spark, table, tcols, named)
+    // victims key on the FULL batch (a batch row deletes its victim even
+    // when a later batch row replaces it in turn)
+    val flagged0 = keySets.foldLeft(target.withColumn(Hit, lit(false))) { (t, keys) =>
+      flagKeys(t, keys, snap.select(keys.map(c => col(s"`$c`")): _*), bcast = false)
+    }
+    // FOREIGN KEY ON DELETE actions: replacing (= deleting) a parent
+    // row cascades/nulls/rejects per the child constraint
     val selfRefs = state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
       .filter(_.parent == table.toLowerCase)
-      .map(r => (r.childCols, r.parent, r.parentCols, r.onDelete))
-    val doomedOpt =
-      if ((childRefsOf(spark, table).nonEmpty || selfRefs.nonEmpty) && keySets.nonEmpty) {
-        Some(keySets.map { keys =>
-          target.join(broadcast(
-            named0.select(keys.map(c => col(s"`$c`")): _*).distinct),
-            keys, "left_semi")
-        }.reduce(_ unionByName _).distinct().localCheckpoint(true))
-      } else None
-    doomedOpt.foreach(fkOnDelete(spark, table, _))
-    // transitive ON DELETE CASCADE through a SELF-referencing FK: the
-    // whole victim subtree goes (driver fixpoint — victim sets are
-    // batch-sized, each round one broadcast semi-join; cycles converge
-    // because the set only grows within the fixed table)
-    val cascadeDoomed: Option[DataFrame] = doomedOpt.flatMap { doomed0 =>
-      val cascades = selfRefs.filter(_._4 == "cascade")
-      if (cascades.isEmpty) None
+    val flagged =
+      if (keySets.isEmpty || (childRefsOf(spark, table).isEmpty && selfRefs.isEmpty)) flagged0
       else {
-        var all = doomed0
-        var n = all.count()
-        var grew = n > 0
-        while (grew) {
-          val next = cascades.map { case (childCols, _, parentCols, _) =>
-            val keys = broadcast(all.select(parentCols.zipWithIndex.map {
-              case (p, i) => col(s"`$p`").as(s"__fk$i") }: _*).distinct)
-            val cond = childCols.zipWithIndex.map { case (c, i) =>
-              target(s"`$c`") === keys(s"__fk$i") }.reduce(_ && _)
-            target.join(keys, cond, "left_semi")
-              .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          }.reduce(_ unionByName _)
-          val grown = all.unionByName(next).distinct().localCheckpoint(true)
-          val n2 = grown.count()
-          grew = n2 > n
-          all = grown; n = n2
-        }
-        Some(all)
-      }
-    }
-    val baseSurvivors =
-      if (keySets.isEmpty) target
-      else keySets.foldLeft(target) { (t, keys) =>
-        t.join(named0.select(keys.map(c => col(s"`$c`")): _*).distinct,
-          keys, "left_anti")
-      }
-    val survivors0 = cascadeDoomed match {
-      case Some(all) if keySets.nonEmpty =>
-        val pk = keySets.head
-        baseSurvivors.join(broadcast(
-          all.select(pk.map(c => col(s"`$c`")): _*).distinct), pk, "left_anti")
-      case _ => baseSurvivors
-    }
-    // self-referencing ON DELETE SET NULL: surviving rows pointing at a
-    // replaced victim get their FK columns cleared
-    val survivors = selfRefs.filter(_._4 == "set null")
-      .foldLeft(survivors0.select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)) {
-        case (df, (childCols, _, parentCols, _)) =>
-          doomedOpt match {
-            case Some(doomed0) =>
-              val keys = broadcast(doomed0.select(parentCols.zipWithIndex.map {
-                case (p, i) => col(s"`$p`").as(s"__fk$i") }: _*).distinct
-                .withColumn("__fkhit", lit(true)))
-              val cond = childCols.zipWithIndex.map { case (c, i) =>
-                df(s"`$c`") === keys(s"__fk$i") }.reduce(_ && _)
-              childCols.foldLeft(df.join(keys, cond, "left_outer")) { (d, c) =>
-                d.withColumn(c,
-                  when(col("__fkhit"), lit(null)).otherwise(col(s"`$c`")))
-              }.select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-            case None => df
+        val flaggedSnap = flagged0.localCheckpoint(true)
+        val doomed = flaggedSnap.filter(col(Hit))
+        fkOnDelete(spark, table, doomed)
+        // transitive ON DELETE CASCADE through a SELF-referencing FK: the
+        // whole victim subtree goes (driver fixpoint — victim sets are
+        // batch-sized, each round one broadcast semi-join; cycles converge
+        // because the set only grows within the fixed table)
+        val cascades = selfRefs.filter(_.onDelete == "cascade")
+        val withSubtree =
+          if (cascades.isEmpty) flaggedSnap
+          else {
+            var all = doomed.select(tcols.map(c => col(s"`$c`")): _*)
+            var n = all.count()
+            var grew = n > 0
+            while (grew) {
+              val next = cascades.map { r =>
+                flagKeys(target, r.childCols,
+                  all.select(r.parentCols.map(c => col(s"`$c`")): _*))
+                  .filter(col(Hit)).select(tcols.map(c => col(s"`$c`")): _*)
+              }.reduce(_ unionByName _)
+              val grown = all.unionByName(next).distinct().localCheckpoint(true)
+              val n2 = grown.count()
+              grew = n2 > n
+              all = grown; n = n2
+            }
+            val pk = keySets.head
+            flagKeys(flaggedSnap, pk, all.select(pk.map(c => col(s"`$c`")): _*))
           }
+        // self-referencing ON DELETE SET NULL: surviving rows pointing at
+        // a replaced victim get their FK columns cleared
+        selfRefs.filter(_.onDelete == "set null").foldLeft(withSubtree) { (df, r) =>
+          nullRefs(df, r.childCols,
+            doomed.select(r.parentCols.map(c => col(s"`$c`")): _*), Ref).drop(Ref)
+        }
       }
-    val result =
-      if (keySets.isEmpty) target.unionByName(named)
-      else survivors
-        .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-        .unionByName(named)
-    // affected-rows inputs must count the PRE-overwrite state
-    val namedN = named.count()
-    val targetN = if (keySets.nonEmpty) target.count() else 0L
-    // break lineage off the table being overwritten
-    val snap = result.localCheckpoint(true)
-    snap.write.mode("overwrite").insertInto(table)
-    spark.catalog.refreshTable(table)
     // MySQL affected-rows for REPLACE = inserted + deleted victims
-    if (keySets.nonEmpty)
-      setRowCount(spark, namedN + (targetN - (snap.count() - namedN)))
-    else setRowCount(spark, namedN)
+    val w = commitTable(spark, table, Effect(Some(flagged).filter(_ => keySets.nonEmpty),
+      appended = Some(named), removeHits = true))
+    setRowCount(spark, w.appended + w.hits)
     Some(Seq((table, "replaced")).toDF("table_name", "status"))
   }
 
@@ -2196,7 +2095,7 @@ object GraftSql {
         val keySets = tableKeySets(spark, table)
         val named0 = alignedRows(spark, table, colsOrNull, srcTxt)
         if (keySets.isEmpty) {
-          commitTable(spark, table, target.unionByName(named0))
+          commitTable(spark, table, Effect(appended = Some(named0)))
           return Some(spark.emptyDataFrame)
         }
         val assigns = SqlText.splitTop(setTxt).map { a =>
@@ -2218,7 +2117,7 @@ object GraftSql {
         // the SAME statement just inserted, and repeated keys chain their
         // updates (b=b+10 twice → +20). Split the batch into sequential
         // ROUNDS by per-key occurrence index and upsert round-by-round —
-        // one extra Spark job per extra round, rounds are almost always 1.
+        // a few Spark jobs per extra round, rounds are almost always 1.
         val ordered = named0.withColumn("__ord", monotonically_increasing_id())
         val rnCols = keySets.zipWithIndex.map { case (keys, i) =>
           val w = org.apache.spark.sql.expressions.Window
@@ -2235,16 +2134,20 @@ object GraftSql {
           .localCheckpoint(true)
         val maxRoundRow = withRn.agg(max(col("__round"))).head
         // every round must run — truncating would silently drop rows
-        // whose key repeats more often than the cap; each round is one
-        // Spark job, so a deep batch is slow but never lossy
+        // whose key repeats more often than the cap
         val maxRound =
           if (maxRoundRow.isNullAt(0)) 0 else maxRoundRow.getInt(0)
+        // the rounds run over the statement's own state: the table's rows
+        // (`Hit` once a round changed their values) and, `__new`, the rows
+        // earlier rounds appended; only the final state is committed
+        var cur = target.withColumn(Hit, lit(false)).withColumn("__new", lit(false))
+        val curCols = (tcols.map(c => col(s"`$c`")) :+ col(Hit) :+ col("__new")).toIndexedSeq
         var affected = 0L
         (1 to maxRound).foreach { r =>
           val batch = withRn.filter(col("__round") === r)
             .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          val pre = spark.table(table)
-          var cur = pre
+          if (r > 1) cur = cur.localCheckpoint(true)
+          val pre = cur
           var remaining = batch
           var changedN = 0L
           keySets.zipWithIndex.foreach { case (keys, ki) =>
@@ -2271,7 +2174,7 @@ object GraftSql {
             val joinCond = keys.map(k =>
               col(s"`$k`") === col(s"`__new_$k`")).reduce(_ && _)
             var df = cur.join(broadcast(marked), joinCond, "left_outer")
-              .withColumn("__hit", coalesce(col("__new__hit"), lit(false)))
+              .withColumn("__dup", coalesce(col("__new__hit"), lit(false)))
             // every RHS evaluates against the OLD row + the incoming row
             assigns.zipWithIndex.foreach { case ((_, e), i) =>
               df = df.withColumn(s"__set_$i", expr(valuesRefs(e)))
@@ -2281,7 +2184,7 @@ object GraftSql {
             val chgCond = assigns.zipWithIndex.map { case ((c, _), i) =>
               !(col(s"__set_$i") <=> col(s"`${fields(c.toLowerCase).name}`"))
             }.reduce(_ || _)
-            df = df.withColumn("__chg", col("__hit") && chgCond)
+            df = df.withColumn("__chg", col("__dup") && chgCond)
               .localCheckpoint(true)
             changedN += df.filter(col("__chg")).count()
             assigns.zipWithIndex.foreach { case ((c, _), i) =>
@@ -2289,9 +2192,9 @@ object GraftSql {
               val rhs = storeCast(spark, table, f,
                 col(s"__set_$i"), df.schema(s"__set_$i").dataType)
               df = df.withColumn(f.name,
-                when(col("__hit"), rhs).otherwise(col(s"`${f.name}`")))
+                when(col("__dup"), rhs).otherwise(col(s"`${f.name}`")))
             }
-            cur = df.select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
+            cur = df.withColumn(Hit, col(Hit) || col("__chg")).select(curCols: _*)
             // incoming rows that matched the ROUND-state on these keys
             // are consumed (they updated in place)
             remaining = remaining.join(
@@ -2303,8 +2206,11 @@ object GraftSql {
           // values actually CHANGED (unchanged hits count 0)
           val insertedN = remaining.count()
           affected += insertedN + changedN * 2
-          commitTable(spark, table, cur.unionByName(remaining))
+          cur = cur.unionByName(
+            remaining.withColumn(Hit, lit(false)).withColumn("__new", lit(true)))
         }
+        commitTable(spark, table, Effect(Some(cur.filter(!col("__new"))),
+          appended = Some(cur.filter(col("__new")))))
         setRowCount(spark, affected)
         Some(spark.emptyDataFrame)
       case _ => None
@@ -2319,48 +2225,23 @@ object GraftSql {
         val keySets = tableKeySets(spark, table)
         val named0 = alignedRows(spark, table, colsOrNull, srcTxt)
         if (keySets.isEmpty) {
-          commitTable(spark, table, target.unionByName(named0))
+          commitTable(spark, table, Effect(appended = Some(named0)))
           return Some(spark.emptyDataFrame)
         }
         val snap = fkFilterOrphans(spark, table, named0).localCheckpoint(true)
-        val small = snap.limit(10001).count() <= 10000
-        val kept =
-          if (small) {
-            // MySQL applies row-by-row: a row REJECTED by an existing
-            // key frees its other key values for later batch rows
-            // (insert_ignore_multi_key). VALUES batches are
-            // driver-sized — resolve sequentially against the existing
-            // key sets (computed distributed, only batch-sized results
-            // collect).
-            val colIdx = tcols.zipWithIndex.toMap
-            val existing: Seq[scala.collection.mutable.Set[Seq[Any]]] =
-              keySets.map { keys =>
-                val hit = target.join(broadcast(
-                  snap.select(keys.map(c => col(s"`$c`")): _*).distinct),
-                  keys, "left_semi")
-                  .select(keys.map(c => col(s"`$c`")): _*).distinct.collect()
-                scala.collection.mutable.Set(hit.toSeq.map(_.toSeq): _*)
-              }
-            def keyTuple(r: org.apache.spark.sql.Row, keys: Seq[String]) = {
-              val vs = keys.map(k => r.get(colIdx(k)))
-              if (vs.contains(null)) None else Some(vs)
-            }
-            val acc = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            snap.collect().foreach { r =>
-              val collide = keySets.zipWithIndex.exists { case (ks, i) =>
-                keyTuple(r, ks).exists(existing(i).contains)
-              }
-              if (!collide) {
-                acc += r
-                keySets.zipWithIndex.foreach { case (ks, i) =>
-                  keyTuple(r, ks).foreach(existing(i) += _)
-                }
-              }
-            }
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(acc.toSeq: _*)),
-              snap.schema)
-          } else {
+        // MySQL applies row-by-row: a row REJECTED by an existing key frees
+        // its other key values for later batch rows
+        // (insert_ignore_multi_key). The existing keys that the batch
+        // could hit are found distributed; only batch-sized results collect.
+        def existing = keySets.map { keys =>
+          target.join(broadcast(
+            snap.select(keys.map(c => col(s"`$c`")): _*).distinct),
+            keys, "left_semi")
+            .select(keys.map(c => col(s"`$c`")): _*).distinct.collect()
+            .map(_.toSeq).toSet
+        }
+        val kept = resolveBatch(spark, snap, keySets, replace = false, existing)
+          .getOrElse {
             // bulk SELECT source: first-wins per key set + anti-join —
             // order-free and fully distributed
             var named = snap.withColumn("__ord", monotonically_increasing_id())
@@ -2380,9 +2261,8 @@ object GraftSql {
             }
             named.drop("__ord")
           }
-        val targetN2 = target.count()
         setRowCount(spark,
-          commitTable(spark, table, target.unionByName(kept)) - targetN2)
+          commitTable(spark, table, Effect(appended = Some(kept))).appended)
         Some(spark.emptyDataFrame)
       case _ => None
     }
@@ -2402,13 +2282,7 @@ object GraftSql {
     SqlText.matchMasked(MultiDeleteUsingRe, q)
       .orElse(SqlText.matchMasked(MultiDeleteRe, q)) match {
       case Some(IndexedSeq(targetsTxt, fromTxt, condOrNull)) =>
-        val AliasedRe =
-          """(?i)(?:^|,|\bjoin\s)\s*`?(\w+)`?(?:\s+(?:as\s+)?(?!on\b|join\b|inner\b|left\b|right\b|cross\b|where\b|using\b)`?(\w+)`?)?""".r
-        val aliases: Map[String, String] =
-          AliasedRe.findAllMatchIn(fromTxt).map { m =>
-            val t = m.group(1); val a = Option(m.group(2)).getOrElse(t)
-            a.toLowerCase -> t
-          }.toMap
+        val aliases = tableAliases(fromTxt)
         val targets = SqlText.splitTop(targetsTxt)
           .map(_.trim.stripPrefix("`").stripSuffix("`").toLowerCase)
         if (targets.isEmpty || targets.exists(!aliases.contains(_))) return None
@@ -2423,31 +2297,22 @@ object GraftSql {
           (al, spark.sql(
             s"SELECT DISTINCT $al.* FROM $fromTxt$whereSql").localCheckpoint(true))
         }
-        matchSets.foreach { case (al, doomed) =>
+        matchSets.foreach { case (al, matched) =>
           val table = aliases(al)
-          val target = spark.table(table)
-          val tcols = target.columns.toSeq
-          if (childRefsOf(spark, table).nonEmpty) fkOnDelete(spark, table, doomed)
-          val marked = doomed.toDF(tcols.map(_ + "__m"): _*)
-            .withColumn("__hit", lit(true))
-          val cond = tcols.map(c => col(s"`$c`") <=> col(s"`${c}__m`"))
-            .reduce(_ && _)
-          val remaining = target.join(broadcast(marked), cond, "left_outer")
-            .filter(col("__hit").isNull)
-            .select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          commitTable(spark, table, remaining)
+          deleteHits(spark, table, flagMatched(spark.table(table), matched))
         }
         Some(spark.emptyDataFrame)
       case _ => None
     }
 
   // ------------------------------------------------------------------
-  // UPDATE / DELETE — batch DML over managed tables (the reference's
-  // OLTP write path, `pkg/sql/plan/build_dml.go` buildUpdate/buildDelete;
-  // BVT fulltext/gojieba `delete from src`, dml/update, dml/delete).
-  // Spark mapping: a distributed projection/filter over the current
-  // snapshot, committed through a localCheckpoint + overwrite — the
-  // same copy-on-write shape Delta/Iceberg use for UPDATE at scale.
+  // One write path for every row change: UPDATE, DELETE, REPLACE, the
+  // upserts, their multi-table forms, LOAD DATA and the foreign-key
+  // actions (the reference's MultiUpdate/Deletion/DedupJoin operators,
+  // `pkg/sql/colexec/multi_update/`). A statement computes an [[Effect]]
+  // against the snapshot taken before it; `commitTable` alone writes it,
+  // copy-on-write (localCheckpoint → overwrite → refresh, the shape
+  // Delta/Iceberg use for UPDATE at scale), and counts it.
   // ------------------------------------------------------------------
 
   private val DeleteRe =
@@ -2455,11 +2320,162 @@ object GraftSql {
   private val UpdateRe =
     """(?is)^update\s+(ignore\s+)?(?:`?\w+`?\.)?`?(\w+)`?\s+set\s+(.+?)\s*(?:where\s+(.+?))?\s*(?:order\s+by\s+(.+?))?\s*(?:limit\s+(\d+))?\s*$""".r
 
-  private def commitTable(spark: SparkSession, table: String, df: DataFrame): Long = {
-    val snap = df.localCheckpoint(true)
-    snap.write.mode("overwrite").insertInto(table)
-    spark.catalog.refreshTable(table)
-    snap.count() // cheap: the checkpoint is already materialized
+  // flags: a row the statement hits; a row referencing a deleted key
+  private val Hit = "__hit"
+  private val Ref = "__ref"
+
+  /** `rows`: every row of the snapshot, with its new values and the
+    * boolean `Hit` column (a hit row is removed when `removeHits`, else
+    * replaced in place); `appended`: the rows the statement adds.
+    */
+  private final case class Effect(rows: Option[DataFrame] = None,
+      appended: Option[DataFrame] = None, removeHits: Boolean = false)
+
+  /** How many rows a committed effect hit and appended. */
+  private final case class Written(hits: Long, appended: Long)
+
+  /** Writes `e`: nothing when it hits and appends no row, an append when
+    * it only appends, else an overwrite from one checkpoint.
+    */
+  private def commitTable(spark: SparkSession, table: String, e: Effect): Written = {
+    val tcols = spark.table(table).columns.toSeq.map(c => col(s"`$c`"))
+    val parts =
+      e.rows.map(_.select(tcols :+ col(Hit) :+ lit(false).as("__new"): _*)) ++
+        e.appended.map(_.select(tcols :+ lit(false).as(Hit) :+ lit(true).as("__new"): _*))
+    if (parts.isEmpty) return Written(0, 0)
+    val snap = parts.reduce(_ unionByName _).localCheckpoint(true)
+    // both counts in one pass over the checkpointed blocks
+    val (hits, appended) = snap.select(col(Hit), col("__new")).queryExecution.toRdd
+      .map(r => (if (r.getBoolean(0)) 1L else 0L, if (r.getBoolean(1)) 1L else 0L))
+      .fold((0L, 0L)) { case ((h1, a1), (h2, a2)) => (h1 + h2, a1 + a2) }
+    if (hits > 0) {
+      val kept = if (e.removeHits) snap.filter(!col(Hit)) else snap
+      kept.select(tcols: _*).write.mode("overwrite").insertInto(table)
+    } else if (appended > 0)
+      snap.filter(col("__new")).select(tcols: _*).write.insertInto(table)
+    if (hits > 0 || appended > 0) spark.catalog.refreshTable(table)
+    Written(hits, appended)
+  }
+
+  /** `rows` plus the boolean column `flag` (ORed into one `rows` already
+    * has): whether the values of `cols`, none of them NULL, equal a row
+    * of `keys`, column by column. `bcast` broadcasts the distinct keys.
+    */
+  private def flagKeys(rows: DataFrame, cols: Seq[String], keys: DataFrame,
+      flag: String = Hit, bcast: Boolean = true): DataFrame = {
+    val k0 = keys.toDF(cols.indices.map(i => s"__k$i"): _*).distinct
+      .withColumn("__khit", lit(true))
+    val k = if (bcast) broadcast(k0) else k0
+    val cond = cols.zipWithIndex.map { case (c, i) =>
+      rows(s"`$c`") === k(s"__k$i") }.reduce(_ && _)
+    val hit = coalesce(k("__khit"), lit(false))
+    val kept = rows.columns.toSeq.filterNot(_ == flag).map(c => rows(s"`$c`"))
+    rows.join(k, cond, "left_outer").select(kept :+
+      (if (rows.columns.contains(flag)) rows(flag) || hit else hit).as(flag): _*)
+  }
+
+  /** ON DELETE SET NULL: `rows` with `childCols` cleared where they
+    * reference a row of `keys` (the deleted parent keys); those rows are
+    * flagged `flag`.
+    */
+  private def nullRefs(rows: DataFrame, childCols: Seq[String], keys: DataFrame,
+      flag: String = Hit): DataFrame =
+    childCols.foldLeft(flagKeys(rows, childCols, keys, flag)) { (d, c) =>
+      d.withColumn(c, when(col(flag), lit(null)).otherwise(col(s"`$c`")))
+    }
+
+  /** … LIMIT n: `Hit` stays on the first `n` hit rows of `order` (all
+    * columns without an ORDER BY, standing in for insertion order).
+    */
+  private def limitHits(rows: DataFrame, order: Seq[Column], n: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(order: _*)
+      .rowsBetween(Long.MinValue, 0)
+    rows.withColumn(Hit,
+      col(Hit) && sum(when(col(Hit), 1).otherwise(0)).over(w) <= n)
+  }
+
+  // `table [[AS] alias]` items (parenthesized subqueries are not targets)
+  private val AliasedRe =
+    """(?i)(?:^|,|\bjoin\s)\s*`?(\w+)`?(?:\s+(?:as\s+)?(?!on\b|join\b|inner\b|left\b|right\b|cross\b|where\b|using\b|set\b)`?(\w+)`?)?""".r
+
+  /** Lower-cased alias → table of a multi-table statement's FROM list. */
+  private def tableAliases(fromTxt: String): Map[String, String] =
+    AliasedRe.findAllMatchIn(fromTxt).map { m =>
+      val t = m.group(1)
+      Option(m.group(2)).getOrElse(t).toLowerCase -> t
+    }.toMap
+
+  /** `target`'s rows, flagged `Hit` where they equal (every column,
+    * null-safe) the leading columns of a row of `matched` — one row per
+    * target row at most; `matched`'s further columns ride along.
+    */
+  private def flagMatched(target: DataFrame, matched: DataFrame): DataFrame = {
+    val tcols = target.columns.toSeq
+    val marked = matched.toDF(
+      (tcols.map(_ + "__m") ++ matched.columns.drop(tcols.length)): _*)
+      .withColumn("__m", lit(true))
+    val cond = tcols.map(c => col(s"`$c`") <=> col(s"`${c}__m`")).reduce(_ && _)
+    target.join(broadcast(marked), cond, "left_outer")
+      .withColumn(Hit, coalesce(col("__m"), lit(false)))
+  }
+
+  /** Largest VALUES batch that [[resolveBatch]] resolves on the driver. */
+  private val BatchMax = 10000
+
+  /** `batch` applied row by row, as MySQL does: a row colliding on any
+    * key set with the rows kept so far (or, for INSERT IGNORE, the
+    * `existing` keys) replaces them (`replace`) or is dropped, taking no
+    * key. NULL keys never collide. None above [[BatchMax]] rows.
+    */
+  private def resolveBatch(spark: SparkSession, batch: DataFrame,
+      keySets: Seq[Seq[String]], replace: Boolean,
+      existing: => Seq[Set[Seq[Any]]]): Option[DataFrame] = {
+    val rows = batch.limit(BatchMax + 1).collect()
+    if (rows.length > BatchMax) return None
+    val idx = keySets.map(_.map(k => batch.columns.indexWhere(_.equalsIgnoreCase(k))))
+    def keys(r: org.apache.spark.sql.Row): Seq[Option[Seq[Any]]] = idx.map { is =>
+      val vs = is.map(r.get)
+      if (vs.contains(null)) None else Some(vs)
+    }
+    def collide(a: Seq[Option[Seq[Any]]], b: Seq[Option[Seq[Any]]]) =
+      a.indices.exists(i => a(i).isDefined && a(i) == b(i))
+    val kept = scala.collection.mutable.ArrayBuffer.empty[(org.apache.spark.sql.Row, Seq[Option[Seq[Any]]])]
+    val taken = (if (replace) keySets.map(_ => Set.empty[Seq[Any]]) else existing)
+      .map(s => scala.collection.mutable.Set(s.toSeq: _*))
+    rows.foreach { r =>
+      val ks = keys(r)
+      if (replace) {
+        kept.filterInPlace(p => !collide(ks, p._2))
+        kept += r -> ks
+      } else if (!ks.indices.exists(i => ks(i).exists(taken(i).contains))) {
+        kept += r -> ks
+        ks.indices.foreach(i => ks(i).foreach(taken(i) += _))
+      }
+    }
+    Some(spark.createDataFrame(
+      java.util.Arrays.asList(kept.map(_._1).toSeq: _*), batch.schema))
+  }
+
+  /** Deletes the `Hit` rows of `flagged` (all of `table`'s rows) after
+    * the ON DELETE actions of the foreign keys referencing them.
+    */
+  private def deleteHits(spark: SparkSession, table: String, flagged: DataFrame): Written = {
+    if (!fkChecksOn(spark) || childRefsOf(spark, table).isEmpty)
+      return commitTable(spark, table, Effect(Some(flagged), removeHits = true))
+    val snap = flagged.localCheckpoint(true)
+    val doomed = snap.filter(col(Hit))
+    fkOnDelete(spark, table, doomed)
+    // SELF-referencing ON DELETE SET NULL: surviving rows that
+    // referenced a deleted key lose the reference (fk_issue_22736:
+    // deleting the middle of a chain nulls the tail's pointer)
+    val rows = state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
+      .filter(r => r.parent == table.toLowerCase && r.onDelete == "set null")
+      .foldLeft(snap) { (df, r) =>
+        nullRefs(df, r.childCols,
+          doomed.select(r.parentCols.map(c => col(s"`$c`")): _*), Ref).drop(Ref)
+      }
+    commitTable(spark, table, Effect(Some(rows), removeHits = true))
   }
 
   /** `WITH cte AS (...) UPDATE/DELETE ...` (with_insert.result:70-93):
@@ -2992,76 +3008,15 @@ object GraftSql {
         // partitioned tables route rows through per-partition subtables;
         // copy-on-write DML doesn't compose with that layout yet
         if (Partitions.get(spark, table).isDefined) return None
-        val target = spark.table(table)
-        val targetN = target.count()
-        val remaining = (Option(condOrNull), Option(limitOrNull)) match {
-          case (None, None) => target.limit(0)
-          case (Some(c), None) =>
-            // via SQL text so the predicate may hold subqueries
-            // (`WHERE id IN (SELECT id FROM cte)`, with_insert.result);
-            // rows stay when the predicate is FALSE or UNKNOWN
-            spark.sql(s"SELECT * FROM `$table` WHERE NOT coalesce(($c), false)")
-          case (condOpt, Some(n)) =>
-            state(spark).primaryKeys.get(table) match {
-              case Some(pkTxt) =>
-                // LIMIT picks n matching rows; identity via the primary key
-                val pk = pkTxt.split(",").map(_.trim).toSeq
-                val doomed = condOpt.map(c =>
-                  spark.sql(s"SELECT * FROM `$table` WHERE ($c)")).getOrElse(target)
-                  // deterministic pick: the reference deletes the earliest
-                  // row; without a physical order, all-columns order stands
-                  // in for insertion order
-                  .orderBy(target.columns.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
-                  .limit(n.toInt).select(pk.map(c => col(s"`$c`")): _*)
-                // a Seq-join reorders columns key-first — restore the table
-                // layout (insertInto is positional)
-                target.join(broadcast(doomed), pk, "left_anti")
-                  .select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-              case None =>
-                // pk-less: an anti-join on any single column over-deletes
-                // duplicates; flag the first n matching rows by a running
-                // count over the all-columns order instead (identical rows
-                // are interchangeable, so a row-based pick is exact)
-                val condSql = condOpt
-                  .map(c => s"coalesce(($c), false)").getOrElse("true")
-                val flagged = spark.sql(
-                  s"SELECT *, $condSql AS __del FROM `$table`")
-                val w = org.apache.spark.sql.expressions.Window
-                  .orderBy(target.columns.map(c => col(s"`$c`").asc).toIndexedSeq: _*)
-                  .rowsBetween(Long.MinValue, 0)
-                flagged.withColumn("__del", col("__del") &&
-                    sum(when(col("__del"), 1).otherwise(0)).over(w) <= n.toInt)
-                  .filter(!col("__del"))
-                  .select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-            }
-        }
-        // SELF-referencing ON DELETE SET NULL: surviving rows that
-        // referenced a deleted key lose the reference (fk_issue_22736:
-        // deleting the middle of a chain nulls the tail's pointer)
-        val selfSetNull = state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty)
-          .filter(r => r.parent == table.toLowerCase && r.onDelete == "set null")
-        var remainingFinal = remaining
-        if (fkChecksOn(spark) && selfSetNull.nonEmpty) {
-          val doomed = target.exceptAll(remaining).localCheckpoint(true)
-          selfSetNull.foreach { r =>
-            val keys = broadcast(doomed
-              .select(r.parentCols.zipWithIndex.map { case (p, i) =>
-                col(s"`$p`").as(s"__sn$i") }.toIndexedSeq: _*)
-              .distinct.withColumn("__snhit", lit(true)))
-            val cond = r.childCols.zipWithIndex.map { case (c, i) =>
-              remainingFinal(s"`$c`") === keys(s"__sn$i") }.reduce(_ && _)
-            val cols = target.columns.toSeq
-            remainingFinal = r.childCols.foldLeft(
-              remainingFinal.join(keys, cond, "left_outer")) { (d, c) =>
-                d.withColumn(c,
-                  when(col("__snhit"), lit(null)).otherwise(col(s"`$c`")))
-              }.select(cols.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          }
-        }
-        if (childRefsOf(spark, table).nonEmpty)
-          fkOnDelete(spark, table,
-            target.exceptAll(remaining).localCheckpoint(true))
-        setRowCount(spark, targetN - commitTable(spark, table, remainingFinal))
+        // via SQL text so the predicate may hold subqueries
+        // (`WHERE id IN (SELECT id FROM cte)`, with_insert.result); a
+        // row stays when the predicate is FALSE or UNKNOWN
+        val condSql = Option(condOrNull)
+          .map(c => s"coalesce(($c), false)").getOrElse("true")
+        val flagged = spark.sql(s"SELECT *, $condSql AS $Hit FROM `$table`")
+        val picked = Option(limitOrNull).fold(flagged)(n => limitHits(flagged,
+          spark.table(table).columns.toSeq.map(c => col(s"`$c`").asc), n.toInt))
+        setRowCount(spark, deleteHits(spark, table, picked).hits)
         Some(spark.emptyDataFrame)
       case _ => None
     }
@@ -3146,20 +3101,11 @@ object GraftSql {
           s"$raw AS __set_$i"
         }.mkString(", ")
         var df = sql(spark,
-          s"SELECT *, $condSql AS __upd, $setSelect FROM `$table`")
-        (Option(orderOrNull), Option(limitOrNull)) match {
-          case (orderOpt, Some(n)) =>
-            // LIMIT keeps the first n MATCHING rows; identity-free via a
-            // running count over a deterministic order (explicit ORDER
-            // BY, else all columns — standing in for insertion order)
-            val ordCols = orderOpt.map(o => SqlText.splitTop(o).map(x => expr(x.trim)))
-              .getOrElse(target.columns.toSeq.map(c => col(s"`$c`").asc))
-            val w = org.apache.spark.sql.expressions.Window
-              .orderBy(ordCols.toIndexedSeq: _*)
-              .rowsBetween(Long.MinValue, 0)
-            df = df.withColumn("__upd", col("__upd") &&
-              sum(when(col("__upd"), 1).otherwise(0)).over(w) <= n.toInt)
-          case _ =>
+          s"SELECT *, $condSql AS $Hit, $setSelect FROM `$table`")
+        Option(limitOrNull).foreach { n =>
+          val order = Option(orderOrNull).map(o => SqlText.splitTop(o).map(x => expr(x.trim)))
+            .getOrElse(target.columns.toSeq.map(c => col(s"`$c`").asc))
+          df = limitHits(df, order, n.toInt)
         }
         // UPDATE IGNORE: a candidate row whose NEW pk/unique value would
         // collide (with another row's current value, or with another
@@ -3189,10 +3135,10 @@ object GraftSql {
               // whose new key equals its own old key wins ("owner wins",
               // update_ignore_owner_wins); the others are skipped
               val candDup =
-                sum(when(col("__upd"), 1).otherwise(0)).over(w2) > 1 && !self
+                sum(when(col(Hit), 1).otherwise(0)).over(w2) > 1 && !self
               val newNull = keys.map(k => newK(k).isNull).reduce(_ || _)
-              df = df.withColumn("__upd",
-                  col("__upd") && (newNull || (others <= 0 && !candDup)))
+              df = df.withColumn(Hit,
+                  col(Hit) && (newNull || (others <= 0 && !candDup)))
                 .drop("__ocnt")
               keys.foreach(k => df = df.drop(s"__ok_$k"))
             }
@@ -3210,9 +3156,8 @@ object GraftSql {
             .getOrElse(col(s"`$c`"))
           state(spark).foreignKeys.getOrElse(table.toLowerCase, Vector.empty).foreach { ref =>
             if (ref.childCols.exists(c => setIdx.contains(c.toLowerCase)) &&
-              (try spark.catalog.tableExists(ref.parent)
-              catch { case _: Exception => false })) {
-              val nn = df.filter(col("__upd"))
+              tableExists(spark, ref.parent)) {
+              val nn = df.filter(col(Hit))
                 .filter(ref.childCols.map(c => newC(c).isNotNull).reduce(_ && _))
                 .select(ref.childCols.zipWithIndex.map { case (c, i) =>
                   newC(c).as(s"__fkc$i") }.toIndexedSeq: _*)
@@ -3222,7 +3167,7 @@ object GraftSql {
               val keys = broadcast((
                 if (ref.parent.equalsIgnoreCase(table))
                   df.select(ref.parentCols.zipWithIndex.map { case (p, i) =>
-                    when(col("__upd"), newC(p)).otherwise(col(s"`$p`"))
+                    when(col(Hit), newC(p)).otherwise(col(s"`$p`"))
                       .as(s"__fkp$i")
                   }.toIndexedSeq: _*)
                 else spark.table(ref.parent)
@@ -3242,7 +3187,7 @@ object GraftSql {
             .filter(_._2.parentCols.exists(p => setIdx.contains(p.toLowerCase)))
           if (parentRefs.nonEmpty) {
             val cols = target.columns.toSeq
-            val oldNewAll = df.filter(col("__upd"))
+            val oldNewAll = df.filter(col(Hit))
               .select((cols.map(c => col(s"`$c`").as(s"old_$c")) ++
                 cols.map(c => newC(c).as(s"new_$c"))).toIndexedSeq: _*)
               .localCheckpoint(true)
@@ -3261,7 +3206,7 @@ object GraftSql {
           val rhs = storeCast(spark, table, f,
             col(s"__set_$i"), df.schema(s"__set_$i").dataType)
           df = df.withColumn(f.name,
-            when(col("__upd"), rhs).otherwise(col(s"`${f.name}`")))
+            when(col(Hit), rhs).otherwise(col(s"`${f.name}`")))
         }
         val updated = df
           .select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
@@ -3282,12 +3227,7 @@ object GraftSql {
         // every check passed: fire the deferred ON UPDATE actions
         fkDeferredActions.foreach(_.apply())
         // MySQL's affected-rows for UPDATE is the matched-row count
-        val snapAll = df.select((target.columns.map(c => col(s"`$c`")) :+
-          col("__upd")).toIndexedSeq: _*).localCheckpoint(true)
-        setRowCount(spark, snapAll.filter(col("__upd")).count())
-        snapAll.select(target.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(table)
-        spark.catalog.refreshTable(table)
+        setRowCount(spark, commitTable(spark, table, Effect(Some(df))).hits)
         Some(spark.emptyDataFrame)
       case _ => None
     }
@@ -3313,12 +3253,7 @@ object GraftSql {
         // spelling joins the FROM relations in as well
         val tablesTxt = tablesTxt0 +
           Option(fromOrNull).map(f => s", $f").getOrElse("")
-        // alias → base table (parenthesized subqueries are not targets)
-        val AliasedRe = """(?i)(?:^|,|\bjoin\s)\s*`?(\w+)`?(?:\s+(?:as\s+)?(?!on\b|join\b|inner\b|left\b|right\b|cross\b|where\b|using\b|set\b)`?(\w+)`?)?""".r
-        val aliases: Map[String, String] = AliasedRe.findAllMatchIn(tablesTxt).map { m =>
-          val t = m.group(1); val a = Option(m.group(2)).getOrElse(t)
-          a.toLowerCase -> t
-        }.toMap
+        val aliases = tableAliases(tablesTxt)
         val assigns = SqlText.splitTop(setTxt).map { a =>
           val m = """(?is)^\s*(?:`?(\w+)`?\.)?`?(\w+)`?\s*=\s*(.+)$""".r
             .findFirstMatchIn(a).getOrElse(return None)
@@ -3367,14 +3302,7 @@ object GraftSql {
         matchSets.foreach { case (al, as0, matched) =>
           val table = aliases(al)
           val target = spark.table(table)
-          val tcols = target.columns.toSeq
-          val marked = matched.toDF(
-            (tcols.map(_ + "__m") ++ as0.indices.map(i => s"__rhs_$i")): _*)
-            .withColumn("__hit", lit(true))
-          val cond = tcols.map(c => col(s"`$c`") <=> col(s"`${c}__m`"))
-            .reduce(_ && _)
-          var df = target.join(broadcast(marked), cond, "left_outer")
-            .withColumn("__upd", coalesce(col("__hit"), lit(false)))
+          var df = flagMatched(target, matched)
           val fields = target.schema.fields.map(f => f.name.toLowerCase -> f).toMap
           as0.zipWithIndex.foreach { case ((_, c, e0), i) =>
             val f = fields.getOrElse(c.toLowerCase, return None)
@@ -3384,10 +3312,9 @@ object GraftSql {
               else storeCast(spark, table, f, col(s"__rhs_$i"),
                 matched.schema(s"__rhs_$i").dataType)
             df = df.withColumn(f.name,
-              when(col("__upd"), rhs).otherwise(col(s"`${f.name}`")))
+              when(col(Hit), rhs).otherwise(col(s"`${f.name}`")))
           }
-          commitTable(spark, table,
-            df.select(tcols.map(c => col(s"`$c`")).toIndexedSeq: _*))
+          commitTable(spark, table, Effect(Some(df)))
         }
         Some(spark.emptyDataFrame)
       case _ => None
@@ -3554,7 +3481,8 @@ object GraftSql {
     * form (`INFILE {'filepath'='f.parq','format'='parquet'}`). Maps onto
     * `spark.read.csv/parquet/json` with the TARGET TABLE's schema —
     * distributed file splits for free, where the reference implements its
-    * own parallel chunker (`external.go:829`). Appends via insertInto.
+    * own parallel chunker (`external.go:829`). Appends through
+    * [[commitTable]].
     */
   private val LoadDataRe =
     ("""(?is)^load\s+data\s+(?:local\s+)?infile\s+(?:'([^']+)'|(\{[^}]*\}))""" +
@@ -3858,10 +3786,8 @@ object GraftSql {
             }
           case _ => aligned0
         }
-        val alignedSnap = aligned.localCheckpoint(true)
-        alignedSnap.write.insertInto(table)
-        spark.catalog.refreshTable(table)
-        setRowCount(spark, alignedSnap.count())
+        setRowCount(spark,
+          commitTable(spark, table, Effect(appended = Some(aligned))).appended)
         // record the source for the __mo_filepath metadata column
         // (issue_25908: external scans expose the originating file)
         state(spark).loadPaths.put(table.toLowerCase, path)
@@ -3891,8 +3817,8 @@ object GraftSql {
   /** INSERT..SELECT into a table with enum/set columns: run the source
     * select, canonicalize the enum/set positions (MySQL store
     * conversion — int source maps the 1-based ordinal, text source
-    * matches a member, dtype/enum_1 t4/t5/t6), write through the
-    * normal insert path.
+    * matches a member, dtype/enum_1 t4/t5/t6), append through
+    * [[commitTable]].
     */
   private def enumInsertSelectRewrite(spark: SparkSession,
       q: String): Option[DataFrame] = {
@@ -3922,10 +3848,7 @@ object GraftSql {
           }
         }: _*)
       }
-    val snap = full.localCheckpoint(true)
-    snap.write.insertInto(table)
-    spark.catalog.refreshTable(table)
-    setRowCount(spark, snap.count())
+    setRowCount(spark, commitTable(spark, table, Effect(appended = Some(full))).appended)
     Some(spark.emptyDataFrame)
   }
 
